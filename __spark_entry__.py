@@ -4601,7 +4601,7 @@ def _incremental_bench(spark, sf_dir, mult=30):
     group spanning every directory forces any correct closure to refold
     the world, which is an adversarial fixture artifact, not a
     production profile).  Snapshots are stored in the BUCKETED layout
-    (SnapshotCatalog.write_snapshot(layout="bucketed"), the CLI default)
+    (SnapshotCatalog.write_snapshot(layout="bucketed"), the CLI opt-in)
     with its hardlink spill index, and both paths are timed from those
     scans:
 
@@ -4947,10 +4947,11 @@ def q118_incremental_at_scale(spark, sf_dir):
 
 def q126_incremental_bucketed(spark, sf_dir):
     """q118's incremental gate routed through the BUCKETED snapshot
-    layout — the storage path a production deployment runs (the CLI
-    default): snapshots written via SnapshotCatalog(layout="bucketed")
-    with the hardlink spill index, closure probes partition-pruned to
-    the churn's buckets + the index's member buckets
+    layout — the storage path a very large deployment opts into
+    (``analyze --layout bucketed``): snapshots written via
+    SnapshotCatalog(layout="bucketed") with the hardlink spill index,
+    closure probes partition-pruned to the churn's buckets + the
+    index's member buckets
     (operators/incremental.py, sources/catalog.py).  Output and oracle
     are IDENTICAL to q118 (the layout is a writer-side choice; value
     equality against the from-scratch fold restatement proves the

@@ -140,12 +140,13 @@ def _analyze_body(
     n_prefixes, n_files, n_errors = counts
 
     cat = SnapshotCatalog(spark, args.db)
-    # snapshots store bucketed by default: the layout is what lets
-    # `stats --incremental` prune its closure probes to the churn's
-    # buckets (operators/incremental.py); tables() hides the layout
-    # column so every other consumer is unaffected
-    lay = dict(layout=args.layout if args.layout != "plain" else None,
-               path_buckets=args.path_buckets)
+    # snapshots store plain by default: one unpartitioned file set per
+    # table, the cheapest write and read.  --layout bucketed is the
+    # opt-in for very large trees, where pruning the
+    # `stats --incremental` closure probes to the churn's buckets
+    # (operators/incremental.py) can pay for the 64-directory tables;
+    # tables() hides the layout column either way
+    lay = dict(layout=args.layout, path_buckets=args.path_buckets)
     if cat.latest_version() is None:
         out = cat.write_snapshot(staged_p, staged_e, errors, **lay)
         summary = {
@@ -364,17 +365,6 @@ def _stats_fold_update(cat, prev_stats, touched, opts, churn_threshold,
             # recorded at write time: lets the closure skip its
             # is-the-index-empty probe job
             spill_rows = prev_lay["spill_rows"] + cur_lay["spill_rows"]
-    elif not (cat.is_delta(cat.latest_version())
-              or (prev_v and cat.is_delta(prev_v))):
-        # delta versions are EXPECTED to lack the physical bucketing
-        # (the periodic compaction restores it) — only a genuinely
-        # unbucketed DB warrants the advice
-        print(
-            f"{label}: snapshots are not (both) bucketed —"
-            " closure probes will scan the tree; run `database compact"
-            " --layout bucketed` to enable pruned probes",
-            file=sys.stderr,
-        )
     prev_prefixes, prev_entries = _pin_delta(prev_t, prev_v)
     return incremental_stats(
         prev_stats,
@@ -393,7 +383,10 @@ def _stats_fold_update(cat, prev_stats, touched, opts, churn_threshold,
 
 def _save_stats(res, stats_dir, calculator_name, cat):
     """Land a stats run as the newest version under ``stats_dir`` and
-    move the ``latest`` pointer.  Returns (out_path, totals dict)."""
+    move the ``latest`` pointer once the tables and ``meta.json`` are
+    complete.  Returns (out_path, totals dict)."""
+    from dudb_spark.sources.catalog import write_pointer
+
     when = datetime.now(timezone.utc).strftime("%Y-%m-%d-%H%M%S")
     out = os.path.join(stats_dir, when)
     n = 0
@@ -402,13 +395,12 @@ def _save_stats(res, stats_dir, calculator_name, cat):
         out = os.path.join(stats_dir, f"{when}-{n}")
     when = os.path.basename(out)
     res.save(out)
-    with open(os.path.join(stats_dir, "latest"), "w") as f:
-        f.write(when)
     meta = dict(res.meta, date=when, prefix=res.meta.get("root"),
                 calculator=calculator_name,
                 snapshot_version=cat.latest_version())
     with open(os.path.join(out, "meta.json"), "w") as f:
         json.dump(meta, f)
+    write_pointer(os.path.join(stats_dir, "latest"), when)
     tot = res.totals().collect()[0].asDict()
     return out, tot
 
@@ -543,7 +535,7 @@ def _watch_stats_update(spark, cat, stats_dir, touched, applied_from,
 def _watch_land(spark, cat, args, diff, stats_dir) -> bool:
     """Apply one change-feed diff to the stored snapshot and land it:
     churn-sized delta commit by default, a FULL compaction write
-    (tree-sized, restores the bucketed layout) every --compact-every
+    (tree-sized, restores the base snapshot's layout) every --compact-every
     batches bounding the reconstruction chain — the transaction-log/
     compaction split of a Delta/Iceberg sink — plus the JSON summary
     line and the optional incremental stats fold.  Shared by the
@@ -2290,9 +2282,11 @@ def build_parser():
         "reference analyze's full-rescan override)",
     )
     p.add_argument(
-        "--layout", choices=["bucketed", "plain"], default="bucketed",
-        help="snapshot storage layout (bucketed = path-hash partitioned, "
-        "prunes incremental-stats closure probes)",
+        "--layout", choices=["bucketed", "plain"], default="plain",
+        help="snapshot storage layout (plain = unpartitioned, the "
+        "default; bucketed = path-hash partitioned, prunes "
+        "incremental-stats closure probes: the opt-in for very large "
+        "trees)",
     )
     p.add_argument(
         "--path-buckets", type=int, default=64,

@@ -180,7 +180,7 @@ def snapshot_diff(
     """Time-travel diff between two stored snapshot versions: one row per
     path that was added, removed, or changed, with the byte delta — the
     ``idu database`` analog of ``delta table history`` for the versioned
-    snapshot directories written by :func:`write_snapshot`.
+    snapshot directories written by ``SnapshotCatalog.write_snapshot``.
 
     "Changed" compares size, mtime, mode, uid, and gid: stats results
     depend on ownership and mode (per-user/group attribution, boolexpr
@@ -235,14 +235,6 @@ def snapshot_diff(
             "file",
         )
     )
-
-
-def write_snapshot(result: MergeResult, db_root: str, version: str) -> None:
-    """Persist a merged snapshot as a new versioned directory (Parquet
-    stand-in for Delta MERGE; ``latest`` pointer = max version string)."""
-    out = f"{db_root.rstrip('/')}/{version}"
-    result.prefixes.write.mode("overwrite").parquet(f"{out}/prefixes.parquet")
-    result.entries.write.mode("overwrite").parquet(f"{out}/entries.parquet")
 
 
 def apply_changes(

@@ -1,11 +1,6 @@
-"""Physical-layout strategies for 100 TB: bucketing and skew salting.
+"""Physical-layout strategies for 100 TB: parallelism floors and skew
+salting.
 
-- **Bucketing** (co-located joins): the metadata tables join on ``path``/
-  ``parent`` constantly (entries↔prefixes in stats, staged↔previous in the
-  incremental merge).  Writing both sides bucketed+sorted by the join key
-  makes those joins shuffle-free sort-merge joins: Spark reads matching
-  buckets pairwise and never exchanges the fact data.  At 100 TB the
-  incremental merge over a re-scan becomes bucket-local.
 - **Salting** (skew): a groupBy on a hot key (one uid owning half the
   corpus) funnels one reducer.  ``salted_group_sum`` spreads each key over
   ``n_salts`` sub-keys for the wide partial aggregation, then combines the
@@ -16,28 +11,8 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 32,
-    sort_col: str | None = None,
-) -> None:
-    """Persist as a bucketed+sorted managed table (Parquet).  Joins between
-    tables bucketed identically on the join key skip the exchange."""
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(
-        n_buckets, bucket_col
-    )
-    writer = writer.sortBy(sort_col or bucket_col)
-    writer.saveAsTable(table)
-
-
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
 
 
 def ensure_min_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

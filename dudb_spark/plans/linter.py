@@ -300,7 +300,8 @@ COLLECT_ALLOW: dict[str, str] = {
         "pushed-down parent IN (churned dirs) read — churn-sized",
     "reports/sinks.py::write_markdown_report":
         "the summary bundle is top-N-bounded per section (one union "
-        "frame, 10 jobs -> 1, round-10)",
+        "frame, 10 jobs -> 1, round-10); the merged top rows are the "
+        "union of five top-N rankings, at most 5n",
     "reports/sinks.py::to_json_lines":
         ".limit(limit) applied before collect",
 }
@@ -344,6 +345,9 @@ PIN_ALLOW: dict[str, str] = {
     "operators/quantiles.py::rank_normalize":
         "one row per (group, value) AFTER the dedup aggregation — "
         "bounded by distinct values per group",
+    "reports/sinks.py::write_reports":
+        "merged top-N report rows — the union of five top-N rankings, "
+        "at most 5n",
     "operators/stats.py::StatsResult.merged_top":
         "top-N report frame, bounded by N",
     "pipeline/bpe.py::bpe_merges":

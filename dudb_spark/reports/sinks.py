@@ -23,6 +23,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame
 
 from dudb_spark.operators.stats import METRICS, StatsResult
+from dudb_spark.sources.catalog import write_pointer
 
 TS_FORMAT = "%Y-%m-%d-%H%M%S"  # mirrors the reference's dir naming
 
@@ -45,14 +46,15 @@ def _summary_bundle(
     users: DataFrame | None,
     groups: DataFrame | None,
 ) -> DataFrame:
-    """Every bounded row the Markdown template prints, as ONE union frame
-    (section, key, value, name) — so the renderer pays a single collect
-    instead of eight (totals + 5 top-metric tables + 2 id rankings) plus
-    two dim-table collects.  Each sequential action costs a full job
-    submission (~hundreds of ms on a busy driver); the branches are all
-    TakeOrderedAndProject / single-row aggregates, so the union stays
-    bounded at 7·n + 8 rows regardless of corpus size, and the id→name
-    dims fold in as broadcast joins instead of collected dicts."""
+    """The totals and id-ranking rows the Markdown template prints, as ONE
+    union frame (section, key, value, name) — so the renderer pays a
+    single collect instead of three plus two dim-table collects.  Each
+    sequential action costs a full job submission (~hundreds of ms on a
+    busy driver); the branches are TakeOrderedAndProject / single-row
+    aggregates, so the union stays bounded at 2·n + 8 rows regardless of
+    corpus size, and the id→name dims fold in as broadcast joins instead
+    of collected dicts.  The five top-prefix tables come from the merged
+    top rows instead (:func:`write_markdown_report`)."""
     from pyspark.sql import functions as F
 
     tot_cols = list(stats.totals().columns)
@@ -69,15 +71,6 @@ def _summary_bundle(
             null_name,
         )
     ]
-    for m in METRICS:
-        branches.append(
-            stats.top_prefixes(m, display_n).select(
-                F.lit(f"top:{m}").alias("section"),
-                F.col("prefix").alias("key"),
-                F.col(m).cast("long").alias("value"),
-                null_name,
-            )
-        )
     for dim, dim_df, id_col in (("user", users, "uid"), ("group", groups, "gid")):
         ids = stats.top_ids("bytes", display_n, dim)
         if dim_df is not None:
@@ -110,11 +103,16 @@ def write_markdown_report(
     display_n: int = 20,
     users: DataFrame | None = None,
     groups: DataFrame | None = None,
+    merged: DataFrame | None = None,
 ) -> str:
     """S13: Markdown summary — TOC, global totals, per-metric top-N tables,
     per-user/per-group sections (markdown.go:32–179 template structure).
-    All bounded table rows arrive in one collected union frame
-    (:func:`_summary_bundle`); the id→name dims (J3) ride along as
+    The per-metric tables are cut client-side from the collected
+    ``merged`` frame (``stats.merged_top(display_n)``, computed here when
+    not given): it holds every prefix of every top-N ranking, so each
+    table's top N by (value desc, prefix asc) over it is the top N over
+    all prefixes.  Totals and id rankings arrive in one collected union
+    frame (:func:`_summary_bundle`); the id→name dims (J3) ride along as
     broadcast joins.  Row order within each table is re-derived
     client-side with the same (value desc, key asc) tie-break the frames
     use, so the rendered template is byte-identical to the
@@ -122,6 +120,9 @@ def write_markdown_report(
     bundle: dict[str, list] = {}
     for r in _summary_bundle(stats, display_n, users, groups).collect():
         bundle.setdefault(r["section"], []).append(r)
+    if merged is None:
+        merged = stats.merged_top(display_n)
+    tops = merged.select("prefix", *METRICS).collect()
 
     lines: list[str] = []
     meta = stats.meta
@@ -149,12 +150,12 @@ def write_markdown_report(
 
     for metric in METRICS:
         rows = sorted(
-            bundle.get(f"top:{metric}", []),
-            key=lambda r: (-r["value"], r["key"]),
-        )
+            ((r["prefix"], int(r[metric])) for r in tops),
+            key=lambda r: (-r[1], r[0]),
+        )[:display_n]
         lines += [f"### Top {display_n} by {metric}", ""]
         lines += [f"| prefix | {metric} |", "|---|---|"]
-        lines += [f"| {r['key']} | {r['value']} |" for r in rows]
+        lines += [f"| {p} | {v} |" for p, v in rows]
         lines += [""]
 
     for title, dim in (("Per user", "user"), ("Per group", "group")):
@@ -189,28 +190,32 @@ def write_reports(
     refresh the ``latest`` marker.  Returns the report dir path."""
     when = when or datetime.now(timezone.utc)
     out = f"{reports_root.rstrip('/')}/{when.strftime(TS_FORMAT)}"
-    # The sinks below fire ~10 actions (two merged writes, totals, five
-    # top-prefix tables, two top-id tables).  Without pinning the summary
-    # frames, every action re-runs the full grouping-sets fold from the
-    # source tables — the reference never does that either: it reports off
-    # the materialized .idustats snapshot (reports.go:57–58).  The frames
-    # are post-aggregation (one row per directory / (id, directory)), so
-    # MEMORY_AND_DISK is safe at any corpus size that produced them.
+    # The sinks below fire six actions (the per-prefix and merged-top
+    # pins, two merged writes, its collect, one totals + top-id bundle).
+    # The merged top rows (at most 5n) are pinned so the writes and the
+    # collect scan them instead of re-running five rankings.  Without
+    # pinning the summary frames, every action re-runs the full
+    # grouping-sets fold from the source tables — the reference never
+    # does that either: it reports off the materialized .idustats
+    # snapshot (reports.go:57–58).  The frames are post-aggregation (one
+    # row per directory / (id, directory)), so MEMORY_AND_DISK is safe
+    # at any corpus size that produced them.
     pinned = [stats.per_prefix, stats.per_user, stats.per_group]
     for df in pinned:
         df.persist()
     try:
-        merged = stats.merged_top(display_n)
+        merged = stats.merged_top(display_n).localCheckpoint()
         write_tsv_report(merged, f"{out}/tsv")
         write_json_report(merged, f"{out}/json")
         write_markdown_report(
-            stats, f"{out}/markdown/report.md", display_n, users, groups
+            stats, f"{out}/markdown/report.md", display_n, users, groups,
+            merged=merged,
         )
     finally:
         for df in pinned:
             df.unpersist()
-    with open(f"{reports_root.rstrip('/')}/latest", "w") as f:
-        f.write(os.path.basename(out))
+    write_pointer(f"{reports_root.rstrip('/')}/latest",
+                  os.path.basename(out))
     return out
 
 

@@ -17,6 +17,26 @@ import os
 from dudb_spark.model import FsTables, SCAN_LOGS_SCHEMA
 
 
+def write_pointer(path: str, name: str) -> None:
+    """Point the ``latest`` file at ``path`` to ``name`` atomically.
+
+    The name goes to a temp file in the same directory, which is synced
+    and then ``os.replace``-d over the pointer: a crash at any step
+    leaves either the old pointer or the new one, never an empty or
+    half-written file.  Every writer moves its pointer with this, after
+    the data and metadata it names are complete."""
+    tmp = f"{path}.tmp-{os.getpid()}"
+    try:
+        with open(tmp, "w") as f:
+            f.write(name)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+
+
 class SnapshotCatalog:
     def __init__(self, spark, db_root: str):
         self.spark = spark
@@ -200,9 +220,7 @@ class SnapshotCatalog:
                     },
                     f,
                 )
-        os.makedirs(self.root, exist_ok=True)
-        with open(os.path.join(self.root, "latest"), "w") as f:
-            f.write(v)
+        write_pointer(os.path.join(self.root, "latest"), v)
         return out
 
     def _count_written_prefixes(self, out: str) -> int:
@@ -381,8 +399,7 @@ class SnapshotCatalog:
                  "prefix_rows": prefix_rows},
                 f,
             )
-        with open(os.path.join(self.root, "latest"), "w") as f:
-            f.write(v)
+        write_pointer(os.path.join(self.root, "latest"), v)
         return out
 
     def chain_length(self, version: str | None = None) -> int:
@@ -465,8 +482,7 @@ class SnapshotCatalog:
         )
         if os.path.isdir(f"{self.latest_path()}/errors.parquet"):
             t.errors.write.mode("overwrite").parquet(f"{out}/errors.parquet")
-        with open(os.path.join(self.root, "latest"), "w") as f:
-            f.write(v)
+        write_pointer(os.path.join(self.root, "latest"), v)
         return out
 
     def prune(self, keep: int = 2) -> list[str]:

@@ -149,12 +149,12 @@ def test_env_expansion_in_paths(spark, real_tree, tmp_path, capsys, monkeypatch)
     assert os.path.isdir(str(tmp_path / "envdb" / "v0001"))
 
 
-def test_cli_incremental_stats_and_diff(spark, real_tree, tmp_path, capsys):
+def _incremental_stats_and_diff(real_tree, tmp_path, capsys, layout):
     import time
 
     db = str(tmp_path / "db")
     stats_dir = str(tmp_path / "stats")
-    run(capsys, "analyze", "--db", db, real_tree)
+    run(capsys, "analyze", "--db", db, real_tree, *layout)
     full0 = json.loads(
         run(capsys, "stats", "compute", "--db", db, "--stats-dir", stats_dir,
             real_tree)
@@ -165,7 +165,7 @@ def test_cli_incremental_stats_and_diff(spark, real_tree, tmp_path, capsys):
     with open(os.path.join(real_tree, "proj/a/new.dat"), "w") as f:
         f.write("0123456789")
     os.unlink(os.path.join(real_tree, "proj/b/z.log"))
-    run(capsys, "analyze", "--db", db, real_tree)
+    run(capsys, "analyze", "--db", db, real_tree, *layout)
 
     inc = json.loads(
         run(capsys, "stats", "compute", "--db", db, "--stats-dir", stats_dir,
@@ -187,6 +187,132 @@ def test_cli_incremental_stats_and_diff(spark, real_tree, tmp_path, capsys):
             os.path.join(real_tree, "proj/a/new.dat")) in lines
     assert ("file", "removed", "-4",
             os.path.join(real_tree, "proj/b/z.log")) in lines
+
+
+def test_cli_incremental_stats_and_diff(spark, real_tree, tmp_path, capsys):
+    """Default (plain) snapshots: the closure runs unpruned."""
+    _incremental_stats_and_diff(real_tree, tmp_path, capsys, ())
+
+
+def test_cli_incremental_stats_and_diff_bucketed(spark, real_tree, tmp_path,
+                                                 capsys):
+    """Opt-in bucketed snapshots: the closure's probes prune to the
+    churn's buckets and still equal a full refold."""
+    _incremental_stats_and_diff(
+        real_tree, tmp_path, capsys,
+        ("--layout", "bucketed", "--path-buckets", "8"),
+    )
+
+
+def test_cli_analyze_default_layout_is_plain(spark, real_tree, tmp_path,
+                                             capsys):
+    """A default analyze writes unpartitioned tables: _layout.json says
+    plain and records the tree size, with no spill index and no pb=
+    bucket directories."""
+    from dudb_spark.sources.catalog import SnapshotCatalog
+
+    db = str(tmp_path / "db")
+    run(capsys, "analyze", "--db", db, real_tree)
+    cat = SnapshotCatalog(spark, db)
+    with open(os.path.join(cat.latest_path(), "_layout.json")) as f:
+        lay = json.load(f)
+    assert lay["layout"] == "plain"
+    assert lay["prefix_rows"] == cat.tables().prefixes.count() == 4
+    assert cat.spill_index() is None
+    assert not os.path.exists(
+        os.path.join(cat.latest_path(), "hlinks.parquet"))
+    for table in ("prefixes.parquet", "entries.parquet"):
+        names = os.listdir(os.path.join(cat.latest_path(), table))
+        assert names and not [n for n in names if n.startswith("pb=")]
+
+
+def test_cli_incremental_after_layout_change(spark, real_tree, tmp_path,
+                                            capsys):
+    """Upgrade path: a DB whose last snapshot is bucketed takes a default
+    (plain) analyze, and stats --incremental across the two layouts
+    still equals a full refold."""
+    import time
+
+    from dudb_spark.sources.catalog import SnapshotCatalog
+
+    db = str(tmp_path / "db")
+    stats_dir = str(tmp_path / "stats")
+    run(capsys, "analyze", "--db", db, real_tree,
+        "--layout", "bucketed", "--path-buckets", "8")
+    run(capsys, "stats", "compute", "--db", db, "--stats-dir", stats_dir,
+        real_tree)
+    time.sleep(1.1)
+    with open(os.path.join(real_tree, "proj/a/new.dat"), "w") as f:
+        f.write("0123456789")
+    os.unlink(os.path.join(real_tree, "proj/b/z.log"))
+    run(capsys, "analyze", "--db", db, real_tree)
+    cat = SnapshotCatalog(spark, db)
+    assert cat.layout("v0001")["layout"] == "bucketed"
+    assert cat.layout("v0002")["layout"] == "plain"
+
+    inc = json.loads(
+        run(capsys, "stats", "compute", "--db", db, "--stats-dir", stats_dir,
+            "--incremental", "--churn-threshold", "0", real_tree)
+    )
+    full = json.loads(
+        run(capsys, "stats", "compute", "--db", db, "--stats-dir", stats_dir,
+            real_tree)
+    )
+    assert inc["totals"] == full["totals"]
+    assert inc["totals"]["files"] == 3
+
+
+def test_cli_pointers_survive_a_failed_write(spark, real_tree, tmp_path,
+                                             capsys, monkeypatch):
+    """A write that fails after its data landed leaves every reader on
+    the previous complete version: the snapshot pointer and the stats
+    pointer move only as the last step."""
+    import time
+
+    from dudb_spark import cli
+    from dudb_spark.sources import catalog
+    from dudb_spark.sources.catalog import SnapshotCatalog
+
+    db = str(tmp_path / "db")
+    stats_dir = str(tmp_path / "stats")
+    run(capsys, "analyze", "--db", db, real_tree)
+    s0 = json.loads(run(capsys, "stats", "compute", "--db", db,
+                        "--stats-dir", stats_dir, real_tree))
+    cat = SnapshotCatalog(spark, db)
+    meta0 = cli._load_stats(spark, stats_dir).meta
+    with open(os.path.join(real_tree, "proj/a/new.dat"), "w") as f:
+        f.write("0123456789")
+
+    def boom(*a, **k):
+        raise RuntimeError("injected crash")
+
+    # snapshot write: the step after the table writes, then the pointer
+    # replace itself (the temp pointer is written, the rename fails)
+    for target, name in ((SnapshotCatalog, "_count_written_prefixes"),
+                         (catalog.os, "replace")):
+        with monkeypatch.context() as m:
+            m.setattr(target, name, boom)
+            with pytest.raises(RuntimeError, match="injected"):
+                main(["analyze", "--db", db, real_tree])
+        capsys.readouterr()
+        assert cat.latest_version() == "v0001"
+        assert cat.tables().entries.where("not is_dir").count() == 3
+        assert not [n for n in os.listdir(db) if ".tmp-" in n]
+
+    # stats save: meta.json fails after the tables landed, then the
+    # pointer move fails after meta.json landed
+    time.sleep(1.1)
+    for target, name in ((cli.json, "dump"), (catalog.os, "replace")):
+        with monkeypatch.context() as m:
+            m.setattr(target, name, boom)
+            with pytest.raises(RuntimeError, match="injected"):
+                main(["stats", "compute", "--db", db, "--stats-dir",
+                      stats_dir, real_tree])
+        capsys.readouterr()
+        time.sleep(1.1)
+        prev = cli._load_stats(spark, stats_dir)
+        assert prev.meta == meta0
+        assert prev.totals().collect()[0].asDict() == s0["totals"]
 
 
 def test_cli_incremental_mode_only_change(spark, real_tree, tmp_path, capsys):
@@ -420,8 +546,9 @@ def test_cli_find_live(spark, real_tree, capsys):
 def test_cli_incremental_plain_layout_fallback(spark, real_tree, tmp_path,
                                                capsys):
     """stats --incremental over PLAIN-layout snapshots: the closure runs
-    unpruned (no pb column), a hint points at compact --layout bucketed,
-    and the totals still equal a from-scratch fold."""
+    unpruned (no pb column), plain is the default so no hint points at
+    the bucketed layout, and the totals still equal a from-scratch
+    fold."""
     import sys as _sys
     import time
 
@@ -439,7 +566,7 @@ def test_cli_incremental_plain_layout_fallback(spark, real_tree, tmp_path,
           "--incremental", "--churn-threshold", "0", real_tree])
     cap = capsys.readouterr()
     inc = json.loads(cap.out)
-    assert "compact --layout bucketed" in cap.err
+    assert "bucketed" not in cap.err
     full = json.loads(
         run(capsys, "stats", "compute", "--db", db, "--stats-dir", stats_dir,
             real_tree)

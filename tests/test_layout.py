@@ -1,4 +1,4 @@
-"""Bucketing and salting: results identical, plans better (fewer/balanced
+"""Salting and skew profiling: results identical, plans better (balanced
 shuffles) — the 100 TB layout strategies proven at test scale."""
 
 from __future__ import annotations
@@ -8,50 +8,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from dudb_spark.plans import plan_of, salted_group_sum, write_bucketed
-from dudb_spark.plans.inspect import n_exchanges
-
-
-def test_bucketed_join_skips_exchange(spark, fs_dir):
-    from dudb_spark.model import FsTables
-
-    t = FsTables(spark, fs_dir)
-    # clear any stale table locations from interrupted runs
-    import shutil
-
-    for name in ("b_entries", "b_prefixes"):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        shutil.rmtree(f"spark-warehouse/{name}", ignore_errors=True)
-    write_bucketed(t.entries, "b_entries", "parent", n_buckets=4)
-    # prefixes already has a `parent` column (the dir's own parent) — select
-    # the join-key projection explicitly
-    write_bucketed(
-        t.prefixes.select(
-            F.col("path").alias("parent"), F.col("uid").alias("puid")
-        ),
-        "b_prefixes",
-        "parent",
-        4,
-    )
-    be, bp = spark.table("b_entries"), spark.table("b_prefixes")
-    # co-located join: no shuffle on either side (broadcast also acceptable
-    # at this size — force sort-merge off to observe bucketing itself)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined2 = be.join(bp, "parent")
-        assert n_exchanges(joined2) == 0
-        # same result as the unbucketed join
-        plain = spark.read.parquet(f"{fs_dir}/entries.parquet").join(
-            spark.read.parquet(f"{fs_dir}/prefixes.parquet").select(
-                F.col("path").alias("parent"), F.col("uid").alias("puid")
-            ),
-            "parent",
-        )
-        assert sorted(r["path"] for r in joined2.collect()) == sorted(
-            r["path"] for r in plain.collect()
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+from dudb_spark.plans import plan_of, salted_group_sum
 
 
 def test_salted_group_sum_matches_plain(spark):

@@ -49,6 +49,21 @@ def test_write_reports_layout(spark, fs_dir, stats_result, tmp_path):
     assert loc[0]["report"] == "2025-06-01-120000"
 
 
+def test_markdown_top_tables_match_rankings(spark, stats_result, tmp_path):
+    """Each per-metric table, cut from the merged top rows, is exactly
+    that metric's own top-N ranking over all prefixes."""
+    from dudb_spark.operators.stats import METRICS
+    from dudb_spark.reports.sinks import write_markdown_report
+
+    n = 2
+    md = write_markdown_report(stats_result, str(tmp_path / "r.md"), n)
+    for m in METRICS:
+        want = [f"| {r['prefix']} | {r[m]} |"
+                for r in stats_result.top_prefixes(m, n).collect()]
+        lines = md.split(f"### Top {n} by {m}\n")[1].splitlines()
+        assert lines[3:3 + n + 1] == want + [""]
+
+
 def test_locate_orders_desc(tmp_path, spark, fs_dir, stats_result):
     t = FsTables(spark, fs_dir)
     root = str(tmp_path / "reports2")
