@@ -2713,18 +2713,21 @@ def q68_stats_snapshot_roundtrip(spark, sf_dir):
     """S10: persist the stats result as a snapshot and read it back — the
     reloaded per-prefix table must round-trip value-exact (oracle = the
     q23 totals restatement)."""
+    import json
     import tempfile
 
-    from dudb_spark.operators.stats import StatsOptions, compute_stats
+    from dudb_spark.operators.stats import (
+        StatsOptions, StatsResult, compute_stats,
+    )
 
     res = compute_stats(
         _fs(spark, "prefixes"), _fs(spark, "entries"), StatsOptions()
     )
     out = tempfile.mkdtemp(prefix="dudb_q68_")
     res.save(out)
-    return (
-        spark.read.parquet(f"{out}/per_prefix.parquet").orderBy("prefix")
-    )
+    with open(f"{out}/meta.json", "w") as f:
+        json.dump(res.meta, f)
+    return StatsResult.load(spark, out).per_prefix.orderBy("prefix")
 
 
 def q69_catalog_roundtrip(spark, sf_dir):
@@ -3193,15 +3196,8 @@ def _watch_applied(spark):
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
-    with open(f"{base}/prev_stats/meta.json") as f:
-        meta = _json.load(f)
     shared = {
-        "prev": StatsResult(
-            spark.read.parquet(f"{base}/prev_stats/per_prefix.parquet"),
-            spark.read.parquet(f"{base}/prev_stats/per_user.parquet"),
-            spark.read.parquet(f"{base}/prev_stats/per_group.parquet"),
-            meta,
-        ),
+        "prev": StatsResult.load(spark, f"{base}/prev_stats"),
         "new_p": spark.read.parquet(f"{base}/applied_p"),
         "new_e": spark.read.parquet(f"{base}/applied_e"),
         "touched": spark.read.parquet(f"{base}/touched"),
@@ -4699,7 +4695,7 @@ def _incremental_bench(spark, sf_dir, mult=30):
         prev_v = cat.latest_version()
         pt = cat.tables()
         prev = compute_stats(pt.prefixes, pt.entries, StatsOptions())
-        prev.per_prefix = prev.per_prefix.localCheckpoint()
+        prev.grains = prev.grains.localCheckpoint()
 
         spill_prev_rows = cat.layout(prev_v).get("spill_rows")
 
@@ -4870,14 +4866,7 @@ def _incremental_shared(spark, sf_dir):
 
     cat = SnapshotCatalog(spark, f"{base}/db")
     prev_v, new_v = cat.versions()[0], cat.versions()[-1]
-    with open(f"{base}/prev_stats/meta.json") as f:
-        meta = _json.load(f)
-    prev = StatsResult(
-        spark.read.parquet(f"{base}/prev_stats/per_prefix.parquet"),
-        spark.read.parquet(f"{base}/prev_stats/per_user.parquet"),
-        spark.read.parquet(f"{base}/prev_stats/per_group.parquet"),
-        meta,
-    )
+    prev = StatsResult.load(spark, f"{base}/prev_stats")
     shared = {
         "cat": cat, "prev": prev, "prev_v": prev_v, "new_v": new_v,
         "pt": cat.tables(prev_v), "nt": cat.tables(new_v),

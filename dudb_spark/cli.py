@@ -214,7 +214,11 @@ def cmd_find(args):
 
 def cmd_stats_compute(args):
     from dudb_spark.functions.calculators import calculator
-    from dudb_spark.operators.stats import StatsOptions, compute_stats
+    from dudb_spark.operators.stats import (
+        StatsOptions,
+        StatsResult,
+        compute_stats,
+    )
     from dudb_spark.sources.catalog import SnapshotCatalog
 
     spark = _spark()
@@ -232,10 +236,14 @@ def cmd_stats_compute(args):
         # valid against the snapshot the previous run folded and with
         # identical fold options — anything else silently re-saves
         # stale summaries.  Mismatch → full compute with a warning.
-        prev_stats = _load_stats(spark, args.stats_dir)
-        pm = prev_stats.meta
+        try:
+            prev_stats = StatsResult.load(spark, args.stats_dir)
+        except FileNotFoundError:
+            prev_stats = None
         problems = []
-        if not pm.get("snapshot_version"):
+        if prev_stats is None:
+            problems.append("no previous stats run")
+        elif not prev_stats.meta.get("snapshot_version"):
             problems.append("previous stats run records no snapshot_version")
         for key, req in (
             ("root", args.prefix),
@@ -243,9 +251,10 @@ def cmd_stats_compute(args):
             ("calculator", args.calculator),
             ("count_hardlinks_as_files", opts.count_hardlinks_as_files),
         ):
-            if pm.get(key) != req:
+            if prev_stats and prev_stats.meta.get(key) != req:
                 problems.append(
-                    f"{key}: previous run {pm.get(key)!r} != requested {req!r}"
+                    f"{key}: previous run {prev_stats.meta.get(key)!r} "
+                    f"!= requested {req!r}"
                 )
         if problems:
             print(
@@ -382,9 +391,11 @@ def _stats_fold_update(cat, prev_stats, touched, opts, churn_threshold,
 
 
 def _save_stats(res, stats_dir, calculator_name, cat):
-    """Land a stats run as the newest version under ``stats_dir`` and
-    move the ``latest`` pointer once the tables and ``meta.json`` are
-    complete.  Returns (out_path, totals dict)."""
+    """Land a stats run as the newest version under ``stats_dir``: the
+    run's dir holds ``grains.parquet`` (all three grains, written once —
+    ``StatsResult.save``) and ``meta.json``, and the ``latest`` pointer
+    moves only once both are complete.  The totals are read back from
+    the written table, not re-folded.  Returns (out_path, totals dict)."""
     from dudb_spark.sources.catalog import write_pointer
 
     when = datetime.now(timezone.utc).strftime("%Y-%m-%d-%H%M%S")
@@ -406,19 +417,16 @@ def _save_stats(res, stats_dir, calculator_name, cat):
 
 
 def _load_stats(spark, stats_dir):
+    """``StatsResult.load`` for the commands that need a previous run:
+    a stats dir without one is a usage error, not a traceback."""
     from dudb_spark.operators.stats import StatsResult
 
-    with open(os.path.join(stats_dir, "latest")) as f:
-        when = f.read().strip()
-    base = os.path.join(stats_dir, when)
-    with open(os.path.join(base, "meta.json")) as f:
-        meta = json.load(f)
-    return StatsResult(
-        spark.read.parquet(f"{base}/per_prefix.parquet"),
-        spark.read.parquet(f"{base}/per_user.parquet"),
-        spark.read.parquet(f"{base}/per_group.parquet"),
-        meta,
-    )
+    try:
+        return StatsResult.load(spark, stats_dir)
+    except FileNotFoundError:
+        raise SystemExit(
+            f"no stats run in {stats_dir}: run `stats compute` first"
+        ) from None
 
 
 def cmd_stats_view(args):

@@ -508,24 +508,14 @@ def incremental_stats(
 
     res = compute_stats(fold_prefixes, fold_entries, opts)
 
-    def stitch(prev_df: DataFrame, new_df: DataFrame, key: str) -> DataFrame:
-        keep = prev_df.join(
-            _bc(affected.withColumnRenamed("path", key)),
-            key,
-            "left_anti",
-        )
-        fresh = new_df.join(
-            _bc(affected.withColumnRenamed("path", key)),
-            key,
-            "left_semi",
-        )
-        return keep.unionByName(fresh)
-
+    # the previous grains ride over unchanged outside *A*; inside it the
+    # fold's rows replace them (one stitch covers all three grains)
+    aff = _bc(affected.withColumnRenamed("path", "prefix"))
+    grains = prev.grains.join(aff, "prefix", "left_anti").unionByName(
+        res.grains.join(aff, "prefix", "left_semi")
+    ).select(*res.grains.columns)
     return StatsResult(
-        stitch(prev.per_prefix, res.per_prefix, "prefix"),
-        stitch(prev.per_user, res.per_user, "prefix"),
-        stitch(prev.per_group, res.per_group, "prefix"),
-        dict(prev.meta, incremental=True, closure_jobs=_jobs[0]),
+        grains, dict(prev.meta, incremental=True, closure_jobs=_jobs[0])
     )
 
 

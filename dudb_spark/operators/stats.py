@@ -55,8 +55,9 @@ non-duplicate matching directories.
 
 from __future__ import annotations
 
+import json
+import os
 from dataclasses import dataclass, field
-from itertools import count
 from typing import Callable
 
 from pyspark.sql import DataFrame, Window
@@ -68,8 +69,7 @@ from dudb_spark.operators.find import subtree_pred
 
 METRICS = ("bytes", "storage_bytes", "prefix_bytes", "files", "sub_prefixes")
 
-# observation-name uniquifier — see the comment at the observe() call
-_OBS_IDS = count()
+GRAINS_TABLE = "grains.parquet"
 
 _ZERO = {
     "files": 0,
@@ -114,13 +114,80 @@ def _dup_flag(
 
 class StatsResult:
     """Summary tables of one ``stats compute`` run (the Spark-native stand-in
-    for the gob ``.idustats`` snapshot, stats.go:31–36)."""
+    for the gob ``.idustats`` snapshot, stats.go:31–36).
 
-    def __init__(self, per_prefix, per_user, per_group, meta: dict):
-        self.per_prefix = per_prefix  # prefix + 8 counters
-        self.per_user = per_user  # prefix, id + counters (id-visible rows)
-        self.per_group = per_group
+    ``grains`` is ONE frame holding all three grains: a ``grain`` column
+    (``prefix``/``user``/``group``), ``prefix``, ``id`` (NULL on the
+    prefix grain) and the eight counters.  ``per_prefix``/``per_user``/
+    ``per_group`` are filters of it.  :meth:`save` writes it once as
+    ``grains.parquet`` beside the caller's ``meta.json`` and rebinds the
+    result to the written table, so ``totals()`` and every later view
+    read the table on disk instead of re-running the fold; :meth:`load`
+    reads such a dir back, and still reads dirs written in the older
+    three-table form (``per_prefix``/``per_user``/``per_group.parquet``).
+    """
+
+    def __init__(self, grains: DataFrame, meta: dict):
+        self.grains = grains
         self.meta = meta  # {root, expr, calculator, ...}
+
+    @property
+    def per_prefix(self) -> DataFrame:
+        """prefix + 8 counters."""
+        return self._grain("prefix").drop("id")
+
+    @property
+    def per_user(self) -> DataFrame:
+        """prefix, id + counters (id-visible rows)."""
+        return self._grain("user")
+
+    @property
+    def per_group(self) -> DataFrame:
+        return self._grain("group")
+
+    def _grain(self, grain: str) -> DataFrame:
+        return self.grains.where(F.col("grain") == grain).select(
+            "prefix", "id", *_ZERO
+        )
+
+    def save(self, out_dir: str) -> None:
+        """Write the grains once (S10 stand-in for the .idustats snapshot)
+        and read every later view from the written table."""
+        path = f"{out_dir}/{GRAINS_TABLE}"
+        self.grains.write.mode("overwrite").parquet(path)
+        # the known schema spares the read its schema-inference job
+        self.grains = self.grains.sparkSession.read.schema(
+            self.grains.schema
+        ).parquet(path)
+
+    @classmethod
+    def load(cls, spark, path: str) -> "StatsResult":
+        """Read one stats run: ``path`` is a stats dir, whose ``latest``
+        pointer names the run, or one run's dir.  Raises
+        ``FileNotFoundError`` when there is no complete run there."""
+        base = path
+        try:
+            with open(os.path.join(path, "latest")) as f:
+                base = os.path.join(path, f.read().strip())
+        except FileNotFoundError:
+            pass
+        try:
+            with open(os.path.join(base, "meta.json")) as f:
+                meta = json.load(f)
+        except FileNotFoundError:
+            raise FileNotFoundError(f"no stats run in {path}") from None
+        if os.path.exists(os.path.join(base, GRAINS_TABLE)):
+            return cls(spark.read.parquet(f"{base}/{GRAINS_TABLE}"), meta)
+        # three-table form: one table per grain, no grain column
+        null_id = F.lit(None).cast("long").alias("id")
+        grains = None
+        for grain in ("prefix", "user", "group"):
+            df = spark.read.parquet(f"{base}/per_{grain}.parquet").select(
+                F.lit(grain).alias("grain"), "prefix",
+                null_id if grain == "prefix" else "id", *_ZERO,
+            )
+            grains = df if grains is None else grains.unionByName(df)
+        return cls(grains, meta)
 
     # --- global totals (Heaps.Total* fields) ---------------------------
 
@@ -196,12 +263,6 @@ class StatsResult:
             cand = cand.union(t)
         return pp.join(F.broadcast(cand.distinct()), "prefix", "left_semi")
 
-    def save(self, out_dir: str) -> None:
-        """Persist summary tables (S10 stand-in for the .idustats snapshot)."""
-        self.per_prefix.write.mode("overwrite").parquet(f"{out_dir}/per_prefix.parquet")
-        self.per_user.write.mode("overwrite").parquet(f"{out_dir}/per_user.parquet")
-        self.per_group.write.mode("overwrite").parquet(f"{out_dir}/per_group.parquet")
-
 
 def compute_stats(
     prefixes: DataFrame, entries: DataFrame, opts: StatsOptions | None = None
@@ -216,20 +277,7 @@ def compute_stats(
     e_pred = compile_expr(opts.expr, mode="entry", empty_value=True, **opts.compile_opts)
 
     # -- matching directory records, with dir-level hardlink dedup -------
-    # A10 analog: named observation metrics ride the job for free (no extra
-    # pass); a listener or .observedMetrics exposes prefixes/bytes scanned,
-    # replacing the reference's progress tracker (progress.go:37–316)
     pfx = prefixes.where(subtree_pred(F.col("path"), opts.root) & p_pred)
-    # the observation name must be unique per fold within a PLAN, not just
-    # per live object: id(opts) recycles freed addresses, and two folds
-    # composed into one query (the incremental stitch path) intermittently
-    # collided on the name -> "multiple definitions of observed metrics"
-    # AnalysisException.  A process-monotonic counter can't collide.
-    pfx = pfx.observe(
-        f"dudb_stats_prefixes_{next(_OBS_IDS)}",
-        F.count(F.lit(1)).alias("prefixes_scanned"),
-        F.sum("size").alias("prefix_bytes_scanned"),
-    )
     pfx = _dup_flag(pfx, dedup)
 
     pfx_ok = pfx.where(~F.col("_is_dup"))
@@ -300,35 +348,27 @@ def compute_stats(
     )
     contrib = pfx_c.unionByName(ent_c.select(*pfx_c.columns))
 
-    # -- one shuffle, three grains ---------------------------------------
+    # -- one shuffle, three grains, one frame ----------------------------
+    # The grain column names the grouping set; id is the user or group id
+    # of the id grains.  NULL ids are exactly the duplicate-dir rows —
+    # invisible to the per-id maps in the reference (totals.go:157–160 vs
+    # 164–167) — so they are dropped from the id grains.
     sums = ", ".join(f"sum({c}) AS {c}" for c in _ZERO)
     contrib.createOrReplaceTempView("_dudb_contrib")
     grains = contrib.sparkSession.sql(
         f"""
-        SELECT prefix, uid, gid, grouping(uid) AS _gu, grouping(gid) AS _gg,
-               {sums}
+        SELECT CASE WHEN grouping(uid) = 0 THEN 'user'
+                    WHEN grouping(gid) = 0 THEN 'group'
+                    ELSE 'prefix' END AS grain,
+               prefix, coalesce(uid, gid) AS id, {sums}
         FROM _dudb_contrib
         GROUP BY GROUPING SETS ((prefix), (prefix, uid), (prefix, gid))
         """
-    )
-
-    per_prefix = grains.where((F.col("_gu") == 1) & (F.col("_gg") == 1)).select(
-        "prefix", *_ZERO
-    )
-    # id grains: NULL ids are exactly the duplicate-dir rows — invisible to
-    # the per-id maps in the reference (totals.go:157–160 vs 164–167)
-    per_user = (
-        grains.where((F.col("_gu") == 0) & F.col("uid").isNotNull())
-        .select("prefix", F.col("uid").alias("id"), *_ZERO)
-    )
-    per_group = (
-        grains.where((F.col("_gg") == 0) & F.col("gid").isNotNull())
-        .select("prefix", F.col("gid").alias("id"), *_ZERO)
-    )
+    ).where("grain = 'prefix' OR id IS NOT NULL")
 
     meta = {
         "root": opts.root,
         "expression": opts.expr,
         "count_hardlinks_as_files": opts.count_hardlinks_as_files,
     }
-    return StatsResult(per_prefix, per_user, per_group, meta)
+    return StatsResult(grains, meta)

@@ -347,7 +347,8 @@ PIN_ALLOW: dict[str, str] = {
         "bounded by distinct values per group",
     "reports/sinks.py::write_reports":
         "merged top-N report rows — the union of five top-N rankings, "
-        "at most 5n",
+        "at most 5n (the only pin: the summary inputs are scans of the "
+        "written grains table)",
     "operators/stats.py::StatsResult.merged_top":
         "top-N report frame, bounded by N",
     "pipeline/bpe.py::bpe_merges":

@@ -193,27 +193,18 @@ def write_reports(
     # The sinks below fire six actions (the per-prefix and merged-top
     # pins, two merged writes, its collect, one totals + top-id bundle).
     # The merged top rows (at most 5n) are pinned so the writes and the
-    # collect scan them instead of re-running five rankings.  Without
-    # pinning the summary frames, every action re-runs the full
-    # grouping-sets fold from the source tables — the reference never
-    # does that either: it reports off the materialized .idustats
-    # snapshot (reports.go:57–58).  The frames are post-aggregation (one
-    # row per directory / (id, directory)), so MEMORY_AND_DISK is safe
-    # at any corpus size that produced them.
-    pinned = [stats.per_prefix, stats.per_user, stats.per_group]
-    for df in pinned:
-        df.persist()
-    try:
-        merged = stats.merged_top(display_n).localCheckpoint()
-        write_tsv_report(merged, f"{out}/tsv")
-        write_json_report(merged, f"{out}/json")
-        write_markdown_report(
-            stats, f"{out}/markdown/report.md", display_n, users, groups,
-            merged=merged,
-        )
-    finally:
-        for df in pinned:
-            df.unpersist()
+    # collect scan them instead of re-running five rankings.  The summary
+    # frames themselves are not pinned: a loaded stats run reads its
+    # written grains table, so each action scans that one table — as the
+    # reference reports off the materialized .idustats snapshot
+    # (reports.go:57–58) — and never re-runs the fold.
+    merged = stats.merged_top(display_n).localCheckpoint()
+    write_tsv_report(merged, f"{out}/tsv")
+    write_json_report(merged, f"{out}/json")
+    write_markdown_report(
+        stats, f"{out}/markdown/report.md", display_n, users, groups,
+        merged=merged,
+    )
     write_pointer(f"{reports_root.rstrip('/')}/latest",
                   os.path.basename(out))
     return out

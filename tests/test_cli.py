@@ -390,6 +390,159 @@ def test_cli_incremental_fallback_on_mismatch(
     assert json.loads(cap.out)["totals"]["files"] == 3
 
 
+def test_cli_incremental_without_previous_run(spark, real_tree, tmp_path,
+                                             capsys):
+    """--incremental into a stats dir that holds no run yet takes the
+    full-compute fallback and says why."""
+    db = str(tmp_path / "db")
+    stats_dir = str(tmp_path / "stats")
+    run(capsys, "analyze", "--db", db, real_tree)
+    main(["stats", "compute", "--db", db, "--stats-dir", stats_dir,
+          "--incremental", real_tree])
+    cap = capsys.readouterr()
+    assert "falling back to a full compute" in cap.err
+    assert "no previous stats run" in cap.err
+    inc = json.loads(cap.out)
+    full = json.loads(
+        run(capsys, "stats", "compute", "--db", db, "--stats-dir", stats_dir,
+            real_tree)
+    )
+    assert inc["totals"] == full["totals"]
+    assert inc["totals"]["files"] == 3
+
+
+def test_cli_readers_without_stats_run(spark, tmp_path, capsys):
+    """stats view and reports generate on a stats dir with no run exit
+    with a one-line message naming the dir, not a traceback."""
+    stats_dir = str(tmp_path / "stats")
+    os.makedirs(stats_dir)
+    for argv in (
+        ["stats", "view", "--stats-dir", stats_dir],
+        ["reports", "generate", "--stats-dir", stats_dir,
+         "--reports-dir", str(tmp_path / "reports")],
+    ):
+        with pytest.raises(SystemExit) as exc:
+            main(argv)
+        msg = str(exc.value.code)
+        assert stats_dir in msg and "\n" not in msg
+    assert not os.path.exists(tmp_path / "reports" / "latest")
+
+
+def _write_three_table_run(spark, run_dir, old_dir):
+    """Copy one stats run into the three-table form stats dirs had before
+    grains.parquet: per_prefix/per_user/per_group.parquet + meta.json."""
+    import shutil
+
+    from dudb_spark.operators.stats import StatsResult
+
+    res = StatsResult.load(spark, run_dir)
+    for grain in ("prefix", "user", "group"):
+        getattr(res, f"per_{grain}").write.parquet(
+            os.path.join(old_dir, f"per_{grain}.parquet"))
+    shutil.copy(os.path.join(run_dir, "meta.json"), old_dir)
+
+
+def _report_files(report_dir):
+    """Each report file's text, markdown without its timestamp line."""
+    out = {}
+    for kind in ("tsv", "json"):
+        d = os.path.join(report_dir, kind)
+        out[kind] = "".join(
+            open(os.path.join(d, n)).read()
+            for n in sorted(os.listdir(d)) if n.startswith("part-")
+        )
+    with open(os.path.join(report_dir, "markdown", "report.md")) as f:
+        out["markdown"] = "\n".join(
+            l for l in f.read().splitlines()
+            if not l.startswith("- generated:")
+        )
+    return out
+
+
+def test_cli_three_table_stats_dir_still_read(spark, real_tree, tmp_path,
+                                              capsys):
+    """A stats run is stored as grains.parquet + meta.json.  The same run
+    stored in the older three-table form gives byte-identical stats view
+    and report output, and stats --incremental from it equals a full
+    compute."""
+    import time
+
+    from dudb_spark.operators.stats import StatsResult
+
+    db = str(tmp_path / "db")
+    stats_dir = str(tmp_path / "stats")
+    old_dir = str(tmp_path / "stats_old")
+    run(capsys, "analyze", "--db", db, real_tree)
+    out = json.loads(run(capsys, "stats", "compute", "--db", db,
+                         "--stats-dir", stats_dir, real_tree))
+    run_dir = out["stats"]
+    assert sorted(os.listdir(run_dir)) == ["grains.parquet", "meta.json"]
+
+    when = os.path.basename(run_dir)
+    os.makedirs(os.path.join(old_dir, when))
+    _write_three_table_run(spark, run_dir, os.path.join(old_dir, when))
+    with open(os.path.join(old_dir, "latest"), "w") as f:
+        f.write(when)
+
+    for argv in (["-n", "3"], ["-n", "2", "--user", "--group"]):
+        assert (run(capsys, "stats", "view", "--stats-dir", old_dir, *argv)
+                == run(capsys, "stats", "view", "--stats-dir", stats_dir,
+                       *argv))
+    reports = []
+    for sd in (stats_dir, old_dir):
+        rep = json.loads(run(
+            capsys, "reports", "generate", "--stats-dir", sd,
+            "--reports-dir", sd + "_reports"))["report"]
+        reports.append(_report_files(rep))
+    assert reports[0] == reports[1]
+    assert reports[0]["markdown"].count("|") > 20
+
+    # incremental from the three-table run equals a full compute
+    time.sleep(1.1)
+    with open(os.path.join(real_tree, "proj/a/new.dat"), "w") as f:
+        f.write("0123456789")
+    os.unlink(os.path.join(real_tree, "proj/b/z.log"))
+    run(capsys, "analyze", "--db", db, real_tree)
+    main(["stats", "compute", "--db", db, "--stats-dir", old_dir,
+          "--incremental", "--churn-threshold", "0", real_tree])
+    cap = capsys.readouterr()
+    assert "falling back" not in cap.err
+    inc = json.loads(cap.out)
+    full = json.loads(run(capsys, "stats", "compute", "--db", db,
+                          "--stats-dir", stats_dir, real_tree))
+    assert inc["totals"] == full["totals"]
+    assert sorted(os.listdir(inc["stats"])) == ["grains.parquet",
+                                                 "meta.json"]
+
+    def rows(path):
+        g = StatsResult.load(spark, path).grains
+        return sorted(map(tuple, g.collect()), key=repr)
+
+    assert rows(inc["stats"]) == rows(full["stats"])
+
+
+def test_cli_stats_compute_job_count(spark, real_tree, tmp_path, capsys):
+    """stats compute folds once.  The whole command stays within ten
+    Spark jobs: two schema reads of the snapshot, the fold's stages with
+    the one grains write, and two for the totals read back from the
+    written table.  Re-running the lazy fold per grain and for the
+    totals took 27."""
+    db = str(tmp_path / "db")
+    stats_dir = str(tmp_path / "stats")
+    run(capsys, "analyze", "--db", db, real_tree)
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(st.getJobIdsForGroup(None))
+    out = json.loads(run(capsys, "stats", "compute", "--db", db,
+                         "--stats-dir", stats_dir, real_tree))
+    bus.waitUntilEmpty()
+    jobs = set(st.getJobIdsForGroup(None)) - before
+    assert out["totals"]["files"] == 3
+    assert 0 < len(jobs) <= 10, sorted(jobs)
+
+
 def test_cli_pipeline_commands(spark, tmp_path, capsys):
     docs = "/root/testdata/sf0.001/documents.parquet"
     out = json.loads(run(capsys, "pipeline", "dedup", "--input", docs,
