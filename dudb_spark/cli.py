@@ -14,6 +14,7 @@ workflow maps 1:1:
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import os
 import sys
@@ -148,7 +149,8 @@ def _analyze_body(
     # tables() hides the layout column either way
     lay = dict(layout=args.layout, path_buckets=args.path_buckets)
     if cat.latest_version() is None:
-        out = cat.write_snapshot(staged_p, staged_e, errors, **lay)
+        out = cat.write_snapshot(staged_p, staged_e, errors,
+                                 touched_dirs=n_prefixes, **lay)
         summary = {
             "operation": "analyze",
             "prefixes_started": n_prefixes,
@@ -162,7 +164,11 @@ def _analyze_body(
             prev.prefixes, prev.entries, staged_p, staged_e,
             root=args.prefix, force=getattr(args, "force", False),
         )
-        out = cat.write_snapshot(res.prefixes, res.entries, errors, **lay)
+        # the churn count `stats --incremental` plans from, with no job
+        touched = sum(res.summary[k] for k in (
+            "prefixes_added", "prefixes_changed", "prefixes_deleted"))
+        out = cat.write_snapshot(res.prefixes, res.entries, errors,
+                                 touched_dirs=touched, **lay)
         summary = dict(res.summary, errors=n_errors)
     stop = datetime.now(timezone.utc)
     summary["duration_ns"] = int((stop - start).total_seconds() * 1e9)
@@ -263,64 +269,78 @@ def cmd_stats_compute(args):
                 file=sys.stderr,
             )
             incremental = False
+    plan = {"plan": "full", "gate": None}
     if incremental:
-        # update the stored summaries by re-folding only the slice the
-        # snapshots disagree on (operators/incremental.py)
-        from pyspark.sql import functions as F
-
-        from dudb_spark.operators.incremental import incremental_stats
-        from dudb_spark.operators.ingest import snapshot_diff
-
-        prev_t = cat.tables(prev_stats.meta["snapshot_version"])
-        d = snapshot_diff(prev_t.prefixes, prev_t.entries,
-                          t.prefixes, t.entries)
-        # a changed file touches its parent dir; a top-level '/f' has
-        # parent '/' (the bare regexp would yield '' and the root row
-        # would never be refolded)
-        parent = F.regexp_replace("path", "/[^/]+$", "")
-        touched = (
-            d.where("kind = 'prefix'").select("path")
-            .unionByName(
-                d.where("kind = 'file'").select(
-                    F.when(F.length(parent) == 0, F.lit("/"))
-                    .otherwise(parent)
-                    .alias("path")
-                )
-            )
-            .distinct()
-            # churn-sized; pinning makes the auto-gate count below free
-            # and keeps the closure from re-running the snapshot diff
-            .localCheckpoint()
-        )
-        res = _stats_fold_update(
-            cat, prev_stats, touched, opts,
-            getattr(args, "churn_threshold", 0.02),
+        prev_v = prev_stats.meta["snapshot_version"]
+        prev_t = cat.tables(prev_v)
+        # the churn since the previous run, summed from the counts each
+        # analyze recorded: no Spark job.  A version without one
+        # (database compact, watch deltas) falls back to counting the
+        # snapshot diff, which the closure then reuses.
+        touched = functools.cache(lambda: _diff_touched(prev_t, t))
+        n_touched = cat.touched_dirs_since(prev_v)
+        if n_touched is None:
+            n_touched = touched().count()
+        res, plan = _stats_fold_update(
+            cat, t, prev_t, prev_stats, opts,
+            getattr(args, "churn_threshold", 0.02), n_touched, touched,
         )
     else:
         res = compute_stats(t.prefixes, t.entries, opts)
-    out, tot = _save_stats(res, args.stats_dir, args.calculator, cat)
+    out, tot = _save_stats(res, args.stats_dir, args.calculator, cat, plan)
     print(json.dumps({"stats": out, "totals": tot}))
 
 
-def _stats_fold_update(cat, prev_stats, touched, opts, churn_threshold,
-                       label="stats --incremental"):
+def _diff_touched(prev_t, t):
+    """Directories whose stats rows can differ between two snapshots,
+    from their diff: every changed prefix and the parent of every
+    changed file.  Churn-sized and pinned (localCheckpoint), so the
+    count and the closure's probes share one diff run."""
+    from pyspark.sql import functions as F
+
+    from dudb_spark.operators.ingest import snapshot_diff
+
+    d = snapshot_diff(prev_t.prefixes, prev_t.entries,
+                      t.prefixes, t.entries)
+    # a changed file touches its parent dir; a top-level '/f' has
+    # parent '/' (the bare regexp would yield '' and the root row
+    # would never be refolded)
+    parent = F.regexp_replace("path", "/[^/]+$", "")
+    return (
+        d.where("kind = 'prefix'").select("path")
+        .unionByName(
+            d.where("kind = 'file'").select(
+                F.when(F.length(parent) == 0, F.lit("/"))
+                .otherwise(parent)
+                .alias("path")
+            )
+        )
+        .distinct()
+        .localCheckpoint()
+    )
+
+
+def _stats_fold_update(cat, t, prev_t, prev_stats, opts, churn_threshold,
+                       n_touched, touched, label="stats --incremental"):
     """Fold-update shared by ``stats compute --incremental`` and the
-    ``watch --apply --stats-dir`` continuous loop: cost-based auto-refold
-    gate (the closure's fixed job overhead loses to a plain refold once
-    churn is a real fraction of the tree — incremental.refold_recommended
-    has the measured crossover), then the incremental closure with
-    bucket-pruned probes when both snapshots share the bucketed layout.
-    ``touched`` must be churn-sized and pinned (localCheckpoint); prev
-    snapshot version comes from ``prev_stats.meta``."""
+    ``watch --apply --stats-dir`` continuous loop.  The plan is chosen
+    from metadata alone, before any Spark job: the closure runs only
+    when its probes can prune (both snapshots bucketed with one
+    ``path_buckets``) and the churn is under the threshold
+    (incremental.refold_recommended owns the rule); otherwise one full
+    refold of ``t``.  ``t``/``prev_t`` are the current and previous
+    snapshots' tables (prev version from ``prev_stats.meta``);
+    ``n_touched`` is the touched-dir count the gate reads, and
+    ``touched()`` returns the churn-sized, pinned touched set — called
+    only when the closure runs.  Returns (result, plan), where plan is
+    the choice and the gate's inputs, for the stats ``meta.json``."""
     from dudb_spark.operators.incremental import (
         incremental_stats,
         refold_recommended,
     )
     from dudb_spark.operators.stats import compute_stats
 
-    t = cat.tables()
     prev_v = prev_stats.meta["snapshot_version"]
-    prev_t = cat.tables(prev_v)
 
     # DELTA-chain versions reconstruct lazily (DeltaTables: base scan +
     # one apply_changes join stack per delta).  Handing that PLAN to the
@@ -339,8 +359,16 @@ def _stats_fold_update(cat, prev_stats, touched, opts, churn_threshold,
         return tbl.prefixes, tbl.entries
 
     cur_v = cat.latest_version()
-    t_prefixes, t_entries = _pin_delta(t, cur_v)
-    n_touched = touched.count()
+    # both snapshots stored bucketed with the same width → the
+    # closure's path probes partition-prune to the churn's buckets;
+    # otherwise each probe scans both whole snapshots
+    prev_lay = cat.layout(prev_v)
+    cur_lay = cat.layout(cur_v)
+    prunable = (
+        prev_lay.get("layout") == "bucketed"
+        and cur_lay.get("layout") == "bucketed"
+        and prev_lay["path_buckets"] == cur_lay["path_buckets"]
+    )
     # tree size from snapshot metadata (catalog.prefix_rows): zero jobs,
     # and — critically — no reconstruction of a delta-chain version,
     # which a .count() on prev_t.prefixes would execute per watch batch.
@@ -349,31 +377,40 @@ def _stats_fold_update(cat, prev_stats, touched, opts, churn_threshold,
     n_tree = cat.prefix_rows(prev_v)
     if n_tree is None:
         n_tree = prev_t.prefixes.count()
-    if refold_recommended(n_touched, n_tree, churn_threshold):
+    refold = refold_recommended(n_touched, n_tree, churn_threshold,
+                                prunable=prunable)
+    plan = {
+        "plan": "refold" if refold else "closure",
+        "gate": {
+            "prunable": prunable,
+            "touched_dirs": n_touched,
+            "tree_dirs": n_tree,
+            "churn_threshold": churn_threshold,
+        },
+    }
+    if refold:
+        why = (
+            f"churn {n_touched}/{n_tree} dirs >= threshold "
+            f"{churn_threshold:g}"
+            if prunable
+            else "snapshots not bucketed alike, closure cannot prune"
+        )
         print(
-            f"{label}: churn {n_touched}/{n_tree} dirs >= "
-            f"threshold {churn_threshold:g} — full refold is the cheaper "
-            "plan (--churn-threshold 0 forces the incremental closure)",
+            f"{label}: {why} — full refold is the cheaper plan "
+            "(--churn-threshold 0 forces the incremental closure)",
             file=sys.stderr,
         )
-        return compute_stats(t_prefixes, t_entries, opts)
-    # both snapshots stored bucketed with the same width → hand the
-    # raw (pb-carrying) scans to the closure so its path probes
-    # partition-prune to the churn's buckets
-    prev_lay = cat.layout(prev_v)
-    cur_lay = cat.layout()
+        return compute_stats(*_pin_delta(t, cur_v), opts), plan
+    # prunable → hand the raw (pb-carrying) scans to the closure
     buckets = None
     spill_rows = None
-    if (
-        prev_lay.get("layout") == "bucketed"
-        and cur_lay.get("layout") == "bucketed"
-        and prev_lay["path_buckets"] == cur_lay["path_buckets"]
-    ):
+    if prunable:
         buckets = prev_lay["path_buckets"]
         if "spill_rows" in prev_lay and "spill_rows" in cur_lay:
             # recorded at write time: lets the closure skip its
             # is-the-index-empty probe job
             spill_rows = prev_lay["spill_rows"] + cur_lay["spill_rows"]
+    t_prefixes, t_entries = _pin_delta(t, cur_v)
     prev_prefixes, prev_entries = _pin_delta(prev_t, prev_v)
     return incremental_stats(
         prev_stats,
@@ -381,21 +418,23 @@ def _stats_fold_update(cat, prev_stats, touched, opts, churn_threshold,
         prev_t.read_raw("entries") if buckets else prev_entries,
         t.read_raw("prefixes") if buckets else t_prefixes,
         t.read_raw("entries") if buckets else t_entries,
-        touched, opts,
+        touched(), opts,
         pin_inputs=False,  # stored snapshot scans — nothing to pin
         path_buckets=buckets,
         prev_spill=cat.spill_index(prev_v) if buckets else None,
         new_spill=cat.spill_index() if buckets else None,
         spill_rows=spill_rows,
-    )
+    ), plan
 
 
-def _save_stats(res, stats_dir, calculator_name, cat):
+def _save_stats(res, stats_dir, calculator_name, cat, plan):
     """Land a stats run as the newest version under ``stats_dir``: the
     run's dir holds ``grains.parquet`` (all three grains, written once —
     ``StatsResult.save``) and ``meta.json``, and the ``latest`` pointer
-    moves only once both are complete.  The totals are read back from
-    the written table, not re-folded.  Returns (out_path, totals dict)."""
+    moves only once both are complete.  ``plan`` (full / refold /
+    closure and the gate's inputs) is recorded in ``meta.json``.  The
+    totals are read back from the written table, not re-folded.
+    Returns (out_path, totals dict)."""
     from dudb_spark.sources.catalog import write_pointer
 
     when = datetime.now(timezone.utc).strftime("%Y-%m-%d-%H%M%S")
@@ -408,7 +447,7 @@ def _save_stats(res, stats_dir, calculator_name, cat):
     res.save(out)
     meta = dict(res.meta, date=when, prefix=res.meta.get("root"),
                 calculator=calculator_name,
-                snapshot_version=cat.latest_version())
+                snapshot_version=cat.latest_version(), **plan)
     with open(os.path.join(out, "meta.json"), "w") as f:
         json.dump(meta, f)
     write_pointer(os.path.join(stats_dir, "latest"), when)
@@ -522,6 +561,7 @@ def _watch_stats_update(spark, cat, stats_dir, touched, applied_from,
         calculator=calculator(pm.get("calculator") or "identity"),
         count_hardlinks_as_files=pm.get("count_hardlinks_as_files", False),
     )
+    t = cat.tables()
     if pm.get("snapshot_version") != applied_from:
         print(
             f"watch --stats-dir: previous stats run folded "
@@ -529,14 +569,16 @@ def _watch_stats_update(spark, cat, stats_dir, touched, applied_from,
             f"{applied_from!r} — full refold to resync",
             file=sys.stderr,
         )
-        t = cat.tables()
         res = compute_stats(t.prefixes, t.entries, opts)
+        plan = {"plan": "full", "gate": None}
     else:
-        res = _stats_fold_update(
-            cat, prev_stats, touched.localCheckpoint(), opts,
-            churn_threshold, label="watch --stats-dir",
+        touched = touched.localCheckpoint()
+        res, plan = _stats_fold_update(
+            cat, t, cat.tables(applied_from), prev_stats, opts,
+            churn_threshold, touched.count(), lambda: touched,
+            label="watch --stats-dir",
         )
-    out, tot = _save_stats(res, stats_dir, pm.get("calculator"), cat)
+    out, tot = _save_stats(res, stats_dir, pm.get("calculator"), cat, plan)
     print(json.dumps({"stats": out, "totals": tot}), flush=True)
 
 
@@ -607,8 +649,10 @@ def cmd_watch(args):
     steady-state write cost track the churn, never the tree.
 
     ``--stats-dir`` (with ``--apply``) additionally maintains the stored
-    stats summaries: after each applied batch the incremental closure
-    folds only the batch's touched slice and lands a new stats version —
+    stats summaries: after each applied batch the fold-update (the
+    incremental closure over the batch's touched slice on bucketed
+    snapshots under the churn threshold, else one refold) lands a new
+    stats version —
     analyze → stats → watch keeps BOTH the snapshot and the summaries
     continuously current."""
     from dudb_spark.sources.fsds import register_watch
@@ -2337,10 +2381,11 @@ def build_parser():
     )
     pc.add_argument(
         "--churn-threshold", type=float, default=0.02,
-        help="with --incremental: fall back to a full refold when "
-             "touched dirs / tree dirs reaches this fraction (the "
-             "closure's fixed job overhead loses to one fold at high "
-             "churn); 0 forces the incremental closure",
+        help="with --incremental: the closure runs only on snapshots "
+             "bucketed with one --path-buckets (its probes prune), and "
+             "falls back to a full refold once touched dirs / tree dirs "
+             "reaches this fraction; other layouts always refold; 0 "
+             "forces the incremental closure",
     )
     pc.set_defaults(func=cmd_stats_compute)
     pv = ssub.add_parser("view")
@@ -2393,13 +2438,15 @@ def build_parser():
     p.add_argument(
         "--stats-dir",
         help="with --apply: maintain the stored stats summaries after "
-        "each applied batch via the incremental closure (continues the "
-        "last `stats compute` run's fold options; requires one)",
+        "each applied batch, by the incremental closure or a refold "
+        "(see --churn-threshold; continues the last `stats compute` "
+        "run's fold options; requires one)",
     )
     p.add_argument(
         "--churn-threshold", type=float, default=0.02,
-        help="churn fraction above which the stats update falls back to "
-        "a full refold (0 forces the incremental closure)",
+        help="churn fraction at which the stats update falls back to a "
+        "full refold on snapshots bucketed alike; other layouts always "
+        "refold (0 forces the incremental closure)",
     )
     p.add_argument(
         "--compact-every", type=int, default=8,

@@ -133,18 +133,30 @@ class FsTables:
     def path(self, table: str) -> str:
         return f"{self.root}/{table}.parquet"
 
+    # tables every snapshot writer lands with the model's schema: read
+    # with it pinned, so opening a table runs no schema-inference job
+    SCHEMAS = {
+        "prefixes": PREFIXES_SCHEMA,
+        "entries": ENTRIES_SCHEMA,
+        "errors": ERRORS_SCHEMA,
+    }
+
     def read(self, table: str):
         """Logical table view: physical layout columns (the ``pb`` path
         bucket a bucketed snapshot is partitioned by) are dropped so
         consumers see the same schema regardless of storage layout."""
-        df = self.spark.read.parquet(self.path(table))
+        df = self.read_raw(table)
         return df.drop("pb") if "pb" in df.columns else df
 
     def read_raw(self, table: str):
         """Physical view: keeps layout columns (``pb``) so layout-aware
         readers — the incremental-stats closure probes — can prune
-        partitions."""
-        return self.spark.read.parquet(self.path(table))
+        partitions.  A pinned schema still exposes ``pb``: Spark infers
+        partition columns from the directory names, not the footers."""
+        reader = self.spark.read
+        if table in self.SCHEMAS:
+            reader = reader.schema(self.SCHEMAS[table])
+        return reader.parquet(self.path(table))
 
     @property
     def prefixes(self):

@@ -520,22 +520,41 @@ def incremental_stats(
 
 
 def refold_recommended(
-    touched_count: int, n_prefixes: int, threshold: float = 0.02
+    touched_count: int, n_prefixes: int, threshold: float = 0.02, *,
+    prunable: bool,
 ) -> bool:
-    """Cost-based choice between the incremental closure and a plain
-    full refold: recommend the refold once the churn fraction
-    (touched directories / tree directories) reaches ``threshold``.
+    """Choice between the incremental closure and a plain full refold,
+    made from snapshot metadata before any Spark job runs.
 
-    Rationale (measured, BENCH_NOTES round-6/7): the closure's cost is
-    churn-proportional data plus a FIXED overhead of ~12 driver-
-    sequential jobs, while the refold is one tree-proportional fold —
-    at 18M entries the closure wins 1.9x at 0.6% churn and LOSES
-    (0.66x) at 2.9%.  The local crossover sits between those; 2% is the
-    shipped default.  On a cluster the fixed-job floor shrinks relative
-    to the fold, so the true crossover moves UP — the threshold is a
-    floor-conservative default, not a tuning requirement.  A
-    ``threshold <= 0`` disables the gate (always incremental).
+    Rule: ``threshold <= 0`` forces the closure (the switch that keeps
+    it testable).  Otherwise refold whenever the closure cannot prune
+    (``prunable`` is False: the two snapshots are not both bucketed
+    with one ``path_buckets``), and on prunable snapshots refold once
+    the churn fraction (touched directories / tree directories) reaches
+    ``threshold``.
+
+    Why the closure needs pruning: its probes scan BOTH whole snapshots
+    on the plain layout, so it costs a refold's scans plus ~25 more
+    driver-sequential jobs, and loses at every size measured on 4 vCPUs
+    (local mode, warm JVM, 1% of leaf dirs churned):
+
+    - 3.7k entries (the benchmark tree): the snapshot diff took 1.9 s
+      and 6 jobs and the closure 6.4 s and 25 jobs; the refold is 8 jobs.
+    - 104k entries (11.5k dirs, 118 touched; 10 groups of 1,150 leaf
+      dirs of 8 files): diff + unpruned closure 8.9-9.9 s and 31 jobs,
+      refold 3.4-3.8 s and 8 jobs, two runs each.  On bucketed
+      snapshots of that tree the pruned closure took 12.8-17.9 s and
+      63 jobs against a 3.7-4.1 s, 10-job refold.
+    - ~400k entries: closure 14.1 s, refold 7.8 s.
+
+    Why the churn gate on prunable snapshots: the bucket-pruned
+    closure's cost is churn-proportional data plus a FIXED overhead of
+    driver-sequential jobs, while the refold is one tree-proportional
+    fold — at 18M entries it wins 1.9x at 0.6% churn and LOSES (0.66x)
+    at 2.9% (BENCH_NOTES round-6/7); 2% is the shipped default.
     """
     if threshold <= 0:
         return False
+    if not prunable:
+        return True
     return touched_count >= threshold * max(n_prefixes, 1)

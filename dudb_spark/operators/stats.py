@@ -62,6 +62,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dudb_spark.functions.boolexpr import compile_expr
 from dudb_spark.functions.calculators import identity
@@ -81,6 +82,17 @@ _ZERO = {
     "hardlinks": 0,
     "hardlink_dirs": 0,
 }
+
+# schema of the written grains table, shared by StatsResult.save and
+# load: reading a run back runs no schema-inference job
+GRAINS_SCHEMA = T.StructType(
+    [
+        T.StructField("grain", T.StringType()),
+        T.StructField("prefix", T.StringType()),
+        T.StructField("id", T.LongType()),
+    ]
+    + [T.StructField(c, T.LongType()) for c in _ZERO]
+)
 
 
 @dataclass
@@ -155,9 +167,8 @@ class StatsResult:
         and read every later view from the written table."""
         path = f"{out_dir}/{GRAINS_TABLE}"
         self.grains.write.mode("overwrite").parquet(path)
-        # the known schema spares the read its schema-inference job
         self.grains = self.grains.sparkSession.read.schema(
-            self.grains.schema
+            GRAINS_SCHEMA
         ).parquet(path)
 
     @classmethod
@@ -177,7 +188,12 @@ class StatsResult:
         except FileNotFoundError:
             raise FileNotFoundError(f"no stats run in {path}") from None
         if os.path.exists(os.path.join(base, GRAINS_TABLE)):
-            return cls(spark.read.parquet(f"{base}/{GRAINS_TABLE}"), meta)
+            return cls(
+                spark.read.schema(GRAINS_SCHEMA).parquet(
+                    f"{base}/{GRAINS_TABLE}"
+                ),
+                meta,
+            )
         # three-table form: one table per grain, no grain column
         null_id = F.lit(None).cast("long").alias("id")
         grains = None

@@ -330,8 +330,8 @@ PIN_ALLOW: dict[str, str] = {
         "deepening chain (the r11 superlinear fix)",
     "cli.py::_watch_stats_update":
         "touched-path set of one watch batch — churn-bounded",
-    "cli.py::cmd_stats_compute":
-        "per-prefix summary — O(directories), orders below entries",
+    "cli.py::_diff_touched":
+        "touched-dir set of two snapshots' diff — churn-bounded",
     "operators/incremental.py::incremental_stats":
         "pin_inputs=True only: the caller declares the merged snapshot "
         "an unwritten merge DAG worth one materialization; the closure "

@@ -95,8 +95,13 @@ class SnapshotCatalog:
     def write_snapshot(
         self, prefixes, entries, errors=None,
         layout: str | None = None, path_buckets: int = 64,
+        touched_dirs: int | None = None,
     ) -> str:
         """Write the next snapshot version.
+
+        ``touched_dirs`` is the writer's count of directories added,
+        changed or deleted since the previous version; it lands in
+        ``_layout.json`` for :meth:`touched_dirs_since`.
 
         ``layout="bucketed"`` stores both tables hash-partitioned by the
         row's PROBE PATH (``path`` for prefixes, ``parent`` for entries):
@@ -197,29 +202,22 @@ class SnapshotCatalog:
             n_spill = self.spark.read.parquet(
                 f"{out}/hlinks.parquet"
             ).count()
-            with open(os.path.join(out, "_layout.json"), "w") as f:
-                _json.dump(
-                    {
-                        "layout": "bucketed",
-                        "path_buckets": path_buckets,
-                        "spill_rows": n_spill,
-                        "prefix_rows": self._count_written_prefixes(out),
-                    },
-                    f,
-                )
+            meta = {
+                "layout": "bucketed",
+                "path_buckets": path_buckets,
+                "spill_rows": n_spill,
+            }
         else:
-            # plain layout still records the tree size: readers (the
-            # stats refold gate) need it without counting reconstructed
-            # frames, and for a delta CHAIN the count would otherwise
-            # execute the full reconstruction join per watch batch
-            with open(os.path.join(out, "_layout.json"), "w") as f:
-                _json.dump(
-                    {
-                        "layout": "plain",
-                        "prefix_rows": self._count_written_prefixes(out),
-                    },
-                    f,
-                )
+            meta = {"layout": "plain"}
+        # every layout records the tree size and the churn count: the
+        # stats plan reads them without a Spark job, and for a delta
+        # CHAIN a count would otherwise execute the full reconstruction
+        # join per watch batch
+        meta["prefix_rows"] = self._count_written_prefixes(out)
+        if touched_dirs is not None:
+            meta["touched_dirs"] = touched_dirs
+        with open(os.path.join(out, "_layout.json"), "w") as f:
+            _json.dump(meta, f)
         write_pointer(os.path.join(self.root, "latest"), v)
         return out
 
@@ -257,6 +255,25 @@ class SnapshotCatalog:
         lay = self.layout(v)
         n = lay.get("prefix_rows")
         return int(n) if n is not None else None
+
+    def touched_dirs_since(self, version: str) -> int | None:
+        """Directories touched between ``version`` and the latest one:
+        the sum of the ``touched_dirs`` each later snapshot recorded at
+        write time, read from metadata with no Spark job.  None when a
+        version in the range records no count (``database compact``,
+        ``watch`` deltas, snapshots older than this metadata) or
+        ``version`` is no longer in the catalog."""
+        vs = self.versions()
+        latest = self.latest_version()
+        if version not in vs or latest not in vs:
+            return None
+        total = 0
+        for v in vs[vs.index(version) + 1:vs.index(latest) + 1]:
+            n = self.layout(v).get("touched_dirs")
+            if n is None:
+                return None
+            total += int(n)
+        return total
 
     def watch_seed(self, prefix: str) -> str:
         """Materialize — or REUSE — the fswatch seed artifact for the

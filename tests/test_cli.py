@@ -810,6 +810,181 @@ def test_cli_incremental_auto_refold_gate(spark, real_tree, tmp_path,
     assert inc["totals"] == full["totals"]
 
 
+def _spark_jobs(spark, fn):
+    """Run ``fn`` and return the ids of the Spark jobs it launched."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(st.getJobIdsForGroup(None))
+    fn()
+    bus.waitUntilEmpty()
+    return set(st.getJobIdsForGroup(None)) - before
+
+
+def _churned_db(capsys, real_tree, tmp_path, *layout):
+    """analyze → stats compute → add one file → analyze: the DB and
+    stats dir a ``stats --incremental`` run starts from."""
+    import time
+
+    db = str(tmp_path / "db")
+    stats_dir = str(tmp_path / "stats")
+    run(capsys, "analyze", "--db", db, real_tree, *layout)
+    run(capsys, "stats", "compute", "--db", db, "--stats-dir", stats_dir,
+        real_tree)
+    time.sleep(1.1)
+    with open(os.path.join(real_tree, "proj/a/new.dat"), "w") as f:
+        f.write("0123456789")
+    run(capsys, "analyze", "--db", db, real_tree, *layout)
+    return db, stats_dir
+
+
+def _stats_meta(spark, stats_dir):
+    from dudb_spark.cli import _load_stats
+
+    return _load_stats(spark, stats_dir).meta
+
+
+def test_cli_incremental_plain_refolds_without_diff(
+    spark, real_tree, tmp_path, capsys, monkeypatch
+):
+    """Plain snapshots: the closure's probes cannot prune, so
+    stats --incremental refolds at any churn, plans from the touched-dir
+    count analyze recorded, and never runs the snapshot diff."""
+    from dudb_spark.operators import ingest
+
+    db, stats_dir = _churned_db(capsys, real_tree, tmp_path)
+
+    def no_diff(*a, **k):
+        raise AssertionError("snapshot_diff ran on the refold path")
+
+    monkeypatch.setattr(ingest, "snapshot_diff", no_diff)
+    # the second run starts from the first one's snapshot: no churn, so
+    # under any threshold, and it still refolds
+    for threshold, touched in (("0.02", 1), ("0.9", 0)):
+        main(["stats", "compute", "--db", db, "--stats-dir", stats_dir,
+              "--incremental", "--churn-threshold", threshold, real_tree])
+        cap = capsys.readouterr()
+        assert "cannot prune" in cap.err and "cheaper plan" in cap.err
+        inc = json.loads(cap.out)
+        meta = _stats_meta(spark, stats_dir)
+        assert meta["plan"] == "refold"
+        assert meta["gate"] == {
+            "prunable": False, "touched_dirs": touched, "tree_dirs": 4,
+            "churn_threshold": float(threshold),
+        }
+    full = json.loads(run(capsys, "stats", "compute", "--db", db,
+                          "--stats-dir", stats_dir, real_tree))
+    assert inc["totals"] == full["totals"]
+    assert full["totals"]["files"] == 4
+    assert _stats_meta(spark, stats_dir)["plan"] == "full"
+
+
+def test_cli_incremental_refold_job_count(spark, real_tree, tmp_path,
+                                          capsys):
+    """stats --incremental on plain snapshots is one fold plus the
+    write: no diff, no closure, and no schema-inference job for the
+    previous stats run or either snapshot.  The closure path took
+    about 30 more jobs."""
+    db, stats_dir = _churned_db(capsys, real_tree, tmp_path)
+    out = {}
+
+    def inc():
+        out.update(json.loads(run(
+            capsys, "stats", "compute", "--db", db, "--stats-dir",
+            stats_dir, "--incremental", real_tree)))
+
+    jobs = _spark_jobs(spark, inc)
+    assert out["totals"]["files"] == 4
+    assert 0 < len(jobs) <= 8, sorted(jobs)
+
+
+def test_cli_incremental_bucketed_runs_closure(spark, real_tree, tmp_path,
+                                               capsys):
+    """Bucketed snapshots with one path_buckets under the churn
+    threshold still take the incremental closure, which equals a full
+    refold."""
+    db, stats_dir = _churned_db(capsys, real_tree, tmp_path, "--layout",
+                                "bucketed", "--path-buckets", "8")
+    inc = json.loads(run(capsys, "stats", "compute", "--db", db,
+                         "--stats-dir", stats_dir, "--incremental",
+                         "--churn-threshold", "0.5", real_tree))
+    meta = _stats_meta(spark, stats_dir)
+    assert meta["plan"] == "closure" and meta["incremental"] is True
+    assert meta["gate"] == {"prunable": True, "touched_dirs": 1,
+                            "tree_dirs": 4, "churn_threshold": 0.5}
+    full = json.loads(run(capsys, "stats", "compute", "--db", db,
+                          "--stats-dir", stats_dir, real_tree))
+    assert inc["totals"] == full["totals"]
+
+
+def test_cli_incremental_counts_by_diff_without_record(
+    spark, real_tree, tmp_path, capsys, monkeypatch
+):
+    """A version in the range with no recorded touched-dir count (here a
+    `database compact`) falls back to counting the snapshot diff; the
+    closure then reuses that one diff."""
+    from dudb_spark.operators import ingest
+
+    db, stats_dir = _churned_db(capsys, real_tree, tmp_path, "--layout",
+                                "bucketed", "--path-buckets", "8")
+    run(capsys, "database", "compact", "--db", db, "--layout", "bucketed",
+        "--path-buckets", "8")
+    calls = []
+    diff = ingest.snapshot_diff
+
+    def counted_diff(*a, **k):
+        calls.append(1)
+        return diff(*a, **k)
+
+    monkeypatch.setattr(ingest, "snapshot_diff", counted_diff)
+    inc = json.loads(run(capsys, "stats", "compute", "--db", db,
+                         "--stats-dir", stats_dir, "--incremental",
+                         "--churn-threshold", "0.9", real_tree))
+    assert len(calls) == 1
+    meta = _stats_meta(spark, stats_dir)
+    assert meta["plan"] == "closure"
+    assert meta["gate"]["touched_dirs"] == 1  # proj/a, from the diff
+    full = json.loads(run(capsys, "stats", "compute", "--db", db,
+                          "--stats-dir", stats_dir, real_tree))
+    assert inc["totals"] == full["totals"]
+
+
+def test_cli_find_same_rows_on_both_layouts(spark, real_tree, tmp_path,
+                                            capsys):
+    """Snapshot tables are read with the model schema: opening them runs
+    no Spark job, bucketed tables still hide pb from consumers (and
+    expose it raw), and find returns the same rows on either layout."""
+    from dudb_spark.model import ENTRIES_SCHEMA, PREFIXES_SCHEMA
+    from dudb_spark.sources.catalog import SnapshotCatalog
+
+    got = {}
+    for name, layout in (("plain", ()),
+                         ("bucketed", ("--layout", "bucketed",
+                                       "--path-buckets", "8"))):
+        db = str(tmp_path / name)
+        run(capsys, "analyze", "--db", db, real_tree, *layout)
+        cat = SnapshotCatalog(spark, db)
+        cols = {}
+
+        def open_tables():
+            t = cat.tables()
+            cols.update(p=t.prefixes.columns, e=t.entries.columns,
+                        err=t.errors.columns,
+                        raw=t.read_raw("prefixes").columns)
+
+        assert not _spark_jobs(spark, open_tables)
+        assert cols["p"] == PREFIXES_SCHEMA.fieldNames()
+        assert cols["e"] == ENTRIES_SCHEMA.fieldNames()
+        assert cols["err"] == ["path", "at", "detail"]
+        assert ("pb" in cols["raw"]) == (name == "bucketed")
+        got[name] = sorted(run(capsys, "find", "--db", db, "--l",
+                               real_tree, "re=\\.log$ || type=d"
+                               ).splitlines())
+    assert len(got["plain"]) == 6
+    assert got["plain"] == got["bucketed"]
+
+
 def test_cli_pipeline_new_surface(spark, tmp_path, capsys):
     """excise-lines / profile / select-budget end-to-end over a small
     parquet corpus: counters, TSV shape, and written outputs."""
