@@ -101,10 +101,24 @@ def cmd_analyze(args):
 
             shutil.rmtree(staging, ignore_errors=True)
     else:
-        prows, erows, errrows = crawl_local(
+        from dudb_spark.sources.catalog import SnapshotCatalog
+
+        # J1/J2 during the walk: the crawl compares each dir with the
+        # previous full snapshot's (mtime, mode), read with no Spark job,
+        # and stats only churned dirs' files.  --force restats everything
+        # and a delta (watch) version has no plain prefixes table, so
+        # both leave the classification to the merge's join.
+        cat = SnapshotCatalog(spark, args.db)
+        v = cat.latest_version()
+        previous = None
+        if (v is not None and not getattr(args, "force", False)
+                and not cat.is_delta(v)):
+            previous = cat.dir_stamps(v, args.prefix)
+        crawl = crawl_local(
             args.prefix, exclusions=args.exclude or [],
-            concurrent_scans=args.scans,
+            concurrent_scans=args.scans, previous=previous,
         )
+        prows, erows, errrows = crawl
         staged_p = spark.createDataFrame(prows, PREFIXES_SCHEMA)
         staged_e = spark.createDataFrame(erows, ENTRIES_SCHEMA)
         errors = spark.createDataFrame(errrows or [], ERRORS_SCHEMA)
@@ -115,16 +129,18 @@ def cmd_analyze(args):
                 sum(1 for e in erows if not e["is_dir"]),
                 len(errrows),
             ),
+            churn=crawl.churn,
         )
 
 
 def _analyze_body(
     spark, args, start, staged_p, staged_e, errors,
-    counts=None, distributed=False,
+    counts=None, distributed=False, churn=None,
 ):
     """Merge-and-land half of ``analyze``, shared by the local and
     distributed crawl routes (split so the distributed route's staging
-    dir can be cleaned in a try/finally around the WHOLE body)."""
+    dir can be cleaned in a try/finally around the WHOLE body).
+    ``churn`` is the local crawl's classification, when it made one."""
     from dudb_spark.operators.ingest import merge_scan
     from dudb_spark.sources.catalog import SnapshotCatalog
 
@@ -163,13 +179,17 @@ def _analyze_body(
         res = merge_scan(
             prev.prefixes, prev.entries, staged_p, staged_e,
             root=args.prefix, force=getattr(args, "force", False),
+            churn=churn,
         )
         # the churn count `stats --incremental` plans from, with no job
         touched = sum(res.summary[k] for k in (
             "prefixes_added", "prefixes_changed", "prefixes_deleted"))
+        # the classified merge unions the previous scan with fresh rows:
+        # bound its files by the previous version's
+        like = cat.latest_version() if churn is not None else None
         out = cat.write_snapshot(res.prefixes, res.entries, errors,
-                                 touched_dirs=touched, **lay)
-        summary = dict(res.summary, errors=n_errors)
+                                 touched_dirs=touched, like=like, **lay)
+        summary = dict(res.counters(), errors=n_errors)
     stop = datetime.now(timezone.utc)
     summary["duration_ns"] = int((stop - start).total_seconds() * 1e9)
     cat.append_log(start, stop, summary)

@@ -12,7 +12,17 @@ Reference behaviour (analyze.go):
 - Every run appends one summary row to the log bucket
   (summarizeAndLog, analyze.go:144–161).
 
-Spark shape: the staged scan and the previous snapshot are joined once on
+Where J1/J2 run: the local ``analyze`` crawl classifies each directory
+against the previous snapshot's (mtime, mode) as it walks
+(``sources/crawler.crawl_local(previous=...)``), so only churned
+directories have their files stat'ed, and ``merge_scan(churn=...)`` only
+applies that classification: the previous rows of churned directories
+drop out by a churn-sized ``NOT IN`` list and the fresh rows are unioned
+in, with no shuffle, no cache and no counter job.  ``--force``, a
+delta (``watch``) previous version and ``--distributed`` take the join
+path below, as does :func:`apply_changes`' own change-feed algebra.
+
+Join path: the staged scan and the previous snapshot are joined once on
 ``path`` (full outer, subtree-restricted); the join classifies every
 directory as added / changed / unchanged / deleted, and the new snapshot is
 assembled from staged rows (added/changed), previous rows (unchanged — their
@@ -30,7 +40,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from dudb_spark.operators.find import subtree_pred
@@ -51,10 +61,39 @@ class MergeResult:
     # apply_changes per micro-batch, forever) must release() AFTER
     # consuming/writing the result or executor storage grows per batch
     cached: tuple = ()
+    # with merge_scan(churn=...), ``entries`` counts its files as it is
+    # written; counters() reads the count after that write
+    observed: Observation = None
 
     def release(self) -> None:
         for df in self.cached:
             df.unpersist()
+
+    def counters(self) -> dict:
+        """The summary counters; call after ``entries`` was written when
+        the merge applied a crawl's classification."""
+        if self.observed is None:
+            return self.summary
+        return dict(self.summary, files=self.observed.get["files"])
+
+
+def _sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _analyze_summary(n_new, n_changed, n_unchanged, n_deleted, files):
+    return {
+        "operation": "analyze",
+        "prefixes_started": n_new + n_changed + n_unchanged,
+        "prefixes_finished": n_new + n_changed + n_unchanged,
+        "files": files,
+        "parent_unchanged": n_unchanged,
+        "children_unchanged": n_unchanged,
+        "prefixes_deleted": n_deleted,
+        "prefixes_added": n_new,
+        "prefixes_changed": n_changed,
+    }
 
 
 def merge_scan(
@@ -65,8 +104,20 @@ def merge_scan(
     root: str = "",
     with_summary: bool = True,
     force: bool = False,
+    churn=None,
 ) -> MergeResult:
     """Merge a staged (fresh) scan of ``root`` into the previous snapshot.
+
+    ``churn`` is the crawl's own J1/J2 classification
+    (``sources.crawler.Churn``: the added, changed, unchanged and deleted
+    directory paths).  With it the staged frames hold rows of added and
+    changed directories only, and the merge is plain set algebra: the
+    previous prefixes and entries keep every row whose ``path`` /
+    ``parent`` is not a churned directory, and the staged rows are
+    unioned in.  The counters come from the set sizes, and ``files``
+    from an observation on the entries write (:meth:`MergeResult.counters`).
+    Rows outside ``root`` pass through because the crawl never names
+    them.
 
     ``force=True`` bypasses the J1 unchanged-skip (the reference's
     ``analyze`` re-scan override): every alive directory classifies as
@@ -90,6 +141,37 @@ def merge_scan(
     composition) and only read the final state, the per-merge counters
     are pure overhead.
     """
+    if churn is not None:
+        # the churned paths drop out by one NOT IN list per table (an
+        # InSet hash probe), so each merged frame stays a single-stage
+        # scan of the previous snapshot: a broadcast anti-join would add
+        # a job per table, and Column.isin a py4j call per path
+        dead = sorted(churn.added | churn.changed | churn.deleted)
+        touched = prev_prefixes.sparkSession.createDataFrame(
+            [(p,) for p in dead], "path string")
+        in_list = ", ".join(_sql_string(p) for p in dead)
+
+        def keep(prev, col):
+            if not dead:
+                return prev
+            return prev.where(F.expr(f"{col} NOT IN ({in_list})"))
+
+        new_prefixes = keep(prev_prefixes, "path").unionByName(
+            staged_prefixes)
+        new_entries = keep(prev_entries, "parent").unionByName(
+            staged_entries)
+        summary = observed = None
+        if with_summary:
+            observed = Observation()
+            new_entries = new_entries.observe(
+                observed,
+                F.count(F.when(~F.col("is_dir"), 1)).alias("files"))
+            summary = _analyze_summary(  # files: counted by the write
+                len(churn.added), len(churn.changed), len(churn.unchanged),
+                len(churn.deleted), None)
+        return MergeResult(new_prefixes, new_entries, summary, touched,
+                           observed=observed)
+
     in_root_prev = prev_prefixes.where(subtree_pred(F.col("path"), root))
     out_root_prev = prev_prefixes.where(~subtree_pred(F.col("path"), root))
 
@@ -153,17 +235,8 @@ def merge_scan(
 
     if with_summary:
         n_files = new_entries.where(~F.col("is_dir")).count()
-        summary = {
-            "operation": "analyze",
-            "prefixes_started": n_new + n_changed + n_unchanged,
-            "prefixes_finished": n_new + n_changed + n_unchanged,
-            "files": n_files,
-            "parent_unchanged": n_unchanged,
-            "children_unchanged": n_unchanged,
-            "prefixes_deleted": n_deleted,
-            "prefixes_added": n_new,
-            "prefixes_changed": n_changed,
-        }
+        summary = _analyze_summary(n_new, n_changed, n_unchanged,
+                                   n_deleted, n_files)
     else:
         summary = None
     touched = j.where(~F.col("unchanged")).select("path")

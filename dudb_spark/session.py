@@ -76,6 +76,11 @@ def get_spark(
             str(shuffle_partitions or int(_LOCAL_CPUS)),
         )
         # --- python interop --------------------------------------------
+        # no per-call call-site capture: with it on, every Column or
+        # DataFrame call adds 4+ py4j round trips and a stack walk
+        # (878 -> 259 py4j calls per warm `find`).  pyspark caches the
+        # flag on first use, so it must be set when the session is built.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # --- scan sizing: parquet splits sized for executor memory ------

@@ -95,13 +95,18 @@ class SnapshotCatalog:
     def write_snapshot(
         self, prefixes, entries, errors=None,
         layout: str | None = None, path_buckets: int = 64,
-        touched_dirs: int | None = None,
+        touched_dirs: int | None = None, like: str | None = None,
     ) -> str:
         """Write the next snapshot version.
 
         ``touched_dirs`` is the writer's count of directories added,
         changed or deleted since the previous version; it lands in
         ``_layout.json`` for :meth:`touched_dirs_since`.
+
+        ``like`` names a version whose plain tables bound the file count:
+        each table is coalesced to at most that version's file count for
+        it, so a merge that unions the previous scan with fresh local
+        rows does not add a file per core every night.
 
         ``layout="bucketed"`` stores both tables hash-partitioned by the
         row's PROBE PATH (``path`` for prefixes, ``parent`` for entries):
@@ -121,6 +126,12 @@ class SnapshotCatalog:
         v = self.next_version()
         out = os.path.join(self.root, v)
 
+        def _bounded(df, dest):
+            if like is None:
+                return df
+            n = self._file_count(like, os.path.basename(dest))
+            return df.coalesce(max(1, n))
+
         def _write(df, probe_col, dest):
             if layout == "bucketed":
                 (
@@ -137,12 +148,13 @@ class SnapshotCatalog:
                     .parquet(dest)
                 )
             else:
-                df.write.mode("overwrite").parquet(dest)
+                _bounded(df, dest).write.mode("overwrite").parquet(dest)
 
         _write(prefixes, "path", f"{out}/prefixes.parquet")
         _write(entries, "parent", f"{out}/entries.parquet")
         if errors is not None:
-            errors.write.mode("overwrite").parquet(f"{out}/errors.parquet")
+            dest = f"{out}/errors.parquet"
+            _bounded(errors, dest).write.mode("overwrite").parquet(dest)
         if layout == "bucketed":
             # hardlink SPILL INDEX: (device, inode, pb) of every key
             # whose member rows SPAN ≥2 distinct buckets, plus every
@@ -220,6 +232,39 @@ class SnapshotCatalog:
             _json.dump(meta, f)
         write_pointer(os.path.join(self.root, "latest"), v)
         return out
+
+    def _file_count(self, version: str, table: str) -> int:
+        """Parquet files of one table of a version (0 when it has none)."""
+        from glob import glob as _glob
+
+        return len(_glob(
+            os.path.join(self.root, version, table, "**", "*.parquet"),
+            recursive=True,
+        ))
+
+    def dir_stamps(self, version: str, root: str) -> dict:
+        """``path -> (mtime_micros, mode)`` of every directory a full
+        snapshot version records under ``root``: what the crawler needs
+        to tell an unchanged directory (J1) from a churned one.  Read
+        driver-side with pyarrow, so no Spark job; the mtime is the
+        integer microseconds Spark stored (INT96 or INT64 alike)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        t = pq.read_table(
+            os.path.join(self.root, version, "prefixes.parquet"),
+            columns=["path", "mtime", "mode"],
+        )
+        mt = t.column("mtime")
+        mt = mt.cast(pa.timestamp("us", mt.type.tz)).cast(pa.int64())
+        stamps = zip(t.column("path").to_pylist(), mt.to_pylist(),
+                     t.column("mode").to_pylist())
+        root = root.rstrip("/")
+        if not root:
+            return {p: (m, md) for p, m, md in stamps}
+        under = root + "/"
+        return {p: (m, md) for p, m, md in stamps
+                if p == root or p.startswith(under)}
 
     def _count_written_prefixes(self, out: str) -> int:
         """Row count of a just-written prefixes table — parquet footer
@@ -536,18 +581,39 @@ class SnapshotCatalog:
         return removable
 
     def append_log(self, start, stop, summary: dict) -> None:
-        """Append one run-summary row (the log bucket, badgerdb.go:401–416)."""
+        """Append one run-summary row (the log bucket, badgerdb.go:401–416).
+
+        One row needs no Spark job: pyarrow writes it to a dot-prefixed
+        temp file, which readers skip, and ``os.replace`` publishes it
+        whole, so a concurrent ``logs`` never sees a partial file."""
+        import uuid
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         known = {f.name for f in SCAN_LOGS_SCHEMA["summary"].dataType.fields}
         row = {
             "start": start,
             "stop": stop,
             "summary": {k: v for k, v in summary.items() if k in known},
         }
-        df = self.spark.createDataFrame([row], SCAN_LOGS_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(f"{self.root}/scan_logs.parquet")
+        table = pa.Table.from_pylist(
+            [row], schema=to_arrow_schema(SCAN_LOGS_SCHEMA))
+        d = f"{self.root}/scan_logs.parquet"
+        os.makedirs(d, exist_ok=True)
+        name = f"part-{uuid.uuid4()}.parquet"
+        tmp = os.path.join(d, f".{name}.tmp")
+        try:
+            pq.write_table(table, tmp)
+            os.replace(tmp, os.path.join(d, name))
+        finally:
+            if os.path.exists(tmp):
+                os.unlink(tmp)
 
     def logs(self):
-        return self.spark.read.parquet(f"{self.root}/scan_logs.parquet")
+        return self.spark.read.schema(SCAN_LOGS_SCHEMA).parquet(
+            f"{self.root}/scan_logs.parquet")
 
 
 class DeltaTables:

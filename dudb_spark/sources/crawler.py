@@ -15,7 +15,10 @@ metadata work, so the right tool is a breadth-first **distributed listing**:
   repartitions so fan-out spreads across the cluster.  Rows feed the
   ``prefixes``/``entries`` writers.
 - ``crawl_local``: a plain single-process scandir walk with a thread pool —
-  the developer-scale path, and the row-shape oracle for tests.
+  the developer-scale path, and the row-shape oracle for tests.  Given the
+  previous snapshot's directory stamps it also classifies each directory
+  (J1/J2, analyze.go:226–243): an unchanged one is listed for its child
+  dirs only, so only churned directories have their files stat'ed.
 
 Both produce exactly the model.py schemas.  Exclusions (S3) and symlink
 no-descend (S2) are applied at scan time like the reference
@@ -28,13 +31,33 @@ import os
 import re
 import stat as stat_mod
 from concurrent.futures import ThreadPoolExecutor
-from datetime import datetime, timezone
+from dataclasses import dataclass
+from datetime import datetime, timedelta, timezone
 
 from dudb_spark.model import (
     ENTRIES_SCHEMA,
     ERRORS_SCHEMA,
     PREFIXES_SCHEMA,
 )
+
+
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+_MICRO = timedelta(microseconds=1)
+
+
+def _mtime(st) -> datetime:
+    return datetime.fromtimestamp(st.st_mtime, tz=timezone.utc)
+
+
+def _stamp(path: str):
+    """A dir's ``(mtime, mode)`` with the mtime in the integer microseconds
+    Spark stores for its staged ``datetime``, so comparing stamps equals
+    the merge's ``s.mtime == p.mtime``; None when it cannot be lstat'ed."""
+    try:
+        st = os.lstat(path)
+    except OSError:
+        return None
+    return (_mtime(st) - _EPOCH) // _MICRO, int(st.st_mode)
 
 
 def _entry_row(parent: str, name: str, st, is_dir: bool) -> dict:
@@ -46,7 +69,7 @@ def _entry_row(parent: str, name: str, st, is_dir: bool) -> dict:
         "size": int(st.st_size),
         "blocks": int(getattr(st, "st_blocks", 0)),
         "mode": int(st.st_mode),
-        "mtime": datetime.fromtimestamp(st.st_mtime, tz=timezone.utc),
+        "mtime": _mtime(st),
         "uid": int(st.st_uid),
         "gid": int(st.st_gid),
         "device": int(st.st_dev),
@@ -92,7 +115,7 @@ def _scan_one(path: str, exclusions: list[re.Pattern]):
         "blocks": int(getattr(dst, "st_blocks", 0)),
         "mode": int(dst.st_mode),
         "is_symlink": stat_mod.S_ISLNK(dst.st_mode),
-        "mtime": datetime.fromtimestamp(dst.st_mtime, tz=timezone.utc),
+        "mtime": _mtime(dst),
         "uid": int(dst.st_uid),
         "gid": int(dst.st_gid),
         "device": int(dst.st_dev),
@@ -106,24 +129,83 @@ def _now():
     return datetime.now(tz=timezone.utc)
 
 
+def _child_dirs(path: str, exclusions: list[re.Pattern]) -> list[str] | None:
+    """Child directories of ``path`` from its listing alone (the dirent
+    type, no stat), or None when it cannot be listed: the caller then
+    scans it in full, which records the error."""
+    base = path.rstrip("/")
+    try:
+        with os.scandir(path) as it:
+            return sorted(
+                f"{base}/{d.name}" for d in it
+                if d.is_dir(follow_symlinks=False)
+                and not any(x.search(f"{base}/{d.name}") for x in exclusions)
+            )
+    except OSError:
+        return None
+
+
+@dataclass(frozen=True)
+class Churn:
+    """How a crawl classified the directories under its root against the
+    previous snapshot: J1 (mtime and mode both match: unchanged) and J2
+    (stored but not found now: deleted).  ``merge_scan(churn=...)``
+    consumes it instead of joining the scan against the snapshot."""
+
+    added: frozenset
+    changed: frozenset
+    unchanged: frozenset
+    deleted: frozenset
+
+
+class CrawlResult(tuple):
+    """``(prefix_rows, entry_rows, error_rows)``; ``churn`` is the
+    :class:`Churn` of a crawl given ``previous``, else None."""
+
+    churn: Churn | None
+
+    def __new__(cls, prefix_rows, entry_rows, error_rows, churn=None):
+        self = super().__new__(cls, (prefix_rows, entry_rows, error_rows))
+        self.churn = churn
+        return self
+
+
 def crawl_local(
     root: str,
     exclusions: list[str] | None = None,
     concurrent_scans: int = 32,
-):
+    previous: dict | None = None,
+) -> CrawlResult:
     """Thread-pool walk of a local tree.  Returns (prefix_rows, entry_rows,
-    error_rows) with depth filled in relative to ``root``."""
+    error_rows) with depth filled in relative to ``root``.
+
+    ``previous`` maps each directory of the previous snapshot under
+    ``root`` to its ``(mtime_micros, mode)``.  With it, a directory whose
+    stamp matches is unchanged: it is listed for its child dirs, which
+    the walk still needs to find deletions, but it stats no file and
+    emits no row.  The result's ``churn`` then names the added, changed,
+    unchanged and deleted directories."""
     pats = [re.compile(x) for x in (exclusions or [])]
     prefix_rows: list[dict] = []
     entry_rows: list[dict] = []
     error_rows: list[dict] = []
+    unchanged: set[str] = set()
+
+    def scan(path):
+        stamp = previous.get(path) if previous else None
+        if stamp is not None and stamp == _stamp(path):
+            children = _child_dirs(path, pats)
+            if children is not None:
+                return path, None, [], [], children
+        return (None, *_scan_one(path, pats))
 
     level = [root.rstrip("/") or "/"]
     with ThreadPoolExecutor(max_workers=concurrent_scans) as pool:
         while level:
-            results = list(pool.map(lambda p: _scan_one(p, pats), level))
             nxt: list[str] = []
-            for pr, ents, errs, children in results:
+            for same, pr, ents, errs, children in pool.map(scan, level):
+                if same is not None:
+                    unchanged.add(same)
                 if pr is not None:
                     prefix_rows.append(pr)
                     entry_rows.extend(ents)
@@ -134,7 +216,17 @@ def crawl_local(
     rootdepth = root.rstrip("/").count("/")
     for r in prefix_rows:
         r["depth"] = r["path"].count("/") - rootdepth
-    return prefix_rows, entry_rows, error_rows
+    churn = None
+    if previous is not None:
+        fresh = {r["path"] for r in prefix_rows}
+        added = frozenset(p for p in fresh if p not in previous)
+        churn = Churn(
+            added=added,
+            changed=frozenset(fresh - added),
+            unchanged=frozenset(unchanged),
+            deleted=frozenset(set(previous) - fresh - unchanged),
+        )
+    return CrawlResult(prefix_rows, entry_rows, error_rows, churn)
 
 
 def crawl_distributed(

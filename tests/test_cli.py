@@ -985,6 +985,202 @@ def test_cli_find_same_rows_on_both_layouts(spark, real_tree, tmp_path,
     assert got["plain"] == got["bucketed"]
 
 
+def _snapshot_rows(spark, db):
+    from dudb_spark.sources.catalog import SnapshotCatalog
+
+    t = SnapshotCatalog(spark, db).tables()
+    return {name: sorted(tuple(r) for r in getattr(t, name).collect())
+            for name in ("prefixes", "entries", "errors")}
+
+
+def _churn_tree(root):
+    """Add, delete and grow files, add a leaf dir, drop a dir."""
+    import shutil
+
+    with open(os.path.join(root, "proj/a/new.dat"), "w") as f:
+        f.write("0123456789")
+    with open(os.path.join(root, "proj/a/x.log"), "a") as f:
+        f.write("more")
+    os.remove(os.path.join(root, "proj/a/y.txt"))
+    os.mkdir(os.path.join(root, "proj/c"))
+    shutil.rmtree(os.path.join(root, "proj/b"))
+    with open(os.path.join(root, "top.txt"), "w") as f:
+        f.write("outside proj")
+
+
+@pytest.mark.parametrize("case", ["root", "subtree", "bucketed"])
+def test_cli_analyze_classified_equals_join(spark, real_tree, tmp_path,
+                                            capsys, monkeypatch, case):
+    """An incremental analyze whose crawl classified the dirs lands the
+    same rows and prints the same counters as one that leaves the
+    classification to the merge's join: over the whole tree, over a
+    subtree (whose out-of-root rows pass through unchanged), and over a
+    bucketed previous snapshot."""
+    import shutil
+
+    from dudb_spark.sources.catalog import SnapshotCatalog
+
+    layout = (("--layout", "bucketed", "--path-buckets", "4")
+              if case == "bucketed" else ())
+    prefix = os.path.join(real_tree, "proj") if case == "subtree" else real_tree
+    db, join_db = str(tmp_path / "db"), str(tmp_path / "join_db")
+    run(capsys, "analyze", "--db", db, real_tree, *layout)
+    before = _snapshot_rows(spark, db)
+    shutil.copytree(db, join_db)
+    _churn_tree(real_tree)
+
+    def analyze(d):
+        out = json.loads(run(capsys, "analyze", "--db", d, prefix, *layout))
+        out.pop("snapshot"), out.pop("duration_ns")
+        return out
+
+    got = analyze(db)
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotCatalog, "dir_stamps", lambda *a: None)
+        want = analyze(join_db)
+    assert got == want
+    assert got["prefixes_added"] == 1 and got["prefixes_deleted"] == 1
+    rows = _snapshot_rows(spark, db)
+    assert rows == _snapshot_rows(spark, join_db)
+    if case == "subtree":
+        outside = [r for r in rows["entries"]
+                   if not r[0].startswith(prefix)]
+        assert outside == [r for r in before["entries"]
+                           if not r[0].startswith(prefix)]
+        assert not any(r[2].endswith("/top.txt") for r in rows["entries"])
+
+
+def _spy(monkeypatch, module, name, seen):
+    import importlib
+
+    mod = importlib.import_module(module)
+    orig = getattr(mod, name)
+
+    def spy(*a, **k):
+        out = orig(*a, **k)
+        seen.append((k, out))
+        return out
+
+    monkeypatch.setattr(mod, name, spy)
+
+
+def test_cli_analyze_join_routes(spark, real_tree, tmp_path, capsys,
+                                 monkeypatch):
+    """--force and a delta (watch) previous version leave J1/J2 to the
+    merge's join, and --force still stats every file."""
+    from pyspark.sql import types as T
+
+    from dudb_spark.model import ENTRIES_SCHEMA
+    from dudb_spark.sources.catalog import SnapshotCatalog
+
+    db = str(tmp_path / "db")
+    run(capsys, "analyze", "--db", db, real_tree)
+    merges, crawls = [], []
+    _spy(monkeypatch, "dudb_spark.operators.ingest", "merge_scan", merges)
+    _spy(monkeypatch, "dudb_spark.sources.crawler", "crawl_local", crawls)
+
+    with open(os.path.join(real_tree, "proj/a/new.dat"), "w") as f:
+        f.write("0123456789")
+    out = json.loads(run(capsys, "analyze", "--db", db, real_tree))
+    assert merges[-1][0]["churn"] is not None
+    assert len(crawls[-1][1][1]) == 3  # proj/a's entries only
+    assert out["files"] == 4
+
+    out = json.loads(run(capsys, "analyze", "--db", db, "--force",
+                         real_tree))
+    assert merges[-1][0]["churn"] is None
+    assert len(crawls[-1][1][1]) == 7  # every entry of the tree
+    assert out["files"] == 4 and out["parent_unchanged"] == 0
+
+    feed = T.StructType([T.StructField("op", T.StringType())]
+                        + ENTRIES_SCHEMA.fields
+                        + [T.StructField("error", T.StringType())])
+    cat = SnapshotCatalog(spark, db)
+    cat.write_delta(spark.createDataFrame([], feed), real_tree)
+    assert cat.is_delta(cat.latest_version())
+    os.remove(os.path.join(real_tree, "proj/b/z.log"))
+    out = json.loads(run(capsys, "analyze", "--db", db, real_tree))
+    assert merges[-1][0]["churn"] is None
+    assert out["files"] == 3 and out["prefixes_changed"] == 1
+
+
+def test_cli_analyze_incremental_job_count(spark, real_tree, tmp_path,
+                                           capsys):
+    """An incremental analyze lands in three Spark jobs, one write per
+    table: no classification join, cache or counter job, and the scan
+    log row is written without Spark."""
+    db = str(tmp_path / "db")
+    run(capsys, "analyze", "--db", db, real_tree)
+    _churn_tree(real_tree)
+    jobs = _spark_jobs(spark, lambda: run(capsys, "analyze", "--db", db,
+                                          real_tree))
+    assert 0 < len(jobs) <= 3, sorted(jobs)
+
+
+def test_cli_analyze_file_count_bounded(spark, real_tree, tmp_path, capsys):
+    """Incremental analyzes union the previous scan with fresh rows; each
+    table keeps the previous version's file count instead of gaining a
+    file per core every night."""
+    db = str(tmp_path / "db")
+
+    def files(table):
+        v = sorted(d for d in os.listdir(db) if d.startswith("v"))[-1]
+        return sum(1 for _, _, fs in os.walk(os.path.join(db, v, table))
+                   for f in fs if f.endswith(".parquet"))
+
+    counts = []
+    for i in range(4):  # the first snapshot, then three incremental runs
+        with open(os.path.join(real_tree, f"proj/a/n{i}.dat"), "w") as f:
+            f.write("x" * i)
+        run(capsys, "analyze", "--db", db, real_tree)
+        counts.append((files("prefixes.parquet"), files("entries.parquet")))
+    first, *incremental = counts
+    assert incremental == [incremental[0]] * 3, counts
+    assert all(n <= m for n, m in zip(incremental[0], first)), counts
+
+
+def test_cli_logs_read_spark_and_arrow_rows(spark, real_tree, tmp_path,
+                                            capsys):
+    """Scan-log rows are appended with pyarrow; a log dir whose older rows
+    Spark wrote (INT96 timestamps) reads back as one table with the same
+    ``logs`` output, ``--last`` included."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from dudb_spark.model import SCAN_LOGS_SCHEMA
+
+    db = str(tmp_path / "db")
+    run(capsys, "analyze", "--db", db, real_tree)
+    with open(os.path.join(real_tree, "proj/a/new.dat"), "w") as f:
+        f.write("0123456789")
+    run(capsys, "analyze", "--db", db, real_tree)
+    want = run(capsys, "logs", "--db", db)
+    want_last = run(capsys, "logs", "--db", db, "--last")
+    logdir = os.path.join(db, "scan_logs.parquet")
+    first = sorted(glob.glob(os.path.join(logdir, "part-*.parquet")),
+                   key=os.path.getmtime)[0]
+    rows = spark.read.schema(SCAN_LOGS_SCHEMA).parquet(first).collect()
+    os.remove(first)
+    spark.createDataFrame(rows, SCAN_LOGS_SCHEMA).coalesce(1).write.mode(
+        "append").parquet(logdir)
+    kinds = {pq.ParquetFile(f).schema.column(0).physical_type
+             for f in glob.glob(os.path.join(logdir, "part-*.parquet"))}
+    assert kinds == {"INT96", "INT64"}
+    assert run(capsys, "logs", "--db", db) == want
+    assert run(capsys, "logs", "--db", db, "--last") == want_last
+    assert len(want.splitlines()) == 2
+
+
+def test_get_spark_turns_off_dataframe_debugging(spark):
+    """Sessions are built without PySpark's per-call call-site capture."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
+
+
 def test_cli_pipeline_new_surface(spark, tmp_path, capsys):
     """excise-lines / profile / select-budget end-to-end over a small
     parquet corpus: counters, TSV shape, and written outputs."""

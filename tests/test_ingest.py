@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dudb_spark.model import ENTRIES_SCHEMA, PREFIXES_SCHEMA
+from dudb_spark.operators.find import subtree_pred
 from dudb_spark.operators.ingest import merge_scan
 from dudb_spark.sources.crawler import crawl_distributed, crawl_local
 
@@ -222,6 +223,126 @@ def test_merge_reuses_entries_of_unchanged_dirs(spark, fs_tree):
     new_p, new_e = _dfs(spark, p0, staged_e)
     res = merge_scan(prev_p, prev_e, new_p, new_e, root=fs_tree)
     assert res.entries.count() == len(e0)
+
+
+def _sub_us_before(root):
+    # a dir mtime with sub-microsecond digits, so the crawl's integer
+    # microseconds must match the ones Spark stored for the datetime
+    os.utime(os.path.join(root, "a"), ns=(1_700_000_000_123_456_789,) * 2)
+
+
+def _sub_us_after(root):
+    os.utime(os.path.join(root, "a"), ns=(1_700_000_000_123_456_999,) * 2)
+    os.utime(os.path.join(root, "b"), ns=(1_700_000_000_000_000_501,) * 2)
+
+
+def _files_churn(root):
+    with open(os.path.join(root, "a", "new.txt"), "w") as f:
+        f.write("new")
+    with open(os.path.join(root, "b", "f3.txt"), "a") as f:
+        f.write(" more")
+    os.remove(os.path.join(root, "a", "sub", "f2.txt"))
+
+
+CHURNS = {
+    "files": dict(after=_files_churn),
+    "rmtree": dict(after=lambda r: shutil.rmtree(os.path.join(r, "a"))),
+    "mkdir_leaf": dict(after=lambda r: os.mkdir(os.path.join(r, "b", "leaf"))),
+    "chmod_dir": dict(
+        after=lambda r: os.chmod(os.path.join(r, "a", "sub"), 0o700)),
+    "chown_file": dict(
+        after=lambda r: os.chown(os.path.join(r, "b", "f3.txt"), 4321, 4321),
+        root_only=True),
+    "exclusion": dict(after=lambda r: None, exclude=[r"/sub$"]),
+    "symlinked_dir": dict(after=lambda r: os.symlink(
+        os.path.join(r, "a"), os.path.join(r, "b", "link_to_a"))),
+    "dir_becomes_file": dict(after=lambda r: (
+        shutil.rmtree(os.path.join(r, "a", "sub")),
+        open(os.path.join(r, "a", "sub"), "w").close())),
+    "sub_us_mtime": dict(before=_sub_us_before, after=_sub_us_after),
+    "unreadable_dir": dict(
+        after=lambda r: os.chmod(os.path.join(r, "a", "sub"), 0),
+        non_root_only=True),
+}
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("name", sorted(CHURNS))
+def test_classified_merge_equals_join(spark, fs_tree, tmp_path, name):
+    """A crawl that classifies dirs against the previous snapshot's
+    (mtime, mode) and merges by churn-sized anti-join lands the same
+    prefixes and entries rows, errors and counters as the full crawl
+    merged by the classification join — while stat'ing only the churned
+    dirs' entries."""
+    from dudb_spark.sources.catalog import SnapshotCatalog
+
+    case = CHURNS[name]
+    if case.get("root_only") and os.geteuid() != 0:
+        pytest.skip("chown needs root")
+    if case.get("non_root_only") and os.geteuid() == 0:
+        pytest.skip("root reads any dir")
+    if "before" in case:
+        case["before"](fs_tree)
+    p0, e0, _ = crawl_local(fs_tree)
+    cat = SnapshotCatalog(spark, str(tmp_path / "db"))
+    cat.write_snapshot(*_dfs(spark, p0, e0))
+    v = cat.latest_version()
+    case["after"](fs_tree)
+    try:
+        excl = case.get("exclude", [])
+        full = crawl_local(fs_tree, exclusions=excl)
+        part = crawl_local(fs_tree, exclusions=excl,
+                           previous=cat.dir_stamps(v, fs_tree))
+    finally:
+        if name == "unreadable_dir":  # let tmp_path clean up
+            os.chmod(os.path.join(fs_tree, "a", "sub"), 0o755)
+    assert full.churn is None
+    t = cat.tables()
+    join = merge_scan(t.prefixes, t.entries, *_dfs(spark, full[0], full[1]),
+                      root=fs_tree)
+    res = merge_scan(t.prefixes, t.entries, *_dfs(spark, part[0], part[1]),
+                     root=fs_tree, churn=part.churn)
+    assert _rows(res.prefixes) == _rows(join.prefixes)
+    assert _rows(res.entries) == _rows(join.entries)
+    assert res.counters() == join.summary
+    assert sorted(e["path"] for e in part[2]) == sorted(
+        e["path"] for e in full[2])
+    churned = part.churn.added | part.churn.changed
+    assert {e["parent"] for e in part[1]} <= churned
+    assert len(part[1]) == sum(1 for e in full[1] if e["parent"] in churned)
+
+
+def test_classified_merge_keeps_rows_outside_root(spark, fs_tree, tmp_path):
+    """A crawl of a subtree classifies only that subtree: rows outside it
+    pass through unchanged even when their dirs churned on disk."""
+    from dudb_spark.sources.catalog import SnapshotCatalog
+
+    p0, e0, _ = crawl_local(fs_tree)
+    cat = SnapshotCatalog(spark, str(tmp_path / "db"))
+    cat.write_snapshot(*_dfs(spark, p0, e0))
+    v = cat.latest_version()
+    _files_churn(fs_tree)
+    sub = os.path.join(fs_tree, "a")
+    stamps = cat.dir_stamps(v, sub)
+    assert set(stamps) == {sub, os.path.join(sub, "sub")}
+    full = crawl_local(sub)
+    part = crawl_local(sub, previous=stamps)
+    t = cat.tables()
+    join = merge_scan(t.prefixes, t.entries, *_dfs(spark, full[0], full[1]),
+                      root=sub)
+    res = merge_scan(t.prefixes, t.entries, *_dfs(spark, part[0], part[1]),
+                     root=sub, churn=part.churn)
+    assert _rows(res.prefixes) == _rows(join.prefixes)
+    assert _rows(res.entries) == _rows(join.entries)
+    assert res.counters() == join.summary
+    # b/f3.txt grew on disk, but b is outside the crawl: its old row stays
+    outside = ~subtree_pred(F.col("parent"), sub)
+    want = _rows(t.entries.where(outside))
+    assert any(r[2].endswith("/b/f3.txt") for r in want)
+    assert _rows(res.entries.where(outside)) == want
 
 
 def test_snapshot_diff_classifies(spark, fs_tree):
