@@ -453,8 +453,8 @@ def _save_stats(res, stats_dir, calculator_name, cat, plan):
     ``StatsResult.save``) and ``meta.json``, and the ``latest`` pointer
     moves only once both are complete.  ``plan`` (full / refold /
     closure and the gate's inputs) is recorded in ``meta.json``.  The
-    totals are read back from the written table, not re-folded.
-    Returns (out_path, totals dict)."""
+    totals are observed on the grains write, so they cost no job of
+    their own.  Returns (out_path, totals dict)."""
     from dudb_spark.sources.catalog import write_pointer
 
     when = datetime.now(timezone.utc).strftime("%Y-%m-%d-%H%M%S")
@@ -464,14 +464,13 @@ def _save_stats(res, stats_dir, calculator_name, cat, plan):
         n += 1
         out = os.path.join(stats_dir, f"{when}-{n}")
     when = os.path.basename(out)
-    res.save(out)
+    tot = res.save(out)
     meta = dict(res.meta, date=when, prefix=res.meta.get("root"),
                 calculator=calculator_name,
                 snapshot_version=cat.latest_version(), **plan)
     with open(os.path.join(out, "meta.json"), "w") as f:
         json.dump(meta, f)
     write_pointer(os.path.join(stats_dir, "latest"), when)
-    tot = res.totals().collect()[0].asDict()
     return out, tot
 
 
@@ -496,7 +495,10 @@ def cmd_stats_view(args):
     n = args.n
     print(f"# stats for {res.meta.get('prefix')!r} expr={res.meta.get('expression')!r}")
     print("## totals")
-    tot = res.totals().collect()[0].asDict()
+    # one collect holds the totals and the global rankings; the per-user
+    # and per-group scopes rank per id below
+    rows = res.report_rows(n)
+    tot = rows.totals
     print(json.dumps(tot))
     binary = args.units == "binary"
     for k in ("bytes", "storage_bytes", "prefix_bytes"):
@@ -509,12 +511,12 @@ def cmd_stats_view(args):
     for dim, _ in scopes:
         for metric in ("bytes", "storage_bytes", "files"):
             print(f"## top {n} by {metric}" + (f" per {dim}" if dim else ""))
-            df = (
-                res.top_prefixes(metric, n)
-                if dim is None
-                else res.per_id_top_prefixes(metric, n, dim)
-            )
-            for r in df.collect():
+            if dim is None:
+                for r in rows.top[metric]:
+                    print(json.dumps({"prefix": r["prefix"],
+                                      metric: r[metric]}))
+                continue
+            for r in res.per_id_top_prefixes(metric, n, dim).collect():
                 print(json.dumps(r.asDict()))
 
 
@@ -554,7 +556,7 @@ def cmd_logs(args):
     df = list_logs(cat.logs(), since=args.since, from_t=getattr(args, "from"),
                    to_t=args.to, newest_only=args.last)
     for r in df.toLocalIterator():
-        print(json.dumps(r.asDict(), default=str))
+        print(json.dumps(r.asDict(recursive=True), default=str))
 
 
 def _watch_stats_update(spark, cat, stats_dir, touched, applied_from,

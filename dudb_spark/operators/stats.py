@@ -55,12 +55,13 @@ non-duplicate matching directories.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -82,6 +83,10 @@ _ZERO = {
     "hardlinks": 0,
     "hardlink_dirs": 0,
 }
+
+# the columns of a report's TSV/JSON rows: a merged top prefix and its
+# eight counters (the order ``merged_top`` selects)
+REPORT_COLUMNS = ("prefix", *METRICS, "prefixes", "hardlinks", "hardlink_dirs")
 
 # schema of the written grains table, shared by StatsResult.save and
 # load: reading a run back runs no schema-inference job
@@ -162,14 +167,23 @@ class StatsResult:
             "prefix", "id", *_ZERO
         )
 
-    def save(self, out_dir: str) -> None:
+    def save(self, out_dir: str) -> dict:
         """Write the grains once (S10 stand-in for the .idustats snapshot)
-        and read every later view from the written table."""
+        and read every later view from the written table.  Returns the
+        run's totals (:meth:`totals` as a dict), observed on the write
+        itself, so they cost no further job."""
         path = f"{out_dir}/{GRAINS_TABLE}"
-        self.grains.write.mode("overwrite").parquet(path)
+        obs = Observation()
+        is_prefix = F.col("grain") == "prefix"
+        self.grains.observe(obs, *[
+            F.coalesce(F.sum(F.when(is_prefix, F.col(c))), F.lit(0)).alias(c)
+            for c in _ZERO
+        ]).write.mode("overwrite").parquet(path)
         self.grains = self.grains.sparkSession.read.schema(
             GRAINS_SCHEMA
         ).parquet(path)
+        got = obs.get
+        return {c: got[c] for c in _ZERO}
 
     @classmethod
     def load(cls, spark, path: str) -> "StatsResult":
@@ -227,11 +241,6 @@ class StatsResult:
             .limit(n)
         )
 
-    def top_ids(self, metric: str, n: int, dim: str = "user") -> DataFrame:
-        """ByUser/ByGroup heaps (report_stats.go:222–229)."""
-        assert metric in METRICS, metric
-        return self.by_id(dim).select("id", metric).orderBy(F.desc(metric), "id").limit(n)
-
     def per_id_top_prefixes(self, metric: str, n: int, dim: str = "user") -> DataFrame:
         """PerIDStats.ByPrefix: top-N prefixes per user/group.  Input is
         pre-aggregated per (id, prefix) so the window partition size is the
@@ -244,6 +253,96 @@ class StatsResult:
             .withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= n)
         )
+
+    def report_rows(
+        self,
+        n: int,
+        users: DataFrame | None = None,
+        groups: DataFrame | None = None,
+    ) -> "ReportRows":
+        """Every number a report prints, from ONE bounded collect of
+        :meth:`report_frame` (the reference renders all three formats
+        from one in-memory snapshot, reports.go:98–126)."""
+        out = ReportRows()
+        for r in self.report_frame(n, users, groups).collect():
+            sec = r["section"]
+            if sec in out.top:
+                out.top[sec].append(r)
+            elif sec == "prefix":
+                out.totals = {c: r[c] for c in _ZERO}
+            else:
+                out.owners[sec].append(r)
+        for rs in out.top.values():
+            rs.sort(key=lambda r: r["rn"])
+        for rs in out.owners.values():
+            rs.sort(key=lambda r: (-r["bytes"], r["id"]))
+            del rs[n:]
+        return out
+
+    def report_frame(
+        self,
+        n: int,
+        users: DataFrame | None = None,
+        groups: DataFrame | None = None,
+    ) -> DataFrame:
+        """The one query behind :meth:`report_rows`, over the grains
+        table: a union of two branches, told apart by ``section``:
+
+        - the five top-N rankings: each prefix row stacked into five
+          ``(section, value)`` rows, one per metric, and ranked by
+          ``row_number`` over
+          ``partitionBy(section).orderBy(desc(value), prefix)`` — the
+          tie-break of :meth:`top_prefixes` — keeping ``rn <= n``.
+          Partitioned by metric, and the filter lets Spark put a partial
+          WindowGroupLimit before the exchange (n up to
+          ``spark.sql.optimizer.windowGroupLimitThreshold``), so at most
+          5n rows per map task cross it.  Each row carries its prefix's
+          counters, which the TSV/JSON sinks print;
+        - the per-owner sums: the grains grouped by ``(grain, id)``.  The
+          prefix grain has no id, so it folds to ONE row, the run's
+          totals; the user and group grains give one row per owner (the
+          reference's userTotals/groupTotals maps), ranked here.
+
+        At most 5n rows plus one per owner plus one.  The id→name dims
+        (J3), when given, join the owner rows."""
+        ranked = (
+            self.per_prefix.select(
+                *REPORT_COLUMNS,
+                F.expr(
+                    f"stack({len(METRICS)}, "
+                    + ", ".join(f"'{m}', {m}" for m in METRICS)
+                    + ") AS (section, value)"
+                ),
+            )
+            .withColumn(
+                "rn",
+                F.row_number().over(
+                    Window.partitionBy("section").orderBy(
+                        F.desc("value"), "prefix"
+                    )
+                ),
+            )
+            .where(F.col("rn") <= n)
+            .drop("value")
+        )
+        sums = self.grains.groupBy(
+            F.col("grain").alias("section"), "id"
+        ).agg(*[F.sum(c).alias(c) for c in _ZERO])
+        dims = [
+            df.select(F.lit(dim).alias("section"),
+                      F.col(id_col).alias("id"), "name")
+            for dim, df, id_col in (("user", users, "uid"),
+                                    ("group", groups, "gid"))
+            if df is not None
+        ]
+        if dims:
+            sums = sums.join(
+                F.broadcast(functools.reduce(DataFrame.unionByName, dims)),
+                ["section", "id"], "left",
+            )
+        else:
+            sums = sums.withColumn("name", F.lit(None).cast("string"))
+        return ranked.unionByName(sums, allowMissingColumns=True)
 
     def merged_top(self, n: int) -> DataFrame:
         """Heaps.Merge (report_stats.go:128–167): one row per prefix that
@@ -278,6 +377,25 @@ class StatsResult:
         for t in tops[1:]:
             cand = cand.union(t)
         return pp.join(F.broadcast(cand.distinct()), "prefix", "left_semi")
+
+
+@dataclass
+class ReportRows:
+    """The collected content of one report (:meth:`StatsResult.report_rows`):
+    ``totals`` maps each counter to its run total; ``top`` maps each of
+    :data:`METRICS` to its top-``n`` prefix rows in rank order (each with
+    :data:`REPORT_COLUMNS`); ``owners`` maps ``user``/``group`` to the
+    top-``n`` owner rows by bytes (``id``, ``name``, ``bytes``)."""
+
+    totals: dict = field(default_factory=lambda: dict(_ZERO))
+    top: dict = field(default_factory=lambda: {m: [] for m in METRICS})
+    owners: dict = field(default_factory=lambda: {"user": [], "group": []})
+
+    def merged(self) -> list:
+        """One row per prefix in any of the five rankings, by prefix: the
+        rows of ``StatsResult.merged_top(n)`` (Heaps.Merge)."""
+        seen = {r["prefix"]: r for rs in self.top.values() for r in rs}
+        return [seen[p] for p in sorted(seen)]
 
 
 def compute_stats(

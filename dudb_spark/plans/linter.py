@@ -228,10 +228,8 @@ def collect_sites(
 # collects is bounded at 100 TB.  A new collect() in an unlisted
 # function fails tests/test_plan_lint.py; a stale entry fails it too.
 COLLECT_ALLOW: dict[str, str] = {
-    "cli.py::_save_stats":
-        "totals() is exactly one global-accumulation row",
     "cli.py::cmd_stats_view":
-        "totals() scalar row + top-N report frames bounded by --n",
+        "per-id top-N prefix frames: at most --n rows per owner",
     "cli.py::cmd_pipeline_sample_weighted":
         "audit frame is ≤|groups| rows (1 row ungrouped): per-group "
         "count/sum aggregates only",
@@ -298,12 +296,10 @@ COLLECT_ALLOW: dict[str, str] = {
         "are subsets of that churn",
     "sources/watchdist.py::DistributedWatcher._prev_file_rows":
         "pushed-down parent IN (churned dirs) read — churn-sized",
-    "reports/sinks.py::write_markdown_report":
-        "the summary bundle is top-N-bounded per section (one union "
-        "frame, 10 jobs -> 1, round-10); the merged top rows are the "
-        "union of five top-N rankings, at most 5n",
-    "reports/sinks.py::to_json_lines":
-        ".limit(limit) applied before collect",
+    "operators/stats.py::StatsResult.report_rows":
+        "at most 5n ranked prefix rows (row_number <= n per metric) plus "
+        "one sum row per owner and one totals row — bounded by n and the "
+        "owner count, like the reference's userTotals/groupTotals maps",
 }
 
 
@@ -345,10 +341,6 @@ PIN_ALLOW: dict[str, str] = {
     "operators/quantiles.py::rank_normalize":
         "one row per (group, value) AFTER the dedup aggregation — "
         "bounded by distinct values per group",
-    "reports/sinks.py::write_reports":
-        "merged top-N report rows — the union of five top-N rankings, "
-        "at most 5n (the only pin: the summary inputs are scans of the "
-        "written grains table)",
     "operators/stats.py::StatsResult.merged_top":
         "top-N report frame, bounded by N",
     "pipeline/bpe.py::bpe_merges":

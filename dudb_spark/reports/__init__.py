@@ -2,8 +2,6 @@
 
 from dudb_spark.reports.sinks import (  # noqa: F401
     locate_reports,
-    write_json_report,
     write_markdown_report,
     write_reports,
-    write_tsv_report,
 )

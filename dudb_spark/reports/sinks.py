@@ -6,12 +6,15 @@ The reference renders a computed stats snapshot to tab-separated files
 pointer, plus ``reports locate`` returning the newest N dirs
 (reports.go:128–176, 257–304).
 
-Spark shape: TSV/JSON are distributed DataFrame writes (S11/S12) — at scale
-these are the real output path and parallelize across executors.  Markdown
-is presentation over *post-aggregation* data (top-N rows, already tiny), so
-it renders driver-side from a bounded ``toPandas()`` — the one place where
-driver-side processing is correct by construction because the top-N operator
-bounded the row count first.
+Spark shape: like the reference, which renders all three formats from one
+in-memory snapshot (reports.go:98–126), every number a report prints
+comes from ONE bounded collect over the stats run's grains table
+(:meth:`StatsResult.report_rows`): at most 5n top prefix rows, one row
+per owner and the totals row.  The output is bounded by n and the owner
+count, not by the tree, so the sinks are not distributed writes: the
+driver renders TSV, JSON-lines and Markdown from the collected rows and
+writes one part file per format in the layout Spark's writers used
+(``tsv/*.csv``, ``json/*.json``, ``markdown/report.md``).
 """
 
 from __future__ import annotations
@@ -22,79 +25,61 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
 
-from dudb_spark.operators.stats import METRICS, StatsResult
+from dudb_spark.operators.stats import (
+    METRICS,
+    REPORT_COLUMNS,
+    ReportRows,
+    StatsResult,
+)
 from dudb_spark.sources.catalog import write_pointer
 
 TS_FORMAT = "%Y-%m-%d-%H%M%S"  # mirrors the reference's dir naming
 
 
-def write_tsv_report(df: DataFrame, out_dir: str) -> None:
-    """S11: header + tab-separated rows."""
-    df.write.mode("overwrite").option("sep", "\t").option("header", "true").csv(
-        out_dir
-    )
+def _tsv_field(v) -> str:
+    """One TSV field, quoted as Spark's CSV writer (sep ``\\t``) quotes:
+    a value holding the separator, a quote, a line break or a leading
+    ``#`` (the reader's comment char), and the empty string, goes in
+    double quotes with ``\\`` and ``"`` backslash-escaped; NULL is the
+    empty field.  Where Spark's writer trims leading/trailing
+    whitespace, the value is quoted instead, so it reads back intact."""
+    if v is None:
+        return ""
+    s = str(v)
+    if (
+        s == ""
+        or s[0] <= " "
+        or s[-1] <= " "
+        or s[0] == "#"
+        or any(c in s for c in '\t"\n\r')
+    ):
+        return '"' + s.replace("\\", "\\\\").replace('"', '\\"') + '"'
+    return s
 
 
-def write_json_report(df: DataFrame, out_dir: str) -> None:
-    """S12: one JSON object per row."""
-    df.write.mode("overwrite").json(out_dir)
+def _write_part(out_dir: str, suffix: str, content: str) -> None:
+    os.makedirs(out_dir, exist_ok=True)
+    with open(os.path.join(out_dir, f"part-00000{suffix}"), "w",
+              encoding="utf-8") as f:
+        f.write(content)
 
 
-def _summary_bundle(
-    stats: StatsResult,
-    display_n: int,
-    users: DataFrame | None,
-    groups: DataFrame | None,
-) -> DataFrame:
-    """The totals and id-ranking rows the Markdown template prints, as ONE
-    union frame (section, key, value, name) — so the renderer pays a
-    single collect instead of three plus two dim-table collects.  Each
-    sequential action costs a full job submission (~hundreds of ms on a
-    busy driver); the branches are TakeOrderedAndProject / single-row
-    aggregates, so the union stays bounded at 2·n + 8 rows regardless of
-    corpus size, and the id→name dims fold in as broadcast joins instead
-    of collected dicts.  The five top-prefix tables come from the merged
-    top rows instead (:func:`write_markdown_report`)."""
-    from pyspark.sql import functions as F
+def write_tsv_rows(rows: list, out_dir: str) -> None:
+    """S11: header + tab-separated rows of :data:`REPORT_COLUMNS`."""
+    lines = ["\t".join(REPORT_COLUMNS)]
+    lines += ["\t".join(_tsv_field(r[c]) for c in REPORT_COLUMNS)
+              for r in rows]
+    _write_part(out_dir, ".csv", "".join(ln + "\n" for ln in lines))
 
-    tot_cols = list(stats.totals().columns)
-    null_name = F.lit(None).cast("string").alias("name")
-    branches = [
-        stats.totals().select(
-            F.lit("totals").alias("section"),
-            F.explode(
-                F.map_from_arrays(
-                    F.array(*[F.lit(c) for c in tot_cols]),
-                    F.array(*[F.col(c).cast("long") for c in tot_cols]),
-                )
-            ).alias("key", "value"),
-            null_name,
-        )
-    ]
-    for dim, dim_df, id_col in (("user", users, "uid"), ("group", groups, "gid")):
-        ids = stats.top_ids("bytes", display_n, dim)
-        if dim_df is not None:
-            ids = ids.join(
-                F.broadcast(
-                    dim_df.select(F.col(id_col).alias("id"), "name")
-                ),
-                "id",
-                "left",
-            )
-        else:
-            ids = ids.withColumn("name", F.lit(None).cast("string"))
-        branches.append(
-            ids.select(
-                F.lit(f"ids:{dim}").alias("section"),
-                F.col("id").cast("string").alias("key"),
-                F.col("bytes").cast("long").alias("value"),
-                "name",
-            )
-        )
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out
+
+def write_json_rows(rows: list, out_dir: str) -> None:
+    """S12: one JSON object per row, keys in :data:`REPORT_COLUMNS`
+    order and NULL fields left out, as Spark's JSON writer does."""
+    _write_part(out_dir, ".json", "".join(
+        json.dumps({c: r[c] for c in REPORT_COLUMNS if r[c] is not None},
+                   ensure_ascii=False, separators=(",", ":")) + "\n"
+        for r in rows
+    ))
 
 
 def write_markdown_report(
@@ -103,26 +88,15 @@ def write_markdown_report(
     display_n: int = 20,
     users: DataFrame | None = None,
     groups: DataFrame | None = None,
-    merged: DataFrame | None = None,
+    rows: ReportRows | None = None,
 ) -> str:
     """S13: Markdown summary — TOC, global totals, per-metric top-N tables,
-    per-user/per-group sections (markdown.go:32–179 template structure).
-    The per-metric tables are cut client-side from the collected
-    ``merged`` frame (``stats.merged_top(display_n)``, computed here when
-    not given): it holds every prefix of every top-N ranking, so each
-    table's top N by (value desc, prefix asc) over it is the top N over
-    all prefixes.  Totals and id rankings arrive in one collected union
-    frame (:func:`_summary_bundle`); the id→name dims (J3) ride along as
-    broadcast joins.  Row order within each table is re-derived
-    client-side with the same (value desc, key asc) tie-break the frames
-    use, so the rendered template is byte-identical to the
-    one-collect-per-table version."""
-    bundle: dict[str, list] = {}
-    for r in _summary_bundle(stats, display_n, users, groups).collect():
-        bundle.setdefault(r["section"], []).append(r)
-    if merged is None:
-        merged = stats.merged_top(display_n)
-    tops = merged.select("prefix", *METRICS).collect()
+    per-user/per-group sections (markdown.go:32–179 template structure),
+    rendered from ``rows`` (``stats.report_rows(display_n, users,
+    groups)``, computed here when not given).  An owner without a name
+    in the id→name dims (J3) shows its id."""
+    if rows is None:
+        rows = stats.report_rows(display_n, users, groups)
 
     lines: list[str] = []
     meta = stats.meta
@@ -142,38 +116,29 @@ def write_markdown_report(
         "## Totals",
         "",
     ]
-    tot = {r["key"]: r["value"] for r in bundle.get("totals", [])}
-    tot_order = list(stats.totals().columns)
     lines += ["| metric | value |", "|---|---|"]
-    lines += [f"| {k} | {tot[k]} |" for k in tot_order]
+    lines += [f"| {k} | {v} |" for k, v in rows.totals.items()]
     lines += ["", "## Top prefixes", ""]
 
     for metric in METRICS:
-        rows = sorted(
-            ((r["prefix"], int(r[metric])) for r in tops),
-            key=lambda r: (-r[1], r[0]),
-        )[:display_n]
         lines += [f"### Top {display_n} by {metric}", ""]
         lines += [f"| prefix | {metric} |", "|---|---|"]
-        lines += [f"| {p} | {v} |" for p, v in rows]
+        lines += [f"| {r['prefix']} | {r[metric]} |"
+                  for r in rows.top[metric]]
         lines += [""]
 
     for title, dim in (("Per user", "user"), ("Per group", "group")):
         lines += [f"## {title}", ""]
-        rows = sorted(
-            bundle.get(f"ids:{dim}", []),
-            key=lambda r: (-r["value"], int(r["key"])),
-        )
         lines += ["| id | name | bytes |", "|---|---|---|"]
         lines += [
-            f"| {r['key']} | {r['name'] if r['name'] is not None else r['key']} | {r['value']} |"
-            for r in rows
+            f"| {r['id']} | {r['name'] if r['name'] is not None else r['id']} | {r['bytes']} |"
+            for r in rows.owners[dim]
         ]
         lines += [""]
 
     content = "\n".join(lines)
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "w") as f:
+    with open(path, "w", encoding="utf-8") as f:
         f.write(content)
     return content
 
@@ -187,23 +152,17 @@ def write_reports(
     groups: DataFrame | None = None,
 ) -> str:
     """S14: write tsv/ json/ markdown into a fresh timestamped dir and
-    refresh the ``latest`` marker.  Returns the report dir path."""
+    refresh the ``latest`` marker.  Returns the report dir path.  All
+    three formats render from one collect (:meth:`StatsResult.report_rows`);
+    the pointer moves only after every file is written."""
     when = when or datetime.now(timezone.utc)
     out = f"{reports_root.rstrip('/')}/{when.strftime(TS_FORMAT)}"
-    # The sinks below fire six actions (the per-prefix and merged-top
-    # pins, two merged writes, its collect, one totals + top-id bundle).
-    # The merged top rows (at most 5n) are pinned so the writes and the
-    # collect scan them instead of re-running five rankings.  The summary
-    # frames themselves are not pinned: a loaded stats run reads its
-    # written grains table, so each action scans that one table — as the
-    # reference reports off the materialized .idustats snapshot
-    # (reports.go:57–58) — and never re-runs the fold.
-    merged = stats.merged_top(display_n).localCheckpoint()
-    write_tsv_report(merged, f"{out}/tsv")
-    write_json_report(merged, f"{out}/json")
+    rows = stats.report_rows(display_n, users, groups)
+    merged = rows.merged()
+    write_tsv_rows(merged, f"{out}/tsv")
+    write_json_rows(merged, f"{out}/json")
     write_markdown_report(
-        stats, f"{out}/markdown/report.md", display_n, users, groups,
-        merged=merged,
+        stats, f"{out}/markdown/report.md", display_n, rows=rows,
     )
     write_pointer(f"{reports_root.rstrip('/')}/latest",
                   os.path.basename(out))
@@ -234,8 +193,3 @@ def locate_reports(reports_root: str, n: int = 1) -> list[dict]:
             }
         )
     return out
-
-
-def to_json_lines(df: DataFrame, limit: int = 10000) -> str:
-    """Small-result JSON-lines string (driver-side, bounded)."""
-    return "\n".join(json.dumps(r.asDict(), default=str) for r in df.limit(limit).collect())

@@ -18,7 +18,17 @@ import os
 
 from pyspark.sql import SparkSession
 
-_LOCAL_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def _local_cpus() -> str:
+    """Task slots of the local master: ``SPARK_GRAFT_CPUS`` when set,
+    else the CPUs this process may run on."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(
+        len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity")
+        else os.cpu_count() or 1
+    )
+
+
+_LOCAL_CPUS = _local_cpus()
 # local mode runs driver + all executor threads in ONE JVM; the 1g default
 # heap OOMs with 32 concurrent tasks over array-heavy expressions.  Only
 # applied at JVM launch (no effect on an already-running session or on a

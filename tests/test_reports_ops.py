@@ -10,7 +10,11 @@ from pyspark.sql import functions as F
 
 from dudb_spark.model import FsTables
 from dudb_spark.operators.ops import list_errors, list_logs, parse_time_range, with_names
-from dudb_spark.operators.stats import StatsOptions, compute_stats
+from dudb_spark.operators.stats import (
+    REPORT_COLUMNS,
+    StatsOptions,
+    compute_stats,
+)
 from dudb_spark.reports import (
     locate_reports,
     write_reports,
@@ -62,6 +66,80 @@ def test_markdown_top_tables_match_rankings(spark, stats_result, tmp_path):
                 for r in stats_result.top_prefixes(m, n).collect()]
         lines = md.split(f"### Top {n} by {m}\n")[1].splitlines()
         assert lines[3:3 + n + 1] == want + [""]
+
+
+GOLDEN = os.path.join(os.path.dirname(__file__), "golden")
+
+
+def _tricky_stats(spark):
+    """A stats run whose prefixes hold a tab, a quote, non-ASCII text, a
+    backslash, a leading '#' and a trailing space."""
+    from dudb_spark.operators.stats import GRAINS_SCHEMA, StatsResult
+
+    pfx = ["/t", "/t/p\tq", '/t/q"r', "/t/é ü", "/t/b\\s", "/t/#h",
+           "/t/sp "]
+    rows = []
+    for i, p in enumerate(pfx):
+        c = [i % 3, 1, (7 - i) % 4, 100 + 10 * ((i * 5) % 7), 200 - i,
+             4096, i % 2, 0]
+        rows += [("prefix", p, None, *c), ("user", p, 1000 + i % 2, *c),
+                 ("group", p, 50, *c)]
+    return StatsResult(spark.createDataFrame(rows, GRAINS_SCHEMA),
+                       {"root": "/t", "expression": ""})
+
+
+def _case(spark, fs_dir, stats_result, case):
+    """(stats, id->name dims) for one report case."""
+    t = FsTables(spark, fs_dir)
+    dims = {"users": t.users, "groups": t.groups}
+    if case == "fixture":
+        return stats_result, dims
+    if case == "tricky":
+        return _tricky_stats(spark), {}
+    # an expression that matches nothing
+    return compute_stats(t.prefixes, t.entries,
+                         StatsOptions(expr="user=999999")), dims
+
+
+@pytest.mark.parametrize("case", ["fixture", "tricky", "empty"])
+def test_report_matches_pinned_rendering(spark, fs_dir, stats_result,
+                                         tmp_path, case):
+    """The Markdown report equals the pinned rendering of the Spark-side
+    sinks it replaced (tests/golden/report_<case>.md), apart from its
+    ``- generated:`` line.  A run with no prefix rows prints zero totals
+    and empty tables, a header-only TSV and an empty JSON file."""
+    res, dims = _case(spark, fs_dir, stats_result, case)
+    out = write_reports(res, str(tmp_path / "r"), display_n=3, **dims)
+    with open(f"{out}/markdown/report.md", encoding="utf-8") as f:
+        md = [ln for ln in f.read().split("\n")
+              if not ln.startswith("- generated:")]
+    with open(f"{GOLDEN}/report_{case}.md", encoding="utf-8") as f:
+        assert md == f.read().split("\n")
+    if case == "empty":
+        with open(f"{out}/tsv/part-00000.csv") as f:
+            assert f.read() == "\t".join(REPORT_COLUMNS) + "\n"
+        assert os.path.getsize(f"{out}/json/part-00000.json") == 0
+
+
+@pytest.mark.parametrize("case,n", [("fixture", 3), ("tricky", 7)])
+def test_report_rows_read_back_equal_merged_top(spark, fs_dir, stats_result,
+                                                tmp_path, case, n):
+    """The TSV read back by Spark's CSV reader and the JSON-lines read
+    back by its JSON reader each hold exactly ``merged_top(n)``'s rows,
+    tab, quote, non-ASCII and edge-whitespace prefixes included."""
+    res, _ = _case(spark, fs_dir, stats_result, case)
+    out = write_reports(res, str(tmp_path / "r"), display_n=n)
+    want = {tuple(r) for r in
+            res.merged_top(n).select(*REPORT_COLUMNS).collect()}
+    tsv = (spark.read.option("sep", "\t").option("header", "true")
+           .csv(f"{out}/tsv"))
+    js = spark.read.json(f"{out}/json")
+    for df in (tsv, js):
+        got = df.select("prefix", *[F.col(c).cast("long")
+                                    for c in REPORT_COLUMNS[1:]])
+        assert {tuple(r) for r in got.collect()} == want
+    if case == "tricky":  # every edge-case prefix is in the report
+        assert len(want) == 7
 
 
 def test_locate_orders_desc(tmp_path, spark, fs_dir, stats_result):
