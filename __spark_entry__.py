@@ -3118,94 +3118,6 @@ def _watch_feed(spark):
     return prev_p, prev_e, feed
 
 
-_WATCH_SHARED: dict = {}
-_WATCH_FIXTURE_V = 1
-
-
-def _watch_applied(spark):
-    """Cached continuation of :func:`_watch_feed` for q139: the PREV
-    stats summary and the APPLIED tables + touched set, persisted to
-    the fixture cache (the q118 ``_incremental_shared`` pattern, round-8
-    verdict item 3) so q139 times the incremental FOLD — the operator
-    it certifies — instead of re-paying compute_stats + apply_changes
-    choreography that q135/q136 already certify value-exactly every
-    round.  Everything here is deterministic from the committed
-    fixtures/fs parquet, so a cache hit is value-identical to a
-    rebuild; the cache key carries the fixture mtime + a version salt.
-    Built atomically (tmp dir + rename) so a concurrent bench/verify
-    pair can't see a half-written cache."""
-    got = _WATCH_SHARED.get(id(spark))
-    if got is not None:
-        return got
-    import json as _json
-    import os
-    import shutil
-    import tempfile
-
-    from dudb_spark.operators.ingest import apply_changes
-    from dudb_spark.operators.stats import (
-        StatsOptions, StatsResult, compute_stats,
-    )
-
-    cache_root = os.environ.get(
-        "DUDB_FIXTURE_CACHE", "/tmp/dudb_fixture_cache"
-    )
-    try:
-        fix_mtime = int(os.path.getmtime(f"{FS_FIX}/entries.parquet"))
-    except OSError:
-        fix_mtime = 0
-    base = os.path.join(
-        cache_root, f"watchapplied_{fix_mtime}_v{_WATCH_FIXTURE_V}"
-    )
-    if not os.path.exists(os.path.join(base, "_COMPLETE")):
-        prev_p, prev_e, feed = _watch_feed(spark)
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            os.makedirs(cache_root, exist_ok=True)
-            tmp = tempfile.mkdtemp(
-                prefix="watchapplied_build_", dir=cache_root
-            )
-            try:
-                prev = compute_stats(prev_p, prev_e, StatsOptions())
-                prev.save(f"{tmp}/prev_stats")
-                with open(f"{tmp}/prev_stats/meta.json", "w") as f:
-                    _json.dump(prev.meta, f, default=str)
-                res = apply_changes(
-                    prev_p, prev_e, feed, root="/tree",
-                    with_summary=False,
-                )
-                res.prefixes.write.mode("overwrite").parquet(
-                    f"{tmp}/applied_p"
-                )
-                res.entries.write.mode("overwrite").parquet(
-                    f"{tmp}/applied_e"
-                )
-                res.touched.write.mode("overwrite").parquet(
-                    f"{tmp}/touched"
-                )
-                res.release()
-                with open(f"{tmp}/_COMPLETE", "w") as f:
-                    f.write("ok")
-                os.rename(tmp, base)
-            except OSError:
-                # a concurrent builder won the rename — use its result
-                shutil.rmtree(tmp, ignore_errors=True)
-                if not os.path.exists(os.path.join(base, "_COMPLETE")):
-                    raise
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-
-    shared = {
-        "prev": StatsResult.load(spark, f"{base}/prev_stats"),
-        "new_p": spark.read.parquet(f"{base}/applied_p"),
-        "new_e": spark.read.parquet(f"{base}/applied_e"),
-        "touched": spark.read.parquet(f"{base}/touched"),
-    }
-    _WATCH_SHARED[id(spark)] = shared
-    return shared
-
-
 def q135_watch_apply_prefixes(spark, sf_dir):
     """Continuous ingest, prefixes side: apply_changes (the streaming
     analogue of merge_scan — churn-bounded set algebra behind
@@ -3376,37 +3288,6 @@ def q128_jpeg_decode(spark, sf_dir):
         F.round(F.try_element_at("mean", F.lit(3)), 6).alias("mean3"),
         F.round("rms", 6).alias("rms"),
     ).orderBy("media_id")
-
-
-def q139_watch_stats_fold(spark, sf_dir):
-    """The continuous-stats loop's math (``watch --apply --stats-dir``):
-    incremental_stats fold-updated with apply_changes' churn-sized
-    touched set must equal a FULL from-scratch fold over the applied
-    tables — the oracle is that full fold restated in SQL over the same
-    change feed (q77's certification pattern applied to the watch
-    path, including the hardlink-dedup closure under subtree deletion)."""
-    from dudb_spark.operators.incremental import incremental_stats
-
-    # prev summary + applied tables come from the persisted fixture
-    # cache (_watch_applied): q135/q136 certify the apply itself every
-    # round, so q139 times exactly what it certifies — the churn-sized
-    # incremental fold against the full-fold oracle
-    shared = _watch_applied(spark)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    # 2 state partitions: the fixture is 24 prefixes — the closure's
-    # ~12 sequential driver jobs each pay per-task scheduling on every
-    # shuffle partition, so 8 nearly-empty partitions cost more than 2
-    # full ones (measured 3.4→2.7 s warm; same _stream_parts rationale)
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
-        inc = incremental_stats(
-            shared["prev"], _fs(spark, "prefixes"), _fs(spark, "entries"),
-            shared["new_p"], shared["new_e"], shared["touched"],
-        )
-        out = inc.per_prefix.orderBy("prefix").localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return out
 
 
 def q140_resync_reconcile(spark, sf_dir):
@@ -3793,42 +3674,6 @@ def q76_stream_attribution(spark, sf_dir):
         )
         .orderBy("user_id", "click_id", "purchase_id")
     )
-
-
-def q77_incremental_stats(spark, sf_dir):
-    """Incremental stats maintenance (operators/incremental.py): after the
-    deterministic merge, the stored per-prefix summary is updated by
-    re-folding ONLY the touched slice plus the (device,inode) closure that
-    keeps hardlink dedup exact.  The oracle is the FULL fold over the
-    merged tables — value equality proves the incremental path computes
-    exactly what a from-scratch recompute would."""
-    from dudb_spark.operators.incremental import incremental_stats
-    from dudb_spark.operators.ingest import merge_scan
-    from dudb_spark.operators.stats import StatsOptions, compute_stats
-
-    prev_p, prev_e, staged_p, staged_e = _merge_fixture(spark)
-    # The fixture is 29 dirs — the incremental machinery is ~10 small
-    # jobs, so size the shuffle to the slice (AQE coalesces mid-plan but
-    # not the checkpoint materializations).
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        prev = compute_stats(prev_p, prev_e, StatsOptions())
-        # summary counters are q63/q64's gate, not this one's — skipping
-        # them drops two synchronous count jobs from the fixture path
-        merge = merge_scan(
-            prev_p, prev_e, staged_p, staged_e, root="/tree",
-            with_summary=False,
-        )
-        res = incremental_stats(
-            prev, prev_p, prev_e, merge.prefixes, merge.entries, merge.touched
-        )
-        # pin the result under the small-shuffle config so the driver's
-        # collect doesn't re-execute the chain at the restored width
-        out = res.per_prefix.orderBy("prefix").localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return out
 
 
 def q78_snapshot_diff(spark, sf_dir):
@@ -4550,426 +4395,6 @@ def q108_span_excision(spark, sf_dir):
     corpus = d.where(F.col("doc_id") % 97 != 0)
     ref = d.where(F.col("doc_id") % 97 == 0)
     return excise_spans(corpus, ref, 8).orderBy("doc_id")
-
-
-def _incremental_staging(spark, sf_dir):
-    """The q87 600k-entry tree with PRODUCTION-profile ~1% churn:
-    d%100==7 deleted, d%100==3 modified, five added dirs a0..a4 cloned
-    from d490..d494 but with fresh record inodes (pinode_plus) and the
-    inode-42 mega-group rows filtered out.  Unlike q87's staging, the
-    added dirs do NOT collide with existing directory records, so the
-    hardlink closure stays proportional to the churn — the profile a
-    nightly production merge has.  (The flip-cascade semantics the q87
-    collision would trigger are certified separately: q77, the
-    dir-hardlink cascade tests, and the 200-seed closure fuzz.)  The
-    added dirs' FILE inodes still alias d490..d494's files, so file
-    canonicals migrate to /scale/a* and those five untouched dirs join
-    the refold via the file-group closure ('linked' kind).
-
-    Returns (prev_p, prev_e, staged_p, staged_e)."""
-    li = _t(spark, sf_dir, "lineitem")
-    d500 = F.col("l_orderkey") % 500
-    prev_p, prev_e = _scale_fs(li)
-    ch_p, ch_e = _scale_fs(
-        li.where(d500 % 100 == 3), size_plus=7,
-        prefix_mtime="2025-02-01 00:00:00",
-    )
-    add_p, add_e = _scale_fs(
-        li.where(d500.between(490, 494) & (F.col("l_partkey") % 199 != 0)),
-        dir_prefix="a", dir_index=d500 - 490,
-        pinode_plus=50_000_000,
-    )
-    pdir = F.substring("path", 9, 10).cast("long")
-    staged_p = (
-        prev_p.where((pdir % 100 != 7) & (pdir % 100 != 3))
-        .unionByName(ch_p)
-        .unionByName(add_p)
-    )
-    staged_e = ch_e.unionByName(add_e)
-    return prev_p, prev_e, staged_p, staged_e
-
-
-def _incremental_bench(spark, sf_dir, mult=30):
-    """Production-path measurement for bench.py: dir-localized churn
-    over a ``mult``×-replicated tree (18M entries at sf0.1, built by
-    unioning orderkey-offset lineitem copies) with REALISTIC hardlink
-    topology (the synthetic inode-42 mega-group is remapped away — a
-    group spanning every directory forces any correct closure to refold
-    the world, which is an adversarial fixture artifact, not a
-    production profile).  Snapshots are stored in the BUCKETED layout
-    (SnapshotCatalog.write_snapshot(layout="bucketed"), the CLI opt-in)
-    with its hardlink spill index, and both paths are timed from those
-    scans:
-
-      t_full — from-scratch ``compute_stats`` of the merged snapshot
-      t_inc  — ``incremental_stats(pin_inputs=False, path_buckets=…,
-               …spill…)`` + stitch
-
-    TWO churn profiles are measured against the same previous snapshot:
-
-      low  — 3 of 500 dirs (1 changed + 1 hardlink-copied + 1 deleted,
-             ~0.6 % of dirs): the realistic nightly-incremental shape
-      high — 15 of 500 dirs (5+5+5, ~3 %): the stress shape the q118
-             oracle certifies
-
-    Before the low profile is timed, the SAME two measurements run once
-    untimed as a warm-up: the first fold in a fresh JVM pays one-time
-    whole-stage-codegen compilation and shuffle/broadcast machinery
-    startup (measured ~10 s of a ~30 s cold t_full at 18M — round-6's
-    committed 0.37× headline was a cold/warm asymmetry artifact, with
-    t_full and t_inc drawn from different warmup states across runs).
-    Post-warm-up, both sides measure work, not JVM startup.
-
-    Returns a dict with per-profile (t_full, t_inc, fold_fraction,
-    closure_jobs — the count of the closure's sequential driver
-    round-trips, whose ~0.3 s local latency each is t_inc's floor).
-    fold_fraction = folded-slice rows / total rows — the scale-invariant
-    quantity (incremental work grows with churn, a refold with the
-    tree); the wall-clock ratio additionally carries Spark's fixed
-    per-job costs, which is why the low-churn profile is the honest
-    headline and the high-churn ratio approaches break-even on a local
-    fixture."""
-    import shutil
-    import tempfile
-    import time as _time
-
-    from dudb_spark.operators.incremental import incremental_stats
-    from dudb_spark.operators.ingest import merge_scan
-    from dudb_spark.operators.stats import StatsOptions, compute_stats
-    from dudb_spark.sources.catalog import SnapshotCatalog
-
-    li0 = _t(spark, sf_dir, "lineitem").withColumn(
-        "l_partkey",
-        F.when(
-            F.col("l_partkey") % 199 == 0, F.col("l_partkey") + 1
-        ).otherwise(F.col("l_partkey")),
-    )
-    li = li0
-    # replica offset: 1M ≡ 0 (mod 500) keeps the dir mapping, and keeps
-    # the _scale_fs synthetic inode (orderkey×6.4e10-scale) inside int64
-    # at mult=30 — 10M offsets overflow past ~14 replicas
-    for k in range(1, mult):
-        li = li.unionByName(
-            li0.withColumn(
-                "l_orderkey", F.col("l_orderkey") + F.lit(k * 1_000_000)
-            )
-        )
-    d500 = F.col("l_orderkey") % 500
-    prev_p, prev_e = _scale_fs(li)
-
-    def staging(mod):
-        """changed: d≡3, deleted: d≡7, hardlink-copied: one band of
-        ``500 // mod`` dirs — churn dirs = 3 × (500 // mod)."""
-        ch_p, ch_e = _scale_fs(
-            li.where(d500 % mod == 3), size_plus=7,
-            prefix_mtime="2025-02-01 00:00:00",
-        )
-        n_add = 500 // mod
-        add_p, add_e = _scale_fs(
-            li.where(d500.between(495 - n_add, 494)), dir_prefix="a",
-            dir_index=d500 - (495 - n_add), pinode_plus=50_000_000,
-        )
-        pdir = F.substring("path", 9, 10).cast("long")
-        staged_p = (
-            prev_p.where((pdir % mod != 7) & (pdir % mod != 3))
-            .unionByName(ch_p)
-            .unionByName(add_p)
-        )
-        staged_e = ch_e.unionByName(add_e)
-        is_churn_prefix = (
-            F.col("prefix").startswith("/scale/a")
-            | (F.substring("prefix", 9, 10).cast("long") % mod == 3)
-            | F.substring("prefix", 9, 10).cast("long").between(
-                495 - n_add, 494
-            )
-        )
-        return staged_p, staged_e, is_churn_prefix
-
-    base = tempfile.mkdtemp(prefix="dudb_incbench_")
-    buckets = 64
-    try:
-        cat = SnapshotCatalog(spark, f"{base}/db")
-        cat.write_snapshot(
-            prev_p, prev_e, layout="bucketed", path_buckets=buckets
-        )
-        prev_v = cat.latest_version()
-        pt = cat.tables()
-        prev = compute_stats(pt.prefixes, pt.entries, StatsOptions())
-        prev.grains = prev.grains.localCheckpoint()
-
-        spill_prev_rows = cat.layout(prev_v).get("spill_rows")
-
-        def run_full(nt):
-            t0 = _time.perf_counter()
-            full = compute_stats(nt.prefixes, nt.entries, StatsOptions())
-            full.per_prefix.localCheckpoint()
-            return _time.perf_counter() - t0, full
-
-        def run_inc(nt, touched, new_v):
-            sr = None
-            new_rows = cat.layout(new_v).get("spill_rows")
-            if spill_prev_rows is not None and new_rows is not None:
-                sr = spill_prev_rows + new_rows
-            t0 = _time.perf_counter()
-            inc = incremental_stats(
-                prev,
-                pt.read_raw("prefixes"), pt.read_raw("entries"),
-                nt.read_raw("prefixes"), nt.read_raw("entries"),
-                touched, pin_inputs=False, path_buckets=buckets,
-                prev_spill=cat.spill_index(prev_v),
-                new_spill=cat.spill_index(new_v),
-                spill_rows=sr,
-            )
-            ip = inc.per_prefix.localCheckpoint()
-            return _time.perf_counter() - t0, ip, inc.meta
-
-        out = {"entries": None}
-        for profile, mod in (("low", 500), ("high", 100)):
-            staged_p, staged_e, is_churn = staging(mod)
-            merge = merge_scan(
-                pt.prefixes, pt.entries, staged_p, staged_e,
-                root="/scale", with_summary=False,
-            )
-            cat.write_snapshot(
-                merge.prefixes, merge.entries,
-                layout="bucketed", path_buckets=buckets,
-            )
-            new_v = cat.latest_version()
-            nt = cat.tables()
-            merge.touched.write.mode("overwrite").parquet(
-                f"{base}/touched_{profile}"
-            )
-            touched = spark.read.parquet(f"{base}/touched_{profile}")
-            n = nt.entries.count()
-            out["entries"] = n
-
-            if profile == "low":
-                # untimed warm-up of both plan shapes (see docstring)
-                run_full(nt)
-                run_inc(nt, touched, new_v)
-
-            # best-of-3: the closure is 12 SEQUENTIAL driver jobs, so a
-            # single GC/scheduler hiccup mid-chain inflates t_inc by
-            # seconds while the refold (one wide job) rides it out —
-            # single-rep draws ranged 0.6x–1.7x on identical code
-            # (round-8 finding) and min-of-2 still drew a 0.53 ratio in
-            # one round-9 run whose other two draws were 1.26 / 1.14;
-            # the min over three reps measures the work, not the tail
-            t_full, _ = run_full(nt)
-            t_inc, ip, meta = run_inc(nt, touched, new_v)
-            for _rep in range(2):
-                t_full = min(t_full, run_full(nt)[0])
-                t_inc = min(t_inc, run_inc(nt, touched, new_v)[0])
-
-            folded = (
-                ip.where(is_churn)
-                .agg(F.sum("files") + F.sum("hardlinks"))
-                .first()[0]
-                or 0
-            )
-            out[profile] = {
-                "t_full": t_full,
-                "t_inc": t_inc,
-                "fold_fraction": round(folded / max(n, 1), 4),
-                "closure_jobs": meta.get("closure_jobs"),
-            }
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
-_INC_SHARED: dict = {}
-# bump when _incremental_staging / merge / layout recipes change: the
-# on-disk fixture cache key includes it, forcing a rebuild
-# v2: spill index drops single-bucket keys (catalog.write_snapshot)
-_INC_FIXTURE_V = 2
-
-
-def _incremental_shared(spark, sf_dir):
-    """Stage the 600k-entry ~1%-churn fixture ONCE per process — round-6
-    verdict item 3: q118 and q126 each re-staged the same tree in-suite
-    (~14.9 s + 20.9 s, mostly duplicated staging).  The staging lands on
-    disk as BUCKETED snapshots in a process-lifetime temp dir (cleaned
-    at exit): previous snapshot (v0001) + its fold summary, the merged
-    snapshot (v0002) + spill indexes, and the touched set as parquet.
-    q118 consumes the PLAIN table reads (pb hidden — the un-bucketed
-    closure), q126 the raw pb-carrying scans + spill indexes (the fully
-    pruned closure); both reuse the same previous summary, so in-suite
-    the second query pays only its own closure + fold.
-
-    Round-8 (verdict item 3): the staging additionally persists ON DISK
-    across suite runs, keyed by sf + the lineitem parquet's mtime (so a
-    regenerated testdata set rebuilds) + a fixture-version salt (bump
-    ``_INC_FIXTURE_V`` when the staging recipe changes).  The fixture is
-    deterministic from lineitem, so a cache hit is value-identical to a
-    rebuild; q118 then times the fold/closure, not 30+ s of fixture
-    construction.  Built atomically (tmp dir + rename) so a concurrent
-    bench/verify pair can't see a half-written cache."""
-    if sf_dir in _INC_SHARED:
-        return _INC_SHARED[sf_dir]
-    import json as _json
-    import os
-    import shutil
-    import tempfile
-
-    from dudb_spark.operators.ingest import merge_scan
-    from dudb_spark.operators.stats import (
-        StatsOptions, StatsResult, compute_stats,
-    )
-    from dudb_spark.sources.catalog import SnapshotCatalog
-
-    cache_root = os.environ.get(
-        "DUDB_FIXTURE_CACHE", "/tmp/dudb_fixture_cache"
-    )
-    try:
-        li_mtime = int(os.path.getmtime(f"{sf_dir}/lineitem.parquet"))
-    except OSError:
-        li_mtime = 0
-    base = os.path.join(
-        cache_root,
-        f"incshared_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{li_mtime}_v{_INC_FIXTURE_V}",
-    )
-    if not os.path.exists(os.path.join(base, "_COMPLETE")):
-        prev_p, prev_e, staged_p, staged_e = _incremental_staging(
-            spark, sf_dir
-        )
-        os.makedirs(cache_root, exist_ok=True)
-        tmp = tempfile.mkdtemp(prefix="incshared_build_", dir=cache_root)
-        try:
-            cat = SnapshotCatalog(spark, f"{tmp}/db")
-            cat.write_snapshot(
-                prev_p, prev_e, layout="bucketed", path_buckets=16
-            )
-            pt = cat.tables(cat.latest_version())
-            prev = compute_stats(pt.prefixes, pt.entries, StatsOptions())
-            prev.save(f"{tmp}/prev_stats")
-            with open(f"{tmp}/prev_stats/meta.json", "w") as f:
-                _json.dump(prev.meta, f, default=str)
-            merge = merge_scan(
-                pt.prefixes, pt.entries, staged_p, staged_e,
-                root="/scale", with_summary=False,
-            )
-            cat.write_snapshot(
-                merge.prefixes, merge.entries,
-                layout="bucketed", path_buckets=16,
-            )
-            merge.touched.write.mode("overwrite").parquet(f"{tmp}/touched")
-            with open(f"{tmp}/_COMPLETE", "w") as f:
-                f.write("ok")
-            os.rename(tmp, base)
-        except OSError:
-            # a concurrent builder won the rename — use its result
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(os.path.join(base, "_COMPLETE")):
-                raise
-
-    cat = SnapshotCatalog(spark, f"{base}/db")
-    prev_v, new_v = cat.versions()[0], cat.versions()[-1]
-    prev = StatsResult.load(spark, f"{base}/prev_stats")
-    shared = {
-        "cat": cat, "prev": prev, "prev_v": prev_v, "new_v": new_v,
-        "pt": cat.tables(prev_v), "nt": cat.tables(new_v),
-        "touched": spark.read.parquet(f"{base}/touched"),
-    }
-    _INC_SHARED[sf_dir] = shared
-    return shared
-
-
-def _incremental_kind_rollup(inc):
-    """The q118/q126 output shape: per-kind rollup of the incremental
-    per-prefix summary (added / changed / linked / unchanged)."""
-    kd = F.substring("prefix", 9, 10).cast("long")
-    kind = (
-        F.when(F.col("prefix").startswith("/scale/a"), "added")
-        .when(kd.between(490, 494), "linked")
-        .when(kd % 100 == 3, "changed")
-        .otherwise("unchanged")
-    )
-    return (
-        inc.per_prefix.groupBy(kind.alias("kind"))
-        .agg(
-            F.count(F.lit(1)).alias("n_dirs"),
-            F.sum("prefixes").alias("prefixes"),
-            F.sum("files").alias("files"),
-            F.sum("bytes").alias("bytes"),
-            F.sum("storage_bytes").alias("storage_bytes"),
-            F.sum("prefix_bytes").alias("prefix_bytes"),
-            F.sum("hardlinks").alias("hardlinks"),
-            F.sum("hardlink_dirs").alias("hardlink_dirs"),
-        )
-        .orderBy("kind")
-    )
-
-
-def q118_incremental_at_scale(spark, sf_dir):
-    """The PRODUCTION incremental-stats path at data scale
-    (operators/incremental.py): the 600k-entry tree with ~1% churn
-    (_incremental_staging) is merged, the merged snapshot and previous
-    summary are pinned (stand-ins for the stored snapshot/summary), and
-    incremental_stats(pin_inputs=False) re-folds only the touched
-    closure — churn-proportional, the design that makes nightly stats
-    viable at 100 TB where the reference recomputes from scratch
-    (stats.go:150–209).
-
-    Output: per-kind (added/changed/linked/unchanged) rollup of the
-    incremental per-prefix summary.  The oracle restates the ENTIRE
-    merged-tree fold — cross-directory file dedup windows, churned
-    sizes, canonical migration into the added dirs — from lineitem
-    arithmetic, so value equality proves the incremental result matches
-    a from-scratch fold of the merged tree.  Staging is the
-    process-shared fixture (``_incremental_shared`` — q126 reuses it),
-    and the closure here runs the PLAIN (un-bucketed) path over the
-    stored snapshots' table reads: projections push to the parquet scan,
-    so the probes are narrow without explicit pins."""
-    from dudb_spark.operators.incremental import incremental_stats
-
-    sh = _incremental_shared(spark, sf_dir)
-    inc = incremental_stats(
-        sh["prev"],
-        sh["pt"].prefixes, sh["pt"].entries,
-        sh["nt"].prefixes, sh["nt"].entries,
-        sh["touched"], pin_inputs=False,
-    )
-    return _incremental_kind_rollup(inc)
-
-
-def q126_incremental_bucketed(spark, sf_dir):
-    """q118's incremental gate routed through the BUCKETED snapshot
-    layout — the storage path a very large deployment opts into
-    (``analyze --layout bucketed``): snapshots written via
-    SnapshotCatalog(layout="bucketed") with the hardlink spill index,
-    closure probes partition-pruned to the churn's buckets + the
-    index's member buckets
-    (operators/incremental.py, sources/catalog.py).  Output and oracle
-    are IDENTICAL to q118 (the layout is a writer-side choice; value
-    equality against the from-scratch fold restatement proves the
-    pruned closure loses nothing), so any divergence between the plain
-    and bucketed paths shows up as exactly one of the two rows going
-    red.  Staging (snapshots + spill indexes + previous summary) is the
-    process-shared fixture q118 also consumes (_incremental_shared);
-    this query's own work is the fully PRUNED closure: raw pb-carrying
-    scans, both spill indexes, and the write-time spill_rows count that
-    skips the index-empty probe job."""
-    from dudb_spark.operators.incremental import incremental_stats
-
-    sh = _incremental_shared(spark, sf_dir)
-    cat = sh["cat"]
-    lay_prev = cat.layout(sh["prev_v"])
-    lay_new = cat.layout(sh["new_v"])
-    spill_rows = None
-    if "spill_rows" in lay_prev and "spill_rows" in lay_new:
-        spill_rows = lay_prev["spill_rows"] + lay_new["spill_rows"]
-    inc = incremental_stats(
-        sh["prev"],
-        sh["pt"].read_raw("prefixes"), sh["pt"].read_raw("entries"),
-        sh["nt"].read_raw("prefixes"), sh["nt"].read_raw("entries"),
-        sh["touched"], pin_inputs=False, path_buckets=16,
-        prev_spill=cat.spill_index(sh["prev_v"]),
-        new_spill=cat.spill_index(sh["new_v"]),
-        spill_rows=spill_rows,
-    )
-    return _incremental_kind_rollup(inc)
 
 
 def q120_stream_excision(spark, sf_dir):
@@ -7051,7 +6476,6 @@ QUERIES: dict[str, Callable] = {
     "q74_bm25_terms": q74_bm25_terms,
     "q75_cohort_retention": q75_cohort_retention,
     "q76_stream_attribution": q76_stream_attribution,
-    "q77_incremental_stats": q77_incremental_stats,
     "q78_snapshot_diff": q78_snapshot_diff,
     "q79_sq8_ann": q79_sq8_ann,
     "q80_zorder_key": q80_zorder_key,
@@ -7092,7 +6516,6 @@ QUERIES: dict[str, Callable] = {
     "q115_stored_index_search": q115_stored_index_search,
     "q116_curriculum_bins": q116_curriculum_bins,
     "q117_mixture_weights": q117_mixture_weights,
-    "q118_incremental_at_scale": q118_incremental_at_scale,
     "q119_ivf_pq_residual": q119_ivf_pq_residual,
     "q120_stream_excision": q120_stream_excision,
     "q121_chunk_windows": q121_chunk_windows,
@@ -7100,7 +6523,6 @@ QUERIES: dict[str, Callable] = {
     "q123_embedding_outliers": q123_embedding_outliers,
     "q124_bpe_merges": q124_bpe_merges,
     "q125_bpe_encode": q125_bpe_encode,
-    "q126_incremental_bucketed": q126_incremental_bucketed,
     "q127_fswalk_datasource": q127_fswalk_datasource,
     "q128_jpeg_decode": q128_jpeg_decode,
     "q129_budget_selection": q129_budget_selection,
@@ -7113,7 +6535,6 @@ QUERIES: dict[str, Callable] = {
     "q136_watch_apply_entries": q136_watch_apply_entries,
     "q137_jpeg_progressive": q137_jpeg_progressive,
     "q138_delta_chain_read": q138_delta_chain_read,
-    "q139_watch_stats_fold": q139_watch_stats_fold,
     "q140_resync_reconcile": q140_resync_reconcile,
     "q141_force_rescan": q141_force_rescan,
     "q142_seeded_watch_reconcile": q142_seeded_watch_reconcile,
@@ -7946,93 +7367,6 @@ ORACLE["q117_mixture_weights"] = r"""
     FROM per_src, tot ORDER BY source
 """
 
-ORACLE["q118_incremental_at_scale"] = r"""
-    WITH base AS (
-        SELECT l_orderkey % 500 AS d,
-               l_orderkey AS ok, l_linenumber AS ln,
-               l_partkey AS pk, l_suppkey AS sk,
-               CAST(l_quantity AS BIGINT) AS qty,
-               (l_orderkey * 1000000000 + l_linenumber * 100000000
-                + l_partkey * 1000 + l_suppkey) * 64
-                 + CAST(l_quantity AS BIGINT) AS uniq
-        FROM lineitem
-    ), dmin AS (
-        -- dir record inode: min(uniq) + 10M (see _scale_fs); added
-        -- a-dirs use min over their FILTERED rows + a 50M offset, so
-        -- no directory-record group spans dirs (production profile)
-        SELECT d, MIN(uniq) + 10000000 AS dino FROM base GROUP BY d
-    ), amin AS (
-        SELECT d, MIN(uniq) + 60000000 AS dino FROM base
-        WHERE d BETWEEN 490 AND 494 AND pk % 199 <> 0 GROUP BY d
-    ), dirs AS (
-        SELECT '/scale/d' || d AS path, d, dino,
-               CASE WHEN d % 100 = 3 THEN 'changed'
-                    WHEN d BETWEEN 490 AND 494 THEN 'linked'
-                    ELSE 'unchanged' END AS kind
-        FROM dmin WHERE d % 100 <> 7
-        UNION ALL
-        SELECT '/scale/a' || (d - 490), d, dino, 'added' FROM amin
-    ), recs AS (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY dino ORDER BY path) > 1
-                  AS rec_dup
-        FROM dirs
-    ), ent AS (
-        SELECT '/scale/d' || d AS parent,
-               '/scale/d' || d || '/f' || ok || '-' || ln || '-' || pk
-                 || '-' || sk || '-' || qty AS path,
-               CASE WHEN d % 100 = 3 THEN qty + 7 ELSE qty END AS size,
-               CASE WHEN pk % 199 = 0 THEN 42 ELSE uniq END AS inode
-        FROM base WHERE d % 100 <> 7
-        UNION ALL
-        -- the added dirs' files keep their uniq inodes, so they alias
-        -- d490..d494's files and steal the canonicals ('/scale/a' < 'd')
-        SELECT '/scale/a' || (d - 490),
-               '/scale/a' || (d - 490) || '/f' || ok || '-' || ln || '-'
-                 || pk || '-' || sk || '-' || qty,
-               qty,
-               uniq
-        FROM base WHERE d BETWEEN 490 AND 494 AND pk % 199 <> 0
-    ), included AS (
-        SELECT e.* FROM ent e JOIN recs r ON e.parent = r.path
-        WHERE NOT r.rec_dup
-    ), files AS (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY inode ORDER BY path) > 1
-                  AS is_dup
-        FROM included
-    ), fagg AS (
-        SELECT parent,
-               SUM(CASE WHEN is_dup THEN 0 ELSE 1 END) AS files,
-               SUM(CASE WHEN is_dup THEN 0 ELSE size END) AS fbytes,
-               SUM(CASE WHEN is_dup THEN 1 ELSE 0 END) AS hardlinks
-        FROM files GROUP BY parent
-    ), perdir AS (
-        SELECT r.kind,
-               CASE WHEN r.rec_dup THEN 0 ELSE COALESCE(f.files, 0) END
-                 AS files,
-               CASE WHEN r.rec_dup THEN 0
-                    ELSE 64 + COALESCE(f.fbytes, 0) END AS bytes,
-               CASE WHEN r.rec_dup THEN 0 ELSE 64 END AS prefix_bytes,
-               CASE WHEN r.rec_dup THEN 0
-                    ELSE COALESCE(f.hardlinks, 0) END AS hardlinks,
-               CASE WHEN r.rec_dup THEN 1 ELSE 0 END AS hardlink_dirs
-        FROM recs r LEFT JOIN fagg f ON f.parent = r.path
-    )
-    SELECT kind,
-           CAST(COUNT(*) AS BIGINT) AS n_dirs,
-           CAST(COUNT(*) AS BIGINT) AS prefixes,
-           CAST(SUM(files) AS BIGINT) AS files,
-           CAST(SUM(bytes) AS BIGINT) AS bytes,
-           CAST(SUM(bytes) AS BIGINT) AS storage_bytes,
-           CAST(SUM(prefix_bytes) AS BIGINT) AS prefix_bytes,
-           CAST(SUM(hardlinks) AS BIGINT) AS hardlinks,
-           CAST(SUM(hardlink_dirs) AS BIGINT) AS hardlink_dirs
-    FROM perdir GROUP BY kind ORDER BY kind
-"""
-
-# q126 routes the identical staging through the bucketed layout; value
-# equality against the SAME restatement certifies the pruned closure
-ORACLE["q126_incremental_bucketed"] = ORACLE["q118_incremental_at_scale"]
-
 ORACLE["q121_chunk_windows"] = r"""
     WITH tl AS (
       SELECT doc_id, arr, len(arr) AS L FROM (
@@ -8583,25 +7917,6 @@ ORACLE["q140_resync_reconcile"] = _WATCH_FEED_SQL + """
     ) WHERE op IS NOT NULL ORDER BY path, op
 """
 
-# q139: FULL fold over the applied tables — the ground truth the
-# continuous-stats incremental update must reproduce (q77's pattern)
-ORACLE["q139_watch_stats_fold"] = (
-    _WATCH_FEED_SQL
-    + _fold_sql_tail("new_p", "new_e")
-    + """
-    SELECT prefix,
-           CAST(SUM(files) AS BIGINT) AS files,
-           CAST(SUM(prefixes) AS BIGINT) AS prefixes,
-           CAST(SUM(sub_prefixes) AS BIGINT) AS sub_prefixes,
-           CAST(SUM(bytes) AS BIGINT) AS bytes,
-           CAST(SUM(storage_bytes) AS BIGINT) AS storage_bytes,
-           CAST(SUM(prefix_bytes) AS BIGINT) AS prefix_bytes,
-           CAST(SUM(hardlinks) AS BIGINT) AS hardlinks,
-           CAST(SUM(hardlink_dirs) AS BIGINT) AS hardlink_dirs
-    FROM contrib GROUP BY prefix ORDER BY prefix
-    """
-)
-
 ORACLE["q133_fswatch_stream"] = """
     WITH dirs AS (SELECT unnest(generate_series(0, 2)) AS i),
     fils AS (
@@ -8884,28 +8199,6 @@ ORACLE["q76_stream_attribution"] = """
      AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
     ORDER BY c.user_id, click_id, purchase_id
 """
-
-
-# Full fold over the MERGED tables — the ground truth the incremental
-# update must reproduce.  merged prefixes = staged_p (staged rows equal
-# previous rows for unchanged dirs by construction); merged entries =
-# merged_e (alive previous entries + clones).
-ORACLE["q77_incremental_stats"] = (
-    _MERGE_FIX_SQL
-    + _fold_sql_tail("staged_p", "merged_e")
-    + """
-    SELECT prefix,
-           CAST(SUM(files) AS BIGINT) AS files,
-           CAST(SUM(prefixes) AS BIGINT) AS prefixes,
-           CAST(SUM(sub_prefixes) AS BIGINT) AS sub_prefixes,
-           CAST(SUM(bytes) AS BIGINT) AS bytes,
-           CAST(SUM(storage_bytes) AS BIGINT) AS storage_bytes,
-           CAST(SUM(prefix_bytes) AS BIGINT) AS prefix_bytes,
-           CAST(SUM(hardlinks) AS BIGINT) AS hardlinks,
-           CAST(SUM(hardlink_dirs) AS BIGINT) AS hardlink_dirs
-    FROM contrib GROUP BY prefix ORDER BY prefix
-    """
-)
 
 
 ORACLE["q78_snapshot_diff"] = (

@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
 
@@ -25,17 +24,16 @@ from dudb_spark.session import get_spark
 # PY_FAMILY = queries whose time is dominated by Python workers (Arrow
 # mapInPandas/applyInPandasWithState, streaming state stores, the
 # python DataSource walk) or by long sequential driver-job choreography
-# (pointer-doubling CC, BPE merge rounds, Lloyd rounds, the incremental
-# closure) — these drift with calib_pandas_udf_sec.  Everything else is
+# (pointer-doubling CC, BPE merge rounds, Lloyd rounds) — these drift with calib_pandas_udf_sec.  Everything else is
 # JVM-bound (scan/agg/join/window inside whole-stage codegen) and
 # drifts with calib_scan_agg_sec.  Classification: static call-graph
 # scan for mapInPandas/applyInPandas/readStream/_stream_parts markers
 # plus the known driver-loop queries (q44 CC, q124/q125 BPE, q134
-# kmeans, q118/q126 incremental closure).
+# kmeans).
 PY_FAMILY = frozenset((
-    "q30", "q38", "q44", "q50", "q56", "q59", "q76", "q77", "q85",
-    "q86", "q91", "q95", "q100", "q106", "q118", "q120", "q124",
-    "q125", "q126", "q127", "q128", "q133", "q134", "q137", "q139",
+    "q30", "q38", "q44", "q50", "q56", "q59", "q76", "q85",
+    "q86", "q91", "q95", "q100", "q106", "q120", "q124",
+    "q125", "q127", "q128", "q133", "q134", "q137",
     "q149",
     # round-11 additions: streaming-state gates (q155 CMS, q161
     # anomaly, q165 quantile, q169 reservoir, q171 neardup, q185
@@ -383,7 +381,7 @@ def fswatch_bench(n_dirs: int = 1500, files_per_dir: int = 40) -> dict:
 
 def watch_apply_bench(spark, n_dirs: int = 400,
                       files_per_dir: int = 25) -> dict:
-    """Continuous-ingest write cost on a REAL tree: a bucketed snapshot
+    """Continuous-ingest write cost on a REAL tree: a snapshot
     of ~10k entries takes a 1%-churn fswatch diff, and the DELTA commit
     (apply summary + churn-sized parquet write, what every watch --apply
     batch pays) is timed against the FULL compaction snapshot write
@@ -415,7 +413,6 @@ def watch_apply_bench(spark, n_dirs: int = 400,
         cat.write_snapshot(
             spark.createDataFrame(p0, PREFIXES_SCHEMA),
             spark.createDataFrame(e0, ENTRIES_SCHEMA),
-            layout="bucketed",
         )
         # watch-seed artifact (round-10): first start pays the one
         # executor-parallel export; a restart on the unchanged snapshot
@@ -449,11 +446,7 @@ def watch_apply_bench(spark, n_dirs: int = 400,
         t_delta = time.perf_counter() - t0
 
         t0 = time.perf_counter()
-        lay = cat.base_layout()
-        cat.write_snapshot(
-            res.prefixes, res.entries, layout=lay.get("layout"),
-            path_buckets=lay.get("path_buckets", 64),
-        )
+        cat.write_snapshot(res.prefixes, res.entries)
         t_full = time.perf_counter() - t0
         res.release()
         return {
@@ -592,9 +585,7 @@ def main():
         # was shared by q37/q44/q55/q58 and the staged events dir by
         # q30/q49/q50/q59 — the first consumer paid, later ones reused,
         # making those per-query seconds order-dependent).  clearCache()
-        # cannot see these dicts.  The disk-backed incremental fixture
-        # (_INC_SHARED) stays: its staging is setup recorded on disk
-        # across runs by design, not per-query work.
+        # cannot see these dicts.
         from dudb_spark.pipeline import dedup as _dedup_mod
 
         _dedup_mod._PIN_CACHE.clear()
@@ -671,7 +662,7 @@ def main():
     # third anchor for JOB-SUBMISSION latency: the q91 closure (round
     # 10) found a 2x drift confined to many-small-jobs queries while
     # both anchors above moved <35%.  Streaming/choreography queries
-    # (q85/q91/q100/q118/q120) should be read against this one.
+    # (q85/q91/q100/q120) should be read against this one.
     result["calib_jobs_sec"] = _calib_jobs(spark)
     result.update(mid_calib)
     if load1_start is not None:
@@ -717,28 +708,7 @@ def main():
     except Exception:
         pass
 
-    # production incremental-stats measurement: 10x-replicated tree (6M
-    # entries at sf0.1) with ~1% churn, snapshots stored as parquet, full
-    # refold vs incremental timed from those scans.  fold_fraction is the
-    # scale-invariant claim (incremental work ~ churn, refold ~ tree);
-    # the wall-clock ratio under-represents the contrast locally because
-    # the closure's fixed job barriers dominate at local fixture sizes.
-    # It runs in a SEPARATE subprocess (fresh JVM) so its 6M-entry
-    # staging can't leave GC/heap pressure behind suite timings and its
-    # own numbers aren't taxed by the 124-query session's accumulated
-    # state (round-5 advice).
     spark.stop()
-    inc = subprocess.run(
-        [sys.executable, "-c", _INC_BENCH_CHILD, sf_dir],
-        capture_output=True, text=True,
-        cwd=os.path.dirname(os.path.abspath(__file__)),
-    )
-    try:
-        inc_m = json.loads(inc.stdout.strip().splitlines()[-1])
-        result.update(inc_m)
-    except (json.JSONDecodeError, IndexError):
-        print(f"  WARN: incremental bench failed: {inc.stderr[-500:]}",
-              file=sys.stderr)
 
     result.update(decode_metrics)
 
@@ -772,8 +742,7 @@ def main():
     # here is lost, only de-duplicated out of the driver's 2000-char
     # tail window.
     _DROP_PRIORITY = (
-        "incremental_t_full_sec", "incremental_t_inc_sec",
-        "incremental_closure_jobs", "load1_start", "load1_end",
+        "load1_start", "load1_end",
         "suite_jvm_norm", "suite_py_norm",      # = sums / anchors
         "fswatch_idle_dirs_listed",             # contract constant (0)
         "watchdist_driver_syscalls_idle",       # contract constant (1)
@@ -781,13 +750,10 @@ def main():
         "fswatch_idle_batch_sec_sparse",        # ~= idle_batch_sec
         "fswatch_seeded_rows",                  # == churn_rows
         "fswatch_tree_entries",                 # fixture constant
-        "incremental_tree_entries",             # fixture constant
-        "incremental_high_churn_auto",          # constant policy string
         "fswatch_churn_rows",
         "decode_bmp_mb_per_sec", "decode_wav_mb_per_sec",
         "decode_png_smooth_mb_per_sec",
         "calib_scan_agg_mid_sec", "calib_pandas_mid_sec",
-        "incremental_speedup_high_churn",
         "fswatch_idle_batch_sec",
         "decode_png_native", "decode_jpeg_native",
         "fswatch_churn_files_statted",
@@ -808,7 +774,6 @@ def main():
         slim.pop("decode_mb_per_sec_r4", None)
         slim.pop("merge_unchanged_skip_ratio", None)
         slim.pop("decode_speedup_vs_r4", None)
-        slim.pop("incremental_fold_fraction_high", None)
         slim.pop("watch_delta_write_ratio", None)
         line = json.dumps(slim, separators=(",", ":"))
         if nd is None:
@@ -820,35 +785,6 @@ def main():
         if len(line) <= 1900:
             break
     print(line)
-
-
-_INC_BENCH_CHILD = """
-import json, sys
-import __spark_entry__ as entry_mod
-from dudb_spark.session import get_spark
-spark = get_spark("dudb_spark-incbench")
-r = entry_mod._incremental_bench(spark, sys.argv[1])
-lo, hi = r["low"], r["high"]
-print(json.dumps({
-    "incremental_tree_entries": r["entries"],
-    "incremental_entries_per_sec": round(r["entries"] / lo["t_inc"]),
-    # headline: realistic ~0.6%-of-dirs nightly churn, both sides
-    # measured warm (the bench warms both plan shapes untimed first)
-    "incremental_speedup_vs_refold": round(lo["t_full"] / lo["t_inc"], 2),
-    "incremental_t_full_sec": round(lo["t_full"], 2),
-    "incremental_t_inc_sec": round(lo["t_inc"], 2),
-    "incremental_closure_jobs": lo["closure_jobs"],
-    "incremental_fold_fraction": lo["fold_fraction"],
-    # stress profile: 3%-of-dirs churn (the q118-certified shape).
-    # FORCED incremental for the record; in production the CLI's
-    # cost-based gate (incremental.refold_recommended, 2% default)
-    # chooses the refold here, so the sub-1.0 ratio is the measured
-    # rationale for that gate, not a path a user hits
-    "incremental_speedup_high_churn": round(hi["t_full"] / hi["t_inc"], 2),
-    "incremental_fold_fraction_high": hi["fold_fraction"],
-    "incremental_high_churn_auto": "refold",
-}))
-"""
 
 
 if __name__ == "__main__":

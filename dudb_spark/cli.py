@@ -14,7 +14,6 @@ workflow maps 1:1:
 from __future__ import annotations
 
 import argparse
-import functools
 import json
 import os
 import sys
@@ -157,16 +156,8 @@ def _analyze_body(
     n_prefixes, n_files, n_errors = counts
 
     cat = SnapshotCatalog(spark, args.db)
-    # snapshots store plain by default: one unpartitioned file set per
-    # table, the cheapest write and read.  --layout bucketed is the
-    # opt-in for very large trees, where pruning the
-    # `stats --incremental` closure probes to the churn's buckets
-    # (operators/incremental.py) can pay for the 64-directory tables;
-    # tables() hides the layout column either way
-    lay = dict(layout=args.layout, path_buckets=args.path_buckets)
     if cat.latest_version() is None:
-        out = cat.write_snapshot(staged_p, staged_e, errors,
-                                 touched_dirs=n_prefixes, **lay)
+        out = cat.write_snapshot(staged_p, staged_e, errors)
         summary = {
             "operation": "analyze",
             "prefixes_started": n_prefixes,
@@ -181,14 +172,11 @@ def _analyze_body(
             root=args.prefix, force=getattr(args, "force", False),
             churn=churn,
         )
-        # the churn count `stats --incremental` plans from, with no job
-        touched = sum(res.summary[k] for k in (
-            "prefixes_added", "prefixes_changed", "prefixes_deleted"))
         # the classified merge unions the previous scan with fresh rows:
         # bound its files by the previous version's
         like = cat.latest_version() if churn is not None else None
         out = cat.write_snapshot(res.prefixes, res.entries, errors,
-                                 touched_dirs=touched, like=like, **lay)
+                                 like=like)
         summary = dict(res.counters(), errors=n_errors)
     stop = datetime.now(timezone.utc)
     summary["duration_ns"] = int((stop - start).total_seconds() * 1e9)
@@ -240,11 +228,7 @@ def cmd_find(args):
 
 def cmd_stats_compute(args):
     from dudb_spark.functions.calculators import calculator
-    from dudb_spark.operators.stats import (
-        StatsOptions,
-        StatsResult,
-        compute_stats,
-    )
+    from dudb_spark.operators.stats import StatsOptions, StatsResult
     from dudb_spark.sources.catalog import SnapshotCatalog
 
     spark = _spark()
@@ -258,10 +242,9 @@ def cmd_stats_compute(args):
     )
     incremental = getattr(args, "incremental", False)
     if incremental:
-        # incremental_stats reuses prev rows verbatim, so it is only
-        # valid against the snapshot the previous run folded and with
-        # identical fold options — anything else silently re-saves
-        # stale summaries.  Mismatch → full compute with a warning.
+        # --incremental continues the previous run: it refolds the
+        # latest snapshot with the same fold options, and says so when
+        # there is no run to continue or the options differ.
         try:
             prev_stats = StatsResult.load(spark, args.stats_dir)
         except FileNotFoundError:
@@ -289,172 +272,35 @@ def cmd_stats_compute(args):
                 file=sys.stderr,
             )
             incremental = False
-    plan = {"plan": "full", "gate": None}
-    if incremental:
-        prev_v = prev_stats.meta["snapshot_version"]
-        prev_t = cat.tables(prev_v)
-        # the churn since the previous run, summed from the counts each
-        # analyze recorded: no Spark job.  A version without one
-        # (database compact, watch deltas) falls back to counting the
-        # snapshot diff, which the closure then reuses.
-        touched = functools.cache(lambda: _diff_touched(prev_t, t))
-        n_touched = cat.touched_dirs_since(prev_v)
-        if n_touched is None:
-            n_touched = touched().count()
-        res, plan = _stats_fold_update(
-            cat, t, prev_t, prev_stats, opts,
-            getattr(args, "churn_threshold", 0.02), n_touched, touched,
-        )
-    else:
-        res = compute_stats(t.prefixes, t.entries, opts)
+    res = _fold_latest(cat, t, opts)
+    plan = "refold" if incremental else "full"
     out, tot = _save_stats(res, args.stats_dir, args.calculator, cat, plan)
     print(json.dumps({"stats": out, "totals": tot}))
 
 
-def _diff_touched(prev_t, t):
-    """Directories whose stats rows can differ between two snapshots,
-    from their diff: every changed prefix and the parent of every
-    changed file.  Churn-sized and pinned (localCheckpoint), so the
-    count and the closure's probes share one diff run."""
-    from pyspark.sql import functions as F
-
-    from dudb_spark.operators.ingest import snapshot_diff
-
-    d = snapshot_diff(prev_t.prefixes, prev_t.entries,
-                      t.prefixes, t.entries)
-    # a changed file touches its parent dir; a top-level '/f' has
-    # parent '/' (the bare regexp would yield '' and the root row
-    # would never be refolded)
-    parent = F.regexp_replace("path", "/[^/]+$", "")
-    return (
-        d.where("kind = 'prefix'").select("path")
-        .unionByName(
-            d.where("kind = 'file'").select(
-                F.when(F.length(parent) == 0, F.lit("/"))
-                .otherwise(parent)
-                .alias("path")
-            )
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-
-
-def _stats_fold_update(cat, t, prev_t, prev_stats, opts, churn_threshold,
-                       n_touched, touched, label="stats --incremental"):
-    """Fold-update shared by ``stats compute --incremental`` and the
-    ``watch --apply --stats-dir`` continuous loop.  The plan is chosen
-    from metadata alone, before any Spark job: the closure runs only
-    when its probes can prune (both snapshots bucketed with one
-    ``path_buckets``) and the churn is under the threshold
-    (incremental.refold_recommended owns the rule); otherwise one full
-    refold of ``t``.  ``t``/``prev_t`` are the current and previous
-    snapshots' tables (prev version from ``prev_stats.meta``);
-    ``n_touched`` is the touched-dir count the gate reads, and
-    ``touched()`` returns the churn-sized, pinned touched set — called
-    only when the closure runs.  Returns (result, plan), where plan is
-    the choice and the gate's inputs, for the stats ``meta.json``."""
-    from dudb_spark.operators.incremental import (
-        incremental_stats,
-        refold_recommended,
-    )
+def _fold_latest(cat, t, opts):
+    """One stats fold over ``t``, the latest snapshot's tables.  A delta
+    (watch) version reconstructs lazily: base scan plus one
+    apply_changes join stack per delta.  Handed to the fold as a plan,
+    that reconstruction would re-execute in every job of the fold and
+    deepen with the chain, so it is materialised once (localCheckpoint
+    also truncates the plan).  Full snapshots stay plain parquet scans."""
     from dudb_spark.operators.stats import compute_stats
 
-    prev_v = prev_stats.meta["snapshot_version"]
-
-    # DELTA-chain versions reconstruct lazily (DeltaTables: base scan +
-    # one apply_changes join stack per delta).  Handing that PLAN to the
-    # fold re-executes the whole reconstruction in EVERY downstream job
-    # — the closure alone runs ~12 sequential jobs, and the plan itself
-    # deepens with chain length, so per-batch cost grows superlinearly
-    # (measured on a 4-file tree: 35 s at chain 1 → ~330 s at chain 2 →
-    # worse at chain 3; the r11 watch-apply gate blow-up).  Materialize
-    # the reconstruction ONCE per fold — localCheckpoint truncates the
-    # growing plan too, which is where the time actually goes.  Full
-    # snapshots stay raw parquet scans (nothing to pin).
-    def _pin_delta(tbl, ver):
-        if ver and cat.is_delta(ver):
-            return (tbl.prefixes.localCheckpoint(),
-                    tbl.entries.localCheckpoint())
-        return tbl.prefixes, tbl.entries
-
-    cur_v = cat.latest_version()
-    # both snapshots stored bucketed with the same width → the
-    # closure's path probes partition-prune to the churn's buckets;
-    # otherwise each probe scans both whole snapshots
-    prev_lay = cat.layout(prev_v)
-    cur_lay = cat.layout(cur_v)
-    prunable = (
-        prev_lay.get("layout") == "bucketed"
-        and cur_lay.get("layout") == "bucketed"
-        and prev_lay["path_buckets"] == cur_lay["path_buckets"]
-    )
-    # tree size from snapshot metadata (catalog.prefix_rows): zero jobs,
-    # and — critically — no reconstruction of a delta-chain version,
-    # which a .count() on prev_t.prefixes would execute per watch batch.
-    # Fallback (pre-metadata snapshots only): parquet metadata count for
-    # full snapshots, the reconstruction count for legacy delta chains.
-    n_tree = cat.prefix_rows(prev_v)
-    if n_tree is None:
-        n_tree = prev_t.prefixes.count()
-    refold = refold_recommended(n_touched, n_tree, churn_threshold,
-                                prunable=prunable)
-    plan = {
-        "plan": "refold" if refold else "closure",
-        "gate": {
-            "prunable": prunable,
-            "touched_dirs": n_touched,
-            "tree_dirs": n_tree,
-            "churn_threshold": churn_threshold,
-        },
-    }
-    if refold:
-        why = (
-            f"churn {n_touched}/{n_tree} dirs >= threshold "
-            f"{churn_threshold:g}"
-            if prunable
-            else "snapshots not bucketed alike, closure cannot prune"
-        )
-        print(
-            f"{label}: {why} — full refold is the cheaper plan "
-            "(--churn-threshold 0 forces the incremental closure)",
-            file=sys.stderr,
-        )
-        return compute_stats(*_pin_delta(t, cur_v), opts), plan
-    # prunable → hand the raw (pb-carrying) scans to the closure
-    buckets = None
-    spill_rows = None
-    if prunable:
-        buckets = prev_lay["path_buckets"]
-        if "spill_rows" in prev_lay and "spill_rows" in cur_lay:
-            # recorded at write time: lets the closure skip its
-            # is-the-index-empty probe job
-            spill_rows = prev_lay["spill_rows"] + cur_lay["spill_rows"]
-    t_prefixes, t_entries = _pin_delta(t, cur_v)
-    prev_prefixes, prev_entries = _pin_delta(prev_t, prev_v)
-    return incremental_stats(
-        prev_stats,
-        prev_t.read_raw("prefixes") if buckets else prev_prefixes,
-        prev_t.read_raw("entries") if buckets else prev_entries,
-        t.read_raw("prefixes") if buckets else t_prefixes,
-        t.read_raw("entries") if buckets else t_entries,
-        touched(), opts,
-        pin_inputs=False,  # stored snapshot scans — nothing to pin
-        path_buckets=buckets,
-        prev_spill=cat.spill_index(prev_v) if buckets else None,
-        new_spill=cat.spill_index() if buckets else None,
-        spill_rows=spill_rows,
-    ), plan
+    p, e = t.prefixes, t.entries
+    if cat.is_delta(cat.latest_version()):
+        p, e = p.localCheckpoint(), e.localCheckpoint()
+    return compute_stats(p, e, opts)
 
 
 def _save_stats(res, stats_dir, calculator_name, cat, plan):
     """Land a stats run as the newest version under ``stats_dir``: the
     run's dir holds ``grains.parquet`` (all three grains, written once —
     ``StatsResult.save``) and ``meta.json``, and the ``latest`` pointer
-    moves only once both are complete.  ``plan`` (full / refold /
-    closure and the gate's inputs) is recorded in ``meta.json``.  The
-    totals are observed on the grains write, so they cost no job of
-    their own.  Returns (out_path, totals dict)."""
+    moves only once both are complete.  ``plan`` (``full``, or
+    ``refold`` when the run continues the previous one) is recorded in
+    ``meta.json``.  The totals are observed on the grains write, so
+    they cost no job of their own.  Returns (out_path, totals dict)."""
     from dudb_spark.sources.catalog import write_pointer
 
     when = datetime.now(timezone.utc).strftime("%Y-%m-%d-%H%M%S")
@@ -467,7 +313,7 @@ def _save_stats(res, stats_dir, calculator_name, cat, plan):
     tot = res.save(out)
     meta = dict(res.meta, date=when, prefix=res.meta.get("root"),
                 calculator=calculator_name,
-                snapshot_version=cat.latest_version(), **plan)
+                snapshot_version=cat.latest_version(), plan=plan)
     with open(os.path.join(out, "meta.json"), "w") as f:
         json.dump(meta, f)
     write_pointer(os.path.join(stats_dir, "latest"), when)
@@ -503,12 +349,8 @@ def cmd_stats_view(args):
     binary = args.units == "binary"
     for k in ("bytes", "storage_bytes", "prefix_bytes"):
         print(f"{k}: {format_bytes(tot[k], binary=binary)}")
-    scopes = (
-        [("user", args.user), ("group", args.group)]
-        if (args.user or args.group)
-        else [(None, None)]
-    )
-    for dim, _ in scopes:
+    scopes = [dim for dim in ("user", "group") if getattr(args, dim)]
+    for dim in scopes or [None]:
         for metric in ("bytes", "storage_bytes", "files"):
             print(f"## top {n} by {metric}" + (f" per {dim}" if dim else ""))
             if dim is None:
@@ -559,21 +401,16 @@ def cmd_logs(args):
         print(json.dumps(r.asDict(recursive=True), default=str))
 
 
-def _watch_stats_update(spark, cat, stats_dir, touched, applied_from,
-                        churn_threshold):
-    """Continuous stats maintenance for ``watch --apply --stats-dir``:
-    after a batch lands snapshot vN, fold-update the stored summaries
-    with the apply's churn-sized touched set (apply_changes.touched is
-    the same contract as MergeResult.touched) and land a new stats
-    version.  Fold options CONTINUE the previous stats run's (root /
-    expression / calculator come from its meta) — the loop maintains
-    whatever ``stats compute`` last certified.  If the previous stats
-    run does not track the snapshot this batch applied against (someone
-    ran analyze in between), the incremental contract is void and it
-    falls back to one full refold, after which the loop is back on the
-    incremental path."""
+def _watch_stats_update(spark, cat, stats_dir, applied_from):
+    """Stats maintenance for ``watch --apply --stats-dir``: after a batch
+    lands snapshot vN, refold it with the previous stats run's fold
+    options (root / expression / calculator from its meta — the loop
+    maintains whatever ``stats compute`` last certified) and land a new
+    stats version.  The run records ``plan: refold`` when the previous
+    run folded the snapshot this batch applied against, and
+    ``plan: full`` when it did not (someone ran analyze in between)."""
     from dudb_spark.functions.calculators import calculator
-    from dudb_spark.operators.stats import StatsOptions, compute_stats
+    from dudb_spark.operators.stats import StatsOptions
 
     prev_stats = _load_stats(spark, stats_dir)
     pm = prev_stats.meta
@@ -583,23 +420,9 @@ def _watch_stats_update(spark, cat, stats_dir, touched, applied_from,
         calculator=calculator(pm.get("calculator") or "identity"),
         count_hardlinks_as_files=pm.get("count_hardlinks_as_files", False),
     )
-    t = cat.tables()
-    if pm.get("snapshot_version") != applied_from:
-        print(
-            f"watch --stats-dir: previous stats run folded "
-            f"{pm.get('snapshot_version')!r}, batch applied against "
-            f"{applied_from!r} — full refold to resync",
-            file=sys.stderr,
-        )
-        res = compute_stats(t.prefixes, t.entries, opts)
-        plan = {"plan": "full", "gate": None}
-    else:
-        touched = touched.localCheckpoint()
-        res, plan = _stats_fold_update(
-            cat, t, cat.tables(applied_from), prev_stats, opts,
-            churn_threshold, touched.count(), lambda: touched,
-            label="watch --stats-dir",
-        )
+    res = _fold_latest(cat, cat.tables(), opts)
+    plan = ("refold" if pm.get("snapshot_version") == applied_from
+            else "full")
     out, tot = _save_stats(res, stats_dir, pm.get("calculator"), cat, plan)
     print(json.dumps({"stats": out, "totals": tot}), flush=True)
 
@@ -607,10 +430,10 @@ def _watch_stats_update(spark, cat, stats_dir, touched, applied_from,
 def _watch_land(spark, cat, args, diff, stats_dir) -> bool:
     """Apply one change-feed diff to the stored snapshot and land it:
     churn-sized delta commit by default, a FULL compaction write
-    (tree-sized, restores the base snapshot's layout) every --compact-every
-    batches bounding the reconstruction chain — the transaction-log/
-    compaction split of a Delta/Iceberg sink — plus the JSON summary
-    line and the optional incremental stats fold.  Shared by the
+    (tree-sized) every --compact-every batches bounding the
+    reconstruction chain — the transaction-log/compaction split of a
+    Delta/Iceberg sink — plus the JSON summary line and the optional
+    stats refold.  Shared by the
     stream's per-batch apply and --full-resync's pre-stream
     reconciliation.  Returns True when the diff had any effect."""
     from dudb_spark.operators.ingest import apply_changes
@@ -627,20 +450,12 @@ def _watch_land(spark, cat, args, diff, stats_dir) -> bool:
         out = cat.write_delta(diff, root=args.prefix)
         mode = "delta"
     else:
-        lay = cat.base_layout()
-        out = cat.write_snapshot(
-            res.prefixes, res.entries,
-            layout=lay.get("layout"),
-            path_buckets=lay.get("path_buckets", 64),
-        )
+        out = cat.write_snapshot(res.prefixes, res.entries)
         mode = "compacted"
     print(json.dumps({"snapshot": out, "write": mode, **res.summary}),
           flush=True)
     if stats_dir:
-        _watch_stats_update(
-            spark, cat, stats_dir, res.touched, applied_from,
-            getattr(args, "churn_threshold", 0.02),
-        )
+        _watch_stats_update(spark, cat, stats_dir, applied_from)
     # one apply per micro-batch forever: release the apply's cached
     # feed or executor storage grows per batch
     res.release()
@@ -671,12 +486,9 @@ def cmd_watch(args):
     steady-state write cost track the churn, never the tree.
 
     ``--stats-dir`` (with ``--apply``) additionally maintains the stored
-    stats summaries: after each applied batch the fold-update (the
-    incremental closure over the batch's touched slice on bucketed
-    snapshots under the churn threshold, else one refold) lands a new
-    stats version —
-    analyze → stats → watch keeps BOTH the snapshot and the summaries
-    continuously current."""
+    stats summaries: after each applied batch one refold of the new
+    snapshot lands a new stats version — analyze → stats → watch keeps
+    BOTH the snapshot and the summaries continuously current."""
     from dudb_spark.sources.fsds import register_watch
 
     spark = _spark()
@@ -2285,28 +2097,8 @@ def cmd_database_compact(args):
     from dudb_spark.sources.catalog import SnapshotCatalog
 
     cat = SnapshotCatalog(_spark(), args.db)
-    if args.layout == "bucketed":
-        # adopt the bucketed layout on an existing DB: rewrite the
-        # latest snapshot path-hash partitioned + hardlink spill index,
-        # which is what lets stats --incremental prune its closure.
-        # Scan-error rows ride over like the range-layout compact does
-        # (catalog.compact) — dropping them would make the `errors`
-        # command crash on the adopted version.
-        import os as _os
-
-        t = cat.tables()
-        errs = (
-            t.errors
-            if _os.path.isdir(f"{cat.latest_path()}/errors.parquet")
-            else None
-        )
-        out = cat.write_snapshot(
-            t.prefixes, t.entries, errors=errs,
-            layout="bucketed", path_buckets=args.path_buckets,
-        )
-    else:
-        out = cat.compact(n_files=args.files)
-    print(json.dumps({"compacted": out, "layout": args.layout}))
+    out = cat.compact(n_files=args.files)
+    print(json.dumps({"compacted": out}))
 
 
 def cmd_database_diff(args):
@@ -2356,17 +2148,6 @@ def build_parser():
         "reference analyze's full-rescan override)",
     )
     p.add_argument(
-        "--layout", choices=["bucketed", "plain"], default="plain",
-        help="snapshot storage layout (plain = unpartitioned, the "
-        "default; bucketed = path-hash partitioned, prunes "
-        "incremental-stats closure probes: the opt-in for very large "
-        "trees)",
-    )
-    p.add_argument(
-        "--path-buckets", type=int, default=64,
-        help="bucket count for --layout bucketed",
-    )
-    p.add_argument(
         "--distributed", action="store_true",
         help="walk the tree on EXECUTORS (crawl_distributed): scan rows "
         "land in staging parquet from the executors and never "
@@ -2398,16 +2179,9 @@ def build_parser():
     pc.add_argument("--count-hardlinks-as-files", action="store_true")
     pc.add_argument(
         "--incremental", action="store_true",
-        help="re-fold only what changed since the previous stats run "
-             "(same root/expr/calculator required)",
-    )
-    pc.add_argument(
-        "--churn-threshold", type=float, default=0.02,
-        help="with --incremental: the closure runs only on snapshots "
-             "bucketed with one --path-buckets (its probes prune), and "
-             "falls back to a full refold once touched dirs / tree dirs "
-             "reaches this fraction; other layouts always refold; 0 "
-             "forces the incremental closure",
+        help="continue the previous stats run: refold the latest "
+             "snapshot with its root/expr/calculator (a mismatch or no "
+             "previous run falls back to a full compute, with a warning)",
     )
     pc.set_defaults(func=cmd_stats_compute)
     pv = ssub.add_parser("view")
@@ -2459,16 +2233,9 @@ def build_parser():
     )
     p.add_argument(
         "--stats-dir",
-        help="with --apply: maintain the stored stats summaries after "
-        "each applied batch, by the incremental closure or a refold "
-        "(see --churn-threshold; continues the last `stats compute` "
-        "run's fold options; requires one)",
-    )
-    p.add_argument(
-        "--churn-threshold", type=float, default=0.02,
-        help="churn fraction at which the stats update falls back to a "
-        "full refold on snapshots bucketed alike; other layouts always "
-        "refold (0 forces the incremental closure)",
+        help="with --apply: refold the stored stats summaries after "
+        "each applied batch (continues the last `stats compute` run's "
+        "fold options; requires one)",
     )
     p.add_argument(
         "--compact-every", type=int, default=8,
@@ -2538,12 +2305,6 @@ def build_parser():
     dc = dsub.add_parser("compact", help="re-cluster the latest snapshot by path")
     dc.add_argument("--db", required=True)
     dc.add_argument("--files", type=int, default=None)
-    dc.add_argument(
-        "--layout", choices=["range", "bucketed"], default="range",
-        help="range = path-clustered files (subtree scans); bucketed = "
-        "path-hash partitions + spill index (incremental closure pruning)",
-    )
-    dc.add_argument("--path-buckets", type=int, default=64)
     dc.set_defaults(func=cmd_database_compact)
     dp = dsub.add_parser("prune", help="drop old snapshot versions")
     dp.add_argument("--db", required=True)

@@ -16,9 +16,9 @@ Spark-native model normalises that into flat columnar tables (SURVEY.md §1.5):
 - ``users``/``groups`` — tiny id→name dims, broadcast at report time
   (internal/usernames/usergroups.go:26–60)
 
-All tables are plain Parquet directories.  At cluster scale ``prefixes`` and
-``entries`` would be written bucketed/sorted by ``path`` so subtree queries
-prune row groups via min/max stats; locally we rely on predicate pushdown.
+All tables are plain Parquet directories.  Subtree queries prune row groups
+via min/max stats on ``path``/``parent`` once ``database compact`` has
+range-sorted a snapshot; otherwise we rely on predicate pushdown.
 """
 
 from __future__ import annotations
@@ -142,21 +142,15 @@ class FsTables:
     }
 
     def read(self, table: str):
-        """Logical table view: physical layout columns (the ``pb`` path
-        bucket a bucketed snapshot is partitioned by) are dropped so
-        consumers see the same schema regardless of storage layout."""
-        df = self.read_raw(table)
-        return df.drop("pb") if "pb" in df.columns else df
-
-    def read_raw(self, table: str):
-        """Physical view: keeps layout columns (``pb``) so layout-aware
-        readers — the incremental-stats closure probes — can prune
-        partitions.  A pinned schema still exposes ``pb``: Spark infers
-        partition columns from the directory names, not the footers."""
+        """Logical table view.  Snapshots once stored in a path-bucketed
+        layout carry a ``pb`` partition column (Spark infers it from the
+        ``pb=`` directory names even under a pinned schema); it is
+        dropped so those old versions read like any other."""
         reader = self.spark.read
         if table in self.SCHEMAS:
             reader = reader.schema(self.SCHEMAS[table])
-        return reader.parquet(self.path(table))
+        df = reader.parquet(self.path(table))
+        return df.drop("pb") if "pb" in df.columns else df
 
     @property
     def prefixes(self):

@@ -31,9 +31,7 @@ rows outside the scanned subtree.  On a real deployment this is a Delta/
 Iceberg ``MERGE INTO`` with partition-level rewrite limited to the scanned
 subtree; with plain Parquet we write a fresh versioned snapshot directory
 (timestamped dirs + a ``latest`` pointer, mirroring the reference's report
-layout, reports.go:128–176).  The join keys on ``path`` — with both sides
-bucketed by path at scale this is a co-partitioned merge with no wide
-shuffle.
+layout, reports.go:128–176).
 """
 
 from __future__ import annotations
@@ -51,11 +49,6 @@ class MergeResult:
     prefixes: DataFrame
     entries: DataFrame
     summary: dict  # anaylzeSummary-compatible counters
-    # paths classified added/changed/deleted by this merge (one 'path'
-    # column) — the seed set for incremental stats maintenance
-    # (operators/incremental.py); unchanged and out-of-root paths are
-    # absent by construction.
-    touched: DataFrame = None
     # frames this merge cached; the result's DataFrames read them
     # lazily, so a repeated caller (the watch --apply loop: one
     # apply_changes per micro-batch, forever) must release() AFTER
@@ -147,8 +140,6 @@ def merge_scan(
         # scan of the previous snapshot: a broadcast anti-join would add
         # a job per table, and Column.isin a py4j call per path
         dead = sorted(churn.added | churn.changed | churn.deleted)
-        touched = prev_prefixes.sparkSession.createDataFrame(
-            [(p,) for p in dead], "path string")
         in_list = ", ".join(_sql_string(p) for p in dead)
 
         def keep(prev, col):
@@ -169,7 +160,7 @@ def merge_scan(
             summary = _analyze_summary(  # files: counted by the write
                 len(churn.added), len(churn.changed), len(churn.unchanged),
                 len(churn.deleted), None)
-        return MergeResult(new_prefixes, new_entries, summary, touched,
+        return MergeResult(new_prefixes, new_entries, summary,
                            observed=observed)
 
     in_root_prev = prev_prefixes.where(subtree_pred(F.col("path"), root))
@@ -239,9 +230,7 @@ def merge_scan(
                                    n_deleted, n_files)
     else:
         summary = None
-    touched = j.where(~F.col("unchanged")).select("path")
-    return MergeResult(new_prefixes, new_entries, summary, touched,
-                       cached=(j,))
+    return MergeResult(new_prefixes, new_entries, summary, cached=(j,))
 
 
 def snapshot_diff(
@@ -258,12 +247,9 @@ def snapshot_diff(
     "Changed" compares size, mtime, mode, uid, and gid: stats results
     depend on ownership and mode (per-user/group attribution, boolexpr
     predicates), so a chmod/chown — which bumps ctime, not mtime — must
-    surface here or the CLI's incremental touched derivation would miss
-    it and diverge from a full refold.
+    surface here.
 
-    Shape: a full-outer join per table keyed on path — with snapshots
-    bucketed by path this is a co-partitioned merge, and the output is
-    bounded by the change volume, not the tree size.  Unchanged rows are
+    Shape: a full-outer join per table keyed on path; unchanged rows are
     dropped before any downstream consumer sees them.
     """
 
@@ -332,8 +318,7 @@ def apply_changes(
     listing changed arrives as its own ``changed`` dir row — so entries
     and prefixes both update by (anti-join on changed∪deleted paths) ∪
     (added∪changed rows).  ``n_entries`` is recounted only for the
-    affected parents (churn-sized ``isin`` filter → with the bucketed
-    layout the probe prunes to the churn's buckets).  The ROOT prefix
+    affected parents (a churn-sized semi-join).  The ROOT prefix
     has no watch row (the walk never emits the root itself); its
     ``n_entries`` is recounted when root-level entries churn, its stat
     fields refresh on the next ``analyze``.
@@ -344,8 +329,7 @@ def apply_changes(
     ingest path drops it to the error bucket — but never to the insert
     side, so no null-stat row lands in the tables.
     """
-    entry_cols = [f.name for f in prev_entries.schema.fields
-                  if f.name != "pb"]
+    entry_cols = prev_entries.columns
     ch = changes
     if cache:
         ch = ch.cache()
@@ -400,8 +384,7 @@ def apply_changes(
         )
         .drop("_n_new")
     )
-    pfx_cols = [f.name for f in prev_prefixes.schema.fields
-                if f.name != "pb"]
+    pfx_cols = prev_prefixes.columns
     # anti-join on ALL dead paths, not only dir-typed feed rows: a
     # dir→file type flip arrives as ONE 'changed' row with is_dir=false
     # (plus deletion rows for the old subtree), and the stale prefix row
@@ -444,12 +427,7 @@ def apply_changes(
             "rows_deleted": c["n_del"],
             "rows_error": c["n_err"],
         }
-    # seed set for incremental stats: every affected prefix (feed dir
-    # rows + parents of churned entries)
-    touched = aff.union(
-        ch.where("is_dir").select("path")
-    ).distinct()
-    return MergeResult(new_prefixes, new_entries, summary, touched,
+    return MergeResult(new_prefixes, new_entries, summary,
                        cached=(ch,) if cache else ())
 
 
@@ -468,7 +446,7 @@ def resync_feed(prev_entries: DataFrame, resync: DataFrame) -> DataFrame:
     Error rows in the resync keep their ``error`` (they classify as
     changed via their null stats and retire their snapshot row)."""
     sig = ("is_dir", "size", "mode", "mtime", "uid", "gid")
-    cols = [f.name for f in prev_entries.schema.fields if f.name != "pb"]
+    cols = prev_entries.columns
     n = resync.alias("n")
     p = prev_entries.alias("p")
     j = n.join(p, F.col("n.path") == F.col("p.path"), "full_outer")

@@ -253,14 +253,6 @@ COLLECT_ALLOW: dict[str, str] = {
         "one scalar summary row (count/flagged agg)",
     "cli.py::cmd_pipeline_select":
         "one scalar summary row (kept docs/tokens agg)",
-    "operators/incremental.py::incremental_stats":
-        "key-frame rows are churn-sized by the incremental contract",
-    "operators/incremental.py::incremental_stats._buckets":
-        "distinct path-bucket ids of the CHURNED paths: <= path_buckets "
-        "ints, bounded by the layout constant",
-    "operators/incremental.py::incremental_stats._spill_buckets":
-        "distinct spill-bucket ids semi-joined to the churn keys: "
-        "<= path_buckets ints",
     "pipeline/sampling.py::weighted_exact_sample":
         "two bounded scalar jobs: a 1-row guard agg over the ≤|strata| "
         "counts fold (must run BEFORE the quota arithmetic — ANSI "
@@ -320,18 +312,12 @@ PIN_ALLOW: dict[str, str] = {
     "cli.py::cmd_watch":
         "per-batch diff frames — churn-bounded (rows that changed since "
         "the last poll)",
-    "cli.py::_stats_fold_update._pin_delta":
-        "delta-chain reconstruction, bounded by compact-every; pinned "
-        "once per fold so ~12 closure jobs don't each re-execute the "
-        "deepening chain (the r11 superlinear fix)",
-    "cli.py::_watch_stats_update":
-        "touched-path set of one watch batch — churn-bounded",
-    "cli.py::_diff_touched":
-        "touched-dir set of two snapshots' diff — churn-bounded",
-    "operators/incremental.py::incremental_stats":
-        "pin_inputs=True only: the caller declares the merged snapshot "
-        "an unwritten merge DAG worth one materialization; the closure "
-        "sets pinned later in the function are churn-bounded",
+    "cli.py::_fold_latest":
+        "TREE-SIZED: a delta-chain version's reconstructed tables, pinned "
+        "once per fold so the fold's jobs don't each re-execute the "
+        "chain (bounded in depth by compact-every, not in rows); spills "
+        "to local disk, and a cluster deployment should compact the "
+        "chain (a written artifact) before folding",
     "operators/quantiles.py::weighted_quantiles":
         "CORPUS-SIZED: the sorted cumulative-weight frame is one row "
         "per input value by construction — any exact weighted quantile "

@@ -92,146 +92,41 @@ class SnapshotCatalog:
 
     # -- writes ---------------------------------------------------------
 
-    def write_snapshot(
-        self, prefixes, entries, errors=None,
-        layout: str | None = None, path_buckets: int = 64,
-        touched_dirs: int | None = None, like: str | None = None,
-    ) -> str:
+    def write_snapshot(self, prefixes, entries, errors=None,
+                       like: str | None = None) -> str:
         """Write the next snapshot version.
 
-        ``touched_dirs`` is the writer's count of directories added,
-        changed or deleted since the previous version; it lands in
-        ``_layout.json`` for :meth:`touched_dirs_since`.
-
-        ``like`` names a version whose plain tables bound the file count:
-        each table is coalesced to at most that version's file count for
-        it, so a merge that unions the previous scan with fresh local
-        rows does not add a file per core every night.
-
-        ``layout="bucketed"`` stores both tables hash-partitioned by the
-        row's PROBE PATH (``path`` for prefixes, ``parent`` for entries):
-        ``pb = pmod(xxhash64(probe_path), path_buckets)``, one file per
-        bucket.  This is the storage layout the incremental-stats closure
-        needs (operators/incremental.py): churn is directory-localized,
-        so the path-side closure probes prune to the churn's buckets
-        instead of scanning the tree.  Layout parameters land in
-        ``_layout.json`` so readers (CLI ``stats --incremental``) can
-        discover them.  Purely a writer-side choice — ``tables()`` hides
-        the ``pb`` column, so every non-layout-aware consumer sees the
-        identical logical schema."""
-        import json as _json
-
-        from pyspark.sql import functions as F
-
+        ``like`` names a version whose tables bound the file count: each
+        table is coalesced to at most that version's file count for it,
+        so a merge that unions the previous scan with fresh local rows
+        does not add a file per core every night."""
         v = self.next_version()
         out = os.path.join(self.root, v)
 
-        def _bounded(df, dest):
-            if like is None:
-                return df
-            n = self._file_count(like, os.path.basename(dest))
-            return df.coalesce(max(1, n))
+        def _write(df, table):
+            if like is not None:
+                df = df.coalesce(max(1, self._file_count(like, table)))
+            df.write.mode("overwrite").parquet(f"{out}/{table}")
 
-        def _write(df, probe_col, dest):
-            if layout == "bucketed":
-                (
-                    df.withColumn(
-                        "pb",
-                        F.pmod(
-                            F.xxhash64(F.col(probe_col)),
-                            F.lit(path_buckets),
-                        ).cast("int"),
-                    )
-                    .repartition(path_buckets, "pb")
-                    .write.mode("overwrite")
-                    .partitionBy("pb")
-                    .parquet(dest)
-                )
-            else:
-                _bounded(df, dest).write.mode("overwrite").parquet(dest)
-
-        _write(prefixes, "path", f"{out}/prefixes.parquet")
-        _write(entries, "parent", f"{out}/entries.parquet")
+        _write(prefixes, "prefixes.parquet")
+        _write(entries, "entries.parquet")
         if errors is not None:
-            dest = f"{out}/errors.parquet"
-            _bounded(errors, dest).write.mode("overwrite").parquet(dest)
-        if layout == "bucketed":
-            # hardlink SPILL INDEX: (device, inode, pb) of every key
-            # whose member rows SPAN ≥2 distinct buckets, plus every
-            # rec-multi key (≥2 prefix-record rows) regardless of
-            # spread.  Hardlink groups are the one cross-directory
-            # dependency of the stats fold; this index is what lets the
-            # incremental closure find a churned group's members in
-            # OTHER buckets without scanning the tree.  A key confined
-            # to ONE bucket can never need cross-bucket closure: a seed
-            # row carrying it already sits in that bucket, so the
-            # pruned scan covers the whole group (round-7 verdict item
-            # 6 — dropping single-bucket keys cut hlinks.parquet by the
-            # same-directory hardlink class, whose entry rows all hash
-            # to the parent's bucket).  Rec-multi keys are retained
-            # even when single-bucket because the flip-round GATE reads
-            # them from the index (a hardlinked-dir pair co-located in
-            # one bucket must still trigger the flip cascade).  Size is
-            # O(directories + cross-bucket hardlinks): every non-root
-            # directory still contributes two rows in almost always two
-            # DISTINCT buckets (its own record, bucketed by path; its
-            # entry row, bucketed by the parent path).  The one full
-            # shuffle to build the index runs at WRITE time, where a
-            # full pass is already being paid.
-            # ``rec`` marks keys with ≥2 PREFIX-RECORD rows (hardlinked
-            # directories): the only keys whose record-level dup flag
-            # can flip, so the incremental closure's flip round gates on
-            # (and prunes to) this tiny subset — a plain directory's two
-            # rows (own record + entry in parent) make it a spill key
-            # but NOT a rec key.
-            p = self.spark.read.parquet(f"{out}/prefixes.parquet")
-            e = self.spark.read.parquet(f"{out}/entries.parquet")
-            rows = p.select(
-                "device", "inode", "pb", F.lit(True).alias("_isrec")
-            ).unionByName(
-                e.select(
-                    "device", "inode", "pb", F.lit(False).alias("_isrec")
-                )
-            )
-            keyinfo = (
-                rows.groupBy("device", "inode")
-                .agg(
-                    F.count_distinct(F.col("pb")).alias("_npb"),
-                    F.sum(F.col("_isrec").cast("int")).alias("_rc"),
-                )
-                .where("_npb > 1 OR _rc >= 2")
-                .select("device", "inode", (F.col("_rc") >= 2).alias("rec"))
-            )
-            (
-                rows.select("device", "inode", "pb")
-                .join(keyinfo, ["device", "inode"])
-                .distinct()
-                .write.mode("overwrite")
-                .parquet(f"{out}/hlinks.parquet")
-            )
-            # row count recorded so readers can skip the is-it-empty
-            # probe job (incremental_stats(spill_rows=...))
-            n_spill = self.spark.read.parquet(
-                f"{out}/hlinks.parquet"
-            ).count()
-            meta = {
-                "layout": "bucketed",
-                "path_buckets": path_buckets,
-                "spill_rows": n_spill,
-            }
-        else:
-            meta = {"layout": "plain"}
-        # every layout records the tree size and the churn count: the
-        # stats plan reads them without a Spark job, and for a delta
-        # CHAIN a count would otherwise execute the full reconstruction
-        # join per watch batch
-        meta["prefix_rows"] = self._count_written_prefixes(out)
-        if touched_dirs is not None:
-            meta["touched_dirs"] = touched_dirs
-        with open(os.path.join(out, "_layout.json"), "w") as f:
-            _json.dump(meta, f)
+            _write(errors, "errors.parquet")
+        self._write_layout(out)
         write_pointer(os.path.join(self.root, "latest"), v)
         return out
+
+    def _write_layout(self, out: str) -> None:
+        """Land ``_layout.json`` for a just-written full snapshot.  It
+        records the tree size (prefix rows), which ``watch_seed`` and
+        ``write_delta`` read without a Spark job; for a delta CHAIN a
+        count would otherwise execute the full reconstruction join."""
+        import json as _json
+
+        meta = {"layout": "plain",
+                "prefix_rows": self._count_written_prefixes(out)}
+        with open(os.path.join(out, "_layout.json"), "w") as f:
+            _json.dump(meta, f)
 
     def _file_count(self, version: str, table: str) -> int:
         """Parquet files of one table of a version (0 when it has none)."""
@@ -300,25 +195,6 @@ class SnapshotCatalog:
         lay = self.layout(v)
         n = lay.get("prefix_rows")
         return int(n) if n is not None else None
-
-    def touched_dirs_since(self, version: str) -> int | None:
-        """Directories touched between ``version`` and the latest one:
-        the sum of the ``touched_dirs`` each later snapshot recorded at
-        write time, read from metadata with no Spark job.  None when a
-        version in the range records no count (``database compact``,
-        ``watch`` deltas, snapshots older than this metadata) or
-        ``version`` is no longer in the catalog."""
-        vs = self.versions()
-        latest = self.latest_version()
-        if version not in vs or latest not in vs:
-            return None
-        total = 0
-        for v in vs[vs.index(version) + 1:vs.index(latest) + 1]:
-            n = self.layout(v).get("touched_dirs")
-            if n is None:
-                return None
-            total += int(n)
-        return total
 
     def watch_seed(self, prefix: str) -> str:
         """Materialize — or REUSE — the fswatch seed artifact for the
@@ -422,17 +298,17 @@ class SnapshotCatalog:
             os.path.join(out, "delta.parquet")
         )
         # running tree size (base ± dir churn, one churn-sized agg job):
-        # the stats refold gate reads this instead of counting the
-        # reconstructed prefixes frame (which would execute the full
-        # delta-replay join chain per watch batch).  An ESTIMATE, biased
+        # the watch-seed export sizes its files from this instead of
+        # counting the reconstructed prefixes frame (which would execute
+        # the full delta-replay join chain).  An ESTIMATE, biased
         # by exactly two rare row classes (round-9 ADVICE): (1) a
         # dir↔file TYPE FLIP arrives as op='changed' — the feed reader
         # merges the added+deleted pair and only the NEW is_dir
         # survives, so the old type is unrecoverable here and each flip
         # drifts the count by ±1 until compaction; (2) readable↔
         # unreadable transitions (error rows).  Both are bounded by
-        # their occurrence count per chain, the gate consuming this is
-        # itself a heuristic (churn ratio), and each periodic compaction
+        # their occurrence count per chain, the file sizing consuming
+        # this is itself a heuristic, and each periodic compaction
         # rewrites the exact number — accepted and documented rather
         # than widening the feed schema with an old-type column.
         prefix_rows = None
@@ -474,29 +350,9 @@ class SnapshotCatalog:
             n += 1
         return n
 
-    def base_layout(self, version: str | None = None) -> dict:
-        """Layout metadata of the nearest FULL snapshot at or below
-        ``version`` — what a compaction write should preserve."""
-        v = version or self.latest_version()
-        while v is not None and self.is_delta(v):
-            v = self.delta_meta(v)["parent"]
-        return self.layout(v) if v else {}
-
-    def spill_index(self, version: str | None = None):
-        """The bucketed layout's hardlink spill index (device, inode, pb)
-        — keys with ≥2 member rows in the snapshot.  None for plain
-        layouts."""
-        p = (
-            os.path.join(self.root, version)
-            if version
-            else self.latest_path()
-        )
-        if p is None or not os.path.isdir(os.path.join(p, "hlinks.parquet")):
-            return None
-        return self.spark.read.parquet(os.path.join(p, "hlinks.parquet"))
-
     def layout(self, version: str | None = None) -> dict:
-        """Layout metadata of a snapshot version ({} for plain layouts)."""
+        """``_layout.json`` of a snapshot version ({} when it has none:
+        delta versions and snapshots older than the file)."""
         import json as _json
 
         p = (
@@ -522,7 +378,9 @@ class SnapshotCatalog:
         is the `OPTIMIZE ... ZORDER`-analog that restores it (the reference
         gets the same property for free from Badger's sorted LSM keys,
         badgerdb.go:307–317).  Readers are unaffected: the pointer flips
-        only after a complete write."""
+        only after a complete write.  The rewrite is always plain, so it
+        also retires a snapshot stored in the old path-bucketed layout
+        (``pb=`` partition directories, which readers drop)."""
         t = self.tables()
         shuffle = int(
             self.spark.conf.get("spark.sql.shuffle.partitions", "32")
@@ -544,6 +402,7 @@ class SnapshotCatalog:
         )
         if os.path.isdir(f"{self.latest_path()}/errors.parquet"):
             t.errors.write.mode("overwrite").parquet(f"{out}/errors.parquet")
+        self._write_layout(out)
         write_pointer(os.path.join(self.root, "latest"), v)
         return out
 

@@ -15,7 +15,7 @@ def spark():
     # Tests assert SEMANTICS and PLAN SHAPE (operator choice), neither of
     # which depends on whole-stage codegen; with it on, every distinct tiny
     # plan pays multi-second Janino compilation (the stats/incremental DAGs
-    # generate huge classes — measured 52s -> 8s for one incremental_stats
+    # generate huge classes — measured 52s -> 8s for one stats-maintenance
     # call, ~4x on the whole suite).  Interpreted mode is Spark's own
     # semantics-identical fallback.  Bench and the correctness gate run
     # separate sessions with codegen ON (the performance path).

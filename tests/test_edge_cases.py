@@ -13,9 +13,28 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_stats_empty_match_is_all_zero(spark):
-    from tests.test_incremental import _ent, _pfx
+def _pfx(spark, rows):
+    """Prefix rows from (path, size, inode)."""
+    return spark.createDataFrame(
+        [(p, p.rsplit("/", 1)[0] or "/", sz, sz // 512, 0o755, None,
+          100, 10, 1, ino) for p, sz, ino in rows],
+        "path string, parent string, size long, blocks long, mode long, "
+        "mtime timestamp, uid long, gid long, device long, inode long",
+    )
 
+
+def _ent(spark, rows):
+    """Entry rows from (path, is_dir, size, inode)."""
+    return spark.createDataFrame(
+        [(p.rsplit("/", 1)[0], p.rsplit("/", 1)[1], p, d, sz, sz // 512,
+          0o644, 100, 10, 1, ino) for p, d, sz, ino in rows],
+        "parent string, name string, path string, is_dir boolean, "
+        "size long, blocks long, mode long, uid long, gid long, "
+        "device long, inode long",
+    )
+
+
+def test_stats_empty_match_is_all_zero(spark):
     prev_p = _pfx(spark, [("/t", 10, 1)])
     prev_e = _ent(spark, [("/t/f", False, 5, 2)])
     res = compute_stats(prev_p, prev_e, StatsOptions(root="/nomatch"))

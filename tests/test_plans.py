@@ -306,32 +306,6 @@ def test_bm25_retrieval_broadcasts_query_side(spark):
     assert "CartesianProduct" not in plan, plan[:800]
 
 
-def test_bucketed_snapshot_probe_prunes_partitions(spark, tmp_path):
-    """The incremental-stats closure's bucket pruning rests on one plan
-    property: an IN-filter on the bucketed layout's ``pb`` partition
-    column must become a scan PartitionFilter (directories skipped at
-    planning time), never a post-scan Filter over all buckets."""
-    import __spark_entry__ as em
-    from dudb_spark.sources.catalog import SnapshotCatalog
-
-    prev_p, prev_e, _, _ = em._merge_fixture(spark)
-    cat = SnapshotCatalog(spark, str(tmp_path / "db"))
-    cat.write_snapshot(prev_p, prev_e, layout="bucketed", path_buckets=8)
-    raw = cat.tables().read_raw("entries")
-
-    # the closure's probe shape: prune by bucket list, project narrow
-    probe = raw.where(F.col("pb").isin([1, 3])).select(
-        "parent", "device", "inode"
-    )
-    plan = plan_of(probe)
-    assert "PartitionFilters" in plan, plan[:1200]
-    pf = plan.split("PartitionFilters: ")[1].splitlines()[0]
-    assert "pb" in pf and "IN" in pf.upper(), pf
-    # and the narrow projection reaches the reader
-    rs = plan.split("ReadSchema: ")[1].splitlines()[0]
-    assert "size" not in rs and "mtime" not in rs, rs
-
-
 def test_q116_has_no_unpartitioned_window(spark):
     """Round-6 scale-killer pin: q116's corpus-wide decile thresholds
     previously passed a literal group key that Catalyst constant-folded

@@ -138,8 +138,7 @@ def test_multi_batch_same_instance(spark, tree, tmp_path, capsys):
     from dudb_spark.cli import _watch_land
 
     cat = SnapshotCatalog(spark, db)
-    args = SimpleNamespace(prefix=tree, compact_every=8,
-                           churn_threshold=0.02)
+    args = SimpleNamespace(prefix=tree, compact_every=8)
     w = DistributedWatcher(spark, cat, tree, str(tmp_path / "state"))
     assert w.batch(0) == []
 
@@ -211,7 +210,6 @@ def test_distributed_watch_maintains_stats(spark, tree, tmp_path,
     _mutate(tree)
     out = run(capsys, "watch", "--once", "--db", db, "--apply",
               "--lstat-mode", "distributed", "--stats-dir", sd,
-              "--churn-threshold", "0",
               "--state-dir", str(tmp_path / "state"), tree)
     stats_lines = [json.loads(ln) for ln in out.strip().splitlines()
                    if ln.startswith("{") and '"stats"' in ln]

@@ -122,11 +122,6 @@ SHOWCASE = {
     "persisted cast vector; query scoring is m element_at lookups into "
     "literal tables + TakeOrderedAndProject — no float vector touched "
     "at query time",
-    "q118_incremental_at_scale": "production incremental stats: closure "
-    "probes are narrow semi-joins with BROADCAST churn-bounded build "
-    "sides, the fold touches only the affected slice (pinned), and the "
-    "stitch anti/semi-joins ride the broadcast affected set — nothing "
-    "shuffles proportional to tree size",
     "q119_ivf_pq_residual": "residual IVF,PQ: candidates pruned to the "
     "probed cells, scoring is per-cell CASE constants + m element_at "
     "lookups into literal residual-codebook tables + "
