@@ -3322,33 +3322,6 @@ def q140_resync_reconcile(spark, sf_dir):
     ).orderBy("path", "op")
 
 
-def q138_delta_chain_read(spark, sf_dir):
-    """Delta-chain storage route for continuous ingest: q135's exact
-    change feed lands as a churn-sized DELTA version (catalog.write_delta
-    — the transaction-log commit the watch loop uses between
-    compactions) on a stored full snapshot of the fs fixture, and the
-    result is read back through DeltaTables' lazy reconstruction
-    (base ⊳ replayed delta).  Same projection as q135, so its oracle
-    certifies the storage round-trip verbatim (the q127-reuses-q70
-    pattern)."""
-    import tempfile
-
-    from dudb_spark.sources.catalog import SnapshotCatalog
-
-    prev_p, prev_e, feed = _watch_feed(spark)
-    db = tempfile.mkdtemp(prefix="dudb_q138_")
-    cat = SnapshotCatalog(spark, db)
-    cat.write_snapshot(prev_p, prev_e)
-    cat.write_delta(feed, root="/tree")
-    t = cat.tables()
-    return t.prefixes.select(
-        "path",
-        _fmt_ts(F.col("mtime"), "mtime"),
-        F.col("size").cast("long").alias("size"),
-        F.col("n_entries").cast("long").alias("n_entries"),
-    ).orderBy("path")
-
-
 def q137_jpeg_progressive(spark, sf_dir):
     """Progressive (SOF2) JPEG decode through the same Arrow path —
     q128's exact fixture images re-encoded as spectrally-split
@@ -6534,7 +6507,6 @@ QUERIES: dict[str, Callable] = {
     "q135_watch_apply_prefixes": q135_watch_apply_prefixes,
     "q136_watch_apply_entries": q136_watch_apply_entries,
     "q137_jpeg_progressive": q137_jpeg_progressive,
-    "q138_delta_chain_read": q138_delta_chain_read,
     "q140_resync_reconcile": q140_resync_reconcile,
     "q141_force_rescan": q141_force_rescan,
     "q142_seeded_watch_reconcile": q142_seeded_watch_reconcile,
@@ -7887,8 +7859,6 @@ ORACLE["q136_watch_apply_entries"] = _WATCH_FEED_SQL + """
     FROM new_e GROUP BY parent ORDER BY parent
 """
 
-# q138: the stored delta-chain read must reproduce the in-memory apply
-ORACLE["q138_delta_chain_read"] = ORACLE["q135_watch_apply_prefixes"]
 
 # q140: the restart-reconciliation classification — new_e (the applied
 # tree, what a restart walk would see) full-joined against prev_e with

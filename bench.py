@@ -379,89 +379,6 @@ def fswatch_bench(n_dirs: int = 1500, files_per_dir: int = 40) -> dict:
             shutil.rmtree(r.state_dir, ignore_errors=True)
 
 
-def watch_apply_bench(spark, n_dirs: int = 400,
-                      files_per_dir: int = 25) -> dict:
-    """Continuous-ingest write cost on a REAL tree: a snapshot
-    of ~10k entries takes a 1%-churn fswatch diff, and the DELTA commit
-    (apply summary + churn-sized parquet write, what every watch --apply
-    batch pays) is timed against the FULL compaction snapshot write
-    (what the old full-copy mode paid every batch; now paid once per
-    --compact-every).  The ratio is the per-batch write saving; it GROWS
-    with tree size since the delta side is churn-proportional."""
-    import shutil
-    import tempfile
-
-    from dudb_spark.model import ENTRIES_SCHEMA, PREFIXES_SCHEMA
-    from dudb_spark.operators.ingest import apply_changes
-    from dudb_spark.sources.catalog import SnapshotCatalog
-    from dudb_spark.sources.crawler import crawl_local
-    from dudb_spark.sources.fsds import FsWatchReader, _WATCH_DDL
-
-    base = tempfile.mkdtemp(prefix="dudb_watchapply_bench_")
-    root = os.path.join(base, "tree")
-    db = os.path.join(base, "db")
-    r = None
-    try:
-        for i in range(n_dirs):
-            d = os.path.join(root, f"g{i // 100:02d}", f"d{i:05d}")
-            os.makedirs(d)
-            for j in range(files_per_dir):
-                with open(os.path.join(d, f"f{j}.dat"), "w") as f:
-                    f.write("x")
-        cat = SnapshotCatalog(spark, db)
-        p0, e0, _ = crawl_local(root)
-        cat.write_snapshot(
-            spark.createDataFrame(p0, PREFIXES_SCHEMA),
-            spark.createDataFrame(e0, ENTRIES_SCHEMA),
-        )
-        # watch-seed artifact (round-10): first start pays the one
-        # executor-parallel export; a restart on the unchanged snapshot
-        # version reuses it — metadata-only, O(1) in tree size
-        t0 = time.perf_counter()
-        cat.watch_seed(root)
-        t_seed_export = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        cat.watch_seed(root)
-        t_seed_cached = time.perf_counter() - t0
-
-        r = FsWatchReader({"path": root})
-        r.read({"gen": 0})  # resync consumed
-        for i in range(max(1, n_dirs // 100)):
-            with open(
-                os.path.join(root, f"g{i % (n_dirs // 100):02d}",
-                             f"d{i * 100:05d}", "new.bin"), "w"
-            ) as f:
-                f.write("z")
-        rows, _ = r.read({"gen": 1})
-        schema = _WATCH_DDL
-        diff = spark.createDataFrame(
-            [tuple(row) for row in rows], schema
-        ).localCheckpoint()
-
-        t = cat.tables()
-        t0 = time.perf_counter()
-        res = apply_changes(t.prefixes, t.entries, diff, root=root)
-        _ = res.summary  # the per-batch counter job
-        cat.write_delta(diff, root=root)
-        t_delta = time.perf_counter() - t0
-
-        t0 = time.perf_counter()
-        cat.write_snapshot(res.prefixes, res.entries)
-        t_full = time.perf_counter() - t0
-        res.release()
-        return {
-            "watch_delta_commit_sec": round(t_delta, 3),
-            "watch_full_compact_sec": round(t_full, 3),
-            "watch_delta_write_ratio": round(t_full / max(t_delta, 1e-9), 1),
-            "watch_seed_export_sec": round(t_seed_export, 3),
-            "watch_seed_cached_start_sec": round(t_seed_cached, 4),
-        }
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-        if r is not None and getattr(r, "state_dir", None):
-            shutil.rmtree(r.state_dir, ignore_errors=True)
-
-
 def watchdist_bench(spark, n_small: int = 500, n_large: int = 4000) -> dict:
     """Distributed watch sweep (round-11, sources/watchdist.py): the
     per-batch dir-signature pass as a Spark job.  The contract under
@@ -691,10 +608,6 @@ def main():
     result["suite_py_norm"] = round(
         py_sum / max(result["calib_pandas_udf_sec"], 1e-9), 1
     )
-    # continuous-ingest write cost: delta commit vs full compaction on a
-    # real 10k-entry tree with 1% churn (the per-batch saving of the
-    # round-8 delta-chain layout; grows with tree size)
-    result.update(watch_apply_bench(spark))
     # distributed watch sweep: idle-batch driver work sublinear in dir
     # count (round-11 — the executor-sharded lstat pass)
     result.update(watchdist_bench(spark))
@@ -758,10 +671,8 @@ def main():
         "decode_png_native", "decode_jpeg_native",
         "fswatch_churn_files_statted",
         "hash_embed_docs_per_sec",
-        "watch_full_compact_sec",
         "fswatch_churn1pct_batch_sec",
         "decode_mb_per_sec",
-        "watch_delta_commit_sec",
         "rollup_entries_per_sec",
     )
     for nd in (2, 1, None):
@@ -774,7 +685,6 @@ def main():
         slim.pop("decode_mb_per_sec_r4", None)
         slim.pop("merge_unchanged_skip_ratio", None)
         slim.pop("decode_speedup_vs_r4", None)
-        slim.pop("watch_delta_write_ratio", None)
         line = json.dumps(slim, separators=(",", ":"))
         if nd is None:
             for k in _DROP_PRIORITY:

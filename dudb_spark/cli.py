@@ -103,16 +103,14 @@ def cmd_analyze(args):
         from dudb_spark.sources.catalog import SnapshotCatalog
 
         # J1/J2 during the walk: the crawl compares each dir with the
-        # previous full snapshot's (mtime, mode), read with no Spark job,
-        # and stats only churned dirs' files.  --force restats everything
-        # and a delta (watch) version has no plain prefixes table, so
-        # both leave the classification to the merge's join.
+        # previous snapshot's (mtime, mode), read with no Spark job, and
+        # stats only churned dirs' files.  --force keeps the dirs but
+        # drops their stamps, so none matches and every file is stat'ed.
         cat = SnapshotCatalog(spark, args.db)
         v = cat.latest_version()
-        previous = None
-        if (v is not None and not getattr(args, "force", False)
-                and not cat.is_delta(v)):
-            previous = cat.dir_stamps(v, args.prefix)
+        previous = cat.dir_stamps(v, args.prefix) if v is not None else None
+        if previous is not None and getattr(args, "force", False):
+            previous = dict.fromkeys(previous)
         crawl = crawl_local(
             args.prefix, exclusions=args.exclude or [],
             concurrent_scans=args.scans, previous=previous,
@@ -228,7 +226,9 @@ def cmd_find(args):
 
 def cmd_stats_compute(args):
     from dudb_spark.functions.calculators import calculator
-    from dudb_spark.operators.stats import StatsOptions, StatsResult
+    from dudb_spark.operators.stats import (
+        StatsOptions, StatsResult, compute_stats,
+    )
     from dudb_spark.sources.catalog import SnapshotCatalog
 
     spark = _spark()
@@ -272,25 +272,10 @@ def cmd_stats_compute(args):
                 file=sys.stderr,
             )
             incremental = False
-    res = _fold_latest(cat, t, opts)
+    res = compute_stats(t.prefixes, t.entries, opts)
     plan = "refold" if incremental else "full"
     out, tot = _save_stats(res, args.stats_dir, args.calculator, cat, plan)
     print(json.dumps({"stats": out, "totals": tot}))
-
-
-def _fold_latest(cat, t, opts):
-    """One stats fold over ``t``, the latest snapshot's tables.  A delta
-    (watch) version reconstructs lazily: base scan plus one
-    apply_changes join stack per delta.  Handed to the fold as a plan,
-    that reconstruction would re-execute in every job of the fold and
-    deepen with the chain, so it is materialised once (localCheckpoint
-    also truncates the plan).  Full snapshots stay plain parquet scans."""
-    from dudb_spark.operators.stats import compute_stats
-
-    p, e = t.prefixes, t.entries
-    if cat.is_delta(cat.latest_version()):
-        p, e = p.localCheckpoint(), e.localCheckpoint()
-    return compute_stats(p, e, opts)
 
 
 def _save_stats(res, stats_dir, calculator_name, cat, plan):
@@ -410,7 +395,7 @@ def _watch_stats_update(spark, cat, stats_dir, applied_from):
     run folded the snapshot this batch applied against, and
     ``plan: full`` when it did not (someone ran analyze in between)."""
     from dudb_spark.functions.calculators import calculator
-    from dudb_spark.operators.stats import StatsOptions
+    from dudb_spark.operators.stats import StatsOptions, compute_stats
 
     prev_stats = _load_stats(spark, stats_dir)
     pm = prev_stats.meta
@@ -420,7 +405,8 @@ def _watch_stats_update(spark, cat, stats_dir, applied_from):
         calculator=calculator(pm.get("calculator") or "identity"),
         count_hardlinks_as_files=pm.get("count_hardlinks_as_files", False),
     )
-    res = _fold_latest(cat, cat.tables(), opts)
+    t = cat.tables()
+    res = compute_stats(t.prefixes, t.entries, opts)
     plan = ("refold" if pm.get("snapshot_version") == applied_from
             else "full")
     out, tot = _save_stats(res, stats_dir, pm.get("calculator"), cat, plan)
@@ -428,14 +414,12 @@ def _watch_stats_update(spark, cat, stats_dir, applied_from):
 
 
 def _watch_land(spark, cat, args, diff, stats_dir) -> bool:
-    """Apply one change-feed diff to the stored snapshot and land it:
-    churn-sized delta commit by default, a FULL compaction write
-    (tree-sized) every --compact-every batches bounding the
-    reconstruction chain — the transaction-log/compaction split of a
-    Delta/Iceberg sink — plus the JSON summary line and the optional
-    stats refold.  Shared by the
-    stream's per-batch apply and --full-resync's pre-stream
-    reconciliation.  Returns True when the diff had any effect."""
+    """Apply one change-feed diff to the stored snapshot and land it as
+    the next plain snapshot version (the previous version's errors table
+    carried over), plus the JSON summary line and the optional stats
+    refold.  Shared by the stream's per-batch apply and --full-resync's
+    pre-stream reconciliation.  Returns True when the diff had any
+    effect."""
     from dudb_spark.operators.ingest import apply_changes
 
     applied_from = cat.latest_version()
@@ -445,15 +429,8 @@ def _watch_land(spark, cat, args, diff, stats_dir) -> bool:
     if not (s["rows_added"] or s["rows_changed"] or s["rows_deleted"]):
         res.release()
         return False
-    ce = max(getattr(args, "compact_every", 8), 1)
-    if ce > 1 and cat.chain_length() + 1 < ce:
-        out = cat.write_delta(diff, root=args.prefix)
-        mode = "delta"
-    else:
-        out = cat.write_snapshot(res.prefixes, res.entries)
-        mode = "compacted"
-    print(json.dumps({"snapshot": out, "write": mode, **res.summary}),
-          flush=True)
+    out = cat.write_snapshot(res.prefixes, res.entries)
+    print(json.dumps({"snapshot": out, **res.summary}), flush=True)
     if stats_dir:
         _watch_stats_update(spark, cat, stats_dir, applied_from)
     # one apply per micro-batch forever: release the apply's cached
@@ -479,11 +456,8 @@ def cmd_watch(args):
     them, so batch 0 is the restart reconciliation as a churn-sized
     diff — the driver never walks or materializes the full tree
     (``--full-resync`` restores the exhaustive walk).
-    Batches land as churn-sized DELTA versions (catalog.write_delta —
-    the transaction-log commit of a Delta/Iceberg sink), with a full
-    compaction snapshot every ``--compact-every`` batches bounding the
-    read-side reconstruction chain; both the apply computation AND the
-    steady-state write cost track the churn, never the tree.
+    Every batch lands as a plain snapshot version, the same layout
+    ``analyze`` writes, so every reader opens it directly.
 
     ``--stats-dir`` (with ``--apply``) additionally maintains the stored
     stats summaries: after each applied batch one refold of the new
@@ -2238,12 +2212,6 @@ def build_parser():
         "fold options; requires one)",
     )
     p.add_argument(
-        "--compact-every", type=int, default=8,
-        help="with --apply: batches land as churn-sized DELTA versions, "
-        "with a full compaction snapshot every N batches bounding the "
-        "read-side reconstruction chain (1 = full snapshot every batch)",
-    )
-    p.add_argument(
         "--state-dir",
         help="directory for the watcher's file-row snapshot parquet "
         "(default: a fresh temp dir; set it to keep a long-running "
@@ -2817,7 +2785,12 @@ def main(argv=None):
         v = getattr(args, attr, None)
         if isinstance(v, str):
             setattr(args, attr, expand_path(v))
-    args.func(args)
+    from dudb_spark.sources.catalog import RetiredLayoutError
+
+    try:
+        args.func(args)
+    except RetiredLayoutError as e:
+        raise SystemExit(str(e)) from None
     return 0
 
 

@@ -18,9 +18,10 @@ against the previous snapshot's (mtime, mode) as it walks
 directories have their files stat'ed, and ``merge_scan(churn=...)`` only
 applies that classification: the previous rows of churned directories
 drop out by a churn-sized ``NOT IN`` list and the fresh rows are unioned
-in, with no shuffle, no cache and no counter job.  ``--force``, a
-delta (``watch``) previous version and ``--distributed`` take the join
-path below, as does :func:`apply_changes`' own change-feed algebra.
+in, with no shuffle, no cache and no counter job.  ``--force`` takes
+this route too: its crawl matches no stamp, so every directory is
+churned.  ``--distributed`` takes the join path below, as does
+:func:`apply_changes`' own change-feed algebra.
 
 Join path: the staged scan and the previous snapshot are joined once on
 ``path`` (full outer, subtree-restricted); the join classifies every
@@ -112,12 +113,17 @@ def merge_scan(
     Rows outside ``root`` pass through because the crawl never names
     them.
 
-    ``force=True`` bypasses the J1 unchanged-skip (the reference's
+    Without ``churn`` (the ``--distributed`` crawl) the merge joins the
+    staged scan with the previous snapshot to classify the directories.
+
+    ``force=True`` bypasses the join's J1 unchanged-skip (the reference's
     ``analyze`` re-scan override): every alive directory classifies as
     changed, so its entries are rewritten from the staged scan instead
     of reused from the previous snapshot — the corrupted-snapshot
     recovery path.  Deletion detection and the summary counters still
-    run (``parent_unchanged`` reports 0 by construction).
+    run (``parent_unchanged`` reports 0 by construction).  With
+    ``churn`` it has no effect: a local ``--force`` crawl already
+    classified every surviving directory as changed.
 
     Contract: ``staged_prefixes`` must contain a row for EVERY directory
     currently alive under ``root`` — the scanner may skip re-statting an

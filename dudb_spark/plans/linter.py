@@ -312,12 +312,6 @@ PIN_ALLOW: dict[str, str] = {
     "cli.py::cmd_watch":
         "per-batch diff frames — churn-bounded (rows that changed since "
         "the last poll)",
-    "cli.py::_fold_latest":
-        "TREE-SIZED: a delta-chain version's reconstructed tables, pinned "
-        "once per fold so the fold's jobs don't each re-execute the "
-        "chain (bounded in depth by compact-every, not in rows); spills "
-        "to local disk, and a cluster deployment should compact the "
-        "chain (a written artifact) before folding",
     "operators/quantiles.py::weighted_quantiles":
         "CORPUS-SIZED: the sorted cumulative-weight frame is one row "
         "per input value by construction — any exact weighted quantile "

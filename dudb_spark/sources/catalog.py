@@ -8,6 +8,10 @@ stats/report directories (stats.go:56–82 ``latest`` symlink).  Writers
 produce ``v000N+1`` and flip the pointer last, so readers always see a
 complete snapshot (poor man's ACID; a real deployment swaps this layer for
 Delta/Iceberg and keeps the same interface).
+
+Every version has one layout, whoever wrote it (``analyze``, a ``watch
+--apply`` batch, ``database compact``): ``prefixes``/``entries``/``errors``
+Parquet tables plus ``_layout.json``, read directly with no replay step.
 """
 
 from __future__ import annotations
@@ -35,6 +39,10 @@ def write_pointer(path: str, name: str) -> None:
     finally:
         if os.path.exists(tmp):
             os.unlink(tmp)
+
+
+class RetiredLayoutError(RuntimeError):
+    """A snapshot version stored in a layout this engine no longer reads."""
 
 
 class SnapshotCatalog:
@@ -86,9 +94,21 @@ class SnapshotCatalog:
                 raise FileNotFoundError(f"no snapshot under {self.root}")
         elif version not in self.versions():
             raise FileNotFoundError(f"no version {version} under {self.root}")
-        if self.is_delta(version):
-            return DeltaTables(self.spark, self, version)
-        return FsTables(self.spark, os.path.join(self.root, version))
+        return FsTables(self.spark, self._snapshot_dir(version))
+
+    def _snapshot_dir(self, version: str) -> str:
+        """Directory of a snapshot version.  Early ``watch --apply``
+        batches could land a change-feed *delta* version (marked by
+        ``_delta.json``) that only a chain replay could read; that layout
+        is retired, so such a version fails here with one line."""
+        out = os.path.join(self.root, version)
+        if os.path.exists(os.path.join(out, "_delta.json")):
+            raise RetiredLayoutError(
+                f"{out}: snapshot version in the retired delta-chain "
+                "layout (an old `watch --apply` batch); run `analyze` "
+                "into a fresh --db to rebuild the snapshot"
+            )
+        return out
 
     # -- writes ---------------------------------------------------------
 
@@ -99,7 +119,9 @@ class SnapshotCatalog:
         ``like`` names a version whose tables bound the file count: each
         table is coalesced to at most that version's file count for it,
         so a merge that unions the previous scan with fresh local rows
-        does not add a file per core every night."""
+        does not add a file per core every night.  Without ``errors``
+        (a ``watch`` change-feed batch records no scan errors) the new
+        version keeps the previous version's errors table."""
         v = self.next_version()
         out = os.path.join(self.root, v)
 
@@ -112,15 +134,26 @@ class SnapshotCatalog:
         _write(entries, "entries.parquet")
         if errors is not None:
             _write(errors, "errors.parquet")
+        else:
+            self._carry_errors(out)
         self._write_layout(out)
         write_pointer(os.path.join(self.root, "latest"), v)
         return out
 
+    def _carry_errors(self, out: str) -> None:
+        """Copy the latest version's errors table, when it has one, into
+        the version being written at ``out``: a file copy, no Spark job."""
+        import shutil
+
+        src = self.latest_path()
+        if src and os.path.isdir(os.path.join(src, "errors.parquet")):
+            shutil.copytree(os.path.join(src, "errors.parquet"),
+                            os.path.join(out, "errors.parquet"))
+
     def _write_layout(self, out: str) -> None:
-        """Land ``_layout.json`` for a just-written full snapshot.  It
-        records the tree size (prefix rows), which ``watch_seed`` and
-        ``write_delta`` read without a Spark job; for a delta CHAIN a
-        count would otherwise execute the full reconstruction join."""
+        """Land ``_layout.json`` for a just-written snapshot.  It records
+        the tree size (prefix rows), which ``watch_seed`` reads without a
+        Spark job."""
         import json as _json
 
         meta = {"layout": "plain",
@@ -138,8 +171,8 @@ class SnapshotCatalog:
         ))
 
     def dir_stamps(self, version: str, root: str) -> dict:
-        """``path -> (mtime_micros, mode)`` of every directory a full
-        snapshot version records under ``root``: what the crawler needs
+        """``path -> (mtime_micros, mode)`` of every directory a snapshot
+        version records under ``root``: what the crawler needs
         to tell an unchanged directory (J1) from a churned one.  Read
         driver-side with pyarrow, so no Spark job; the mtime is the
         integer microseconds Spark stored (INT96 or INT64 alike)."""
@@ -147,7 +180,7 @@ class SnapshotCatalog:
         import pyarrow.parquet as pq
 
         t = pq.read_table(
-            os.path.join(self.root, version, "prefixes.parquet"),
+            os.path.join(self._snapshot_dir(version), "prefixes.parquet"),
             columns=["path", "mtime", "mode"],
         )
         mt = t.column("mtime")
@@ -181,19 +214,13 @@ class SnapshotCatalog:
 
     def prefix_rows(self, version: str | None = None) -> int | None:
         """Tree size (prefix row count) of a snapshot version WITHOUT
-        materializing it: full snapshots record the exact count in
-        ``_layout.json`` at write time; delta versions carry a running
-        count (base ± dir churn, see :meth:`write_delta`).  Returns
-        None only for snapshots written before this metadata existed —
-        callers fall back to counting then."""
+        reading its tables: the exact count ``_layout.json`` records at
+        write time.  Returns None only for snapshots written before this
+        metadata existed — callers fall back to counting then."""
         v = version or self.latest_version()
         if v is None:
             return None
-        if self.is_delta(v):
-            n = self.delta_meta(v).get("prefix_rows")
-            return int(n) if n is not None else None
-        lay = self.layout(v)
-        n = lay.get("prefix_rows")
+        n = self.layout(v).get("prefix_rows")
         return int(n) if n is not None else None
 
     def watch_seed(self, prefix: str) -> str:
@@ -261,98 +288,9 @@ class SnapshotCatalog:
         os.rename(tmp, dest)
         return dest
 
-    # -- delta-chain layout (churn-sized writes for the watch loop) -----
-
-    def is_delta(self, version: str) -> bool:
-        """True when ``version`` stores a churn-sized CHANGE DELTA (the
-        fswatch feed rows) instead of full tables — readers reconstruct
-        through :class:`DeltaTables`."""
-        return os.path.exists(
-            os.path.join(self.root, version, "_delta.json")
-        )
-
-    def delta_meta(self, version: str) -> dict:
-        import json as _json
-
-        with open(os.path.join(self.root, version, "_delta.json")) as f:
-            return _json.load(f)
-
-    def write_delta(self, changes, root: str) -> str:
-        """Land a change-feed batch as the next version WITHOUT copying
-        the tables: the write is sized by the CHURN, not the tree — the
-        continuous-ingest analogue of a Delta/Iceberg transaction-log
-        commit.  Readers reconstruct latest = nearest full snapshot ⊳
-        replayed deltas (tables() → DeltaTables); the writer bounds the
-        chain with periodic full compactions (``watch --apply
-        --compact-every``), so reconstruction plan depth is O(threshold)
-        and a full rewrite is paid once per N batches instead of every
-        batch."""
-        import json as _json
-
-        parent = self.latest_version()
-        if parent is None:
-            raise FileNotFoundError("write_delta: no base snapshot")
-        v = self.next_version()
-        out = os.path.join(self.root, v)
-        changes.write.mode("overwrite").parquet(
-            os.path.join(out, "delta.parquet")
-        )
-        # running tree size (base ± dir churn, one churn-sized agg job):
-        # the watch-seed export sizes its files from this instead of
-        # counting the reconstructed prefixes frame (which would execute
-        # the full delta-replay join chain).  An ESTIMATE, biased
-        # by exactly two rare row classes (round-9 ADVICE): (1) a
-        # dir↔file TYPE FLIP arrives as op='changed' — the feed reader
-        # merges the added+deleted pair and only the NEW is_dir
-        # survives, so the old type is unrecoverable here and each flip
-        # drifts the count by ±1 until compaction; (2) readable↔
-        # unreadable transitions (error rows).  Both are bounded by
-        # their occurrence count per chain, the file sizing consuming
-        # this is itself a heuristic, and each periodic compaction
-        # rewrites the exact number — accepted and documented rather
-        # than widening the feed schema with an old-type column.
-        prefix_rows = None
-        base_rows = self.prefix_rows(parent)
-        if base_rows is not None:
-            from pyspark.sql import functions as F
-
-            err = (
-                F.col("error").isNotNull()
-                if "error" in changes.columns
-                else F.lit(False)
-            )
-            c = changes.agg(
-                F.count(
-                    F.when((F.col("op") == "added") & F.col("is_dir")
-                           & ~err, 1)
-                ).alias("n_add"),
-                F.count(
-                    F.when((F.col("op") == "deleted") & F.col("is_dir"), 1)
-                ).alias("n_del"),
-            ).first()
-            prefix_rows = base_rows + c["n_add"] - c["n_del"]
-        with open(os.path.join(out, "_delta.json"), "w") as f:
-            _json.dump(
-                {"parent": parent, "root": root,
-                 "prefix_rows": prefix_rows},
-                f,
-            )
-        write_pointer(os.path.join(self.root, "latest"), v)
-        return out
-
-    def chain_length(self, version: str | None = None) -> int:
-        """Delta hops from ``version`` (default latest) back to the
-        nearest full snapshot (0 = it IS a full snapshot)."""
-        v = version or self.latest_version()
-        n = 0
-        while v is not None and self.is_delta(v):
-            v = self.delta_meta(v)["parent"]
-            n += 1
-        return n
-
     def layout(self, version: str | None = None) -> dict:
-        """``_layout.json`` of a snapshot version ({} when it has none:
-        delta versions and snapshots older than the file)."""
+        """``_layout.json`` of a snapshot version ({} for snapshots older
+        than the file)."""
         import json as _json
 
         p = (
@@ -400,31 +338,20 @@ class SnapshotCatalog:
             .write.mode("overwrite")
             .parquet(f"{out}/entries.parquet")
         )
-        if os.path.isdir(f"{self.latest_path()}/errors.parquet"):
-            t.errors.write.mode("overwrite").parquet(f"{out}/errors.parquet")
+        self._carry_errors(out)
         self._write_layout(out)
         write_pointer(os.path.join(self.root, "latest"), v)
         return out
 
     def prune(self, keep: int = 2) -> list[str]:
         """Drop all but the newest ``keep`` snapshot versions (never the
-        one ``latest`` points to, nor any full snapshot / intermediate
-        delta a KEPT delta version still reconstructs through).
-        Returns the removed version names."""
+        one ``latest`` points to).  Returns the removed version names."""
         import shutil
 
         keep = max(keep, 1)
         vs = self.versions()
         current = self.latest_version()
-        kept = set(vs[-keep:]) | ({current} if current else set())
-        needed = set()
-        for v in list(kept):
-            while v is not None and self.is_delta(v):
-                v = self.delta_meta(v)["parent"]
-                needed.add(v)
-        removable = [
-            v for v in vs[:-keep] if v != current and v not in needed
-        ]
+        removable = [v for v in vs[:-keep] if v != current]
         for v in removable:
             shutil.rmtree(os.path.join(self.root, v))
         # the watch-seed artifact (:meth:`watch_seed`) rides its version:
@@ -474,46 +401,3 @@ class SnapshotCatalog:
         return self.spark.read.schema(SCAN_LOGS_SCHEMA).parquet(
             f"{self.root}/scan_logs.parquet")
 
-
-class DeltaTables:
-    """Duck-typed :class:`FsTables` view of a DELTA version: the nearest
-    full snapshot's scans with the stored churn deltas replayed lazily on
-    top (operators/ingest.apply_changes, oldest first, no summary / no
-    caching — each delta is churn-sized).  Chain depth is bounded by the
-    writer's compaction threshold, so the reconstruction plan stays
-    O(compact_every) joins deep regardless of how long the watch ran.
-    ``errors`` delegates to the base full snapshot (the watch feed lands
-    unreadable paths in-band, not in the errors bucket)."""
-
-    def __init__(self, spark, cat: SnapshotCatalog, version: str):
-        self.spark = spark
-        chain = []  # newest -> oldest delta dirs
-        v = version
-        while cat.is_delta(v):
-            meta = cat.delta_meta(v)
-            chain.append((os.path.join(cat.root, v), meta["root"]))
-            v = meta["parent"]
-        base = FsTables(spark, os.path.join(cat.root, v))
-        self._base = base
-        from dudb_spark.operators.ingest import apply_changes
-
-        p, e = base.prefixes, base.entries
-        for dpath, droot in reversed(chain):
-            feed = spark.read.parquet(os.path.join(dpath, "delta.parquet"))
-            res = apply_changes(
-                p, e, feed, root=droot, with_summary=False, cache=False
-            )
-            p, e = res.prefixes, res.entries
-        self._p, self._e = p, e
-
-    @property
-    def prefixes(self):
-        return self._p
-
-    @property
-    def entries(self):
-        return self._e
-
-    @property
-    def errors(self):
-        return self._base.errors

@@ -1040,14 +1040,15 @@ def _churn_tree(root):
         f.write("outside proj")
 
 
-@pytest.mark.parametrize("case", ["root", "subtree", "bucketed"])
+@pytest.mark.parametrize("case", ["root", "subtree", "bucketed", "force"])
 def test_cli_analyze_classified_equals_join(spark, real_tree, tmp_path,
                                             capsys, monkeypatch, case):
     """An incremental analyze whose crawl classified the dirs lands the
     same rows and prints the same counters as one that leaves the
     classification to the merge's join: over the whole tree, over a
-    subtree (whose out-of-root rows pass through unchanged), and over a
-    previous snapshot in the retired bucketed layout."""
+    subtree (whose out-of-root rows pass through unchanged), over a
+    previous snapshot in the retired bucketed layout, and under
+    ``--force`` (against the join's ``merge_scan(force=True)``)."""
     import shutil
 
     from dudb_spark.sources.catalog import SnapshotCatalog
@@ -1062,17 +1063,26 @@ def test_cli_analyze_classified_equals_join(spark, real_tree, tmp_path,
     shutil.copytree(db, join_db)
     _churn_tree(real_tree)
 
+    force = ["--force"] if case == "force" else []
+    merges = []
+    _spy(monkeypatch, "dudb_spark.operators.ingest", "merge_scan", merges)
+
     def analyze(d):
-        out = json.loads(run(capsys, "analyze", "--db", d, prefix))
+        out = json.loads(run(capsys, "analyze", "--db", d, *force, prefix))
         out.pop("snapshot"), out.pop("duration_ns")
         return out
 
     got = analyze(db)
+    assert merges[-1][0]["churn"] is not None
     with monkeypatch.context() as m:
         m.setattr(SnapshotCatalog, "dir_stamps", lambda *a: None)
         want = analyze(join_db)
+    assert merges[-1][0]["churn"] is None
+    assert merges[-1][0]["force"] == bool(force)
     assert got == want
     assert got["prefixes_added"] == 1 and got["prefixes_deleted"] == 1
+    if force:
+        assert got["parent_unchanged"] == 0
     rows = _snapshot_rows(spark, db)
     assert rows == _snapshot_rows(spark, join_db)
     if case == "subtree":
@@ -1099,13 +1109,9 @@ def _spy(monkeypatch, module, name, seen):
 
 def test_cli_analyze_join_routes(spark, real_tree, tmp_path, capsys,
                                  monkeypatch):
-    """--force and a delta (watch) previous version leave J1/J2 to the
-    merge's join, and --force still stats every file."""
-    from pyspark.sql import types as T
-
-    from dudb_spark.model import ENTRIES_SCHEMA
-    from dudb_spark.sources.catalog import SnapshotCatalog
-
+    """The local crawl classifies the dirs, under --force too: no stamp
+    matches there, so it stats every file and lands through the churn
+    merge.  Only --distributed leaves J1/J2 to the merge's join."""
     db = str(tmp_path / "db")
     run(capsys, "analyze", "--db", db, real_tree)
     merges, crawls = [], []
@@ -1121,20 +1127,44 @@ def test_cli_analyze_join_routes(spark, real_tree, tmp_path, capsys,
 
     out = json.loads(run(capsys, "analyze", "--db", db, "--force",
                          real_tree))
-    assert merges[-1][0]["churn"] is None
+    assert merges[-1][0]["churn"] is not None
     assert len(crawls[-1][1][1]) == 7  # every entry of the tree
+    assert not crawls[-1][1].churn.unchanged
     assert out["files"] == 4 and out["parent_unchanged"] == 0
 
-    feed = T.StructType([T.StructField("op", T.StringType())]
-                        + ENTRIES_SCHEMA.fields
-                        + [T.StructField("error", T.StringType())])
-    cat = SnapshotCatalog(spark, db)
-    cat.write_delta(spark.createDataFrame([], feed), real_tree)
-    assert cat.is_delta(cat.latest_version())
     os.remove(os.path.join(real_tree, "proj/b/z.log"))
-    out = json.loads(run(capsys, "analyze", "--db", db, real_tree))
+    out = json.loads(run(capsys, "analyze", "--db", db, "--distributed",
+                         real_tree))
     assert merges[-1][0]["churn"] is None
     assert out["files"] == 3 and out["prefixes_changed"] == 1
+
+
+def test_cli_retired_delta_version_exits_with_one_line(spark, real_tree,
+                                                      tmp_path, capsys):
+    """A version in the retired delta-chain layout (``_delta.json``, as
+    old ``watch --apply`` batches landed) is not read: ``find`` and
+    ``analyze`` exit with one line naming the version and the recovery,
+    and ``analyze`` writes nothing."""
+    from dudb_spark.sources.catalog import write_pointer
+
+    db = str(tmp_path / "db")
+    run(capsys, "analyze", "--db", db, real_tree)
+    old = os.path.join(db, "v0002")
+    os.makedirs(os.path.join(old, "delta.parquet"))
+    with open(os.path.join(old, "_delta.json"), "w") as f:
+        json.dump({"parent": "v0001", "root": real_tree,
+                   "prefix_rows": 3}, f)
+    write_pointer(os.path.join(db, "latest"), "v0002")
+    for argv in (["find", "--db", db, real_tree],
+                 ["analyze", "--db", db, real_tree]):
+        with pytest.raises(SystemExit) as e:
+            main(argv)
+        msg = e.value.code
+        assert isinstance(msg, str) and "\n" not in msg, msg
+        assert old in msg and "retired delta-chain layout" in msg
+        assert "`analyze` into a fresh --db" in msg
+    assert sorted(d for d in os.listdir(db) if d.startswith("v")) == [
+        "v0001", "v0002"]
 
 
 def test_cli_analyze_incremental_job_count(spark, real_tree, tmp_path,

@@ -624,18 +624,18 @@ def test_apply_changes_tracks_live_tree(spark, tmp_path):
     assert norm_p(res.prefixes) == norm_p(want_p)
 
 
-def test_delta_chain_reconstruction_equals_direct_apply(spark, tmp_path):
-    """Delta-chain versions (churn-sized writes) reconstruct through
-    DeltaTables to exactly the tables a full-copy apply would have
-    written, across a multi-delta chain; compaction folds the chain and
-    prune never removes a base a kept delta still needs."""
-    import os
+def test_watch_batches_land_plain_snapshots(spark, tmp_path):
+    """Three ``watch --apply`` batches (DistributedWatcher batches landed
+    through ``_watch_land``, no stream thread) each land a plain snapshot
+    version: ``_layout.json`` with the exact tree size and no
+    ``_delta.json``.  The latest tables equal the chained in-memory
+    apply_changes and a fresh crawl, and prune keeps ``latest``."""
+    from types import SimpleNamespace
 
-    from dudb_spark.model import ENTRIES_SCHEMA, PREFIXES_SCHEMA
+    from dudb_spark.cli import _watch_land
     from dudb_spark.operators.ingest import apply_changes
-    from dudb_spark.sources.catalog import SnapshotCatalog
-    from dudb_spark.sources.crawler import crawl_local
-    from dudb_spark.sources.fsds import FsWatchReader, _WATCH_DDL
+    from dudb_spark.sources.catalog import SnapshotCatalog, write_pointer
+    from dudb_spark.sources.watchdist import DistributedWatcher
 
     root = str(tmp_path / "live")
     os.makedirs(f"{root}/a")
@@ -646,66 +646,63 @@ def test_delta_chain_reconstruction_equals_direct_apply(spark, tmp_path):
     db = str(tmp_path / "db")
     cat = SnapshotCatalog(spark, db)
     p0, e0, _ = crawl_local(root)
-    cat.write_snapshot(
-        spark.createDataFrame(p0, PREFIXES_SCHEMA),
-        spark.createDataFrame(e0, ENTRIES_SCHEMA),
-    )
+    cat.write_snapshot(*_dfs(spark, p0, e0))
+    w = DistributedWatcher(spark, cat, root, str(tmp_path / "state"))
+    assert w.batch(0) == []
 
-    schema = _WATCH_DDL
-    r = FsWatchReader({"path": root, "prune": "false"})
-    rows, off = r.read({"gen": 0})  # batch-0 resync consumed
-
-    import time
-
-    direct_p = cat.tables().prefixes
-    direct_e = cat.tables().entries
-    for i in range(3):  # three delta batches
-        time.sleep(1.05)
+    def churn(i):
+        """Batch i's churn; the touched dirs get a distinct mtime of
+        their own, so the sweep sees them without waiting out the
+        filesystem's mtime granularity."""
+        touched = [f"{root}/a"]
         with open(f"{root}/a/new{i}.dat", "w") as f:
             f.write("d" * (i + 1))
         if i == 1:
             os.unlink(f"{root}/b/f3")
-        if i == 2:
-            os.makedirs(f"{root}/c")  # dir churn: prefix_rows must track
-        rows, off = r.read(off)
-        diff = spark.createDataFrame([tuple(x) for x in rows], schema)
-        # the full-copy truth, chained in memory
+            touched.append(f"{root}/b")
+        if i == 2:  # dir churn: prefix_rows must track it
+            os.makedirs(f"{root}/c")
+            with open(f"{root}/c/f4", "w") as f:
+                f.write("4444")
+            touched += [root, f"{root}/c"]
+        for d in touched:
+            os.utime(d, (2_000_000_000 + i, 2_000_000_000 + i))
+
+    direct_p, direct_e = cat.tables().prefixes, cat.tables().entries
+    args = SimpleNamespace(prefix=root)
+    for i in range(3):
+        churn(i)
+        rows = w.batch(i + 1)
+        assert rows
+        diff = w.diff_frame(rows).localCheckpoint()
         res = apply_changes(direct_p, direct_e, diff, root=root,
                             with_summary=False, cache=False)
-        direct_p = spark.createDataFrame(
-            res.prefixes.collect(), PREFIXES_SCHEMA
-        )
-        direct_e = spark.createDataFrame(
-            res.entries.collect(), ENTRIES_SCHEMA
-        )
-        out = cat.write_delta(diff, root=root)
-        assert os.path.exists(f"{out}/_delta.json")
-
-    assert cat.chain_length() == 3
-    # running tree-size metadata: the stats refold gate reads this
-    # instead of counting the reconstructed frame (zero jobs per batch)
-    assert cat.prefix_rows() == direct_p.count()
-    t = cat.tables()  # DeltaTables reconstruction
+        direct_p, direct_e = _dfs(spark, res.prefixes.collect(),
+                                  res.entries.collect())
+        assert _watch_land(spark, cat, args, diff, None)
+        out = cat.latest_path()
+        assert not os.path.exists(f"{out}/_delta.json")
+        assert cat.layout() == {"layout": "plain",
+                                "prefix_rows": direct_p.count()}
+    assert cat.versions() == ["v0001", "v0002", "v0003", "v0004"]
 
     def norm(df, cols):
         return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
     ecols = ["path", "is_dir", "size", "mode", "inode"]
     pcols = ["path", "depth", "n_entries", "mode", "inode"]
-    assert norm(t.entries, ecols) == norm(direct_e, ecols)
-    assert norm(t.prefixes, pcols) == norm(direct_p, pcols)
+    t = cat.tables()
+    fresh_p, fresh_e = _dfs(spark, *crawl_local(root)[:2])
+    for want_p, want_e in ((direct_p, direct_e), (fresh_p, fresh_e)):
+        assert norm(t.entries, ecols) == norm(want_e, ecols)
+        assert norm(t.prefixes, pcols) == norm(want_p, pcols)
 
-    # compaction: database compact shape — materialize + full write
-    out = cat.write_snapshot(t.prefixes, t.entries)
-    assert cat.chain_length() == 0
-    assert cat.prefix_rows() == direct_p.count()  # exact after compaction
-    t2 = cat.tables()
-    assert norm(t2.entries, ecols) == norm(direct_e, ecols)
-
-    # prune keeps the chain's base while a kept delta still needs it
-    removed = cat.prune(keep=2)  # keeps v0005 (full) + v0004 (delta)
-    assert "v0001" not in removed, removed  # v0004's chain base survives
-    assert cat.chain_length("v0004") == 3
+    assert cat.prune(keep=2) == ["v0001", "v0002"]
+    assert cat.latest_version() == "v0004"
+    # an older version that ``latest`` points to survives prune as well
+    write_pointer(os.path.join(db, "latest"), "v0003")
+    assert cat.prune(keep=1) == []
+    assert cat.versions() == ["v0003", "v0004"]
 
 
 def test_catalog_version_order_past_zero_pad(spark, tmp_path):

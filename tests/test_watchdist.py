@@ -138,7 +138,7 @@ def test_multi_batch_same_instance(spark, tree, tmp_path, capsys):
     from dudb_spark.cli import _watch_land
 
     cat = SnapshotCatalog(spark, db)
-    args = SimpleNamespace(prefix=tree, compact_every=8)
+    args = SimpleNamespace(prefix=tree)
     w = DistributedWatcher(spark, cat, tree, str(tmp_path / "state"))
     assert w.batch(0) == []
 
@@ -168,6 +168,37 @@ def test_multi_batch_same_instance(spark, tree, tmp_path, capsys):
                  for r in cat.tables().entries.collect())
     _, want_e, _ = crawl_local(tree)
     assert got == sorted((e["path"], e["size"]) for e in want_e)
+
+
+def test_watch_batch_keeps_errors_table(spark, tree, tmp_path, capsys):
+    """A watch batch records no scan errors of its own: the version it
+    lands carries the previous version's errors table, so ``errors``
+    still lists them."""
+    from datetime import datetime
+    from types import SimpleNamespace
+
+    from dudb_spark.cli import _watch_land
+    from dudb_spark.model import ERRORS_SCHEMA
+
+    db = str(tmp_path / "db")
+    json.loads(run(capsys, "analyze", "--db", db, tree))
+    cat = SnapshotCatalog(spark, db)
+    t = cat.tables()
+    err = (f"{tree}/proj/locked", datetime(2024, 1, 2, 3, 4, 5),
+           "permission denied")
+    cat.write_snapshot(t.prefixes, t.entries,
+                       spark.createDataFrame([err], ERRORS_SCHEMA))
+    w = DistributedWatcher(spark, cat, tree, str(tmp_path / "state"))
+    assert w.batch(0) == []
+    _mutate(tree)
+    rows = w.batch(1)
+    assert _watch_land(spark, cat, SimpleNamespace(prefix=tree),
+                       w.diff_frame(rows), None)
+    assert cat.latest_version() == "v0003"
+    capsys.readouterr()
+    out = run(capsys, "errors", "--db", db, tree)
+    assert out.splitlines() == [
+        f"{tree}/proj/locked\t2024-01-02 03:04:05\tpermission denied"]
 
 
 def test_distributed_requires_db_apply(tree, tmp_path):
