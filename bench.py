@@ -379,61 +379,6 @@ def fswatch_bench(n_dirs: int = 1500, files_per_dir: int = 40) -> dict:
             shutil.rmtree(r.state_dir, ignore_errors=True)
 
 
-def watchdist_bench(spark, n_small: int = 500, n_large: int = 4000) -> dict:
-    """Distributed watch sweep (round-11, sources/watchdist.py): the
-    per-batch dir-signature pass as a Spark job.  The contract under
-    measurement is DRIVER work sublinear in dir count: an idle batch
-    collects zero sweep rows, scandirs nothing, stats nothing — at
-    EVERY tree size — because the O(dirs) lstats run executor-side over
-    the on-disk dir artifact.  Two tree sizes pin the scaling: an 8x
-    dir-count increase must move idle wall-time by job-overhead only
-    (executor-parallel lstats), nowhere near 8x; the driver-side
-    syscall counters stay literally constant (1 root lstat)."""
-    import shutil
-    import tempfile
-
-    from dudb_spark.model import ENTRIES_SCHEMA, PREFIXES_SCHEMA
-    from dudb_spark.sources.catalog import SnapshotCatalog
-    from dudb_spark.sources.crawler import crawl_local
-    from dudb_spark.sources.watchdist import DistributedWatcher
-
-    base = tempfile.mkdtemp(prefix="dudb_watchdist_bench_")
-    out: dict = {}
-    try:
-        for label, n_dirs in (("small", n_small), ("large", n_large)):
-            root = os.path.join(base, f"tree_{label}")
-            for i in range(n_dirs):
-                d = os.path.join(root, f"g{i // 100:02d}", f"d{i:05d}")
-                os.makedirs(d)
-                with open(os.path.join(d, "f.dat"), "w") as f:
-                    f.write("x")
-            db = os.path.join(base, f"db_{label}")
-            cat = SnapshotCatalog(spark, db)
-            p0, e0, _ = crawl_local(root)
-            cat.write_snapshot(
-                spark.createDataFrame(p0, PREFIXES_SCHEMA),
-                spark.createDataFrame(e0, ENTRIES_SCHEMA),
-            )
-            w = DistributedWatcher(
-                spark, cat, root, os.path.join(base, f"state_{label}")
-            )
-            assert w.batch(0) == []  # reconciliation: no churn
-            t_idle = min(_timed(lambda: w.batch(1)) for _ in range(3))
-            s = w.last_batch_stats
-            assert s["dirs_listed"] == 0 and s["files_statted"] == 0 \
-                and s["sweep_rows"] == 0, s
-            out[f"watchdist_idle_{label}_sec"] = round(t_idle, 3)
-            out[f"watchdist_dirs_{label}"] = s["dirs_swept"]
-        out["watchdist_idle_scaling"] = round(
-            out["watchdist_idle_large_sec"]
-            / max(out["watchdist_idle_small_sec"], 1e-9), 2
-        )
-        out["watchdist_driver_syscalls_idle"] = 1  # the root lstat
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -608,9 +553,6 @@ def main():
     result["suite_py_norm"] = round(
         py_sum / max(result["calib_pandas_udf_sec"], 1e-9), 1
     )
-    # distributed watch sweep: idle-batch driver work sublinear in dir
-    # count (round-11 — the executor-sharded lstat pass)
-    result.update(watchdist_bench(spark))
     try:
         with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                "BENCH_r04.json")) as f:
@@ -658,8 +600,6 @@ def main():
         "load1_start", "load1_end",
         "suite_jvm_norm", "suite_py_norm",      # = sums / anchors
         "fswatch_idle_dirs_listed",             # contract constant (0)
-        "watchdist_driver_syscalls_idle",       # contract constant (1)
-        "watchdist_dirs_small", "watchdist_dirs_large",  # fixture consts
         "fswatch_idle_batch_sec_sparse",        # ~= idle_batch_sec
         "fswatch_seeded_rows",                  # == churn_rows
         "fswatch_tree_entries",                 # fixture constant

@@ -462,9 +462,11 @@ def cmd_watch(args):
     ``--stats-dir`` (with ``--apply``) additionally maintains the stored
     stats summaries: after each applied batch one refold of the new
     snapshot lands a new stats version — analyze → stats → watch keeps
-    BOTH the snapshot and the summaries continuously current."""
-    from dudb_spark.sources.fsds import register_watch
+    BOTH the snapshot and the summaries continuously current.
 
+    The watcher keeps its file-row snapshot under ``--state-dir``;
+    without one it uses a temp dir that is removed when the watch
+    ends."""
     spark = _spark()
     cat = None
     if args.db:
@@ -495,69 +497,38 @@ def cmd_watch(args):
         # old code silently fell through to the unseeded whole-tree dump
         # (round-9 ADVICE, low) — refuse like the --apply/--db check
         raise SystemExit("watch --full-resync requires --apply")
-    if getattr(args, "lstat_mode", "driver") == "distributed":
-        # the dir-signature sweep as a Spark job (sources/watchdist.py):
-        # driver work is O(churn) + one root lstat per batch, tree size
-        # irrelevant.  Needs the stored snapshot as both seed and
-        # per-batch file baseline, hence --db --apply.
-        if cat is None or not args.apply:
-            raise SystemExit(
-                "watch --lstat-mode distributed requires --db --apply"
-            )
-        if getattr(args, "no_prune", False):
-            raise SystemExit(
-                "watch --lstat-mode distributed is the pruned pass by "
-                "construction — --no-prune needs the stream reader, or "
-                "use --full-resync/analyze for exhaustive re-stats"
-            )
-        if getattr(args, "full_resync", False):
-            raise SystemExit(
-                "watch --full-resync reconciles through the stream "
-                "path; drop --lstat-mode distributed for that run"
-            )
+    # the watcher's file-row snapshot lives in state_dir; a temp one is
+    # made here, not in the stream's Python worker, so the finally below
+    # can remove it
+    if args.state_dir:
+        os.makedirs(args.state_dir, exist_ok=True)
+        state_dir = args.state_dir
+    else:
         import tempfile
-        import time as _time
 
-        from dudb_spark.sources.watchdist import DistributedWatcher
+        state_dir = tempfile.mkdtemp(prefix="dudb_fswatch_")
+    try:
+        _watch_stream(spark, cat, args, stats_dir, state_dir)
+    finally:
+        if not args.state_dir:
+            import shutil
 
-        sd = args.state_dir or tempfile.mkdtemp(prefix="dudb_watchdist_")
-        os.makedirs(sd, exist_ok=True)
-        w = DistributedWatcher(
-            spark, cat, args.prefix, sd,
-            exclude=_exclude_regex(args.exclude) if args.exclude else None,
-        )
-        gen = 0
-        batches = 0
-        try:
-            while True:
-                rows = w.batch(gen)
-                for t in sorted(rows, key=lambda t: (t[0], t[3])):
-                    # t = (op, parent, name, path, is_dir, size, ...)
-                    op, path, size = t[0], t[3], t[5]
-                    sz = "" if size is None else size
-                    print(f"{gen}\t{op}\t{sz}\t{path}", flush=True)
-                if rows:
-                    diff = w.diff_frame(rows).localCheckpoint()
-                    _watch_land(spark, cat, args, diff, stats_dir)
-                    batches += 1
-                    gen += 1
-                if args.once or (
-                    args.max_batches and batches >= args.max_batches
-                ):
-                    break
-                _time.sleep(args.interval)
-        except KeyboardInterrupt:
-            pass
-        return
+            shutil.rmtree(state_dir, ignore_errors=True)
+
+
+def _watch_stream(spark, cat, args, stats_dir, state_dir):
+    """cmd_watch's body once the options are checked: the optional
+    --full-resync reconciliation, then the fswatch stream."""
+    from dudb_spark.sources.fsds import register_watch
+
     register_watch(spark)
-    reader = spark.readStream.format("fswatch")
+    reader = spark.readStream.format("fswatch").option(
+        "state_dir", state_dir
+    )
     if args.exclude:
         reader = reader.option("exclude", _exclude_regex(args.exclude))
     if getattr(args, "no_prune", False):
         reader = reader.option("prune", "false")
-    if getattr(args, "state_dir", None):
-        os.makedirs(args.state_dir, exist_ok=True)
-        reader = reader.option("state_dir", args.state_dir)
     if (
         cat is not None
         and cat.latest_version() is not None
@@ -2214,8 +2185,8 @@ def build_parser():
     p.add_argument(
         "--state-dir",
         help="directory for the watcher's file-row snapshot parquet "
-        "(default: a fresh temp dir; set it to keep a long-running "
-        "watch's state on chosen storage)",
+        "(default: a temp dir removed when the watch ends; set it to "
+        "keep a long-running watch's state on chosen storage)",
     )
     p.add_argument(
         "--full-resync", action="store_true",
@@ -2225,14 +2196,6 @@ def build_parser():
         "unchanged directory mtimes that the default seeded start "
         "defers (J1) — then continue seeded from the reconciled "
         "snapshot.  --no-prune gives per-batch exhaustiveness instead",
-    )
-    p.add_argument(
-        "--lstat-mode", choices=("driver", "distributed"),
-        default="driver",
-        help="where the per-batch dir-signature sweep runs: 'driver' "
-        "(the stream reader's serial/pooled lstat pass) or "
-        "'distributed' (a Spark job over the dir artifact — driver "
-        "work O(churn) regardless of tree size; requires --db --apply)",
     )
     p.set_defaults(func=cmd_watch)
     p = sub.add_parser("du", help="recursive subtree totals (du analog)")

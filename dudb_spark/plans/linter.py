@@ -282,12 +282,6 @@ COLLECT_ALLOW: dict[str, str] = {
     "pipeline/similarity.py::label_outliers":
         "one centroid row per label; the centroids must become plan "
         "literals for the scan-side cosine",
-    "sources/watchdist.py::DistributedWatcher.batch":
-        "sweep output is churn-only by construction (executors return "
-        "only sig-changed dirs); lineage descendants and child probes "
-        "are subsets of that churn",
-    "sources/watchdist.py::DistributedWatcher._prev_file_rows":
-        "pushed-down parent IN (churned dirs) read — churn-sized",
     "operators/stats.py::StatsResult.report_rows":
         "at most 5n ranked prefix rows (row_number <= n per metric) plus "
         "one sum row per owner and one totals row — bounded by n and the "
@@ -309,9 +303,9 @@ COLLECT_ALLOW: dict[str, str] = {
 # unlisted function fails tests/test_plan_lint.py; a stale entry fails it
 # too.  Key: relpath::qualname of the enclosing function.
 PIN_ALLOW: dict[str, str] = {
-    "cli.py::cmd_watch":
-        "per-batch diff frames — churn-bounded (rows that changed since "
-        "the last poll)",
+    "cli.py::_watch_stream":
+        "--full-resync's reconciliation diff: the rows that differ from "
+        "the stored snapshot — churn-sized unless the snapshot is stale",
     "operators/quantiles.py::weighted_quantiles":
         "CORPUS-SIZED: the sorted cumulative-weight frame is one row "
         "per input value by construction — any exact weighted quantile "

@@ -45,6 +45,7 @@ from __future__ import annotations
 
 import os as _os
 import re
+import stat as stat_mod
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -52,6 +53,8 @@ from pyspark.sql.datasource import (
     InputPartition,
     SimpleDataSourceStreamReader,
 )
+
+from dudb_spark.sources.crawler import _entry_row
 
 _FIELDS = (
     "parent", "name", "path", "is_dir", "size", "blocks", "mode",
@@ -63,6 +66,22 @@ _DDL = (
     "size long, blocks long, mode long, mtime timestamp, "
     "uid long, gid long, device long, inode long, error string"
 )
+
+
+def _error_row(path: str, detail: str) -> tuple:
+    """In-band error row: path/parent/name filled, stat fields null,
+    ``detail`` in the trailing error column."""
+    row = [None] * len(_FIELDS)
+    row[_FIELDS.index("parent")] = _os.path.dirname(path) or None
+    row[_FIELDS.index("name")] = _os.path.basename(path)
+    row[_FIELDS.index("path")] = path
+    return tuple(row) + (detail,)
+
+
+def _stat_row(parent: str, name: str, st, is_dir: bool) -> tuple:
+    """One lstat result as a row tuple (fields + null error)."""
+    er = _entry_row(parent, name, st, is_dir)
+    return tuple(er[f] for f in _FIELDS) + (None,)
 
 
 class _Subtree(InputPartition):
@@ -134,19 +153,12 @@ class FsWalkReader(DataSourceReader):
     def read(self, partition):
         from dudb_spark.sources.crawler import _scan_one
 
-        nf = len(_FIELDS)
-
         def emit(entries, errors):
             for e in entries:
                 yield tuple(e[f] for f in _FIELDS) + (None,)
             # unreadable paths: in-band error rows (see module doc)
             for err in errors:
-                ep = err["path"]
-                row = [None] * nf
-                row[_FIELDS.index("parent")] = _os.path.dirname(ep) or None
-                row[_FIELDS.index("name")] = _os.path.basename(ep)
-                row[_FIELDS.index("path")] = ep
-                yield tuple(row) + (err["detail"],)
+                yield _error_row(err["path"], err["detail"])
 
         if partition.listed is not None and not partition.recurse:
             yield from emit(*partition.listed)
@@ -292,10 +304,9 @@ class FsWatchReader(SimpleDataSourceStreamReader):
     - **Per-batch work is O(dirs) lstats + O(churn) everything else**
       (round-10: the earlier pass scandir'ed EVERY directory every
       batch — one getdents sweep over every dirent in the tree): the
-      steady-state pass lstats each known directory directly (serial
-      ~2µs/dir locally; ``lstat_workers=N`` pools the sweep for
-      high-latency filesystems) and enumerates a
-      directory ONLY when its own (mtime, mode) moved — POSIX bumps a
+      steady-state pass lstats each known directory directly (serial,
+      ~2µs/dir locally) and enumerates a directory ONLY when its own
+      (mtime, mode) moved — POSIX bumps a
       dir's mtime on every entry add/remove/rename, so a sig-unchanged
       dir's child name-set cannot have changed.  An idle batch is
       exactly one lstat per dir: zero dirent reads, zero file stats.
@@ -306,12 +317,11 @@ class FsWatchReader(SimpleDataSourceStreamReader):
       (...)`` filter, and only those dirs' rows are rewritten;
       fully-superseded snapshot files are deleted eagerly and partial
       files compact past ``compact_every``.  Designed ceiling (PARITY
-      row S1/X4): per-batch driver work is one parallel lstat per live
+      row S1/X4): per-batch driver work is one lstat per live
       directory — at 100M dirs that is ~100M lstats per batch
-      (minutes serial, overlappable with lstat_workers), so the watch
-      interval must grow with dir count; trees
-      beyond that belong to scheduled ``analyze --distributed`` runs,
-      where the walk is executor-parallel.
+      (minutes serial), so the watch interval must grow with dir
+      count; trees beyond that belong to scheduled ``analyze
+      --distributed`` runs, where the walk is executor-parallel.
     - **Semantics under pruning match the reference's** (J1): an
       in-place file write that does not touch its directory's mtime is
       not seen until that directory next changes (at which point the
@@ -365,12 +375,6 @@ class FsWatchReader(SimpleDataSourceStreamReader):
         # run-forever watch and a full-range exists() sweep per batch
         # would be O(batches²) syscalls cumulative
         self._ondisk: set[int] = set()
-        # lstat_workers > 0 opts the pruned pass's per-dir lstat sweep
-        # into a thread pool — for high-latency filesystems (NFS/
-        # Lustre) where each lstat is a network RTT; on local hot-cache
-        # trees serial is measurably faster (see _scan_pruned)
-        self.lstat_workers = int(options.get("lstat_workers", "0"))
-        self._lstat_pool = None  # lazy, reused across batches
         self.last_batch_stats: dict[str, int] = {}
 
     def initialOffset(self):
@@ -582,149 +586,59 @@ class FsWatchReader(SimpleDataSourceStreamReader):
 
     # -- the bounded rescan ------------------------------------------------
 
-    def _error_row(self, path: str, detail: str) -> tuple:
-        row = [None] * len(_FIELDS)
-        row[_FIELDS.index("parent")] = _os.path.dirname(path) or None
-        row[_FIELDS.index("name")] = _os.path.basename(path)
-        row[_FIELDS.index("path")] = path
-        return tuple(row) + (detail,)
-
-    # with lstat_workers set, trees below this many known dirs still
-    # lstat serially (pool handoff would dominate)
-    _LSTAT_POOL_MIN = 512
-
-    def _rootsig_now(self):
-        try:
-            rst = _os.lstat(self.path.rstrip("/") or "/")
-            return (rst.st_mtime, rst.st_mode)
-        except OSError:
-            return None
-
     def _scan(self):
         """One rescan pass.  Returns (cur_dirstat, cur_rootsig,
         listings, dead_dirs) where listings maps each RESCANNED dir to
         its current file-space rows {path: tuple}.
 
         Steady state (prune=true, state present) is the GETDENTS-FREE
-        pruned pass (:meth:`_scan_pruned`): one direct lstat per known
-        directory — fanned out over a thread pool — and a scandir ONLY
-        for directories whose own (mtime, mode) moved, plus any newly
-        discovered subtree.  POSIX bumps a directory's mtime on every
-        entry add/remove/rename, so a sig-unchanged directory's child
-        NAME SET is provably unchanged and enumerating it is wasted
-        work (the round-9 verdict's remaining driver-proportional
-        cost: the old pass scandir'ed EVERY dir every batch — reading
-        every dirent in the tree — and double-stat'ed every dir-typed
-        child).  An idle batch is now exactly O(dirs) parallel lstats,
-        zero dirent reads, zero file stats.
+        pruned pass: :meth:`_sweep` lstats every known directory and
+        :meth:`_walk` scandirs ONLY the directories whose own (mtime,
+        mode) moved, plus any newly discovered subtree.  POSIX bumps a
+        directory's mtime on every entry add/remove/rename, so a
+        sig-unchanged directory's child NAME SET is provably unchanged
+        and enumerating it is wasted work.  An idle batch is exactly
+        O(dirs) lstats, zero dirent reads, zero file stats.
 
-        First batch / prune=false run the exhaustive walk
-        (:meth:`_scan_full`)."""
-        if self._dirstat is not None and self.prune:
-            return self._scan_pruned()
-        return self._scan_full()
-
-    def _scan_full(self):
-        """Exhaustive BFS walk: every dir scandir'ed, every entry
-        stat'ed — the first-batch resync and the ``prune=false``
-        contract (in-place edits under unchanged dir mtimes surface
-        immediately)."""
-        from dudb_spark.sources.crawler import _entry_row
-
-        pats = [re.compile(self.exclude)] if self.exclude else []
+        The first batch and prune=false run the exhaustive pass — the
+        same walk started at the root with no known dirs, so every dir
+        is scandir'ed and every entry stat'ed (in-place edits under
+        unchanged dir mtimes surface immediately)."""
         root = self.path.rstrip("/") or "/"
+        try:
+            rst = _os.lstat(root)
+            rootsig = (rst.st_mtime, rst.st_mode)
+        except OSError:
+            rootsig = None
         cur_dirstat: dict[str, tuple] = {}
-        listings: dict[str, dict[str, tuple]] = {}
         dead_dirs: list[str] = []  # dirs that became unlistable
-        n_file_stats = 0
-        n_scandirs = 0
-        import stat as stat_mod
-
-        rootsig = self._rootsig_now()
-
-        names = _FIELDS
-        level: list[str] = [root]
-        while level:
-            nxt: list[str] = []
-            for d in level:
-                listing: dict[str, tuple] = {}
-                listings[d] = listing
-                try:
-                    with _os.scandir(d) as it:
-                        dents = sorted(it, key=lambda e: e.name)
-                    n_scandirs += 1
-                except OSError as e:
-                    # unreadable dir: its row (under its parent) becomes
-                    # an error row, matching _scan_one's error bucket,
-                    # and its file rows leave the snapshot as deletions
-                    if d != root:
-                        cur_dirstat[d] = self._error_row(d, str(e))
-                    listings.pop(d, None)
-                    dead_dirs.append(d)
-                    continue
-                for de in dents:
-                    child = f"{d.rstrip('/')}/{de.name}"
-                    if any(x.search(child) for x in pats):
-                        continue
-                    try:
-                        is_dirtype = de.is_dir(follow_symlinks=False)
-                    except OSError:
-                        is_dirtype = False
-                    if is_dirtype:
-                        try:
-                            st = de.stat(follow_symlinks=False)
-                        except OSError as e:
-                            cur_dirstat[child] = self._error_row(
-                                child, str(e)
-                            )
-                            dead_dirs.append(child)
-                            continue
-                        er = _entry_row(d, de.name, st, True)
-                        cur_dirstat[child] = (
-                            tuple(er[f] for f in names) + (None,)
-                        )
-                        if not stat_mod.S_ISLNK(st.st_mode):
-                            nxt.append(child)
-                    else:
-                        try:
-                            st = de.stat(follow_symlinks=False)
-                            n_file_stats += 1
-                        except OSError as e:
-                            listing[child] = self._error_row(
-                                child, str(e)
-                            )
-                            continue
-                        er = _entry_row(
-                            d, de.name, st,
-                            stat_mod.S_ISDIR(st.st_mode),
-                        )
-                        listing[child] = (
-                            tuple(er[f] for f in names) + (None,)
-                        )
-            level = nxt
+        pruned = self._dirstat is not None and self.prune
+        if pruned:
+            known = self._dirstat
+            rescan = self._sweep(root, cur_dirstat, dead_dirs)
+            if rootsig is None or self._rootsig is None \
+                    or rootsig != self._rootsig:
+                rescan.append(root)
+        else:
+            known, rescan = {}, [root]
+        listings, n_scandirs, n_file_stats = self._walk(
+            root, rescan, known, cur_dirstat, dead_dirs
+        )
         self.last_batch_stats = {
             "dirs_walked": len(cur_dirstat) + 1,
             "dirs_rescanned": len(listings),
             "files_statted": n_file_stats,
-            "dir_lstats": len(cur_dirstat) + 1,
+            "dir_lstats": (len(known) if pruned else len(cur_dirstat)) + 1,
             "dirs_listed": n_scandirs,
         }
         return cur_dirstat, rootsig, listings, dead_dirs
 
-    def _scan_pruned(self):
-        """Steady-state pass: per-batch driver work is one lstat per
-        known dir + getdents/stat work proportional to the CHURN.
-
-        Phase 1 lstats every known directory directly (serially by
-        default — ~2µs each on a local hot cache; ``lstat_workers=N``
-        opts into a persistent thread pool for high-latency
-        filesystems, where os.lstat releases the GIL and N threads
-        overlap N in-flight RTTs — the reference walker's concurrency,
-        analyze.go:104) — each dir's own row stays exact every
-        batch, and its (mtime, mode) sig decides whether its listing
-        can have changed.  Phase 2 scandirs only the sig-changed dirs,
-        re-statting their file entries and walking any NEW child dir's
-        whole subtree.
+    def _sweep(self, root: str, cur_dirstat: dict, dead_dirs: list):
+        """Phase 1 of the pruned pass: one direct lstat per known dir,
+        no dirent enumeration (serial: ~2µs each on a local hot cache).
+        Each dir's own row lands in ``cur_dirstat`` exact every batch;
+        returns the dirs whose (mtime, mode) sig moved or whose error
+        state cleared — the only ones whose listing can have changed.
 
         Semantics deltas vs the exhaustive pass, both J1-consistent
         (deferred until the dir's own sig moves): (1) a listing-
@@ -733,80 +647,25 @@ class FsWatchReader(SimpleDataSourceStreamReader):
         dir next churns — a chmod is seen immediately because mode is
         in the sig; (2) a dir reachable only through a symlinked
         ancestor (the ancestor was replaced by a symlink) must leave
-        dir-space even though a direct lstat still resolves — phase 1
-        force-drops every known dir under a gone lineage."""
-        import stat as stat_mod
-
-        from dudb_spark.sources.crawler import _entry_row
-
-        pats = [re.compile(self.exclude)] if self.exclude else []
-        root = self.path.rstrip("/") or "/"
-        prev_dirstat = self._dirstat
-        names = _FIELDS
-        cur_dirstat: dict[str, tuple] = {}
-        listings: dict[str, dict[str, tuple]] = {}
-        dead_dirs: list[str] = []
-        n_file_stats = 0
-        n_scandirs = 0
-
-        rootsig = self._rootsig_now()
-
-        # -- phase 1: one lstat per known dir, no dirent enumeration --
-        def lstat_one(d: str):
+        dir-space even though a direct lstat still resolves — every
+        known dir under a gone lineage is force-dropped."""
+        gone: set[str] = set()
+        rescan: list[str] = []
+        for d, pv in self._dirstat.items():
             try:
                 st = _os.lstat(d)
             except FileNotFoundError:
-                return d, None, None  # gone
-            except OSError as e:
-                return d, None, str(e)  # unreadable: error row
-            if not stat_mod.S_ISDIR(st.st_mode):
-                return d, None, None  # type flip: leaves dir-space
-            return d, st, None
-
-        known = list(prev_dirstat)
-        if self.lstat_workers > 0 and len(known) >= self._LSTAT_POOL_MIN:
-            # opt-in pool for HIGH-LATENCY filesystems (NFS/Lustre: one
-            # lstat is a network RTT, so N threads overlap N in-flight
-            # RTTs).  On a hot local cache an lstat is ~2µs and thread
-            # handoff costs more than the syscall — measured 6x SLOWER
-            # pooled — hence serial by default.  Persistent pool +
-            # manual chunking: ThreadPoolExecutor.map ignores chunksize
-            # (ProcessPool-only) and per-batch pool creation pays the
-            # thread starts every trigger.
-            if self._lstat_pool is None:
-                from concurrent.futures import ThreadPoolExecutor
-
-                self._lstat_pool = ThreadPoolExecutor(
-                    self.lstat_workers,
-                    thread_name_prefix="fswatch-lstat",
-                )
-            nch = self.lstat_workers * 4
-            chunks = [known[i::nch] for i in range(nch)]
-            results = [
-                r
-                for part in self._lstat_pool.map(
-                    lambda ch: [lstat_one(d) for d in ch], chunks
-                )
-                for r in part
-            ]
-        else:
-            results = [lstat_one(d) for d in known]
-
-        gone: set[str] = set()
-        rescan: list[str] = []
-        for d, st, err in results:
-            pv = prev_dirstat[d]
-            if st is None and err is None:
                 gone.add(d)
                 continue
-            if err is not None:
-                cur_dirstat[d] = self._error_row(d, err)
+            except OSError as e:
+                cur_dirstat[d] = _error_row(d, str(e))
                 dead_dirs.append(d)
                 continue
-            er = _entry_row(
-                _os.path.dirname(d), _os.path.basename(d), st, True
-            )
-            row = tuple(er[f] for f in names) + (None,)
+            if not stat_mod.S_ISDIR(st.st_mode):
+                gone.add(d)  # type flip: leaves dir-space
+                continue
+            row = _stat_row(_os.path.dirname(d), _os.path.basename(d),
+                            st, True)
             cur_dirstat[d] = row
             if (
                 row[self._MTIME_I] != pv[self._MTIME_I]
@@ -828,29 +687,39 @@ class FsWatchReader(SimpleDataSourceStreamReader):
                         break
                     i = p.rfind("/")
             rescan = [d for d in rescan if d in cur_dirstat]
+        return rescan
 
-        if rootsig is None or self._rootsig is None \
-                or rootsig != self._rootsig:
-            rescan.append(root)
-
-        # -- phase 2: scandir ONLY the sig-changed dirs + new subtrees --
-        queued = set(rescan)
-        level = rescan
+    def _walk(self, root: str, level: list, known, cur_dirstat: dict,
+              dead_dirs: list):
+        """The one scandir walk: list each dir in ``level``, stat its
+        entries, and descend into every child dir not in ``known`` (a
+        NEW dir's whole subtree is churn).  Started at the root with no
+        known dirs it is the exhaustive pass; given the pruned pass's
+        sig-changed dirs it is phase 2.  Child dir rows land in
+        ``cur_dirstat``, unlistable dirs in ``dead_dirs``.  Returns
+        (listings, dirs listed, files statted)."""
+        pats = [re.compile(self.exclude)] if self.exclude else []
+        listings: dict[str, dict[str, tuple]] = {}
+        n_scandirs = 0
+        n_file_stats = 0
+        queued = set(level)
         while level:
             nxt: list[str] = []
             for d in level:
-                listing: dict[str, tuple] = {}
-                listings[d] = listing
                 try:
                     with _os.scandir(d) as it:
                         dents = sorted(it, key=lambda e: e.name)
-                    n_scandirs += 1
                 except OSError as e:
+                    # unreadable dir: its row (under its parent) becomes
+                    # an error row, matching _scan_one's error bucket,
+                    # and its file rows leave the snapshot as deletions
                     if d != root:
-                        cur_dirstat[d] = self._error_row(d, str(e))
-                    listings.pop(d, None)
+                        cur_dirstat[d] = _error_row(d, str(e))
                     dead_dirs.append(d)
                     continue
+                n_scandirs += 1
+                listing: dict[str, tuple] = {}
+                listings[d] = listing
                 for de in dents:
                     child = f"{d.rstrip('/')}/{de.name}"
                     if any(x.search(child) for x in pats):
@@ -859,52 +728,31 @@ class FsWatchReader(SimpleDataSourceStreamReader):
                         is_dirtype = de.is_dir(follow_symlinks=False)
                     except OSError:
                         is_dirtype = False
-                    if is_dirtype:
-                        try:
-                            st = de.stat(follow_symlinks=False)
-                        except OSError as e:
-                            cur_dirstat[child] = self._error_row(
-                                child, str(e)
-                            )
+                    try:
+                        st = de.stat(follow_symlinks=False)
+                    except OSError as e:
+                        if is_dirtype:
+                            cur_dirstat[child] = _error_row(child, str(e))
                             dead_dirs.append(child)
-                            continue
-                        er = _entry_row(d, de.name, st, True)
-                        cur_dirstat[child] = (
-                            tuple(er[f] for f in names) + (None,)
-                        )
+                        else:
+                            listing[child] = _error_row(child, str(e))
+                        continue
+                    if is_dirtype:
+                        cur_dirstat[child] = _stat_row(d, de.name, st, True)
                         if (
                             not stat_mod.S_ISLNK(st.st_mode)
-                            and child not in prev_dirstat
+                            and child not in known
                             and child not in queued
                         ):
-                            # NEW dir: its whole subtree is churn — walk
                             queued.add(child)
                             nxt.append(child)
                     else:
-                        try:
-                            st = de.stat(follow_symlinks=False)
-                            n_file_stats += 1
-                        except OSError as e:
-                            listing[child] = self._error_row(
-                                child, str(e)
-                            )
-                            continue
-                        er = _entry_row(
-                            d, de.name, st,
-                            stat_mod.S_ISDIR(st.st_mode),
-                        )
-                        listing[child] = (
-                            tuple(er[f] for f in names) + (None,)
+                        n_file_stats += 1
+                        listing[child] = _stat_row(
+                            d, de.name, st, stat_mod.S_ISDIR(st.st_mode)
                         )
             level = nxt
-        self.last_batch_stats = {
-            "dirs_walked": len(cur_dirstat) + 1,
-            "dirs_rescanned": len(listings),
-            "files_statted": n_file_stats,
-            "dir_lstats": len(known) + 1,
-            "dirs_listed": n_scandirs,
-        }
-        return cur_dirstat, rootsig, listings, dead_dirs
+        return listings, n_scandirs, n_file_stats
 
     def read(self, start: dict):
         gen = int(start.get("gen", 0))

@@ -625,9 +625,9 @@ def test_apply_changes_tracks_live_tree(spark, tmp_path):
 
 
 def test_watch_batches_land_plain_snapshots(spark, tmp_path):
-    """Three ``watch --apply`` batches (DistributedWatcher batches landed
-    through ``_watch_land``, no stream thread) each land a plain snapshot
-    version: ``_layout.json`` with the exact tree size and no
+    """Three ``watch --apply`` batches (seeded fswatch reader batches
+    landed through ``_watch_land``, no stream thread) each land a plain
+    snapshot version: ``_layout.json`` with the exact tree size and no
     ``_delta.json``.  The latest tables equal the chained in-memory
     apply_changes and a fresh crawl, and prune keeps ``latest``."""
     from types import SimpleNamespace
@@ -635,7 +635,7 @@ def test_watch_batches_land_plain_snapshots(spark, tmp_path):
     from dudb_spark.cli import _watch_land
     from dudb_spark.operators.ingest import apply_changes
     from dudb_spark.sources.catalog import SnapshotCatalog, write_pointer
-    from dudb_spark.sources.watchdist import DistributedWatcher
+    from dudb_spark.sources.fsds import _WATCH_DDL, FsWatchReader
 
     root = str(tmp_path / "live")
     os.makedirs(f"{root}/a")
@@ -647,12 +647,15 @@ def test_watch_batches_land_plain_snapshots(spark, tmp_path):
     cat = SnapshotCatalog(spark, db)
     p0, e0, _ = crawl_local(root)
     cat.write_snapshot(*_dfs(spark, p0, e0))
-    w = DistributedWatcher(spark, cat, root, str(tmp_path / "state"))
-    assert w.batch(0) == []
+    os.makedirs(tmp_path / "state")
+    w = FsWatchReader({"path": root, "seed": cat.watch_seed(root),
+                       "state_dir": str(tmp_path / "state")})
+    rows, off = w.read({"gen": 0})
+    assert list(rows) == []
 
     def churn(i):
         """Batch i's churn; the touched dirs get a distinct mtime of
-        their own, so the sweep sees them without waiting out the
+        their own, so the lstat sweep sees them without waiting out the
         filesystem's mtime granularity."""
         touched = [f"{root}/a"]
         with open(f"{root}/a/new{i}.dat", "w") as f:
@@ -672,9 +675,10 @@ def test_watch_batches_land_plain_snapshots(spark, tmp_path):
     args = SimpleNamespace(prefix=root)
     for i in range(3):
         churn(i)
-        rows = w.batch(i + 1)
+        rows, off = w.read(off)
+        rows = list(rows)
         assert rows
-        diff = w.diff_frame(rows).localCheckpoint()
+        diff = spark.createDataFrame(rows, _WATCH_DDL).localCheckpoint()
         res = apply_changes(direct_p, direct_e, diff, root=root,
                             with_summary=False, cache=False)
         direct_p, direct_e = _dfs(spark, res.prefixes.collect(),

@@ -1,23 +1,24 @@
-"""Distributed watch loop (sources/watchdist.py): the fswatch dir-
-signature sweep as a Spark job.  Pins (a) emission parity with the
-seeded stream on identical churn, (b) the bounded-driver-work contract
-(idle batch = one root lstat, zero scandirs, zero file stats, zero
-sweep rows — independent of tree size), (c) subtree deletes, new
-subtrees, excludes, and snapshot convergence to a fresh crawl."""
+"""``watch --db --apply`` end to end on the fswatch stream path: the
+feed holds exactly the churn (no row for an untouched sibling file in
+a rescanned dir), the landed snapshot equals a fresh crawl across
+batches, excludes and ``--stats-dir`` compose, the errors table carries
+across a batch, and a watch leaves no temp state dir behind."""
 
 from __future__ import annotations
 
 import json
 import os
 import shutil
+import tempfile
 import time
+from types import SimpleNamespace
 
 import pytest
 
-from dudb_spark.cli import main
+from dudb_spark.cli import _watch_land, main
 from dudb_spark.sources.catalog import SnapshotCatalog
 from dudb_spark.sources.crawler import crawl_local
-from dudb_spark.sources.watchdist import DistributedWatcher
+from dudb_spark.sources.fsds import _WATCH_DDL, FsWatchReader
 
 
 @pytest.fixture()
@@ -28,6 +29,7 @@ def tree(tmp_path):
     (root / "proj/a/x.log").write_text("hi")
     (root / "proj/a/y.txt").write_text("aa")
     (root / "proj/b/z.log").write_text("yo")
+    (root / "proj/b/w.dat").write_text("untouched")
     return str(root)
 
 
@@ -37,7 +39,9 @@ def run(capsys, *argv):
 
 
 def _mutate(tree):
-    """Standard churn set: new nested subtree, new file, deleted file."""
+    """Standard churn set: new nested subtree, new file, deleted file.
+    proj/b's mtime moves with the delete, so the watch rescans it; its
+    untouched sibling w.dat must not enter the feed."""
     time.sleep(1.05)  # dir-mtime granularity
     os.makedirs(f"{tree}/proj/c/deep")
     with open(f"{tree}/proj/c/new.dat", "w") as f:
@@ -47,127 +51,115 @@ def _mutate(tree):
     os.unlink(f"{tree}/proj/b/z.log")
 
 
-def test_distributed_watch_end_to_end(spark, tree, tmp_path, capsys):
-    """analyze → churn → one distributed batch: emissions are exactly
-    the churn, the landed snapshot equals a fresh crawl."""
+CHURN = {
+    ("added", "/proj/c"), ("added", "/proj/c/deep"),
+    ("added", "/proj/c/new.dat"), ("added", "/proj/c/deep/d2.dat"),
+    ("changed", "/proj"), ("changed", "/proj/b"),
+    ("deleted", "/proj/b/z.log"),
+}
+
+
+def _feed(out, tree):
+    """(op, path below the tree) of every printed feed line."""
+    return [
+        (ln.split("\t")[1], ln.split("\t")[3].replace(tree, ""))
+        for ln in out.strip().splitlines() if not ln.startswith("{")
+    ]
+
+
+def _reader(cat, tree, tmp_path):
+    """A stream reader seeded from the stored snapshot, as ``watch
+    --apply`` starts it."""
+    state = tmp_path / "state"
+    state.mkdir(exist_ok=True)
+    return FsWatchReader({"path": tree, "seed": cat.watch_seed(tree),
+                          "state_dir": str(state)})
+
+
+def _batch(spark, r, off):
+    rows, off = r.read(off)
+    rows = list(rows)
+    return rows, spark.createDataFrame(rows, _WATCH_DDL), off
+
+
+def _entries(cat):
+    return sorted(
+        (r["path"], r["size"]) for r in cat.tables().entries.collect()
+    )
+
+
+def _crawled(tree):
+    _, want_e, _ = crawl_local(tree)
+    return sorted((e["path"], e["size"]) for e in want_e)
+
+
+def test_watch_apply_end_to_end(spark, tree, tmp_path, capsys):
+    """analyze → churn → one applied batch: the feed is exactly the
+    churn, once per path, and the landed snapshot equals a fresh
+    crawl."""
     db = str(tmp_path / "db")
     json.loads(run(capsys, "analyze", "--db", db, tree))
     _mutate(tree)
     out = run(capsys, "watch", "--once", "--db", db, "--apply",
-              "--lstat-mode", "distributed",
               "--state-dir", str(tmp_path / "state"), tree)
-    lines = [ln.split("\t") for ln in out.strip().splitlines()
-             if not ln.startswith("{")]
-    got = {(op, path.replace(tree, "")) for _, op, _, path in lines}
-    assert got == {
-        ("added", "/proj/c"), ("added", "/proj/c/deep"),
-        ("added", "/proj/c/new.dat"), ("added", "/proj/c/deep/d2.dat"),
-        ("changed", "/proj"), ("changed", "/proj/b"),
-        ("deleted", "/proj/b/z.log"),
-    }
-    cat = SnapshotCatalog(spark, db)
-    got_snap = sorted(
-        (r["path"], r["size"]) for r in cat.tables().entries.collect()
-    )
-    _, want_e, _ = crawl_local(tree)
-    assert got_snap == sorted((e["path"], e["size"]) for e in want_e)
+    feed = _feed(out, tree)
+    assert sorted(feed) == sorted(CHURN)
+    assert "/proj/b/w.dat" not in {p for _, p in feed}
+    assert _entries(SnapshotCatalog(spark, db)) == _crawled(tree)
 
 
-def test_distributed_matches_stream_emissions(spark, tree, tmp_path,
-                                              capsys):
-    """The distributed batch-0 reconciliation emits the SAME (op, size,
-    path) set as the seeded stream's on identical churn — the two modes
-    are interchangeable."""
-    db_s = str(tmp_path / "db_s")
-    db_d = str(tmp_path / "db_d")
-    json.loads(run(capsys, "analyze", "--db", db_s, tree))
-    json.loads(run(capsys, "analyze", "--db", db_d, tree))
+def test_watch_print_and_apply_feeds_match(spark, tree, tmp_path,
+                                           capsys):
+    """On identical churn, the seeded print-only feed (``--db`` without
+    ``--apply``) equals the applied one: both hold exactly the churn,
+    with no row for the untouched sibling."""
+    db_p = str(tmp_path / "db_p")
+    db_a = str(tmp_path / "db_a")
+    json.loads(run(capsys, "analyze", "--db", db_p, tree))
+    json.loads(run(capsys, "analyze", "--db", db_a, tree))
     _mutate(tree)
-    out_s = run(capsys, "watch", "--once", "--db", db_s, "--apply", tree)
-    out_d = run(capsys, "watch", "--once", "--db", db_d, "--apply",
-                "--lstat-mode", "distributed",
-                "--state-dir", str(tmp_path / "state"), tree)
-
-    def feed(out):
-        return sorted(
-            tuple(ln.split("\t")[1:]) for ln in out.strip().splitlines()
-            if not ln.startswith("{")
-        )
-
-    assert feed(out_s) == feed(out_d)
-    # and both landed snapshots agree row for row
-    cols = ["path", "is_dir", "size", "mode", "inode"]
-    gs = sorted(tuple(r[c] for c in cols) for r in
-                SnapshotCatalog(spark, db_s).tables().entries.collect())
-    gd = sorted(tuple(r[c] for c in cols) for r in
-                SnapshotCatalog(spark, db_d).tables().entries.collect())
-    assert gs == gd
-
-
-def test_idle_batch_driver_work_is_constant(spark, tree, tmp_path,
-                                            capsys):
-    """The bounded-work contract the mode exists for: an idle batch
-    does ZERO driver filesystem work beyond the one root lstat — no
-    scandirs, no file stats, no sweep rows collected — regardless of
-    tree size, and writes no artifact version."""
-    db = str(tmp_path / "db")
-    json.loads(run(capsys, "analyze", "--db", db, tree))
-    cat = SnapshotCatalog(spark, db)
-    w = DistributedWatcher(spark, cat, tree, str(tmp_path / "state"))
-    rows0 = w.batch(0)  # reconciliation: no churn since analyze
-    assert rows0 == []
-    ver_after_0 = w._ver
-    rows1 = w.batch(1)
-    assert rows1 == []
-    s = w.last_batch_stats
-    assert s["driver_lstats"] == 1
-    assert s["dirs_listed"] == 0
-    assert s["files_statted"] == 0
-    assert s["sweep_rows"] == 0
-    assert s["dirs_swept"] == 3  # proj, proj/a, proj/b
-    assert w._ver == ver_after_0  # idle batch: artifact untouched
+    out_p = run(capsys, "watch", "--once", "--db", db_p, tree)
+    out_a = run(capsys, "watch", "--once", "--db", db_a, "--apply", tree)
+    assert sorted(_feed(out_p, tree)) == sorted(CHURN)
+    assert sorted(_feed(out_a, tree)) == sorted(CHURN)
+    assert SnapshotCatalog(spark, db_p).versions() == ["v0001"]
+    assert _entries(SnapshotCatalog(spark, db_a)) == _crawled(tree)
 
 
 def test_multi_batch_same_instance(spark, tree, tmp_path, capsys):
-    """Artifact advances across batches within one run: churn lands in
-    batch N, batch N+1 is idle again, a second churn is picked up."""
+    """One reader across batches: churn lands in batch N, batch N+1 is
+    idle (offset held), a second churn is picked up, and every batch's
+    lstat set tracks the dirs the snapshot holds."""
     db = str(tmp_path / "db")
     json.loads(run(capsys, "analyze", "--db", db, tree))
-    from types import SimpleNamespace
-
-    from dudb_spark.cli import _watch_land
-
     cat = SnapshotCatalog(spark, db)
     args = SimpleNamespace(prefix=tree)
-    w = DistributedWatcher(spark, cat, tree, str(tmp_path / "state"))
-    assert w.batch(0) == []
+    r = _reader(cat, tree, tmp_path)
+    rows, _, off = _batch(spark, r, {"gen": 0})
+    assert rows == []
 
     _mutate(tree)
-    rows = w.batch(1)
-    ops = {(t[0], t[3].replace(tree, "")) for t in rows}
-    assert ("added", "/proj/c/deep/d2.dat") in ops
-    assert ("deleted", "/proj/b/z.log") in ops
-    _watch_land(spark, cat, args, w.diff_frame(rows), None)
+    rows, diff, off = _batch(spark, r, off)
+    assert {(t[0], t[3].replace(tree, "")) for t in rows} == CHURN
+    assert _watch_land(spark, cat, args, diff, None)
 
-    assert w.batch(2) == []  # steady again
-    assert w.last_batch_stats["dirs_swept"] == 5  # + proj/c, proj/c/deep
+    rows, _, off2 = _batch(spark, r, off)
+    assert rows == [] and off2 == off  # steady again
+    assert r.last_batch_stats["dir_lstats"] == 6  # root + 5 dirs
 
     time.sleep(1.05)
     shutil.rmtree(f"{tree}/proj/c")
-    rows = w.batch(3)
-    ops = {(t[0], t[3].replace(tree, "")) for t in rows}
-    assert {("deleted", "/proj/c"), ("deleted", "/proj/c/deep"),
-            ("deleted", "/proj/c/new.dat"),
-            ("deleted", "/proj/c/deep/d2.dat"),
-            ("changed", "/proj")} <= ops
-    _watch_land(spark, cat, args, w.diff_frame(rows), None)
-    assert w.batch(4) == []
-    assert w.last_batch_stats["dirs_swept"] == 3
-
-    got = sorted((r["path"], r["size"])
-                 for r in cat.tables().entries.collect())
-    _, want_e, _ = crawl_local(tree)
-    assert got == sorted((e["path"], e["size"]) for e in want_e)
+    rows, diff, off = _batch(spark, r, off)
+    assert {(t[0], t[3].replace(tree, "")) for t in rows} == {
+        ("deleted", "/proj/c"), ("deleted", "/proj/c/deep"),
+        ("deleted", "/proj/c/new.dat"),
+        ("deleted", "/proj/c/deep/d2.dat"), ("changed", "/proj"),
+    }
+    assert _watch_land(spark, cat, args, diff, None)
+    rows, _, _ = _batch(spark, r, off)
+    assert rows == []
+    assert r.last_batch_stats["dir_lstats"] == 4
+    assert _entries(cat) == _crawled(tree)
 
 
 def test_watch_batch_keeps_errors_table(spark, tree, tmp_path, capsys):
@@ -175,9 +167,7 @@ def test_watch_batch_keeps_errors_table(spark, tree, tmp_path, capsys):
     lands carries the previous version's errors table, so ``errors``
     still lists them."""
     from datetime import datetime
-    from types import SimpleNamespace
 
-    from dudb_spark.cli import _watch_land
     from dudb_spark.model import ERRORS_SCHEMA
 
     db = str(tmp_path / "db")
@@ -188,12 +178,14 @@ def test_watch_batch_keeps_errors_table(spark, tree, tmp_path, capsys):
            "permission denied")
     cat.write_snapshot(t.prefixes, t.entries,
                        spark.createDataFrame([err], ERRORS_SCHEMA))
-    w = DistributedWatcher(spark, cat, tree, str(tmp_path / "state"))
-    assert w.batch(0) == []
+    r = _reader(cat, tree, tmp_path)
+    rows, _, off = _batch(spark, r, {"gen": 0})
+    assert rows == []
     _mutate(tree)
-    rows = w.batch(1)
-    assert _watch_land(spark, cat, SimpleNamespace(prefix=tree),
-                       w.diff_frame(rows), None)
+    rows, diff, _ = _batch(spark, r, off)
+    assert rows
+    assert _watch_land(spark, cat, SimpleNamespace(prefix=tree), diff,
+                       None)
     assert cat.latest_version() == "v0003"
     capsys.readouterr()
     out = run(capsys, "errors", "--db", db, tree)
@@ -201,18 +193,9 @@ def test_watch_batch_keeps_errors_table(spark, tree, tmp_path, capsys):
         f"{tree}/proj/locked\t2024-01-02 03:04:05\tpermission denied"]
 
 
-def test_distributed_requires_db_apply(tree, tmp_path):
-    with pytest.raises(SystemExit, match="requires --db --apply"):
-        main(["watch", "--once", "--lstat-mode", "distributed", tree])
-    with pytest.raises(SystemExit, match="requires --db --apply"):
-        main(["watch", "--once", "--db", str(tmp_path / "nodb"),
-              "--lstat-mode", "distributed", tree])
-
-
-def test_distributed_respects_exclude(spark, tree, tmp_path, capsys):
+def test_watch_apply_respects_exclude(spark, tree, tmp_path, capsys):
     """Excluded paths in a NEW subtree never enter the feed or the
-    snapshot (the sweep side needs no filter: the artifact only ever
-    holds included dirs)."""
+    snapshot."""
     db = str(tmp_path / "db")
     json.loads(run(capsys, "analyze", "--db", db, tree,
                    "--exclude", r"\.tmp$"))
@@ -223,16 +206,17 @@ def test_distributed_respects_exclude(spark, tree, tmp_path, capsys):
     with open(f"{tree}/proj/n/skip.tmp", "w") as f:
         f.write("s")
     out = run(capsys, "watch", "--once", "--db", db, "--apply",
-              "--lstat-mode", "distributed", "--exclude", r"\.tmp$",
-              "--state-dir", str(tmp_path / "state"), tree)
+              "--exclude", r"\.tmp$", tree)
     assert "keep.dat" in out and "skip.tmp" not in out
+    paths = {p for p, _ in _entries(SnapshotCatalog(spark, db))}
+    assert f"{tree}/proj/n/keep.dat" in paths
+    assert f"{tree}/proj/n/skip.tmp" not in paths
 
 
-def test_distributed_watch_maintains_stats(spark, tree, tmp_path,
-                                           capsys):
-    """--lstat-mode distributed composes with --stats-dir: the batch
-    lands through the same _watch_land, so the stored stats summaries
-    fold-update per applied batch and equal a fresh full fold."""
+def test_watch_apply_maintains_stats(spark, tree, tmp_path, capsys):
+    """--apply composes with --stats-dir: the batch lands through
+    _watch_land, so the stored stats summaries refold per applied batch
+    and equal a fresh full fold."""
     db = str(tmp_path / "db")
     sd = str(tmp_path / "stats")
     json.loads(run(capsys, "analyze", "--db", db, tree))
@@ -240,8 +224,7 @@ def test_distributed_watch_maintains_stats(spark, tree, tmp_path,
                    "--stats-dir", sd, tree))
     _mutate(tree)
     out = run(capsys, "watch", "--once", "--db", db, "--apply",
-              "--lstat-mode", "distributed", "--stats-dir", sd,
-              "--state-dir", str(tmp_path / "state"), tree)
+              "--stats-dir", sd, tree)
     stats_lines = [json.loads(ln) for ln in out.strip().splitlines()
                    if ln.startswith("{") and '"stats"' in ln]
     assert stats_lines, out
@@ -250,3 +233,32 @@ def test_distributed_watch_maintains_stats(spark, tree, tmp_path,
                            "--stats-dir", str(tmp_path / "stats2"),
                            tree))
     assert maintained == fresh["totals"]
+
+
+def test_watch_removes_its_temp_state_dir(spark, tree, tmp_path, capsys,
+                                          monkeypatch):
+    """Without --state-dir, watch makes its state dir itself and removes
+    it when the watch ends; under --apply that dir held the seed's file
+    rows."""
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    made = []
+    real_mkdtemp = tempfile.mkdtemp
+
+    def track(*a, **kw):
+        d = real_mkdtemp(*a, **kw)
+        if kw.get("prefix", "").startswith("dudb_fswatch_"):
+            made.append(d)
+        return d
+
+    monkeypatch.setattr(tempfile, "mkdtemp", track)
+    db = str(tmp_path / "db")
+    json.loads(run(capsys, "analyze", "--db", db, tree))
+    _mutate(tree)
+    out = run(capsys, "watch", "--once", "--db", db, "--apply", tree)
+    assert "z.log" in out
+    run(capsys, "watch", "--once", tree)
+    assert len(made) == 2
+    assert not any(os.path.exists(d) for d in made)
+    assert os.listdir(tmp) == []

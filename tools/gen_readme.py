@@ -41,18 +41,6 @@ def render(rec: dict, pytest_line: str | None) -> str:
         os.path.getmtime(os.path.join(ROOT, "BENCH_FULL_LOCAL.json"))
     ).isoformat()
     pytest_part = f"  pytest: {pytest_line}.\n" if pytest_line else ""
-    wd = ""
-    if "watchdist_idle_scaling" in rec:
-        wd = (
-            f"- Distributed watch sweep (`--lstat-mode distributed`): "
-            f"idle-batch wall time ×{rec['watchdist_idle_scaling']} "
-            f"for ×{round(rec['watchdist_dirs_large'] / max(rec['watchdist_dirs_small'], 1), 1)} "
-            f"the directories "
-            f"({rec['watchdist_dirs_small']} dirs {rec['watchdist_idle_small_sec']} s → "
-            f"{rec['watchdist_dirs_large']} dirs {rec['watchdist_idle_large_sec']} s) — "
-            f"driver work is one root lstat + zero scandirs at every "
-            f"tree size; the O(dirs) lstats run executor-side.\n"
-        )
     return (
         f"## Measured results (local[32], sf{sf} synthetic set, {day}; "
         f"generated by tools/gen_readme.py from BENCH_FULL_LOCAL.json)\n"
@@ -124,7 +112,6 @@ def render(rec: dict, pytest_line: str | None) -> str:
         "  published rate is ≈4,700 files/s sustained (BASELINE.md); "
         "all paths are\n"
         "  shuffle-minimal and scale with executors.\n"
-        f"{wd}"
     ).replace("{loads}", loads)
 
 
