@@ -2810,22 +2810,31 @@ def _build_crawl_tree(root: str) -> None:
 
 
 def q70_crawler_walk(spark, sf_dir):
-    """S1/S2/S3/X4: the distributed BFS crawler over a deterministic
-    staged tree — exclusion filtering (*.tmp never ingested), symlink
-    recorded-but-not-descended, per-dir n_entries, and pinned mtimes.
-    Output paths are relativized and environment-dependent columns
-    (uid/gid/device/inode/mode/blocks, directory st_size) are excluded so
-    the oracle can regenerate the expectation from pure SQL."""
+    """S1/S2/S3/X4: the ingest crawler ``analyze`` runs (``crawl_local``)
+    over a deterministic staged tree — exclusion filtering (*.tmp never
+    ingested), symlink recorded-but-not-descended, per-dir n_entries, and
+    pinned mtimes.  Output paths are relativized and
+    environment-dependent columns (uid/gid/device/inode/mode/blocks,
+    directory st_size) are excluded so the oracle can regenerate the
+    expectation from pure SQL."""
+    import shutil
     import tempfile
 
-    from dudb_spark.sources.crawler import crawl_distributed
+    from dudb_spark.model import ENTRIES_SCHEMA, PREFIXES_SCHEMA
+    from dudb_spark.sources.crawler import crawl_local
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    root = tempfile.mkdtemp(prefix="dudb_q70_") + "/tree"
-    _build_crawl_tree(root)
-    prefixes, entries, errors = crawl_distributed(
-        spark, root, exclusions=[r"\.tmp$"]
-    )
+    base = tempfile.mkdtemp(prefix="dudb_q70_")
+    root = base + "/tree"
+    try:
+        _build_crawl_tree(root)
+        prows, erows, errrows = crawl_local(root, exclusions=[r"\.tmp$"])
+    finally:
+        # the crawl's rows are driver-side lists: the tree can go
+        shutil.rmtree(base, ignore_errors=True)
+    assert not errrows, "crawler reported errors on the staged tree"
+    prefixes = spark.createDataFrame(prows, PREFIXES_SCHEMA)
+    entries = spark.createDataFrame(erows, ENTRIES_SCHEMA)
     rel = lambda c: F.coalesce(  # noqa: E731
         F.nullif(F.expr(f"substring({c}, {len(root) + 1})"), F.lit("")),
         F.lit("/"),
@@ -2848,7 +2857,6 @@ def q70_crawler_walk(spark, sf_dir):
         F.col("is_dir"),
         _fmt_ts(F.col("mtime"), "mtime"),
     )
-    assert errors.count() == 0, "crawler reported errors on the staged tree"
     return pfx.unionByName(ent).orderBy("relpath", "is_prefix")
 
 
@@ -2902,23 +2910,30 @@ def q133_fswatch_stream(spark, sf_dir):
     (oracle = q70's entries subset + op/gen) — and the diff batches
     (added/changed/deleted, error transitions, offset hold on no-change)
     are pinned by tests/test_streaming.py against live mutations."""
+    import shutil
     import tempfile
     import uuid
 
     from dudb_spark.sources.fsds import register_watch
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    root = tempfile.mkdtemp(prefix="dudb_q133_") + "/tree"
+    base = tempfile.mkdtemp(prefix="dudb_q133_")
+    root = base + "/tree"
     _build_crawl_tree(root)
     register_watch(spark)
     name = "q133_watch_" + uuid.uuid4().hex[:8]
-    q = (
-        spark.readStream.format("fswatch")
-        .option("exclude", r"\.tmp$").load(root)
-        .writeStream.format("memory").queryName(name)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
+    try:
+        q = (
+            spark.readStream.format("fswatch")
+            .option("exclude", r"\.tmp$")
+            .option("state_dir", tempfile.mkdtemp(dir=base)).load(root)
+            .writeStream.format("memory").queryName(name)
+            .trigger(once=True).start()
+        )
+        q.awaitTermination(120)
+    finally:
+        # the memory sink holds the batch: the tree and state can go
+        shutil.rmtree(base, ignore_errors=True)
     t = spark.table(name)
     rel = F.coalesce(
         F.nullif(F.expr(f"substring(path, {len(root) + 1})"), F.lit("")),
@@ -2984,13 +2999,18 @@ def q142_seeded_watch_reconcile(spark, sf_dir):
 
     register_watch(spark)
     name = "q142_watch_" + uuid.uuid4().hex[:8]
-    q = (
-        spark.readStream.format("fswatch")
-        .option("seed", seed).load(root)
-        .writeStream.format("memory").queryName(name)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
+    try:
+        q = (
+            spark.readStream.format("fswatch")
+            .option("seed", seed)
+            .option("state_dir", tempfile.mkdtemp(dir=base)).load(root)
+            .writeStream.format("memory").queryName(name)
+            .trigger(once=True).start()
+        )
+        q.awaitTermination(120)
+    finally:
+        # the memory sink holds the batch: tree, seed and state can go
+        shutil.rmtree(base, ignore_errors=True)
     t = spark.table(name)
     rel = F.expr(f"substring(path, {len(root) + 1})").alias("relpath")
     return t.select(

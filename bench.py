@@ -264,8 +264,13 @@ def fswatch_bench(n_dirs: int = 1500, files_per_dir: int = 40) -> dict:
 
     base = tempfile.mkdtemp(prefix="dudb_fswatch_bench_")
     root = os.path.join(base, "tree")
-    r = None  # bound before the try: a fixture-build failure must not
-    # mask itself with a NameError from the finally block
+
+    def state(name):
+        # each watcher's snapshot dir lives under base, removed below
+        d = os.path.join(base, name)
+        os.makedirs(d)
+        return d
+
     try:
         for i in range(n_dirs):
             d = os.path.join(root, f"g{i // 100:02d}", f"d{i:05d}")
@@ -275,7 +280,7 @@ def fswatch_bench(n_dirs: int = 1500, files_per_dir: int = 40) -> dict:
                     f.write("x")
         n_entries = n_dirs * files_per_dir + n_dirs + n_dirs // 100 + 1
 
-        r = FsWatchReader({"path": root})
+        r = FsWatchReader({"path": root, "state_dir": state("st_r")})
         t0 = time.perf_counter()
         n0 = sum(1 for _ in r.read({"gen": 0})[0])
         t_resync = time.perf_counter() - t0
@@ -303,13 +308,12 @@ def fswatch_bench(n_dirs: int = 1500, files_per_dir: int = 40) -> dict:
             for j in range(max(1, files_per_dir // 10)):
                 with open(os.path.join(d, f"f{j}.dat"), "w") as f:
                     f.write("x")
-        r_sp = FsWatchReader({"path": sparse_root})
+        r_sp = FsWatchReader({"path": sparse_root,
+                              "state_dir": state("st_sparse")})
         sum(1 for _ in r_sp.read({"gen": 0})[0])
         t_idle_sparse = min(
             _timed(lambda: r_sp.read({"gen": 1})) for _ in range(3)
         )
-        if getattr(r_sp, "state_dir", None):
-            shutil.rmtree(r_sp.state_dir, ignore_errors=True)
 
         churn = max(1, n_dirs // 100)
         for i in range(churn):
@@ -352,13 +356,12 @@ def fswatch_bench(n_dirs: int = 1500, files_per_dir: int = 40) -> dict:
                              f"d{i * 100:05d}", "seedchurn.bin"), "w"
             ) as f:
                 f.write("s")
-        rs = FsWatchReader({"path": root, "seed": seed_dir})
+        rs = FsWatchReader({"path": root, "seed": seed_dir,
+                            "state_dir": state("st_seeded")})
         t0 = time.perf_counter()
         ns = sum(1 for _ in rs.read({"gen": 0})[0])
         t_seeded = time.perf_counter() - t0
         seeded_stats = dict(rs.last_batch_stats)
-        if getattr(rs, "state_dir", None):
-            shutil.rmtree(rs.state_dir, ignore_errors=True)
         return {
             "fswatch_tree_entries": n_entries,
             "fswatch_resync_entries_per_sec": round(n0 / t_resync),
@@ -375,8 +378,6 @@ def fswatch_bench(n_dirs: int = 1500, files_per_dir: int = 40) -> dict:
         }
     finally:
         shutil.rmtree(base, ignore_errors=True)
-        if r is not None and getattr(r, "state_dir", None):
-            shutil.rmtree(r.state_dir, ignore_errors=True)
 
 
 def main():

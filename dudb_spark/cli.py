@@ -65,117 +65,49 @@ def _exclude_regex(patterns) -> str | None:
 
 def cmd_analyze(args):
     from dudb_spark.model import ERRORS_SCHEMA, ENTRIES_SCHEMA, PREFIXES_SCHEMA
+    from dudb_spark.operators.ingest import merge_scan
+    from dudb_spark.sources.catalog import SnapshotCatalog
     from dudb_spark.sources.crawler import crawl_local
 
     spark = _spark()
     start = datetime.now(timezone.utc)
-    if getattr(args, "distributed", False):
-        # executor-parallel walk (crawl_distributed): scan results land
-        # in staging parquet FROM the executors and nothing row-shaped
-        # ever materializes on the driver — the ingest route for trees
-        # larger than driver memory (the fswalk/q127 scale contract
-        # applied to analyze).  Counters below are parquet metadata /
-        # narrow-column jobs over the staged scan.
-        import tempfile
-
-        from pyspark.sql import functions as F
-
-        from dudb_spark.sources.crawler import crawl_distributed
-
-        staging = tempfile.mkdtemp(prefix="dudb_analyze_staging_")
-        try:
-            return _analyze_body(
-                spark, args, start,
-                *crawl_distributed(
-                    spark, args.prefix, exclusions=args.exclude or [],
-                    staging_dir=staging,
-                ),
-                distributed=True,
-            )
-        finally:
-            # the staged tree-sized parquet must not outlive the run —
-            # success OR failure (round-9 ADVICE: the old success-path
-            # rmtree leaked it on any crawl/merge/write exception)
-            import shutil
-
-            shutil.rmtree(staging, ignore_errors=True)
-    else:
-        from dudb_spark.sources.catalog import SnapshotCatalog
-
-        # J1/J2 during the walk: the crawl compares each dir with the
-        # previous snapshot's (mtime, mode), read with no Spark job, and
-        # stats only churned dirs' files.  --force keeps the dirs but
-        # drops their stamps, so none matches and every file is stat'ed.
-        cat = SnapshotCatalog(spark, args.db)
-        v = cat.latest_version()
-        previous = cat.dir_stamps(v, args.prefix) if v is not None else None
-        if previous is not None and getattr(args, "force", False):
-            previous = dict.fromkeys(previous)
-        crawl = crawl_local(
-            args.prefix, exclusions=args.exclude or [],
-            concurrent_scans=args.scans, previous=previous,
-        )
-        prows, erows, errrows = crawl
-        staged_p = spark.createDataFrame(prows, PREFIXES_SCHEMA)
-        staged_e = spark.createDataFrame(erows, ENTRIES_SCHEMA)
-        errors = spark.createDataFrame(errrows or [], ERRORS_SCHEMA)
-        _analyze_body(
-            spark, args, start, staged_p, staged_e, errors,
-            counts=(
-                len(prows),
-                sum(1 for e in erows if not e["is_dir"]),
-                len(errrows),
-            ),
-            churn=crawl.churn,
-        )
-
-
-def _analyze_body(
-    spark, args, start, staged_p, staged_e, errors,
-    counts=None, distributed=False, churn=None,
-):
-    """Merge-and-land half of ``analyze``, shared by the local and
-    distributed crawl routes (split so the distributed route's staging
-    dir can be cleaned in a try/finally around the WHOLE body).
-    ``churn`` is the local crawl's classification, when it made one."""
-    from dudb_spark.operators.ingest import merge_scan
-    from dudb_spark.sources.catalog import SnapshotCatalog
-
-    if counts is None:
-        # distributed route: parquet metadata / narrow-column jobs over
-        # the staged scan
-        from pyspark.sql import functions as F
-
-        counts = (
-            staged_p.count(),
-            staged_e.where(~F.col("is_dir")).count(),
-            errors.count(),
-        )
-    n_prefixes, n_files, n_errors = counts
-
+    # J1/J2 during the walk: the crawl compares each dir with the
+    # previous snapshot's (mtime, mode), read with no Spark job, and
+    # stats only churned dirs' files.  --force keeps the dirs but drops
+    # their stamps, so none matches and every file is stat'ed.
     cat = SnapshotCatalog(spark, args.db)
-    if cat.latest_version() is None:
+    v = cat.latest_version()
+    previous = cat.dir_stamps(v, args.prefix) if v is not None else None
+    if previous is not None and args.force:
+        previous = dict.fromkeys(previous)
+    crawl = crawl_local(
+        args.prefix, exclusions=args.exclude or [],
+        concurrent_scans=args.scans, previous=previous,
+    )
+    prows, erows, errrows = crawl
+    staged_p = spark.createDataFrame(prows, PREFIXES_SCHEMA)
+    staged_e = spark.createDataFrame(erows, ENTRIES_SCHEMA)
+    errors = spark.createDataFrame(errrows or [], ERRORS_SCHEMA)
+
+    if v is None:
         out = cat.write_snapshot(staged_p, staged_e, errors)
         summary = {
             "operation": "analyze",
-            "prefixes_started": n_prefixes,
-            "prefixes_finished": n_prefixes,
-            "files": n_files,
-            "errors": n_errors,
+            "prefixes_started": len(prows),
+            "prefixes_finished": len(prows),
+            "files": sum(1 for e in erows if not e["is_dir"]),
+            "errors": len(errrows),
         }
     else:
         prev = cat.tables()
         res = merge_scan(
             prev.prefixes, prev.entries, staged_p, staged_e,
-            root=args.prefix, force=getattr(args, "force", False),
-            churn=churn,
+            root=args.prefix, force=args.force, churn=crawl.churn,
         )
         # the classified merge unions the previous scan with fresh rows:
         # bound its files by the previous version's
-        like = cat.latest_version() if churn is not None else None
-        out = cat.write_snapshot(res.prefixes, res.entries, errors,
-                                 like=like)
-        summary = dict(res.counters(), errors=n_errors)
+        out = cat.write_snapshot(res.prefixes, res.entries, errors, like=v)
+        summary = dict(res.counters(), errors=len(errrows))
     stop = datetime.now(timezone.utc)
     summary["duration_ns"] = int((stop - start).total_seconds() * 1e9)
     cat.append_log(start, stop, summary)
@@ -623,7 +555,9 @@ def _watch_stream(spark, cat, args, stats_dir, state_dir):
 
     w = stream.writeStream.foreachBatch(_emit)
     if args.once:
-        q = w.trigger(availableNow=True).start()
+        # Trigger.Once: the fswatch simple reader cannot split a batch,
+        # so availableNow would only fall back to this with a warning
+        q = w.trigger(once=True).start()
         q.awaitTermination()
     else:
         q = w.trigger(processingTime=f"{args.interval} seconds").start()
@@ -2081,7 +2015,15 @@ def build_parser():
     )
     sub = ap.add_subparsers(dest="command", required=True)
 
-    p = sub.add_parser("analyze", help="crawl a tree into the metadata DB")
+    p = sub.add_parser(
+        "analyze", help="crawl a tree into the metadata DB",
+        description="Walk PREFIX from this process with a thread pool "
+        "(--scans directories in flight) and land the scan as a new "
+        "snapshot version.  Once the DB has a version, a directory whose "
+        "(mtime, mode) is unchanged is listed for its child directories "
+        "only: just the files of added and changed directories are "
+        "stat'ed, and the rest are carried over from the latest version.",
+    )
     p.add_argument("--db", required=True)
     p.add_argument("prefix")
     p.add_argument("--exclude", action="append", help="exclusion regexp")
@@ -2091,14 +2033,6 @@ def build_parser():
         help="bypass the unchanged-skip: rewrite every directory's "
         "entries from this scan (corrupted-snapshot recovery; the "
         "reference analyze's full-rescan override)",
-    )
-    p.add_argument(
-        "--distributed", action="store_true",
-        help="walk the tree on EXECUTORS (crawl_distributed): scan rows "
-        "land in staging parquet from the executors and never "
-        "materialize on the driver — the route for trees larger than "
-        "driver memory.  On a cluster, staging must be on shared "
-        "storage; --scans is ignored (parallelism = executor tasks)",
     )
     p.set_defaults(func=cmd_analyze)
 

@@ -20,13 +20,14 @@ applies that classification: the previous rows of churned directories
 drop out by a churn-sized ``NOT IN`` list and the fresh rows are unioned
 in, with no shuffle, no cache and no counter job.  ``--force`` takes
 this route too: its crawl matches no stamp, so every directory is
-churned.  ``--distributed`` takes the join path below, as does
-:func:`apply_changes`' own change-feed algebra.
+churned.
 
-Join path: the staged scan and the previous snapshot are joined once on
-``path`` (full outer, subtree-restricted); the join classifies every
-directory as added / changed / unchanged / deleted, and the new snapshot is
-assembled from staged rows (added/changed), previous rows (unchanged — their
+Join path (``merge_scan`` without ``churn``): no command takes it.  It
+is the reference the classified merge is tested against, and the J1/J2
+legacy queries certify it.  The staged scan and the previous snapshot
+are joined once on ``path`` (full outer, subtree-restricted); the join
+classifies every directory as added / changed / unchanged / deleted, and
+the new snapshot is assembled from staged rows (added/changed), previous rows (unchanged — their
 file entries are *reused*, which is exactly the re-stat skip), and previous
 rows outside the scanned subtree.  On a real deployment this is a Delta/
 Iceberg ``MERGE INTO`` with partition-level rewrite limited to the scanned
@@ -113,8 +114,10 @@ def merge_scan(
     Rows outside ``root`` pass through because the crawl never names
     them.
 
-    Without ``churn`` (the ``--distributed`` crawl) the merge joins the
-    staged scan with the previous snapshot to classify the directories.
+    Without ``churn`` the merge joins a full staged scan with the
+    previous snapshot to classify the directories itself.  ``analyze``
+    always passes ``churn``; the join is the independent reference the
+    classified merge is tested against.
 
     ``force=True`` bypasses the join's J1 unchanged-skip (the reference's
     ``analyze`` re-scan override): every alive directory classifies as

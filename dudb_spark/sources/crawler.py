@@ -4,23 +4,13 @@ Reference shape (analyze.go:104–123, 246–381): a concurrent tree walk with
 ``concurrent_scans`` directories in flight and ``concurrent_stats`` parallel
 lstats per large directory, producing one record per directory.
 
-Spark-native design — the crawl is *ingest*, not query, and it is I/O-bound
-metadata work, so the right tool is a breadth-first **distributed listing**:
+``crawl_local`` is that walk: a single-process scandir BFS with a thread
+pool, one level of directories in flight at a time.  Given the previous
+snapshot's directory stamps it also classifies each directory (J1/J2,
+analyze.go:226–243): an unchanged one is listed for its child dirs only,
+so only churned directories have their files stat'ed.
 
-- ``crawl_distributed``: each BFS level is an RDD of directory paths;
-  ``mapPartitions`` lists + lstats each directory's children on executors
-  (this is where a 1000-executor cluster issues the reference's "1000s of
-  simultaneous stat requests", README.md:12–14, against a parallel
-  filesystem or object store).  Levels iterate to a fixpoint; each level
-  repartitions so fan-out spreads across the cluster.  Rows feed the
-  ``prefixes``/``entries`` writers.
-- ``crawl_local``: a plain single-process scandir walk with a thread pool —
-  the developer-scale path, and the row-shape oracle for tests.  Given the
-  previous snapshot's directory stamps it also classifies each directory
-  (J1/J2, analyze.go:226–243): an unchanged one is listed for its child
-  dirs only, so only churned directories have their files stat'ed.
-
-Both produce exactly the model.py schemas.  Exclusions (S3) and symlink
+Rows follow exactly the model.py schemas.  Exclusions (S3) and symlink
 no-descend (S2) are applied at scan time like the reference
 (analyze.go:201–210, 260–265).
 """
@@ -33,12 +23,6 @@ import stat as stat_mod
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
-
-from dudb_spark.model import (
-    ENTRIES_SCHEMA,
-    ERRORS_SCHEMA,
-    PREFIXES_SCHEMA,
-)
 
 
 _EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
@@ -227,115 +211,3 @@ def crawl_local(
             deleted=frozenset(set(previous) - fresh - unchanged),
         )
     return CrawlResult(prefix_rows, entry_rows, error_rows, churn)
-
-
-def crawl_distributed(
-    spark,
-    root: str,
-    exclusions: list[str] | None = None,
-    fanout_partitions: int = 64,
-    staging_dir: str | None = None,
-):
-    """BFS distributed crawl: one Spark job per tree level; directories are
-    listed/stat'ed inside ``mapPartitions`` on executors.  Returns
-    (prefixes_df, entries_df, errors_df) backed by staging Parquet.
-
-    Scale contract — NOTHING row-shaped touches the driver:
-
-    - scan results append to staging Parquet *from the executors*;
-    - the next-level frontier stays an RDD (``flatMap`` of children), so a
-      billion-directory tree never materializes a Python list of paths;
-    - the only per-level driver value is the frontier count (the loop
-      condition).
-
-    The per-level cache is recomputation avoidance across the level's
-    actions, released before the next level; the frontier is CHECKPOINTED
-    to staging each level (truncating the RDD lineage — otherwise level N's
-    recompute chain would re-scan levels 1..N-1 after the caches are
-    dropped).
-    """
-    import tempfile
-
-    from pyspark.storagelevel import StorageLevel
-
-    excl = list(exclusions or [])
-    rootdepth = root.rstrip("/").count("/")
-
-    # Error presence and frontier size are tallied by accumulators inside
-    # the scan pass — the alternatives (errs.isEmpty(), frontier.count())
-    # cost two to three extra jobs per BFS level even on clean trees.
-    # Task retries can over-count an accumulator, but only the
-    # zero/nonzero signal gates behavior, which retries preserve (the
-    # child tally additionally sizes the next level's partitioning, where
-    # rare over-count is harmless).
-    err_acc = spark.sparkContext.accumulator(0)
-    child_acc = spark.sparkContext.accumulator(0)
-
-    def scan_partition(paths):
-        pats = [re.compile(x) for x in excl]
-        for p in paths:
-            pr, ents, errs, children = _scan_one(p, pats)
-            if pr is not None:
-                pr["depth"] = pr["path"].count("/") - rootdepth
-            if errs:
-                err_acc.add(len(errs))
-            if children:
-                child_acc.add(len(children))
-            yield pr, ents, errs, children
-
-    # staging MUST be on a filesystem all executors share (HDFS/S3/NFS) in
-    # cluster mode — the driver-local tempdir default only works on
-    # local[N].  A unique run subdir prevents append-merging rows from a
-    # previous crawl into this one.
-    base = staging_dir or tempfile.mkdtemp(prefix="dudb_crawl_")
-    staging = tempfile.mkdtemp(prefix="run_", dir=base)
-    sc = spark.sparkContext
-
-    level_rdd = sc.parallelize([root.rstrip("/") or "/"], 1)
-    n_level = 1
-    depth_i = 0
-    wrote_errors = False
-    while n_level:
-        nparts = max(1, min(fanout_partitions, n_level))
-        err_base = err_acc.value
-        child_base = child_acc.value
-        scanned = (
-            level_rdd.repartition(nparts)
-            .mapPartitions(scan_partition)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        spark.createDataFrame(
-            scanned.map(lambda r: r[0]).filter(lambda p: p is not None),
-            PREFIXES_SCHEMA,
-        ).write.mode("append").parquet(f"{staging}/prefixes")
-        spark.createDataFrame(
-            scanned.flatMap(lambda r: r[1]), ENTRIES_SCHEMA
-        ).write.mode("append").parquet(f"{staging}/entries")
-        # the prefixes write materialized `scanned`, so the accumulators
-        # already carry this level's tallies — no isEmpty()/count() jobs
-        if err_acc.value > err_base:
-            spark.createDataFrame(
-                scanned.flatMap(lambda r: r[2]), ERRORS_SCHEMA
-            ).write.mode("append").parquet(f"{staging}/errors")
-            wrote_errors = True
-        n_level = child_acc.value - child_base
-        if n_level:
-            # checkpoint the frontier: breaks the lineage chain back
-            # through the (about-to-be-dropped) cache of this level's scan
-            fdir = f"{staging}/frontier/L{depth_i}"
-            spark.createDataFrame(
-                scanned.flatMap(lambda r: r[3]).map(lambda p: (p,)),
-                "path: string",
-            ).write.parquet(fdir)
-            level_rdd = spark.read.parquet(fdir).rdd.map(lambda r: r.path)
-        scanned.unpersist()
-        depth_i += 1
-
-    prefixes = spark.read.parquet(f"{staging}/prefixes")
-    entries = spark.read.parquet(f"{staging}/entries")
-    errors = (
-        spark.read.parquet(f"{staging}/errors")
-        if wrote_errors
-        else spark.createDataFrame([], ERRORS_SCHEMA)
-    )
-    return prefixes, entries, errors

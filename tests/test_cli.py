@@ -1109,9 +1109,10 @@ def _spy(monkeypatch, module, name, seen):
 
 def test_cli_analyze_join_routes(spark, real_tree, tmp_path, capsys,
                                  monkeypatch):
-    """The local crawl classifies the dirs, under --force too: no stamp
-    matches there, so it stats every file and lands through the churn
-    merge.  Only --distributed leaves J1/J2 to the merge's join."""
+    """Every ``analyze`` classifies the dirs in its crawl and lands
+    through the churn merge, never the merge's join: an incremental run
+    stats only the churned dir's files, ``--force`` matches no stamp and
+    stats every file, and a deletion is found by the crawl too."""
     db = str(tmp_path / "db")
     run(capsys, "analyze", "--db", db, real_tree)
     merges, crawls = [], []
@@ -1133,10 +1134,20 @@ def test_cli_analyze_join_routes(spark, real_tree, tmp_path, capsys,
     assert out["files"] == 4 and out["parent_unchanged"] == 0
 
     os.remove(os.path.join(real_tree, "proj/b/z.log"))
-    out = json.loads(run(capsys, "analyze", "--db", db, "--distributed",
-                         real_tree))
-    assert merges[-1][0]["churn"] is None
+    out = json.loads(run(capsys, "analyze", "--db", db, real_tree))
+    assert merges[-1][0]["churn"] is not None
     assert out["files"] == 3 and out["prefixes_changed"] == 1
+
+
+def test_cli_analyze_distributed_is_retired(real_tree, tmp_path, capsys):
+    """``analyze`` has one crawler: ``--distributed`` is a usage error
+    (argparse's exit 2, naming the option) and writes no version."""
+    db = str(tmp_path / "db")
+    with pytest.raises(SystemExit) as e:
+        main(["analyze", "--db", db, real_tree, "--distributed"])
+    assert e.value.code == 2
+    assert "--distributed" in capsys.readouterr().err
+    assert not os.path.exists(db)
 
 
 def test_cli_retired_delta_version_exits_with_one_line(spark, real_tree,
@@ -1653,52 +1664,6 @@ def test_cli_watch_seed_artifact_reused_across_starts(spark, real_tree,
     assert os.listdir(os.path.join(db, "_watch_seed")) == [v2]
 
 
-def test_cli_analyze_distributed_equals_local(spark, real_tree, tmp_path,
-                                              capsys):
-    """analyze --distributed (executor-parallel crawl, rows never on the
-    driver) writes a snapshot identical to the thread-pool crawl's, on
-    both the initial write and an incremental re-analyze."""
-    import time
-
-    from dudb_spark.sources.catalog import SnapshotCatalog
-
-    db_l = str(tmp_path / "db_local")
-    db_d = str(tmp_path / "db_dist")
-    s_l = json.loads(run(capsys, "analyze", "--db", db_l, real_tree))
-    s_d = json.loads(
-        run(capsys, "analyze", "--db", db_d, real_tree, "--distributed")
-    )
-    for k in ("prefixes_finished", "files", "errors"):
-        assert s_d[k] == s_l[k], k
-
-    # incremental: add one file, delete one; both routes must classify
-    # identically
-    time.sleep(1.05)
-    with open(f"{real_tree}/proj/a/dist.dat", "w") as f:
-        f.write("dd")
-    import os
-
-    os.unlink(f"{real_tree}/proj/b/z.log")
-    s_l2 = json.loads(run(capsys, "analyze", "--db", db_l, real_tree))
-    s_d2 = json.loads(
-        run(capsys, "analyze", "--db", db_d, real_tree, "--distributed")
-    )
-    for k in ("prefixes_added", "prefixes_changed", "prefixes_deleted",
-              "parent_unchanged", "files"):
-        assert s_d2[k] == s_l2[k], k
-
-    cols = ["path", "is_dir", "size", "mode", "inode"]
-    got_l = sorted(
-        tuple(r[c] for c in cols)
-        for r in SnapshotCatalog(spark, db_l).tables().entries.collect()
-    )
-    got_d = sorted(
-        tuple(r[c] for c in cols)
-        for r in SnapshotCatalog(spark, db_d).tables().entries.collect()
-    )
-    assert got_l == got_d
-
-
 def test_cli_watch_apply_full_resync_exhaustive(spark, real_tree,
                                                 tmp_path, capsys):
     """watch --apply --full-resync: the pre-stream reconciliation is an
@@ -1819,36 +1784,6 @@ def test_cli_watch_multi_exclude_respected(spark, real_tree, tmp_path,
     ]
     assert not any(p.endswith(".tmp") or p.endswith(".log") for p in paths)
     assert any(p.endswith("keep.dat") for p in paths)
-
-
-def test_cli_analyze_distributed_cleans_staging_on_failure(
-    spark, real_tree, tmp_path, capsys, monkeypatch
-):
-    """analyze --distributed removes its staging dir even when the body
-    throws (the old code only cleaned the success path, leaking a
-    tree-sized parquet per failed run in $TMPDIR)."""
-    import tempfile
-
-    made = []
-    real_mkdtemp = tempfile.mkdtemp
-
-    def track(*a, **kw):
-        d = real_mkdtemp(*a, **kw)
-        if kw.get("prefix", "").startswith("dudb_analyze_staging"):
-            made.append(d)
-        return d
-
-    monkeypatch.setattr(tempfile, "mkdtemp", track)
-    import dudb_spark.sources.crawler as crawler
-
-    def boom(*a, **kw):
-        raise RuntimeError("crawl exploded")
-
-    monkeypatch.setattr(crawler, "crawl_distributed", boom)
-    db = str(tmp_path / "db")
-    with pytest.raises(RuntimeError, match="crawl exploded"):
-        main(["analyze", "--db", db, real_tree, "--distributed"])
-    assert made and not os.path.exists(made[0])
 
 
 def test_cli_pipeline_contam_exact_and_bloom(spark, tmp_path, capsys):

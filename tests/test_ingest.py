@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from tempfile import mkdtemp
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,7 +15,7 @@ from pyspark.sql import functions as F
 from dudb_spark.model import ENTRIES_SCHEMA, PREFIXES_SCHEMA
 from dudb_spark.operators.find import subtree_pred
 from dudb_spark.operators.ingest import merge_scan
-from dudb_spark.sources.crawler import crawl_distributed, crawl_local
+from dudb_spark.sources.crawler import crawl_local
 
 
 @pytest.fixture()
@@ -59,49 +60,6 @@ def test_crawl_local_matches_lstat(fs_tree):
     # symlink recorded, not descended; depth filled relative to root
     assert any(e["name"] == "s0" for e in erows)
     assert by_path[f"{fs_tree}/a/sub"]["depth"] == 2
-
-
-def test_crawl_distributed_equals_local(spark, fs_tree):
-    prows, erows, _ = crawl_local(fs_tree)
-    pdf, edf, errdf = crawl_distributed(spark, fs_tree)
-    assert sorted(r["path"] for r in pdf.collect()) == sorted(
-        r["path"] for r in prows
-    )
-    assert sorted((r["path"], r["size"]) for r in edf.collect()) == sorted(
-        (r["path"], r["size"]) for r in erows
-    )
-    assert errdf.count() == 0
-
-
-def test_crawl_distributed_job_count(spark, fs_tree):
-    """Error checks and frontier counts ride the scan-pass accumulators,
-    so a clean-tree BFS level costs exactly its data jobs: prefixes
-    write, entries write, frontier write + frontier schema read (skipped
-    on the terminal level).  Before the accumulators each level also paid
-    an errs.isEmpty() job and a frontier count (2 jobs under AQE)."""
-    tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup())
-    crawl_distributed(spark, fs_tree)
-    after = set(spark.sparkContext.statusTracker().getJobIdsForGroup())
-    # fs_tree: L0 root (4 jobs), L1 {a,b} (4), L2 {a/sub} terminal (2),
-    # + 2 final prefix/entry schema reads = 12
-    assert len(after - before) == 12
-
-
-def test_crawl_distributed_error_dir(spark, fs_tree):
-    """A directory that cannot be listed lands in the errors table; the
-    accumulator path still writes errors exactly when they exist."""
-    locked = os.path.join(fs_tree, "b", "locked")
-    os.mkdir(locked)
-    os.chmod(locked, 0)
-    if os.geteuid() == 0:
-        os.rmdir(locked)
-        pytest.skip("permission-denied dirs are unenforceable as root")
-    try:
-        _, _, errdf = crawl_distributed(spark, fs_tree)
-        assert any(r["path"] == locked for r in errdf.collect())
-    finally:
-        os.chmod(locked, 0o755)
 
 
 def test_crawl_exclusions(fs_tree):
@@ -593,7 +551,8 @@ def test_apply_changes_tracks_live_tree(spark, tmp_path):
         cols = ["path", "depth", "n_entries", "mode", "inode"]
         return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
-    r = FsWatchReader({"path": root, "prune": "false"})
+    r = FsWatchReader({"path": root, "state_dir": mkdtemp(dir=tmp_path),
+                       "prune": "false"})
     b0, off = batch_df(r, {"gen": 0})
     prev_p, prev_e = crawl_tables()  # batch-0 resync == crawl; start here
 
@@ -773,7 +732,7 @@ def test_fswatch_gc_tracks_ondisk_set(tmp_path):
     os.makedirs(f"{root}/a")
     with open(f"{root}/a/f0", "w") as f:
         f.write("x")
-    r = FsWatchReader({"path": root})
+    r = FsWatchReader({"path": root, "state_dir": mkdtemp(dir=tmp_path)})
     _, off = r.read({"gen": 0})
     for i in range(5):
         time.sleep(1.05)

@@ -3,6 +3,8 @@ file-source stream with availableNow trigger."""
 
 from __future__ import annotations
 
+from tempfile import mkdtemp
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -253,7 +255,8 @@ def test_fswatch_change_stream(spark, tmp_path):
     register_watch(spark)
     q = (
         spark.readStream.format("fswatch")
-        .option("prune", "false").load(root)
+        .option("prune", "false")
+        .option("state_dir", mkdtemp(dir=tmp_path)).load(root)
         .writeStream.format("memory").queryName("fswatch_t")
         .trigger(processingTime="1 second").start()
     )
@@ -323,6 +326,16 @@ def _watch_tree(tmp_path, n_dirs=8, files_per_dir=10):
     return root
 
 
+def test_fswatch_requires_state_dir(tmp_path):
+    """The caller owns the watcher's state dir: a reader given none
+    refuses to start, naming the option, instead of making a temp dir
+    that nothing removes."""
+    from dudb_spark.sources.fsds import FsWatchReader
+
+    with pytest.raises(ValueError, match="state_dir"):
+        FsWatchReader({"path": str(tmp_path)})
+
+
 def test_fswatch_bounded_state_and_work(tmp_path):
     """State is keyed by DIRECTORIES (not paths) and a one-file churn
     rescans exactly the churned dir: the round-7 verdict's scale-killer
@@ -333,7 +346,7 @@ def test_fswatch_bounded_state_and_work(tmp_path):
     from dudb_spark.sources.fsds import FsWatchReader
 
     root = _watch_tree(tmp_path)
-    r = FsWatchReader({"path": root})
+    r = FsWatchReader({"path": root, "state_dir": mkdtemp(dir=tmp_path)})
     rows, off = r.read({"gen": 0})
     assert len(list(rows)) == 8 + 80  # full resync
     assert r.last_batch_stats["files_statted"] == 80
@@ -375,7 +388,7 @@ def test_fswatch_prune_j1_semantics(tmp_path):
     from dudb_spark.sources.fsds import FsWatchReader
 
     root = _watch_tree(tmp_path, n_dirs=2, files_per_dir=2)
-    r = FsWatchReader({"path": root})
+    r = FsWatchReader({"path": root, "state_dir": mkdtemp(dir=tmp_path)})
     _, off = r.read({"gen": 0})
 
     time.sleep(1.05)
@@ -397,7 +410,8 @@ def test_fswatch_prune_j1_semantics(tmp_path):
     }
 
     # prune=false: a fresh exhaustive watcher sees in-place edits now
-    r2 = FsWatchReader({"path": root, "prune": "false"})
+    r2 = FsWatchReader({"path": root, "state_dir": mkdtemp(dir=tmp_path),
+                        "prune": "false"})
     _, off2 = r2.read({"gen": 0})
     time.sleep(1.05)
     with open(f"{root}/d01/f1.dat", "w") as f:
@@ -421,7 +435,8 @@ def test_fswatch_type_flip_and_compaction(tmp_path):
     from dudb_spark.sources.fsds import FsWatchReader
 
     root = _watch_tree(tmp_path, n_dirs=4, files_per_dir=3)
-    r = FsWatchReader({"path": root, "compact_every": "2"})
+    r = FsWatchReader({"path": root, "state_dir": mkdtemp(dir=tmp_path),
+                       "compact_every": "2"})
     _, off = r.read({"gen": 0})
 
     # file -> dir flip
@@ -468,7 +483,7 @@ def test_fswatch_unreadable_dir_transition(tmp_path, monkeypatch):
     from dudb_spark.sources.fsds import FsWatchReader
 
     root = _watch_tree(tmp_path, n_dirs=2, files_per_dir=2)
-    r = FsWatchReader({"path": root})
+    r = FsWatchReader({"path": root, "state_dir": mkdtemp(dir=tmp_path)})
     _, off = r.read({"gen": 0})
 
     real_scandir = os.scandir
@@ -532,7 +547,8 @@ def test_fswatch_seeded_start_matches_resync_feed(spark, tmp_path):
 
     shutil.rmtree(f"{root}/d02")
 
-    r = FsWatchReader({"path": root, "seed": seed_dir})
+    r = FsWatchReader({"path": root, "state_dir": mkdtemp(dir=tmp_path),
+                       "seed": seed_dir})
     rows = list(r.read({"gen": 0})[0])
     got = sorted((t[0], t[3]) for t in rows)
 
@@ -588,11 +604,13 @@ def test_fswatch_seeded_prune_false_exhaustive(spark, tmp_path):
     os.utime(d, (st.st_atime, st.st_mtime))
 
     # pruned seeded start misses it (J1 contract)
-    r1 = FsWatchReader({"path": root, "seed": seed_dir})
+    r1 = FsWatchReader({"path": root, "state_dir": mkdtemp(dir=tmp_path),
+                        "seed": seed_dir})
     assert list(r1.read({"gen": 0})[0]) == []
 
     # exhaustive seeded start catches it
-    r2 = FsWatchReader({"path": root, "seed": seed_dir, "prune": "false"})
+    r2 = FsWatchReader({"path": root, "state_dir": mkdtemp(dir=tmp_path),
+                        "seed": seed_dir, "prune": "false"})
     rows = list(r2.read({"gen": 0})[0])
     assert {(t[0], t[3].rsplit("/", 1)[-1]) for t in rows} == {
         ("changed", "f1.dat")
@@ -613,7 +631,7 @@ def test_fswatch_seed_contract_violation_raises(spark, tmp_path):
     root = _watch_tree(tmp_path, n_dirs=1, files_per_dir=2)
     seed_dir = tmp_path / "badseed"
     seed_dir.mkdir()
-    r0 = FsWatchReader({"path": root})
+    r0 = FsWatchReader({"path": root, "state_dir": mkdtemp(dir=tmp_path)})
     schema = r0._arrow_schema()
 
     def row(name):
@@ -633,7 +651,8 @@ def test_fswatch_seed_contract_violation_raises(spark, tmp_path):
                    str(seed_dir / "p0.parquet"))
     pq.write_table(pa.Table.from_pylist([row("b")], schema=schema),
                    str(seed_dir / "p1.parquet"))
-    r = FsWatchReader({"path": root, "seed": str(seed_dir)})
+    r = FsWatchReader({"path": root, "state_dir": mkdtemp(dir=tmp_path),
+                       "seed": str(seed_dir)})
     with pytest.raises(ValueError, match="spans multiple seed files"):
         r.read({"gen": 0})
 
@@ -648,7 +667,7 @@ def test_fswatch_idle_batch_is_getdents_free(tmp_path):
     from dudb_spark.sources.fsds import FsWatchReader
 
     root = _watch_tree(tmp_path, n_dirs=6, files_per_dir=4)
-    r = FsWatchReader({"path": root})
+    r = FsWatchReader({"path": root, "state_dir": mkdtemp(dir=tmp_path)})
     _, off = r.read({"gen": 0})
     assert r.last_batch_stats["dirs_listed"] == 7  # batch 0: exhaustive
 
@@ -680,7 +699,7 @@ def test_fswatch_pruned_discovers_new_deep_subtree(tmp_path):
     from dudb_spark.sources.fsds import FsWatchReader
 
     root = _watch_tree(tmp_path, n_dirs=2, files_per_dir=1)
-    r = FsWatchReader({"path": root})
+    r = FsWatchReader({"path": root, "state_dir": mkdtemp(dir=tmp_path)})
     _, off = r.read({"gen": 0})
 
     time.sleep(1.05)
@@ -727,7 +746,7 @@ def test_fswatch_pruned_symlinked_ancestor_drops_lineage(tmp_path):
     elsewhere = str(tmp_path / "elsewhere")
     shutil.copytree(f"{root}/d00", elsewhere)
 
-    r = FsWatchReader({"path": root})
+    r = FsWatchReader({"path": root, "state_dir": mkdtemp(dir=tmp_path)})
     _, off = r.read({"gen": 0})
 
     time.sleep(1.05)
