@@ -105,6 +105,27 @@ def _stage_mod_buckets(incoming, n, src, key="doc_id"):
     shutil.rmtree(tmp, ignore_errors=True)
 
 
+def _rm_at_exit(path: str) -> str:
+    """Remove a memoized staging dir when the process exits: several
+    queries of one session share it, so no single query may drop it."""
+    import atexit
+    import shutil
+
+    atexit.register(shutil.rmtree, path, True)
+    return path
+
+
+def _local(df: DataFrame, *dirs: str) -> DataFrame:
+    """``df``'s rows as a local relation, then ``dirs`` removed: a
+    result computed from temp files must not keep reading them."""
+    import shutil
+
+    out = df.sparkSession.createDataFrame(df.collect(), df.schema)
+    for d in dirs:
+        shutil.rmtree(d, ignore_errors=True)
+    return out
+
+
 # ---------------------------------------------------------------------------
 # Queries.  Each function: (spark, sf_dir) -> DataFrame
 # ---------------------------------------------------------------------------
@@ -817,7 +838,7 @@ def _staged_events(spark, sf_dir):
     got = _STAGED_EVENTS_MEMO.get(key)
     if got is not None and got[0] is spark:
         return got[1]
-    src = tempfile.mkdtemp(prefix="dudb_stream_src_")
+    src = _rm_at_exit(tempfile.mkdtemp(prefix="dudb_stream_src_"))
     _events(spark, sf_dir).repartition(8).write.mode("overwrite").parquet(src)
     _STAGED_EVENTS_MEMO[key] = (spark, src)
     return src
@@ -830,6 +851,7 @@ def _sessionize_gate(spark, sf_dir, query_name, max_files=None):
     range-partitioned by ts and mtime-stamped in time order so the file
     source replays them like a live ingest."""
     import os
+    import shutil
     import tempfile
     from glob import glob as _glob
 
@@ -866,6 +888,8 @@ def _sessionize_gate(spark, sf_dir, query_name, max_files=None):
             .start()
         )
         q.awaitTermination(300)
+    # the memory sink holds the result: the staged events can go
+    shutil.rmtree(src, ignore_errors=True)
     return spark.table(query_name)
 
 
@@ -2271,7 +2295,7 @@ def _report_set(spark):
     res = compute_stats(
         _fs(spark, "prefixes"), _fs(spark, "entries"), StatsOptions()
     )
-    root = tempfile.mkdtemp(prefix="dudb_reports_")
+    root = _rm_at_exit(tempfile.mkdtemp(prefix="dudb_reports_"))
     out = write_reports(
         res, root, display_n=3,
         when=datetime(2024, 1, 2, 3, 4, 5, tzinfo=timezone.utc),
@@ -2318,6 +2342,7 @@ def q67_report_locate(spark, sf_dir):
     dir names derive from the DATA so the oracle recomputes them instead
     of echoing constants."""
     import os
+    import shutil
     import tempfile
 
     from dudb_spark.reports.sinks import locate_reports
@@ -2335,6 +2360,7 @@ def q67_report_locate(spark, sf_dir):
     for d in days:
         os.makedirs(os.path.join(root, f"{d}-000000"), exist_ok=True)
     located = locate_reports(root, n=2)
+    shutil.rmtree(root, ignore_errors=True)
     # list-of-names schema: `when` trips the DDL parser as a keyword
     return spark.createDataFrame(
         [(x["report"], x["when"]) for x in located], ["report", "when"]
@@ -2560,6 +2586,7 @@ def q91_streaming_ingest(spark, sf_dir):
     across merges.  Output: one row of final-state facts, restated by
     the oracle from lineitem arithmetic."""
     import os
+    import shutil
     import tempfile
     from glob import glob as _glob
 
@@ -2696,16 +2723,12 @@ def q91_streaming_ingest(spark, sf_dir):
         F.count(F.lit(1)).alias("files"),
         F.sum("size").alias("bytes"),
     ).first()
+    row = (len(cat.versions()), final.prefixes.count(), facts["files"],
+           int(facts["bytes"]))
+    shutil.rmtree(src, ignore_errors=True)
+    shutil.rmtree(state, ignore_errors=True)
     return spark.createDataFrame(
-        [
-            (
-                len(cat.versions()),
-                final.prefixes.count(),
-                facts["files"],
-                int(facts["bytes"]),
-            )
-        ],
-        "n_versions long, n_dirs long, files long, total_bytes long",
+        [row], "n_versions long, n_dirs long, files long, total_bytes long",
     )
 
 
@@ -2727,7 +2750,8 @@ def q68_stats_snapshot_roundtrip(spark, sf_dir):
     res.save(out)
     with open(f"{out}/meta.json", "w") as f:
         json.dump(res.meta, f)
-    return StatsResult.load(spark, out).per_prefix.orderBy("prefix")
+    return _local(StatsResult.load(spark, out).per_prefix.orderBy("prefix"),
+                  out)
 
 
 def q69_catalog_roundtrip(spark, sf_dir):
@@ -2735,6 +2759,7 @@ def q69_catalog_roundtrip(spark, sf_dir):
     versioned write, compaction to a second version, pointer flip, and the
     reloaded latest tables carrying the fixture through unchanged."""
     import os
+    import shutil
     import tempfile
 
     from dudb_spark.cli import expand_path
@@ -2754,16 +2779,11 @@ def q69_catalog_roundtrip(spark, sf_dir):
             .alias("file_bytes"),
         ).first()
     )
+    facts = (cat.latest_version(), len(cat.versions()),
+             t.prefixes.count(), row["n_entries"], row["file_bytes"])
+    shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(
-        [
-            (
-                cat.latest_version(),
-                len(cat.versions()),
-                t.prefixes.count(),
-                row["n_entries"],
-                row["file_bytes"],
-            )
-        ],
+        [facts],
         "latest string, n_versions long, n_prefixes long, n_entries long, "
         "file_bytes long",
     )
@@ -2868,6 +2888,7 @@ def q127_fswalk_datasource(spark, sf_dir):
     not descended, prefixes synthesized live (depth/n_entries).  Output
     shape and ORACLE are q70's verbatim, so the DataSource route must
     reproduce the crawler's rows exactly."""
+    import os
     import tempfile
 
     from dudb_spark.sources.fsds import live_tables
@@ -2898,14 +2919,15 @@ def q127_fswalk_datasource(spark, sf_dir):
         F.col("is_dir"),
         _fmt_ts(F.col("mtime"), "mtime"),
     )
-    return pfx.unionByName(ent).orderBy("relpath", "is_prefix")
+    return _local(pfx.unionByName(ent).orderBy("relpath", "is_prefix"),
+                  os.path.dirname(root))
 
 
 def q133_fswatch_stream(spark, sf_dir):
     """The fswalk as a STREAMING source (sources/fsds.FsWatchReader,
     Spark Python DataSource simple stream reader): the change-feed
     analogue of the reference's rescan loop.  The gate certifies the
-    deterministic batch-0 full resync over the q70 staged tree — every
+    deterministic batch-0 whole-tree feed over the q70 staged tree — every
     object emitted as op='added' with the crawler's exact stat values
     (oracle = q70's entries subset + op/gen) — and the diff batches
     (added/changed/deleted, error transitions, offset hold on no-change)
@@ -2950,16 +2972,14 @@ def q133_fswatch_stream(spark, sf_dir):
 
 
 def q142_seeded_watch_reconcile(spark, sf_dir):
-    """SEEDED watch start (round-9: the batch-0 resync sharded off the
-    driver — fsds.FsWatchReader._load_seed behind ``watch --apply``):
-    the watcher initializes from a stored snapshot's entries (written
-    exactly like the CLI writes its seed) and its FIRST batch emits the
-    changes since that snapshot as a churn-sized diff — deletion of a
-    whole subtree (last-known stats), an added file (its dir emits
-    changed), and an in-place size change — with the unchanged rest of
-    the tree never emitted and the driver never statting it.  All
-    mutation stats are pinned with utime, so the oracle is the expected
-    classification stated literally."""
+    """SEEDED watch start (fsds.FsWatchReader._load_seed behind ``watch
+    --db``): the watcher initializes from a stored snapshot's entries table
+    and its FIRST batch emits the changes since that snapshot as a
+    churn-sized diff — deletion of a whole subtree (last-known stats), an
+    added file (its dir emits changed), and an in-place size change — with
+    the unchanged rest of the tree never emitted and the driver never
+    statting it.  All mutation stats are pinned with utime, so the oracle
+    is the expected classification stated literally."""
     import os
     import tempfile
     import uuid
@@ -2973,8 +2993,7 @@ def q142_seeded_watch_reconcile(spark, sf_dir):
     root = base + "/tree"
     _build_crawl_tree(root)
 
-    # the seed = the stored snapshot's entries, written the way the CLI
-    # writes it (parents confined to one file each)
+    # the seed = the stored snapshot's entries table
     _, e0, _ = crawl_local(root)
     seed = base + "/seed"
     (
@@ -3311,16 +3330,16 @@ def q128_jpeg_decode(spark, sf_dir):
 
 
 def q140_resync_reconcile(spark, sf_dir):
-    """Restart reconciliation (ingest.resync_feed, behind watch
-    --apply's batch 0): a full-resync walk classified against the
+    """Restart reconciliation (ingest.resync_feed, the library reference for
+    watch's seeded batch 0): an exhaustive walk classified against the
     stored entries into the added/changed/deleted change-feed shape by
-    null-safe stat comparison — certifying that churn which happened
-    while the watcher was DOWN re-enters as a feed.  The 'resync' is
-    the applied tree's entries (q135's net effect), so the expected
-    classification is the watch feed's own net effect: the adds, the
-    stat changes (incl. the dir→file type flip), and deletions for the
-    removed subtree, the flipped dir's children, and the error-retired
-    path (a walk cannot see unreadable-ness as anything but absence)."""
+    null-safe stat comparison — certifying that churn which happened while
+    the watcher was DOWN re-enters as a feed.  The 'resync' is the applied
+    tree's entries (q135's net effect), so the expected classification is
+    the watch feed's own net effect: the adds, the stat changes (incl. the
+    dir→file type flip), and deletions for the removed subtree, the flipped
+    dir's children, and the error-retired path (a walk cannot see
+    unreadable-ness as anything but absence)."""
     from dudb_spark.operators.ingest import apply_changes, resync_feed
 
     prev_p, prev_e, feed = _watch_feed(spark)
@@ -3623,6 +3642,7 @@ def q76_stream_attribution(spark, sf_dir):
     clicks within a 30-minute horizon; both sides carry watermarks so
     join state evicts at the derived horizon.  One availableNow batch
     makes the streaming result equal the batch join the oracle runs."""
+    import shutil
     import tempfile
 
     from dudb_spark.streaming.joins import attribution_join
@@ -3654,6 +3674,7 @@ def q76_stream_attribution(spark, sf_dir):
             .start()
         )
         q.awaitTermination(300)
+    shutil.rmtree(src, ignore_errors=True)  # the memory sink holds it
     return (
         spark.table("dudb_q76_attr")
         .select(
@@ -3805,6 +3826,7 @@ def q95_stream_corpus_dedup(spark, sf_dir):
     (canonical_id, is_new) per doc via a stateless stream–static left
     join (streaming/dedup.py dedup_against_corpus).  The oracle is the
     batch restatement of the same split + left join."""
+    import shutil
     import tempfile
 
     from dudb_spark.streaming.dedup import dedup_against_corpus
@@ -3826,6 +3848,7 @@ def q95_stream_corpus_dedup(spark, sf_dir):
             .start()
         )
         q.awaitTermination(300)
+    shutil.rmtree(src, ignore_errors=True)  # the memory sink holds it
     return (
         spark.table("dudb_q95_dedup")
         .select("doc_id", "canonical_id", "is_new")
@@ -4019,10 +4042,11 @@ def q100_online_dedup_growing(spark, sf_dir):
         )
         q = online_dedup(stream, corpus, index_dir, out_dir)
         q.awaitTermination(300)
-    return (
+    return _local(
         spark.read.parquet(out_dir)
         .select("doc_id", "canonical_id", "is_new")
-        .orderBy("doc_id")
+        .orderBy("doc_id"),
+        src, os.path.dirname(index_dir), os.path.dirname(out_dir),
     )
 
 
@@ -4298,11 +4322,12 @@ def q115_stored_index_search(spark, sf_dir):
         f"round(({' + '.join(ip_terms)}) / "
         f"({_dbl(qnorm)} * sqrt({' + '.join(nsq_terms)})), 6)"
     )
-    return (
+    return _local(
         codes.where("vec_id != 0")
         .select("vec_id", _F.expr(score).alias("adc_cosine"))
         .orderBy(_F.desc("adc_cosine"), _F.asc("vec_id"))
-        .limit(10)
+        .limit(10),
+        idx_dir,
     )
 
 
@@ -4434,7 +4459,8 @@ def q120_stream_excision(spark, sf_dir):
             .start()
         )
         q.awaitTermination(300)
-    return spark.read.parquet(out).orderBy("doc_id")
+    return _local(spark.read.parquet(out).orderBy("doc_id"),
+                  src, os.path.dirname(out))
 
 
 def q121_chunk_windows(spark, sf_dir):
@@ -5125,7 +5151,7 @@ def _staged_events_ordered(spark, sf_dir, n_files: int = 4) -> str:
     got = _STAGED_ORDERED_MEMO.get(key)
     if got is not None and got[0] is spark:
         return got[1]
-    src = tempfile.mkdtemp(prefix="dudb_ordstream_src_")
+    src = _rm_at_exit(tempfile.mkdtemp(prefix="dudb_ordstream_src_"))
     _events(spark, sf_dir).repartitionByRange(n_files, "ts").write.mode(
         "overwrite"
     ).parquet(src)
@@ -5869,6 +5895,7 @@ def q185_stream_transitions(spark, sf_dir):
     matrix equals the batch one value-for-value — certified against
     the IDENTICAL q184 oracle."""
     import os
+    import shutil
     import tempfile
     from glob import glob as _glob
 
@@ -5896,6 +5923,7 @@ def q185_stream_transitions(spark, sf_dir):
             .start()
         )
         q.awaitTermination(300)
+    shutil.rmtree(src, ignore_errors=True)  # the memory sink holds it
     sink = spark.table("dudb_q185_trans")
     # labels×labels-bounded; localCheckpoint breaks the memory-sink
     # lineage (a self-join through the streaming relation is refused)
@@ -6112,6 +6140,7 @@ def q171_stream_neardup_flagging(spark, sf_dir):
     deduped sink must equal the batch candidate stage value-exactly —
     the same SQL oracle family as q166, stopped at est (exact-Jaccard
     verification is the batch follow-up, q166)."""
+    import shutil
     import tempfile
 
     from dudb_spark.pipeline.dedup import minhash_band_index
@@ -6141,6 +6170,7 @@ def q171_stream_neardup_flagging(spark, sf_dir):
             .start()
         )
         q.awaitTermination(300)
+    shutil.rmtree(src, ignore_errors=True)  # the memory sink holds it
     return (
         spark.table("dudb_q171_flags")
         .select("new_id", "old_id", "est_jaccard")

@@ -331,7 +331,7 @@ def fswatch_bench(n_dirs: int = 1500, files_per_dir: int = 40) -> dict:
         # through a watcher initialized from a stored-snapshot seed —
         # batch 0 is the restart reconciliation as a churn-sized diff,
         # so its wall-time tracks dirs + churn, never the tree (compare
-        # fswatch_resync_entries_per_sec above: the --full-resync walk
+        # fswatch_resync_entries_per_sec above: the unseeded batch 0
         # stats every entry).  Seed write = fixture staging, untimed.
         import pyarrow as pa
         import pyarrow.parquet as pq

@@ -102,7 +102,7 @@ def cmd_analyze(args):
         prev = cat.tables()
         res = merge_scan(
             prev.prefixes, prev.entries, staged_p, staged_e,
-            root=args.prefix, force=args.force, churn=crawl.churn,
+            root=args.prefix, churn=crawl.churn,
         )
         # the classified merge unions the previous scan with fresh rows:
         # bound its files by the previous version's
@@ -349,9 +349,7 @@ def _watch_land(spark, cat, args, diff, stats_dir) -> bool:
     """Apply one change-feed diff to the stored snapshot and land it as
     the next plain snapshot version (the previous version's errors table
     carried over), plus the JSON summary line and the optional stats
-    refold.  Shared by the stream's per-batch apply and --full-resync's
-    pre-stream reconciliation.  Returns True when the diff had any
-    effect."""
+    refold.  Returns True when the diff had any effect."""
     from dudb_spark.operators.ingest import apply_changes
 
     applied_from = cat.latest_version()
@@ -374,20 +372,23 @@ def _watch_land(spark, cat, args, diff, stats_dir) -> bool:
 def cmd_watch(args):
     """Live change feed over a tree (sources/fsds.FsWatchReader): prints
     one TSV line per change — gen, op, size, path.  ``--once`` emits the
-    batch-0 full resync and exits; otherwise the stream rescans every
+    first batch and exits; otherwise the stream rescans every
     ``--interval`` seconds until ``--max-batches`` non-empty batches
     have been printed (0 = until interrupted).
+
+    With ``--db`` the start is SEEDED: the watcher initializes from the
+    latest snapshot's entries table, read in place, so batch 0 is the
+    changes since that snapshot as a churn-sized diff, with no Spark
+    job and no DB write before it.  Without ``--db`` batch 0 is the
+    whole tree as ``added``.  ``--no-prune`` makes every batch, batch 0
+    included, an exhaustive per-file comparison (in-place edits under
+    unchanged directory mtimes surface immediately).
 
     ``--db … --apply`` turns the feed into CONTINUOUS INGEST: every
     non-empty diff batch is applied to the stored snapshot via
     ``operators.ingest.apply_changes`` — churn-bounded set algebra,
     the streaming analogue of ``analyze``'s merge — and lands as a new
     snapshot version, with one JSON summary line per applied batch.
-    The start is SEEDED by default: the stored entries are exported
-    (one executor-parallel write) and the watcher initializes from
-    them, so batch 0 is the restart reconciliation as a churn-sized
-    diff — the driver never walks or materializes the full tree
-    (``--full-resync`` restores the exhaustive walk).
     Every batch lands as a plain snapshot version, the same layout
     ``analyze`` writes, so every reader opens it directly.
 
@@ -424,11 +425,6 @@ def cmd_watch(args):
                 "watch --stats-dir: run `stats compute` first (no stats "
                 "snapshot to maintain)"
             )
-    if getattr(args, "full_resync", False) and not args.apply:
-        # without --apply the reconciliation has nowhere to land: the
-        # old code silently fell through to the unseeded whole-tree dump
-        # (round-9 ADVICE, low) — refuse like the --apply/--db check
-        raise SystemExit("watch --full-resync requires --apply")
     # the watcher's file-row snapshot lives in state_dir; a temp one is
     # made here, not in the stream's Python worker, so the finally below
     # can remove it
@@ -449,8 +445,8 @@ def cmd_watch(args):
 
 
 def _watch_stream(spark, cat, args, stats_dir, state_dir):
-    """cmd_watch's body once the options are checked: the optional
-    --full-resync reconciliation, then the fswatch stream."""
+    """cmd_watch's body once the options are checked: the fswatch
+    stream, seeded from the latest snapshot when there is one."""
     from dudb_spark.sources.fsds import register_watch
 
     register_watch(spark)
@@ -461,69 +457,12 @@ def _watch_stream(spark, cat, args, stats_dir, state_dir):
         reader = reader.option("exclude", _exclude_regex(args.exclude))
     if getattr(args, "no_prune", False):
         reader = reader.option("prune", "false")
-    if (
-        cat is not None
-        and cat.latest_version() is not None
-        and getattr(args, "full_resync", False)
-        and args.apply
-    ):
-        # --full-resync under --apply: EXHAUSTIVE reconciliation, but
-        # executor-parallel (the fswalk DataSource walks the tree on
-        # executors and re-stats every file) instead of the old
-        # driver-side reader walk.  resync_feed classifies the walk
-        # against the stored entries into a churn-sized diff that lands
-        # exactly like a stream batch; the stream then starts SEEDED
-        # from the now-current snapshot.  Result: even the opt-out path
-        # never materializes the tree on the driver.
-        from pyspark.sql import functions as F
-
-        from dudb_spark.operators.find import subtree_pred
-        from dudb_spark.operators.ingest import resync_feed
-        from dudb_spark.sources.fsds import register as _register_walk
-
-        _register_walk(spark)
-        rdr = spark.read.format("fswalk")
-        if args.exclude:
-            rdr = rdr.option("exclude", _exclude_regex(args.exclude))
-        scan = rdr.load(args.prefix).withColumn("op", F.lit("added"))
-        prev_sub = cat.tables().entries.where(
-            subtree_pred(F.col("parent"), args.prefix)
-            | (F.col("path") == args.prefix.rstrip("/"))
-        )
-        # churn-sized after the classification; pin it so the apply's
-        # consumers don't re-run the tree-sized walk+join
-        diff = resync_feed(prev_sub, scan).withColumn(
-            "gen", F.lit(0).cast("long")
-        ).localCheckpoint()
-        # toLocalIterator, not collect (round-10 verdict item 4): the
-        # diff is churn-sized in normal operation, but a resync against
-        # a badly stale snapshot makes "churn" approach the tree — same
-        # one-sorted-partition-at-a-time bound as _emit below, output
-        # byte-identical
-        for r in diff.orderBy("op", "path").toLocalIterator():
-            sz = "" if r["size"] is None else r["size"]
-            print(f"0\t{r['op']}\t{sz}\t{r['path']}", flush=True)
-        _watch_land(spark, cat, args, diff, stats_dir)
-
-    if (
-        cat is not None
-        and cat.latest_version() is not None
-        and (args.apply or not getattr(args, "full_resync", False))
-    ):
-        # SEEDED START (round-8 verdict item: shard the batch-0 resync
-        # off the driver): the stored snapshot's live entries, exported
-        # one-parent-per-file, seed the watcher so batch 0 becomes a
-        # normal pruned rescan against the snapshot (O(dirs)+O(churn)
-        # driver work) emitting exactly the changes since it, instead
-        # of a tree-sized driver-side walk reconciled through a
-        # tree-sized full-outer join.  The export is a PERSISTENT
-        # versioned artifact (<db>/_watch_seed/<version>/, round-9
-        # verdict item 4): a restart on an unchanged snapshot version
-        # reuses it and pays O(1) driver work, tree size irrelevant.
-        # Under --full-resync the executor-parallel reconciliation
-        # above already ran, so the stream continues seeded from the
-        # now-current snapshot.
-        reader = reader.option("seed", cat.watch_seed(args.prefix))
+    if cat is not None and cat.latest_version() is not None:
+        # SEEDED START: the watcher initializes from the latest
+        # snapshot's entries, read in place (no Spark job, nothing
+        # written to the DB), so batch 0 is a normal pruned rescan
+        # against the snapshot emitting exactly the changes since it
+        reader = reader.option("seed", cat.tables().path("entries"))
     stream = reader.load(args.prefix)
 
     state = {"batches": 0}
@@ -545,8 +484,7 @@ def _watch_stream(spark, cat, args, stats_dir, state_dir):
             return
         if cat is not None and args.apply:
             # every batch is a change-feed diff: the SEEDED batch 0 is
-            # already the reconciliation, and --full-resync reconciled
-            # before the stream started
+            # already the reconciliation
             _watch_land(spark, cat, args, batch_df, stats_dir)
         # count AFTER the apply: the main loop stops the query the
         # moment the count reaches --max-batches, and a stop mid-apply
@@ -2093,12 +2031,16 @@ def build_parser():
     p.add_argument("--exclude", action="append", default=None,
                    help="regexp of paths to skip")
     p.add_argument("--once", action="store_true",
-                   help="print the full-resync batch and exit")
+                   help="print the first batch and exit (with --db: "
+                   "the changes since the stored snapshot; without: "
+                   "the whole tree as added)")
     p.add_argument("--interval", type=float, default=2.0,
                    help="seconds between re-walks (streaming mode)")
     p.add_argument("--max-batches", type=int, default=0,
                    help="stop after N non-empty batches (0 = run forever)")
-    p.add_argument("--db", help="metadata DB for --apply")
+    p.add_argument("--db", help="metadata DB whose latest snapshot "
+                   "seeds the feed (the stream prints only changes "
+                   "since it); required by --apply")
     p.add_argument(
         "--apply", action="store_true",
         help="apply each non-empty batch to the snapshot DB as a new "
@@ -2121,15 +2063,6 @@ def build_parser():
         help="directory for the watcher's file-row snapshot parquet "
         "(default: a temp dir removed when the watch ends; set it to "
         "keep a long-running watch's state on chosen storage)",
-    )
-    p.add_argument(
-        "--full-resync", action="store_true",
-        help="with --apply: reconcile an EXHAUSTIVE executor-parallel "
-        "walk (fswalk, every file re-stat'ed) against the snapshot "
-        "before the stream starts — catches in-place edits under "
-        "unchanged directory mtimes that the default seeded start "
-        "defers (J1) — then continue seeded from the reconciled "
-        "snapshot.  --no-prune gives per-batch exhaustiveness instead",
     )
     p.set_defaults(func=cmd_watch)
     p = sub.add_parser("du", help="recursive subtree totals (du analog)")

@@ -441,19 +441,21 @@ def apply_changes(
 
 
 def resync_feed(prev_entries: DataFrame, resync: DataFrame) -> DataFrame:
-    """Classify a full-resync walk (fswatch batch 0: every live object,
-    op='added') against the stored entries into the change-feed shape
-    :func:`apply_changes` consumes — rows become added / changed /
-    deleted by null-safe stat comparison and unchanged rows drop out.
+    """Classify an exhaustive walk (every live object, op='added', as
+    an unseeded fswatch batch 0 emits it) against the stored entries
+    into the change-feed shape :func:`apply_changes` consumes — rows
+    become added / changed / deleted by null-safe stat comparison and
+    unchanged rows drop out.
 
-    This is the watch loop's RESTART RECONCILIATION: churn that happened
-    while the watcher was down is in neither the stored snapshot nor any
-    later diff batch (those diff against the restart's own walk), so the
-    snapshot would silently diverge without diffing batch 0 against it.
-    One tree-sized full-outer join, paid once per watch START — the same
-    cost shape as analyze's merge classification, not a per-batch cost.
-    Error rows in the resync keep their ``error`` (they classify as
-    changed via their null stats and retire their snapshot row)."""
+    This is the library reference for restart reconciliation: churn
+    that happened while a watcher was down is in neither the stored
+    snapshot nor any later diff batch.  ``watch --db`` reaches the same
+    classification without this tree-sized full-outer join, by seeding
+    the watcher from the stored entries (``FsWatchReader._load_seed``);
+    ``tests/test_streaming.py`` compares the two, and q140 certifies
+    this one against DuckDB.  Error rows in the
+    resync keep their ``error`` (they classify as changed via their null
+    stats and retire their snapshot row)."""
     sig = ("is_dir", "size", "mode", "mtime", "uid", "gid")
     cols = prev_entries.columns
     n = resync.alias("n")

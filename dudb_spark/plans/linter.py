@@ -303,9 +303,6 @@ COLLECT_ALLOW: dict[str, str] = {
 # unlisted function fails tests/test_plan_lint.py; a stale entry fails it
 # too.  Key: relpath::qualname of the enclosing function.
 PIN_ALLOW: dict[str, str] = {
-    "cli.py::_watch_stream":
-        "--full-resync's reconciliation diff: the rows that differ from "
-        "the stored snapshot — churn-sized unless the snapshot is stale",
     "operators/quantiles.py::weighted_quantiles":
         "CORPUS-SIZED: the sorted cumulative-weight frame is one row "
         "per input value by construction — any exact weighted quantile "

@@ -151,15 +151,12 @@ class SnapshotCatalog:
                             os.path.join(out, "errors.parquet"))
 
     def _write_layout(self, out: str) -> None:
-        """Land ``_layout.json`` for a just-written snapshot.  It records
-        the tree size (prefix rows), which ``watch_seed`` reads without a
-        Spark job."""
+        """Land ``_layout.json`` for a just-written snapshot: the marker
+        of a complete version."""
         import json as _json
 
-        meta = {"layout": "plain",
-                "prefix_rows": self._count_written_prefixes(out)}
         with open(os.path.join(out, "_layout.json"), "w") as f:
-            _json.dump(meta, f)
+            _json.dump({"layout": "plain"}, f)
 
     def _file_count(self, version: str, table: str) -> int:
         """Parquet files of one table of a version (0 when it has none)."""
@@ -193,100 +190,6 @@ class SnapshotCatalog:
         under = root + "/"
         return {p: (m, md) for p, m, md in stamps
                 if p == root or p.startswith(under)}
-
-    def _count_written_prefixes(self, out: str) -> int:
-        """Row count of a just-written prefixes table — parquet footer
-        metadata read driver-side with pyarrow, no Spark job.  (Was a
-        ``spark.read.parquet(...).count()``: metadata-only at the scan
-        level but still a full job submission + file-index build, ~0.2 s
-        per snapshot write — measured while profiling q91, which pays
-        this three times.)"""
-        import pyarrow.parquet as pq
-        from glob import glob as _glob
-
-        return sum(
-            pq.read_metadata(f).num_rows
-            for f in _glob(
-                os.path.join(out, "prefixes.parquet", "**", "*.parquet"),
-                recursive=True,
-            )
-        )
-
-    def prefix_rows(self, version: str | None = None) -> int | None:
-        """Tree size (prefix row count) of a snapshot version WITHOUT
-        reading its tables: the exact count ``_layout.json`` records at
-        write time.  Returns None only for snapshots written before this
-        metadata existed — callers fall back to counting then."""
-        v = version or self.latest_version()
-        if v is None:
-            return None
-        n = self.layout(v).get("prefix_rows")
-        return int(n) if n is not None else None
-
-    def watch_seed(self, prefix: str) -> str:
-        """Materialize — or REUSE — the fswatch seed artifact for the
-        latest version, filtered to the watched ``prefix`` subtree.
-
-        The seed is the stored live entries exported one-parent-per-file
-        (``repartitionByRange(parent)``, the fswatch seed contract) so a
-        restarting watcher's batch 0 is a pruned rescan instead of a
-        tree-sized walk.  Round-9 verdict item 4: the export is the only
-        tree-sized pass of a watch start, and it used to be recomputed
-        into a temp dir on EVERY start even when the snapshot version was
-        unchanged.  It is now a versioned layout artifact under
-        ``<db>/_watch_seed/<version>/`` (built lazily on the first watch
-        start rather than at snapshot-write time, so non-watching users
-        never pay for it): a restart whose (latest version, prefix) pair
-        matches the recorded ``_seed.json`` skips the export entirely —
-        O(1) driver work regardless of tree size.  Any stale sibling
-        (older version, or a different prefix) is dropped before the
-        rebuild, so at most one seed copy ever exists in the DB.  The
-        directory name starts with ``_`` so :meth:`versions` never sees
-        it; the build is write-to-tmp + rename, so a crashed export can
-        never be mistaken for a valid seed."""
-        import json as _json
-        import shutil
-
-        from pyspark.sql import functions as F
-
-        from dudb_spark.operators.find import subtree_pred
-
-        v = self.latest_version()
-        if v is None:
-            raise FileNotFoundError(f"no snapshot under {self.root}")
-        seed_root = os.path.join(self.root, "_watch_seed")
-        dest = os.path.join(seed_root, v)
-        meta_path = os.path.join(dest, "_seed.json")
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                meta = _json.load(f)
-            if meta.get("version") == v and meta.get("prefix") == prefix:
-                return dest
-        if os.path.isdir(seed_root):
-            shutil.rmtree(seed_root, ignore_errors=True)
-        os.makedirs(seed_root, exist_ok=True)
-        tmp = os.path.join(seed_root, f".tmp-{os.getpid()}")
-        ent = self.tables().entries.where(
-            subtree_pred(F.col("parent"), prefix)
-            | (F.col("path") == prefix.rstrip("/"))
-        )
-        # one parent per file (the seed contract): size files so each
-        # holds a few hundred thousand rows — dirs × fanout estimated
-        # from the snapshot metadata, falling back to default
-        # parallelism for pre-metadata snapshots
-        n_dirs = self.prefix_rows()
-        k = (
-            max(1, min(256, (n_dirs * 40) // 250_000))
-            if n_dirs
-            else self.spark.sparkContext.defaultParallelism
-        )
-        ent.repartitionByRange(k, "parent").write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        with open(os.path.join(tmp, "_seed.json"), "w") as f:
-            _json.dump({"version": v, "prefix": prefix}, f)
-        os.rename(tmp, dest)
-        return dest
 
     def layout(self, version: str | None = None) -> dict:
         """``_layout.json`` of a snapshot version ({} for snapshots older
@@ -354,16 +257,9 @@ class SnapshotCatalog:
         removable = [v for v in vs[:-keep] if v != current]
         for v in removable:
             shutil.rmtree(os.path.join(self.root, v))
-        # the watch-seed artifact (:meth:`watch_seed`) rides its version:
-        # drop it alongside, and also when its version is simply no
-        # longer latest (a watcher restart would rebuild it anyway)
-        seed_root = os.path.join(self.root, "_watch_seed")
-        if os.path.isdir(seed_root):
-            for d in os.listdir(seed_root):
-                if d != current:
-                    shutil.rmtree(
-                        os.path.join(seed_root, d), ignore_errors=True
-                    )
+        # older builds kept a watch-seed export beside the versions
+        shutil.rmtree(os.path.join(self.root, "_watch_seed"),
+                      ignore_errors=True)
         return removable
 
     def append_log(self, start, stop, summary: dict) -> None:

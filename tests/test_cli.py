@@ -196,8 +196,7 @@ def test_cli_incremental_stats_and_diff(spark, real_tree, tmp_path, capsys):
 def test_cli_analyze_default_layout_is_plain(spark, real_tree, tmp_path,
                                              capsys):
     """A default analyze writes unpartitioned tables: _layout.json says
-    plain and records the tree size, with no hlinks.parquet and no pb=
-    bucket directories."""
+    plain, with no hlinks.parquet and no pb= bucket directories."""
     from dudb_spark.sources.catalog import SnapshotCatalog
 
     db = str(tmp_path / "db")
@@ -206,7 +205,6 @@ def test_cli_analyze_default_layout_is_plain(spark, real_tree, tmp_path,
     with open(os.path.join(cat.latest_path(), "_layout.json")) as f:
         lay = json.load(f)
     assert lay["layout"] == "plain"
-    assert lay["prefix_rows"] == cat.tables().prefixes.count() == 4
     assert not os.path.exists(
         os.path.join(cat.latest_path(), "hlinks.parquet"))
     for table in ("prefixes.parquet", "entries.parquet"):
@@ -282,7 +280,7 @@ def test_cli_pointers_survive_a_failed_write(spark, real_tree, tmp_path,
 
     # snapshot write: the step after the table writes, then the pointer
     # replace itself (the temp pointer is written, the rename fails)
-    for target, name in ((SnapshotCatalog, "_count_written_prefixes"),
+    for target, name in ((SnapshotCatalog, "_write_layout"),
                          (catalog.os, "replace")):
         with monkeypatch.context() as m:
             m.setattr(target, name, boom)
@@ -662,7 +660,7 @@ def test_cli_compact_rewrites_bucketed_plain(spark, real_tree, tmp_path,
 
     out = json.loads(run(capsys, "database", "compact", "--db", db))
     assert out["compacted"] == cat.latest_path()
-    assert cat.layout() == {"layout": "plain", "prefix_rows": 4}
+    assert cat.layout() == {"layout": "plain"}
     assert not os.path.exists(os.path.join(out["compacted"],
                                            "hlinks.parquet"))
     for table in ("prefixes.parquet", "entries.parquet"):
@@ -1051,6 +1049,7 @@ def test_cli_analyze_classified_equals_join(spark, real_tree, tmp_path,
     ``--force`` (against the join's ``merge_scan(force=True)``)."""
     import shutil
 
+    from dudb_spark.operators import ingest
     from dudb_spark.sources.catalog import SnapshotCatalog
 
     prefix = os.path.join(real_tree, "proj") if case == "subtree" else real_tree
@@ -1076,9 +1075,15 @@ def test_cli_analyze_classified_equals_join(spark, real_tree, tmp_path,
     assert merges[-1][0]["churn"] is not None
     with monkeypatch.context() as m:
         m.setattr(SnapshotCatalog, "dir_stamps", lambda *a: None)
+        if force:
+            # analyze passes no force: its --force crawl classifies every
+            # dir as changed.  The join re-stats them only when told to.
+            spy = ingest.merge_scan
+            m.setattr(ingest, "merge_scan",
+                      lambda *a, **k: spy(*a, force=True, **k))
         want = analyze(join_db)
     assert merges[-1][0]["churn"] is None
-    assert merges[-1][0]["force"] == bool(force)
+    assert merges[-1][0].get("force", False) == bool(force)
     assert got == want
     assert got["prefixes_added"] == 1 and got["prefixes_deleted"] == 1
     if force:
@@ -1616,61 +1621,62 @@ def test_cli_watch_db_without_apply_seeds(spark, real_tree, tmp_path,
     assert len(cat.versions()) == 1  # nothing applied
 
 
-def test_cli_watch_seed_artifact_reused_across_starts(spark, real_tree,
+def test_cli_watch_start_writes_only_applied_versions(spark, real_tree,
                                                       tmp_path, capsys):
-    """The seeded start's tree-sized entries export is a PERSISTENT
-    versioned artifact (<db>/_watch_seed/<version>/): a second watch
-    start on an unchanged snapshot version must reuse it byte-for-byte
-    (no re-export — round-9 verdict item 4), and a version bump must
-    invalidate and replace it."""
-    import glob
+    """A seeded watch start reads the latest snapshot's entries in
+    place: a print-only start writes nothing under --db, an --apply
+    start writes only its applied versions and the ``latest`` pointer,
+    and after a re-analyze the watch emits only the churn since the new
+    snapshot."""
     import time
 
     db = str(tmp_path / "db")
     json.loads(run(capsys, "analyze", "--db", db, real_tree))
-    out1 = run(capsys, "watch", "--once", "--db", db, real_tree)
-    v1 = open(os.path.join(db, "latest")).read().strip()
-    seed = os.path.join(db, "_watch_seed", v1)
-    meta = json.load(open(os.path.join(seed, "_seed.json")))
-    assert meta == {"version": v1, "prefix": real_tree}
-    sig = {
-        f: os.stat(f).st_mtime_ns
-        for f in glob.glob(os.path.join(seed, "*.parquet"))
-    }
-    assert sig, "seed artifact must contain parquet files"
 
-    # unchanged tree + unchanged version: reuse, identical (empty) output
-    out2 = run(capsys, "watch", "--once", "--db", db, real_tree)
-    assert out1 == out2 == ""
-    sig2 = {
-        f: os.stat(f).st_mtime_ns
-        for f in glob.glob(os.path.join(seed, "*.parquet"))
-    }
-    assert sig2 == sig, "second start must not re-export the seed"
+    def files():
+        return {
+            os.path.relpath(os.path.join(d, f), db):
+                os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _, fs in os.walk(db) for f in fs
+        }
 
-    # version bump (re-analyze after churn): stale seed dropped, new one
-    # keyed to the new version, and the watch still emits only the churn
+    before = files()
+    assert run(capsys, "watch", "--once", "--db", db, real_tree) == ""
+    assert files() == before
+
     time.sleep(1.05)
     with open(f"{real_tree}/proj/b/fresh.dat", "w") as f:
         f.write("new")
+    out = run(capsys, "watch", "--once", "--db", db, "--apply", real_tree)
+    assert "fresh.dat" in out
+    after = files()
+    written = {p for p in after if before.get(p) != after[p]}
+    v2 = open(os.path.join(db, "latest")).read().strip()
+    assert v2 == "v0002"
+    assert {p.split(os.sep)[0] for p in written} <= {
+        v2, "latest", "scan_logs.parquet"}
+    assert set(before) <= set(after)
+
+    # re-analyze: the next start seeds from the new version and emits
+    # only the churn made after it
+    time.sleep(1.05)
+    with open(f"{real_tree}/proj/b/mid.dat", "w") as f:
+        f.write("mid")
     json.loads(run(capsys, "analyze", "--db", db, real_tree))
     time.sleep(1.05)
     with open(f"{real_tree}/proj/b/later.dat", "w") as f:
         f.write("after-snapshot")
     out3 = run(capsys, "watch", "--once", "--db", db, real_tree)
-    assert "later.dat" in out3 and "fresh.dat" not in out3
-    v2 = open(os.path.join(db, "latest")).read().strip()
-    assert v2 != v1
-    assert os.listdir(os.path.join(db, "_watch_seed")) == [v2]
+    assert "later.dat" in out3
+    assert "mid.dat" not in out3 and "fresh.dat" not in out3
 
 
-def test_cli_watch_apply_full_resync_exhaustive(spark, real_tree,
-                                                tmp_path, capsys):
-    """watch --apply --full-resync: the pre-stream reconciliation is an
-    executor-parallel exhaustive walk — it catches an in-place edit
-    under an UNCHANGED directory mtime (which the default seeded start
-    defers, J1) and lands it before the stream starts; the applied
-    snapshot equals a fresh crawl."""
+def test_cli_watch_apply_no_prune_exhaustive(spark, real_tree, tmp_path,
+                                             capsys):
+    """watch --apply --no-prune: the seeded batch 0 is an exhaustive
+    per-file comparison — it catches an in-place edit under an
+    UNCHANGED directory mtime (which the default pruned start defers,
+    J1) and lands it; the applied snapshot equals a fresh crawl."""
     import os
     import time
 
@@ -1680,7 +1686,7 @@ def test_cli_watch_apply_full_resync_exhaustive(spark, real_tree,
     db = str(tmp_path / "db")
     json.loads(run(capsys, "analyze", "--db", db, real_tree))
 
-    # in-place edit, dir mtime restored: invisible to the seeded start
+    # in-place edit, dir mtime restored: invisible to the pruned start
     d = f"{real_tree}/proj/a"
     st = os.stat(d)
     time.sleep(1.05)
@@ -1689,7 +1695,7 @@ def test_cli_watch_apply_full_resync_exhaustive(spark, real_tree,
     os.utime(d, (st.st_atime, st.st_mtime))
 
     out = run(capsys, "watch", "--once", "--db", db, "--apply",
-              "--full-resync", real_tree)
+              "--no-prune", real_tree)
     assert "changed" in out and "x.log" in out  # the deferred edit
     assert "y.txt" not in out  # unchanged rows never printed
 
@@ -1702,59 +1708,12 @@ def test_cli_watch_apply_full_resync_exhaustive(spark, real_tree,
     assert got == want
 
 
-def test_cli_watch_full_resync_print_never_collects(spark, real_tree,
-                                                    tmp_path, capsys,
-                                                    monkeypatch):
-    """The --full-resync diff print streams via toLocalIterator
-    (round-10 verdict item 4): against a badly stale snapshot the
-    "churn-sized" diff approaches the whole tree, and a collect() here
-    was the one remaining print path that could materialize it on the
-    driver.  Poison collect() for feed-schema frames and require the
-    identical output."""
-    import os
-
-    from pyspark.sql import DataFrame
-
-    db = str(tmp_path / "db")
-    json.loads(run(capsys, "analyze", "--db", db, real_tree))
-    with open(f"{real_tree}/proj/b/fresh.dat", "w") as f:
-        f.write("resync churn")
-
-    feed_cols = {"gen", "op", "path", "size"}
-    orig_collect = DataFrame.collect
-
-    def poisoned(self):
-        if feed_cols <= set(self.columns):
-            raise AssertionError(
-                "--full-resync print path called collect() on a "
-                "feed-schema frame — must stream via toLocalIterator"
-            )
-        return orig_collect(self)
-
-    monkeypatch.setattr(DataFrame, "collect", poisoned)
-    out = run(capsys, "watch", "--once", "--db", db, "--apply",
-              "--full-resync", real_tree)
-    assert "added" in out and "fresh.dat" in out
-    os.unlink(f"{real_tree}/proj/b/fresh.dat")
-
-
-def test_cli_watch_full_resync_requires_apply(spark, real_tree, tmp_path,
-                                              capsys):
-    """watch --db --full-resync WITHOUT --apply has nowhere to land the
-    reconciliation: it must refuse loudly (the old code silently fell
-    through to the unseeded whole-tree dump)."""
-    db = str(tmp_path / "db")
-    json.loads(run(capsys, "analyze", "--db", db, real_tree))
-    with pytest.raises(SystemExit, match="full-resync requires --apply"):
-        main(["watch", "--once", "--db", db, "--full-resync", real_tree])
-
-
 def test_cli_watch_multi_exclude_respected(spark, real_tree, tmp_path,
                                            capsys):
-    """TWO --exclude patterns reach the watch reader AND the
-    --full-resync fswalk: paths matching the SECOND pattern must not be
-    emitted or applied (the old code passed only exclude[0], so
-    analyze-time exclusions re-entered the snapshot as 'added')."""
+    """TWO --exclude patterns reach the watch reader, pruned and
+    exhaustive: paths matching the SECOND pattern must not be emitted
+    or applied (the old code passed only exclude[0], so analyze-time
+    exclusions re-entered the snapshot as 'added')."""
     from dudb_spark.sources.catalog import SnapshotCatalog
 
     db = str(tmp_path / "db")
@@ -1772,10 +1731,10 @@ def test_cli_watch_multi_exclude_respected(spark, real_tree, tmp_path,
     assert "keep.dat" in out
     assert "junk.tmp" not in out and "x.log" not in out
 
-    # --full-resync --apply: the exhaustive walk must also drop BOTH
+    # --apply --no-prune: the exhaustive rescan must also drop BOTH
     # patterns — otherwise excluded paths are applied into the snapshot
     out = run(capsys, "watch", "--once", "--db", db, "--apply",
-              "--full-resync", real_tree,
+              "--no-prune", real_tree,
               "--exclude", ex[0], "--exclude", ex[1])
     assert "junk.tmp" not in out and "x.log" not in out
     paths = [

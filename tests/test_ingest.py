@@ -586,9 +586,9 @@ def test_apply_changes_tracks_live_tree(spark, tmp_path):
 def test_watch_batches_land_plain_snapshots(spark, tmp_path):
     """Three ``watch --apply`` batches (seeded fswatch reader batches
     landed through ``_watch_land``, no stream thread) each land a plain
-    snapshot version: ``_layout.json`` with the exact tree size and no
-    ``_delta.json``.  The latest tables equal the chained in-memory
-    apply_changes and a fresh crawl, and prune keeps ``latest``."""
+    snapshot version: a plain ``_layout.json`` and no ``_delta.json``.
+    The latest tables equal the chained in-memory apply_changes and a
+    fresh crawl, and prune keeps ``latest``."""
     from types import SimpleNamespace
 
     from dudb_spark.cli import _watch_land
@@ -607,7 +607,7 @@ def test_watch_batches_land_plain_snapshots(spark, tmp_path):
     p0, e0, _ = crawl_local(root)
     cat.write_snapshot(*_dfs(spark, p0, e0))
     os.makedirs(tmp_path / "state")
-    w = FsWatchReader({"path": root, "seed": cat.watch_seed(root),
+    w = FsWatchReader({"path": root, "seed": cat.tables().path("entries"),
                        "state_dir": str(tmp_path / "state")})
     rows, off = w.read({"gen": 0})
     assert list(rows) == []
@@ -622,7 +622,7 @@ def test_watch_batches_land_plain_snapshots(spark, tmp_path):
         if i == 1:
             os.unlink(f"{root}/b/f3")
             touched.append(f"{root}/b")
-        if i == 2:  # dir churn: prefix_rows must track it
+        if i == 2:  # dir churn
             os.makedirs(f"{root}/c")
             with open(f"{root}/c/f4", "w") as f:
                 f.write("4444")
@@ -645,8 +645,7 @@ def test_watch_batches_land_plain_snapshots(spark, tmp_path):
         assert _watch_land(spark, cat, args, diff, None)
         out = cat.latest_path()
         assert not os.path.exists(f"{out}/_delta.json")
-        assert cat.layout() == {"layout": "plain",
-                                "prefix_rows": direct_p.count()}
+        assert cat.layout() == {"layout": "plain"}
     assert cat.versions() == ["v0001", "v0002", "v0003", "v0004"]
 
     def norm(df, cols):
@@ -660,8 +659,11 @@ def test_watch_batches_land_plain_snapshots(spark, tmp_path):
         assert norm(t.entries, ecols) == norm(want_e, ecols)
         assert norm(t.prefixes, pcols) == norm(want_p, pcols)
 
+    # a seed export dir an older build left beside the versions
+    os.makedirs(os.path.join(db, "_watch_seed", "v0001"))
     assert cat.prune(keep=2) == ["v0001", "v0002"]
     assert cat.latest_version() == "v0004"
+    assert not os.path.exists(os.path.join(db, "_watch_seed"))
     # an older version that ``latest`` points to survives prune as well
     write_pointer(os.path.join(db, "latest"), "v0003")
     assert cat.prune(keep=1) == []

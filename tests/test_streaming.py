@@ -504,8 +504,8 @@ def test_fswatch_unreadable_dir_transition(tmp_path, monkeypatch):
 
 
 def _seed_from_crawl(spark, root, seed_dir):
-    """Write a seed the way the CLI does: the crawled entries as
-    parquet, parents confined to one file each."""
+    """Store the crawled entries as a snapshot's entries table, the
+    seed ``watch --db`` passes."""
     from dudb_spark.model import ENTRIES_SCHEMA
     from dudb_spark.sources.crawler import crawl_local
 
@@ -584,8 +584,7 @@ def test_fswatch_seeded_prune_false_exhaustive(spark, tmp_path):
     """Seeded start with prune=false: every file is re-stat'ed once
     (bounded memory, no tree in the driver dict) and in-place edits
     under unchanged dir mtimes surface immediately — the exhaustive
-    reconciliation --full-resync used to provide, without the
-    driver-side tree walk."""
+    reconciliation of ``watch --db --no-prune``."""
     import os
     import time
 
@@ -618,43 +617,48 @@ def test_fswatch_seeded_prune_false_exhaustive(spark, tmp_path):
     assert r2.last_batch_stats["files_statted"] == 12  # each file once
 
 
-def test_fswatch_seed_contract_violation_raises(spark, tmp_path):
-    """A seed whose parent spans two files would silently orphan rows
-    in the snapshot (only _dirgen's file is consulted per parent) —
-    the loader must fail loudly instead."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    import pytest
+def test_fswatch_seed_parent_spanning_files_loads(spark, tmp_path):
+    """Any entries-schema parquet dir seeds the watcher: a parent whose
+    rows span two seed files loads whole, so batch 0 over the unchanged
+    tree is empty and later churn in that parent is exact (no row of
+    either file orphaned or re-emitted)."""
+    import os
+    import time
 
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from glob import glob
+
+    from dudb_spark.model import ENTRIES_SCHEMA
+    from dudb_spark.sources.crawler import crawl_local
     from dudb_spark.sources.fsds import FsWatchReader
 
-    root = _watch_tree(tmp_path, n_dirs=1, files_per_dir=2)
-    seed_dir = tmp_path / "badseed"
-    seed_dir.mkdir()
-    r0 = FsWatchReader({"path": root, "state_dir": mkdtemp(dir=tmp_path)})
-    schema = r0._arrow_schema()
+    root = _watch_tree(tmp_path, n_dirs=2, files_per_dir=6)
+    seed_dir = str(tmp_path / "seed")
+    _, e0, _ = crawl_local(root)
+    # round-robin: every parent's rows land in both files
+    spark.createDataFrame(e0, ENTRIES_SCHEMA).repartition(2).write.mode(
+        "overwrite").parquet(seed_dir)
+    files = glob(os.path.join(seed_dir, "*.parquet"))
+    parents = [
+        set(pc.unique(pq.read_table(f)["parent"]).to_pylist())
+        for f in files
+    ]
+    assert len(files) == 2 and f"{root}/d00" in parents[0] & parents[1]
 
-    def row(name):
-        import datetime as dt
-
-        return {
-            "parent": f"{root}/d00", "name": name,
-            "path": f"{root}/d00/{name}", "is_dir": False,
-            "size": 1, "blocks": 0, "mode": 0o100644,
-            "mtime": dt.datetime(2024, 1, 1,
-                                 tzinfo=dt.timezone.utc),
-            "uid": 0, "gid": 0, "device": 1, "inode": 1,
-            "error": None,
-        }
-
-    pq.write_table(pa.Table.from_pylist([row("a")], schema=schema),
-                   str(seed_dir / "p0.parquet"))
-    pq.write_table(pa.Table.from_pylist([row("b")], schema=schema),
-                   str(seed_dir / "p1.parquet"))
     r = FsWatchReader({"path": root, "state_dir": mkdtemp(dir=tmp_path),
-                       "seed": str(seed_dir)})
-    with pytest.raises(ValueError, match="spans multiple seed files"):
-        r.read({"gen": 0})
+                       "seed": seed_dir})
+    rows, off = r.read({"gen": 0})
+    assert list(rows) == []
+
+    time.sleep(1.05)
+    with open(f"{root}/d00/new.bin", "w") as f:
+        f.write("zz")
+    os.unlink(f"{root}/d00/f3.dat")
+    rows = list(r.read(off)[0])
+    assert {(t[0], t[3].rsplit("/", 1)[-1]) for t in rows} == {
+        ("changed", "d00"), ("added", "new.bin"), ("deleted", "f3.dat"),
+    }
 
 
 def test_fswatch_idle_batch_is_getdents_free(tmp_path):

@@ -72,7 +72,7 @@ def _reader(cat, tree, tmp_path):
     --apply`` starts it."""
     state = tmp_path / "state"
     state.mkdir(exist_ok=True)
-    return FsWatchReader({"path": tree, "seed": cat.watch_seed(tree),
+    return FsWatchReader({"path": tree, "seed": cat.tables().path("entries"),
                           "state_dir": str(state)})
 
 

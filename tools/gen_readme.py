@@ -106,8 +106,7 @@ def render(rec: dict, pytest_line: str | None) -> str:
         "  (98% unchanged-skip), subtree rollup "
         f"≈{rec.get('rollup_entries_per_sec', 0) // 1000}k entries/s, "
         "seeded watch\n"
-        f"  start {rec.get('fswatch_seeded_start_sec', '?')} s, cached "
-        f"seed restart {rec.get('watch_seed_cached_start_sec', '?')} s "
+        f"  start {rec.get('fswatch_seeded_start_sec', '?')} s "
         "— the reference's only\n"
         "  published rate is ≈4,700 files/s sustained (BASELINE.md); "
         "all paths are\n"
