@@ -239,7 +239,8 @@ def _save_stats(res, stats_dir, calculator_name, cat, plan):
 
 def _load_stats(spark, stats_dir):
     """``StatsResult.load`` for the commands that need a previous run:
-    a stats dir without one is a usage error, not a traceback."""
+    a stats dir without one is a usage error, not a traceback.
+    ``spark`` may be None (the report views need no session)."""
     from dudb_spark.operators.stats import StatsResult
 
     try:
@@ -253,13 +254,11 @@ def _load_stats(spark, stats_dir):
 def cmd_stats_view(args):
     from dudb_spark.functions.units import format_bytes
 
-    spark = _spark()
-    res = _load_stats(spark, args.stats_dir)
+    # the views read the run's grains table with pyarrow: no session
+    res = _load_stats(None, args.stats_dir)
     n = args.n
     print(f"# stats for {res.meta.get('prefix')!r} expr={res.meta.get('expression')!r}")
     print("## totals")
-    # one collect holds the totals and the global rankings; the per-user
-    # and per-group scopes rank per id below
     rows = res.report_rows(n)
     tot = rows.totals
     print(json.dumps(tot))
@@ -275,16 +274,31 @@ def cmd_stats_view(args):
                     print(json.dumps({"prefix": r["prefix"],
                                       metric: r[metric]}))
                 continue
-            for r in res.per_id_top_prefixes(metric, n, dim).collect():
-                print(json.dumps(r.asDict()))
+            for r in res.per_id_top_rows(metric, n, dim):
+                print(json.dumps(r))
+
+
+def _owner_name(lookup):
+    """id -> name through ``lookup`` (``pwd.getpwuid``/``grp.getgrgid``,
+    J3 usergroups.go:26–60), or None for an id that does not resolve."""
+    def name(i):
+        try:
+            return lookup(i)[0]
+        except (KeyError, OverflowError):
+            return None
+    return name
 
 
 def cmd_reports_generate(args):
+    import grp
+    import pwd
+
     from dudb_spark.reports import write_reports
 
-    spark = _spark()
-    res = _load_stats(spark, args.stats_dir)
-    out = write_reports(res, args.reports_dir, display_n=args.n)
+    res = _load_stats(None, args.stats_dir)
+    out = write_reports(res, args.reports_dir, display_n=args.n,
+                        users=_owner_name(pwd.getpwuid),
+                        groups=_owner_name(grp.getgrgid))
     print(json.dumps({"report": out}))
 
 
@@ -1760,9 +1774,9 @@ def cmd_plan_lint(args):
     """Scale-audit the suite's query plans (plans/linter.py): TSV of
     (query, rule, allowed?, detail) findings; exit 1 if any finding is
     not allowlisted.  ``--collect-audit`` instead audits the package
-    SOURCE for driver materializations: every .collect()/.toPandas()
-    site must carry a boundedness reason in linter.COLLECT_ALLOW (the
-    one 100 TB hazard no plan can show).  Dev tool — needs the suite
+    SOURCE for driver materializations: every .collect()/.toPandas()/
+    .toArrow() site must carry a boundedness reason in
+    linter.COLLECT_ALLOW (the one 100 TB hazard no plan can show).  Dev tool — needs the suite
     registry (__spark_entry__.py at the repo root) importable."""
     import importlib
 

@@ -55,7 +55,6 @@ non-duplicate matching directories.
 
 from __future__ import annotations
 
-import functools
 import json
 import os
 from dataclasses import dataclass, field
@@ -68,6 +67,7 @@ from pyspark.sql import types as T
 from dudb_spark.functions.boolexpr import compile_expr
 from dudb_spark.functions.calculators import identity
 from dudb_spark.operators.find import subtree_pred
+from dudb_spark.session import get_spark
 
 METRICS = ("bytes", "storage_bytes", "prefix_bytes", "files", "sub_prefixes")
 
@@ -142,11 +142,29 @@ class StatsResult:
     read the table on disk instead of re-running the fold; :meth:`load`
     reads such a dir back, and still reads dirs written in the older
     three-table form (``per_prefix``/``per_user``/``per_group.parquet``).
+
+    ``path`` is the ``grains.parquet`` the result was saved to or loaded
+    from (None for a result that was never saved).  A loaded result
+    builds its Spark ``grains`` frame only when a caller touches it; the
+    report views (:meth:`report_rows`, :meth:`per_id_top_rows`) read the
+    table with pyarrow and need no Spark session at all.
     """
 
-    def __init__(self, grains: DataFrame, meta: dict):
-        self.grains = grains
+    def __init__(self, grains: DataFrame | None, meta: dict,
+                 path: str | None = None, spark=None):
+        self._grains = grains
         self.meta = meta  # {root, expr, calculator, ...}
+        self.path = path
+        self._spark = spark
+        self._table = None  # the grains as one Arrow table, read once
+
+    @property
+    def grains(self) -> DataFrame:
+        if self._grains is None:
+            spark = self._spark or get_spark()
+            self._grains = spark.read.schema(GRAINS_SCHEMA).parquet(
+                self.path)
+        return self._grains
 
     @property
     def per_prefix(self) -> DataFrame:
@@ -179,9 +197,10 @@ class StatsResult:
             F.coalesce(F.sum(F.when(is_prefix, F.col(c))), F.lit(0)).alias(c)
             for c in _ZERO
         ]).write.mode("overwrite").parquet(path)
-        self.grains = self.grains.sparkSession.read.schema(
+        self._grains = self.grains.sparkSession.read.schema(
             GRAINS_SCHEMA
         ).parquet(path)
+        self.path, self._table = path, None
         got = obs.get
         return {c: got[c] for c in _ZERO}
 
@@ -189,7 +208,10 @@ class StatsResult:
     def load(cls, spark, path: str) -> "StatsResult":
         """Read one stats run: ``path`` is a stats dir, whose ``latest``
         pointer names the run, or one run's dir.  Raises
-        ``FileNotFoundError`` when there is no complete run there."""
+        ``FileNotFoundError`` when there is no complete run there.
+        ``spark`` may be None: a run with ``grains.parquet`` opens
+        without a session (its Spark frame is built on first use), and
+        only an older three-table run starts one."""
         base = path
         try:
             with open(os.path.join(path, "latest")) as f:
@@ -202,13 +224,9 @@ class StatsResult:
         except FileNotFoundError:
             raise FileNotFoundError(f"no stats run in {path}") from None
         if os.path.exists(os.path.join(base, GRAINS_TABLE)):
-            return cls(
-                spark.read.schema(GRAINS_SCHEMA).parquet(
-                    f"{base}/{GRAINS_TABLE}"
-                ),
-                meta,
-            )
+            return cls(None, meta, f"{base}/{GRAINS_TABLE}", spark)
         # three-table form: one table per grain, no grain column
+        spark = spark or get_spark()
         null_id = F.lit(None).cast("long").alias("id")
         grains = None
         for grain in ("prefix", "user", "group"):
@@ -254,95 +272,95 @@ class StatsResult:
             .where(F.col("rank") <= n)
         )
 
-    def report_rows(
-        self,
-        n: int,
-        users: DataFrame | None = None,
-        groups: DataFrame | None = None,
-    ) -> "ReportRows":
-        """Every number a report prints, from ONE bounded collect of
-        :meth:`report_frame` (the reference renders all three formats
-        from one in-memory snapshot, reports.go:98–126)."""
-        out = ReportRows()
-        for r in self.report_frame(n, users, groups).collect():
-            sec = r["section"]
-            if sec in out.top:
-                out.top[sec].append(r)
-            elif sec == "prefix":
-                out.totals = {c: r[c] for c in _ZERO}
+    # --- report views: pyarrow over the small grains table -------------
+
+    def _arrow(self):
+        """The grains as one Arrow table, read once: ``grains.parquet``
+        through pyarrow with the schema of :data:`GRAINS_SCHEMA` (no
+        session, no Spark job), or ONE ``toArrow`` of a result that was
+        never saved or came from a three-table dir."""
+        if self._table is None:
+            if self.path is not None:
+                import pyarrow.parquet as pq
+                from pyspark.sql.pandas.types import to_arrow_schema
+
+                self._table = pq.read_table(
+                    self.path, schema=to_arrow_schema(GRAINS_SCHEMA))
             else:
-                out.owners[sec].append(r)
-        for rs in out.top.values():
-            rs.sort(key=lambda r: r["rn"])
-        for rs in out.owners.values():
-            rs.sort(key=lambda r: (-r["bytes"], r["id"]))
-            del rs[n:]
+                self._table = self.grains.toArrow()
+        return self._table
+
+    def _arrow_grain(self, grain: str):
+        import pyarrow.compute as pc
+
+        t = self._arrow()
+        return t.filter(pc.equal(t["grain"], grain))
+
+    def report_rows(self, n: int, users=None, groups=None) -> "ReportRows":
+        """Every number a report prints (the reference renders all three
+        formats from one in-memory snapshot, reports.go:98–126), computed
+        with pyarrow from :meth:`_arrow`:
+
+        - the totals: column sums of the prefix grain (all 0 when the
+          run has no prefix rows);
+        - five top-n rankings, one per metric, each ordered by
+          ``(metric desc, prefix asc)`` — the tie-break of
+          :meth:`top_prefixes` — and carrying its prefix's counters,
+          which the TSV/JSON sinks print;
+        - the owners: each id grain's rows summed per id (the
+          reference's userTotals/groupTotals maps), ranked by
+          ``(bytes desc, id)`` and cut to n.  Only the owner rows are
+          grouped: the totals come from ``pc.sum``, since pyarrow 16.1's
+          ``group_by`` split the NULL-id prefix grain into many groups.
+
+        ``users``/``groups`` name the printed owners (J3): an id→name
+        dim frame with ``uid``/``gid`` and ``name`` columns, or a
+        function from an id to its name or None.  An owner left
+        unnamed has ``name`` None."""
+        import pyarrow.compute as pc
+
+        out = ReportRows()
+        pfx = self._arrow_grain("prefix").select(list(REPORT_COLUMNS))
+        out.totals = {c: pc.sum(pfx[c]).as_py() or 0 for c in _ZERO}
+        for m in METRICS:
+            out.top[m] = _top_k(pfx, n, [(m, "descending"),
+                                         ("prefix", "ascending")])
+        for dim, src, id_col in (("user", users, "uid"),
+                                 ("group", groups, "gid")):
+            sums = self._arrow_grain(dim).group_by("id").aggregate(
+                [(c, "sum") for c in _ZERO])
+            rows = _top_k(sums, n, [("bytes_sum", "descending"),
+                                    ("id", "ascending")])
+            names = _dim_names(src, id_col, [r["id"] for r in rows])
+            out.owners[dim] = [
+                {"id": r["id"], "name": names.get(r["id"]),
+                 **{c: r[f"{c}_sum"] for c in _ZERO}}
+                for r in rows
+            ]
         return out
 
-    def report_frame(
-        self,
-        n: int,
-        users: DataFrame | None = None,
-        groups: DataFrame | None = None,
-    ) -> DataFrame:
-        """The one query behind :meth:`report_rows`, over the grains
-        table: a union of two branches, told apart by ``section``:
+    def per_id_top_rows(self, metric: str, n: int, dim: str = "user") -> list:
+        """The rows of :meth:`per_id_top_prefixes` (``id``, ``prefix``,
+        ``metric``, ``rank``) in ``(id, rank)`` order, computed with
+        pyarrow from :meth:`_arrow`: each id's rows ordered by
+        ``(metric desc, prefix asc)``, keeping rank <= n."""
+        import numpy as np
 
-        - the five top-N rankings: each prefix row stacked into five
-          ``(section, value)`` rows, one per metric, and ranked by
-          ``row_number`` over
-          ``partitionBy(section).orderBy(desc(value), prefix)`` — the
-          tie-break of :meth:`top_prefixes` — keeping ``rn <= n``.
-          Partitioned by metric, and the filter lets Spark put a partial
-          WindowGroupLimit before the exchange (n up to
-          ``spark.sql.optimizer.windowGroupLimitThreshold``), so at most
-          5n rows per map task cross it.  Each row carries its prefix's
-          counters, which the TSV/JSON sinks print;
-        - the per-owner sums: the grains grouped by ``(grain, id)``.  The
-          prefix grain has no id, so it folds to ONE row, the run's
-          totals; the user and group grains give one row per owner (the
-          reference's userTotals/groupTotals maps), ranked here.
-
-        At most 5n rows plus one per owner plus one.  The id→name dims
-        (J3), when given, join the owner rows."""
-        ranked = (
-            self.per_prefix.select(
-                *REPORT_COLUMNS,
-                F.expr(
-                    f"stack({len(METRICS)}, "
-                    + ", ".join(f"'{m}', {m}" for m in METRICS)
-                    + ") AS (section, value)"
-                ),
-            )
-            .withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("section").orderBy(
-                        F.desc("value"), "prefix"
-                    )
-                ),
-            )
-            .where(F.col("rn") <= n)
-            .drop("value")
-        )
-        sums = self.grains.groupBy(
-            F.col("grain").alias("section"), "id"
-        ).agg(*[F.sum(c).alias(c) for c in _ZERO])
-        dims = [
-            df.select(F.lit(dim).alias("section"),
-                      F.col(id_col).alias("id"), "name")
-            for dim, df, id_col in (("user", users, "uid"),
-                                    ("group", groups, "gid"))
-            if df is not None
-        ]
-        if dims:
-            sums = sums.join(
-                F.broadcast(functools.reduce(DataFrame.unionByName, dims)),
-                ["section", "id"], "left",
-            )
-        else:
-            sums = sums.withColumn("name", F.lit(None).cast("string"))
-        return ranked.unionByName(sums, allowMissingColumns=True)
+        assert metric in METRICS, metric
+        t = self._arrow_grain(dim).select(["id", "prefix", metric]).sort_by(
+            [("id", "ascending"), (metric, "descending"),
+             ("prefix", "ascending")])
+        if t.num_rows == 0:
+            return []
+        ids = t["id"].to_numpy()
+        pos = np.arange(len(ids))
+        first = np.flatnonzero(np.r_[True, ids[1:] != ids[:-1]])
+        rank = pos - first[np.searchsorted(first, pos, side="right") - 1] + 1
+        keep = np.flatnonzero(rank <= n)
+        rows = t.take(keep).to_pylist()
+        for r, k in zip(rows, rank[keep].tolist()):
+            r["rank"] = k
+        return rows
 
     def merged_top(self, n: int) -> DataFrame:
         """Heaps.Merge (report_stats.go:128–167): one row per prefix that
@@ -379,13 +397,37 @@ class StatsResult:
         return pp.join(F.broadcast(cand.distinct()), "prefix", "left_semi")
 
 
+def _top_k(t, n: int, keys: list) -> list:
+    """The first ``n`` rows of Arrow table ``t`` in ``keys`` order, as
+    dicts: ``select_k_unstable`` keeps a bounded heap instead of sorting
+    the table, and the keys leave no ties, so the order is exact."""
+    import pyarrow.compute as pc
+
+    if n <= 0 or t.num_rows == 0:
+        return []
+    return t.take(pc.select_k_unstable(t, k=n, sort_keys=keys)).to_pylist()
+
+
+def _dim_names(src, id_col: str, ids: list) -> dict:
+    """id -> name for the printed owner ``ids``: ``src`` is an id→name
+    dim frame, of which only those ids are collected, or a function
+    from an id to its name or None."""
+    if src is None or not ids:
+        return {}
+    if isinstance(src, DataFrame):
+        return {r[0]: r[1] for r in src.where(F.col(id_col).isin(ids))
+                .select(id_col, "name").collect()}
+    return {i: src(i) for i in ids}
+
+
 @dataclass
 class ReportRows:
-    """The collected content of one report (:meth:`StatsResult.report_rows`):
+    """The content of one report (:meth:`StatsResult.report_rows`):
     ``totals`` maps each counter to its run total; ``top`` maps each of
-    :data:`METRICS` to its top-``n`` prefix rows in rank order (each with
+    :data:`METRICS` to its top-``n`` prefix rows in rank order (dicts of
     :data:`REPORT_COLUMNS`); ``owners`` maps ``user``/``group`` to the
-    top-``n`` owner rows by bytes (``id``, ``name``, ``bytes``)."""
+    top-``n`` owner rows by bytes (``id``, ``name`` and the eight
+    counters summed over the owner's prefixes)."""
 
     totals: dict = field(default_factory=lambda: dict(_ZERO))
     top: dict = field(default_factory=lambda: {m: [] for m in METRICS})

@@ -45,8 +45,8 @@ dropped, so intentional exceptions stay visible.
 The one 100 TB hazard invisible to any PLAN is a data-proportional
 ``collect()`` — the plan of a collected frame looks identical at every
 scale.  :func:`collect_sites` / :func:`lint_collect_sites` audit the
-SOURCE instead: every ``.collect()`` / ``.toPandas()`` call site in the
-package must carry a written boundedness reason in
+SOURCE instead: every ``.collect()`` / ``.toPandas()`` / ``.toArrow()``
+call site in the package must carry a written boundedness reason in
 :data:`COLLECT_ALLOW`, keyed by function so line drift never churns the
 registry; stale entries fail the sweep exactly like the plan allowlist.
 """
@@ -179,11 +179,12 @@ def lint_plan(
 
 def collect_sites(
     pkg_dir: str | None = None,
-    attrs: tuple[str, ...] = ("collect", "toPandas"),
+    attrs: tuple[str, ...] = ("collect", "toPandas", "toArrow"),
 ) -> list[tuple[str, str, int]]:
-    """Every ``.collect()`` / ``.toPandas()`` call site in the package
-    source: (relpath, enclosing qualname, lineno).  AST-based, so
-    comments and strings never false-positive.  ``attrs`` generalizes
+    """Every ``.collect()`` / ``.toPandas()`` / ``.toArrow()`` call site
+    (each a driver pull) in the package source: (relpath, enclosing
+    qualname, lineno).  AST-based, so comments and strings never
+    false-positive.  ``attrs`` generalizes
     the scan (``("localCheckpoint",)`` audits the pin sites)."""
     if pkg_dir is None:
         pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -228,8 +229,6 @@ def collect_sites(
 # collects is bounded at 100 TB.  A new collect() in an unlisted
 # function fails tests/test_plan_lint.py; a stale entry fails it too.
 COLLECT_ALLOW: dict[str, str] = {
-    "cli.py::cmd_stats_view":
-        "per-id top-N prefix frames: at most --n rows per owner",
     "cli.py::cmd_pipeline_sample_weighted":
         "audit frame is ≤|groups| rows (1 row ungrouped): per-group "
         "count/sum aggregates only",
@@ -282,10 +281,13 @@ COLLECT_ALLOW: dict[str, str] = {
     "pipeline/similarity.py::label_outliers":
         "one centroid row per label; the centroids must become plan "
         "literals for the scan-side cosine",
-    "operators/stats.py::StatsResult.report_rows":
-        "at most 5n ranked prefix rows (row_number <= n per metric) plus "
-        "one sum row per owner and one totals row — bounded by n and the "
-        "owner count, like the reference's userTotals/groupTotals maps",
+    "operators/stats.py::StatsResult._arrow":
+        "the stats run's reduced grains table, pulled only for a result "
+        "never saved (or from a three-table dir): one row per prefix "
+        "plus one per (prefix, owner) — about dirs x (owners per dir + "
+        "1), 148,785 rows at 408k entries, never the entry count",
+    "operators/stats.py::_dim_names":
+        "the id->name dim filtered to the <= n owner ids a report prints",
 }
 
 

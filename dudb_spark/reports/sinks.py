@@ -6,14 +6,18 @@ The reference renders a computed stats snapshot to tab-separated files
 pointer, plus ``reports locate`` returning the newest N dirs
 (reports.go:128–176, 257–304).
 
-Spark shape: like the reference, which renders all three formats from one
+Shape: like the reference, which renders all three formats from one
 in-memory snapshot (reports.go:98–126), every number a report prints
-comes from ONE bounded collect over the stats run's grains table
-(:meth:`StatsResult.report_rows`): at most 5n top prefix rows, one row
-per owner and the totals row.  The output is bounded by n and the owner
-count, not by the tree, so the sinks are not distributed writes: the
-driver renders TSV, JSON-lines and Markdown from the collected rows and
-writes one part file per format in the layout Spark's writers used
+comes from the stats run's small reduced grains table
+(:meth:`StatsResult.report_rows`): pyarrow reads ``grains.parquet``
+once and computes the totals, the five top-n rankings (at most 5n
+prefix rows) and the top-n owners in the driver, so a report from a
+saved run starts no Spark job and needs no JVM.  The read holds
+O(grain rows) — about dirs × (owners per dir + 1): 148,785 rows, 2.0 MB
+on disk, +38 MB of RSS at 408k entries.  The output is bounded by n,
+not by the tree, so the sinks are not distributed writes: the driver
+renders TSV, JSON-lines and Markdown from those rows and writes one
+part file per format in the layout Spark's writers used
 (``tsv/*.csv``, ``json/*.json``, ``markdown/report.md``).
 """
 
@@ -22,8 +26,6 @@ from __future__ import annotations
 import json
 import os
 from datetime import datetime, timezone
-
-from pyspark.sql import DataFrame
 
 from dudb_spark.operators.stats import (
     METRICS,
@@ -86,15 +88,16 @@ def write_markdown_report(
     stats: StatsResult,
     path: str,
     display_n: int = 20,
-    users: DataFrame | None = None,
-    groups: DataFrame | None = None,
+    users=None,
+    groups=None,
     rows: ReportRows | None = None,
 ) -> str:
     """S13: Markdown summary — TOC, global totals, per-metric top-N tables,
     per-user/per-group sections (markdown.go:32–179 template structure),
     rendered from ``rows`` (``stats.report_rows(display_n, users,
-    groups)``, computed here when not given).  An owner without a name
-    in the id→name dims (J3) shows its id."""
+    groups)``, computed here when not given).  ``users``/``groups`` name
+    the owners (J3): an id→name dim frame or an id → name function; an
+    owner without a name shows its id."""
     if rows is None:
         rows = stats.report_rows(display_n, users, groups)
 
@@ -148,13 +151,14 @@ def write_reports(
     reports_root: str,
     display_n: int = 20,
     when: datetime | None = None,
-    users: DataFrame | None = None,
-    groups: DataFrame | None = None,
+    users=None,
+    groups=None,
 ) -> str:
     """S14: write tsv/ json/ markdown into a fresh timestamped dir and
     refresh the ``latest`` marker.  Returns the report dir path.  All
-    three formats render from one collect (:meth:`StatsResult.report_rows`);
-    the pointer moves only after every file is written."""
+    three formats render from one :meth:`StatsResult.report_rows`
+    (``users``/``groups`` as there); the pointer moves only after every
+    file is written."""
     when = when or datetime.now(timezone.utc)
     out = f"{reports_root.rstrip('/')}/{when.strftime(TS_FORMAT)}"
     rows = stats.report_rows(display_n, users, groups)

@@ -751,22 +751,108 @@ def _spark_jobs(spark, fn):
 
 
 def test_cli_reports_generate_job_count(spark, real_tree, tmp_path, capsys):
-    """reports generate renders TSV, JSON and Markdown from one collect:
-    at most three Spark jobs (the ranking's and the owner sums' shuffle
-    map stages, then the result).  The Spark-writer sinks ran 10."""
+    """reports generate and stats view read the run's grains table with
+    pyarrow: no Spark job, counted by the status tracker under a job
+    group.  The Spark reference over the same run, counted the same
+    way, does launch jobs."""
+    from dudb_spark.operators.stats import StatsResult
+
     db = str(tmp_path / "db")
     stats_dir = str(tmp_path / "stats")
     run(capsys, "analyze", "--db", db, real_tree)
     run(capsys, "stats", "compute", "--db", db, "--stats-dir", stats_dir,
         real_tree)
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        bus.waitUntilEmpty()
+        return sc.statusTracker().getJobIdsForGroup(group)
+
     out = {}
-    jobs = _spark_jobs(spark, lambda: out.update(json.loads(run(
+    assert jobs("reports", lambda: out.update(json.loads(run(
         capsys, "reports", "generate", "--stats-dir", stats_dir,
-        "--reports-dir", str(tmp_path / "reports")))))
-    assert 0 < len(jobs) <= 3, sorted(jobs)
+        "--reports-dir", str(tmp_path / "reports"))))) == []
+    assert jobs("view", lambda: run(
+        capsys, "stats", "view", "--stats-dir", stats_dir, "--user",
+        "--group")) == []
+    assert jobs("reference", lambda: StatsResult.load(
+        spark, stats_dir).merged_top(3).collect())
     for fmt, suffix in (("tsv", ".csv"), ("json", ".json")):
         assert [f for f in os.listdir(os.path.join(out["report"], fmt))
                 if f.endswith(suffix)]
+
+
+def test_cli_report_views_start_no_spark(fixture_stats_dir, tmp_path):
+    """In a fresh process, reports generate and stats view run to the
+    end without creating a SparkContext (no JVM is started)."""
+    import subprocess
+    import sys
+
+    code = (
+        "import sys\n"
+        "from pyspark import SparkContext\n"
+        "from dudb_spark.cli import main\n"
+        "sd, rd = sys.argv[1:]\n"
+        "main(['reports', 'generate', '--stats-dir', sd,"
+        " '--reports-dir', rd])\n"
+        "main(['stats', 'view', '--stats-dir', sd, '--user', '--group'])\n"
+        "assert SparkContext._active_spark_context is None\n"
+        "assert SparkContext._gateway is None\n"
+        "print('no spark')\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    p = subprocess.run(
+        [sys.executable, "-c", code, fixture_stats_dir,
+         str(tmp_path / "reports")],
+        cwd=repo, capture_output=True, text=True, timeout=300,
+    )
+    assert p.returncode == 0, p.stderr
+    assert p.stdout.splitlines()[-1] == "no spark"
+    assert "## top 10 by bytes per group" in p.stdout
+    assert os.path.exists(tmp_path / "reports" / "latest")
+
+
+def test_cli_reports_resolve_owner_names(fixture_stats_dir, tmp_path,
+                                         capsys, monkeypatch):
+    """reports generate names the owners it prints through the passwd
+    and group databases (J3); an id that does not resolve prints the
+    id.  Only the printed (top -n) ids are looked up."""
+    import grp
+    import pwd
+
+    asked = []
+
+    def getpwuid(uid):
+        asked.append(uid)
+        if uid == 100:
+            return ("alice-pw",)
+        raise KeyError(uid)
+
+    monkeypatch.setattr(pwd, "getpwuid", getpwuid)
+    monkeypatch.setattr(grp, "getgrgid", lambda gid: ("staff-gr",))
+
+    def owners(n):
+        rd = str(tmp_path / f"reports{n}")
+        out = json.loads(run(capsys, "reports", "generate", "--stats-dir",
+                             fixture_stats_dir, "--reports-dir", rd,
+                             "-n", str(n)))
+        with open(os.path.join(out["report"], "markdown", "report.md")) as f:
+            md = f.read()
+        return md.split("## Per user\n")[1].splitlines()[3:]
+
+    assert owners(3)[:4] == ["| 100 | alice-pw | 461 |", "| 101 | 101 | 2 |",
+                             "", "## Per group"]
+    assert asked == [100, 101]
+    asked.clear()
+    assert owners(1)[:2] == ["| 100 | alice-pw | 461 |", ""]
+    assert asked == [100]
+    assert "| 2 | staff-gr | 463 |" in owners(1)
 
 
 @pytest.fixture

@@ -128,25 +128,6 @@ def test_merged_top_avoids_global_windows(spark, fs_dir):
     assert "Exchange SinglePartition" not in plan
 
 
-def test_report_frame_limits_before_the_exchange(spark, fs_dir):
-    """The report's ranking window is partitioned by metric and cut by a
-    partial WindowGroupLimit below its shuffle, so each map task sends at
-    most n rows per metric; the owner sums aggregate map-side.  No
-    single-partition exchange anywhere."""
-    t = FsTables(spark, fs_dir)
-    res = compute_stats(t.prefixes, t.entries, StatsOptions())
-    plan = simple_plan_of(res.report_frame(3))
-    lines = plan.splitlines()
-    exchange = next(i for i, ln in enumerate(lines)
-                    if "Exchange hashpartitioning(section" in ln)
-    partial = next(i for i, ln in enumerate(lines)
-                   if "WindowGroupLimit" in ln and ln.endswith("Partial"))
-    # printed top-down: the partial limit is the exchange's input
-    assert exchange < partial
-    assert "Exchange SinglePartition" not in plan
-    assert plan.count("HashAggregate") >= 2
-
-
 def test_winnow_stays_staged(spark):
     """The staged winnow projections must not collapse into one
     (re-inlining would be quadratic per doc; see text.winnow_df)."""

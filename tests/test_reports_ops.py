@@ -142,6 +142,84 @@ def test_report_rows_read_back_equal_merged_top(spark, fs_dir, stats_result,
         assert len(want) == 7
 
 
+def _ties_stats(spark):
+    """Six prefixes equal on bytes, storage_bytes and prefix_bytes, and
+    three owners equal on bytes: every ranking is decided by its
+    tie-break (prefix, then id)."""
+    from dudb_spark.operators.stats import GRAINS_SCHEMA, StatsResult
+
+    rows = []
+    for i, p in enumerate(["/x/f", "/x/b", "/x/e", "/x/a", "/x/d", "/x/c"]):
+        c = [i % 2, 1, i % 3, 10, 10, 4, 0, 0]
+        rows += [("prefix", p, None, *c), ("user", p, (5, 3, 9)[i % 3], *c),
+                 ("group", p, 7, *c)]
+    return StatsResult(spark.createDataFrame(rows, GRAINS_SCHEMA),
+                       {"root": "/x", "expression": ""})
+
+
+def _as_form(spark, res, form, tmp_path):
+    """``res`` as a result never saved, saved and loaded back without a
+    session, or loaded from the older three-table layout."""
+    from dudb_spark.operators.stats import StatsResult
+
+    if form == "unsaved":
+        return res
+    run = tmp_path / form
+    if form == "saved":  # a copy: the module's fixture stays unsaved
+        StatsResult(res.grains, res.meta).save(str(run))
+        (run / "meta.json").write_text("{}")
+        return StatsResult.load(None, str(run))
+    for grain in ("prefix", "user", "group"):
+        getattr(res, f"per_{grain}").write.parquet(
+            str(run / f"per_{grain}.parquet"))
+    (run / "meta.json").write_text("{}")
+    return StatsResult.load(spark, str(run))
+
+
+@pytest.mark.parametrize("case,form", [
+    ("fixture", "unsaved"), ("fixture", "saved"), ("fixture", "three_table"),
+    ("tricky", "unsaved"), ("tricky", "saved"), ("empty", "unsaved"),
+    ("empty", "saved"), ("ties", "unsaved"), ("ties", "saved"),
+])
+def test_report_rows_equal_spark_references(spark, fs_dir, stats_result,
+                                            tmp_path, case, form):
+    """report_rows and per_id_top_rows, computed with pyarrow, equal the
+    Spark references over the same run: totals(), each top_prefixes
+    ranking, merged_top(n), by_id ranked by (bytes desc, id), and
+    per_id_top_prefixes in (id, rank) order — for n under and over the
+    prefix count."""
+    from dudb_spark.operators.stats import METRICS
+
+    if case == "ties":
+        res = _ties_stats(spark)
+    else:
+        res = _case(spark, fs_dir, stats_result, case)[0]
+    res = _as_form(spark, res, form, tmp_path)
+    assert (res.path is None) == (form != "saved")
+    for n in (2, 50):
+        rows = res.report_rows(n)
+        assert rows.totals == res.totals().collect()[0].asDict()
+        for m in METRICS:
+            assert [(r["prefix"], r[m]) for r in rows.top[m]] == [
+                tuple(r) for r in res.top_prefixes(m, n).collect()]
+        assert rows.merged() == [
+            r.asDict() for r in res.merged_top(n).select(*REPORT_COLUMNS)
+            .orderBy("prefix").collect()]
+        for dim in ("user", "group"):
+            want = sorted((r.asDict() for r in res.by_id(dim).collect()),
+                          key=lambda r: (-r["bytes"], r["id"]))[:n]
+            got = rows.owners[dim]
+            assert [{k: r[k] for k in w} for r, w in zip(got, want)] == want
+            assert len(got) == len(want)
+            assert all(r["name"] is None for r in got)
+            for m in METRICS:
+                assert res.per_id_top_rows(m, n, dim) == [
+                    r.asDict() for r in res.per_id_top_prefixes(m, n, dim)
+                    .orderBy("id", "rank").collect()]
+    # n over the prefix count: every prefix is in the report
+    assert len(rows.merged()) == rows.totals["prefixes"]
+
+
 def test_locate_orders_desc(tmp_path, spark, fs_dir, stats_result):
     t = FsTables(spark, fs_dir)
     root = str(tmp_path / "reports2")

@@ -661,6 +661,55 @@ def test_fswatch_seed_parent_spanning_files_loads(spark, tmp_path):
     }
 
 
+def test_fswatch_seed_state_file_skips_row_groups(tmp_path):
+    """The seeded state file is sorted by parent in row groups of
+    _SEED_ROW_GROUP rows: a seed larger than that holds more than one
+    group, a one-parent load reads one group, and a parent whose rows
+    straddle two groups still loads whole."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    from dudb_spark.sources.fsds import _SEED_ROW_GROUP, FsWatchReader
+
+    per_dir = 20
+    n_dirs = _SEED_ROW_GROUP // per_dir + 50
+    dirs = [f"/w/d{i:05d}" for i in range(n_dirs)]
+    rows = [{"parent": "/", "name": "w", "path": "/w", "is_dir": True}]
+    rows += [{"parent": "/w", "name": d[3:], "path": d, "is_dir": True}
+             for d in dirs]
+    rows += [{"parent": d, "name": f"f{j}", "path": f"{d}/f{j}",
+              "is_dir": False, "size": j} for d in dirs
+             for j in range(per_dir)]
+    seed = tmp_path / "seed"
+    seed.mkdir()
+    r = FsWatchReader({"path": "/w", "state_dir": mkdtemp(dir=tmp_path),
+                       "seed": str(seed)})
+    schema = pa.schema([f for f in r._arrow_schema() if f.name != "error"])
+    pq.write_table(pa.Table.from_pylist(rows[::-1], schema=schema),
+                   os.path.join(seed, "part-0.parquet"))
+    r._load_seed()
+
+    state = r._file_path(r._filectr)
+    md = pq.ParquetFile(state).metadata
+    assert md.num_rows == n_dirs * per_dir > _SEED_ROW_GROUP
+    assert md.num_row_groups == -(-md.num_rows // _SEED_ROW_GROUP) > 1
+    frag = next(iter(ds.dataset(state).get_fragments()))
+    one = pc.field("parent")
+    assert len(frag.split_by_row_group(
+        one.isin([dirs[7]]) & (one >= dirs[7]) & (one <= dirs[7]))) == 1
+    assert len(r._load_rows([dirs[7]])) == per_dir
+    # the first group ends inside this dir's rows
+    straddler = dirs[_SEED_ROW_GROUP // per_dir]
+    got = r._load_rows([straddler, dirs[-1]])
+    assert sorted(got) == sorted(f"{d}/f{j}" for d in (straddler, dirs[-1])
+                                 for j in range(per_dir))
+    assert got[f"{straddler}/f19"][4] == 19  # size
+
+
 def test_fswatch_idle_batch_is_getdents_free(tmp_path):
     """Round-10 scale fix: a steady-state batch with NO churn performs
     one lstat per known dir and ZERO directory enumerations / file
